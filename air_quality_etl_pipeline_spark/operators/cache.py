@@ -1,10 +1,14 @@
 """Bounded cache lifecycle for persist-building operators (round-12
 verdict #4).
 
-Several operators ``persist()`` an intermediate internally because
-this runtime performs no exchange/subtree reuse (SCALE.md r9/r10): a
-relation referenced twice would otherwise execute its whole subtree
-twice. Those persists are correct per-call but CALLER-OWNED — a
+Several operators ``persist()`` an intermediate internally. The
+original premise — that this runtime performs no exchange/subtree
+reuse, so a relation referenced twice executes its subtree twice
+(SCALE.md r9/r10) — is stale: AQE does deduplicate identical exchange
+subtrees within one execution (``OPTIMIZATION_r14.md``, "Mechanism
+re-probes" #1), but only while the consumer subtrees stay canonically
+equal, so each surviving persist must be justified by a measurement.
+Those persists are correct per-call but CALLER-OWNED — a
 caller that rebuilds such a plan in a loop (stress sweeps, retraining
 loops) accumulates cached blocks until the session evicts them, and
 ``spark.catalog.clearCache()`` is the only blunt recourse.
@@ -61,3 +65,19 @@ def register_persist(
     if cache_registry is not None:
         cache_registry.append(out)
     return out
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize *df* and return a frame rooted at the
+    result — the one materialization policy for operators that must
+    cut a lineage or count a relation before deciding a plan. With a
+    checkpoint directory configured (``spark.checkpoint.dir`` or
+    ``SparkContext.setCheckpointDir``) it is a reliable ``checkpoint``,
+    which survives executor loss; otherwise an eager
+    ``localCheckpoint``, whose executor-local blocks are faster to
+    write but lost with their executor. Either way the blocks belong
+    to the returned frame (freed when it is garbage-collected) and no
+    CacheManager entry is created, so rebuilding callers never leak."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -45,6 +45,7 @@ from air_quality_etl_pipeline_spark.functions.core import (
     token_array,
     word_shingles_of_tokens,
 )
+from air_quality_etl_pipeline_spark.operators.cache import materialize
 from air_quality_etl_pipeline_spark.operators.text import fingerprint
 
 
@@ -802,13 +803,12 @@ def _banded_pairs_from_simhash(
     votes. NULL simhash (tokenless docs under ``keep_empty``) and NULL
     block values never equi-join, so such rows produce no pairs.
 
-    Stays on the DataFrame API (r14 note): a single-spark.sql() form
-    was built and REVERTED — ``sh`` arrives PERSISTED from both
-    callers, and a persisted frame consumed through a ``{df}`` temp
-    view is NOT substituted by the CacheManager (withCachedData does
-    not rewrite under the View node the reference resolves to, even
-    though sameResult holds — probed r14), so the SQL form silently
-    re-executed the whole fingerprint pipeline per consumer."""
+    ``simhash`` rides through the band explode, so the Hamming check
+    reads both fingerprints off the joined band rows — no join back to
+    ``sh`` per pair endpoint. ``sh``'s only consumer is the banded
+    relation; the two self-join sides differ only in column aliases,
+    so they stay canonically equal and AQE reuses every exchange below
+    them."""
     n_bands = max_hamming + 1
     width = bits // n_bands
 
@@ -821,6 +821,7 @@ def _banded_pairs_from_simhash(
     banded = sh.select(
         F.col(id_col).alias("_id"),
         *block_cols,
+        "simhash",
         F.explode(
             F.array(
                 *[
@@ -832,36 +833,30 @@ def _banded_pairs_from_simhash(
                 ]
             )
         ).alias("band"),
-    ).select("_id", *block_cols, "band.band_idx", "band.band_value")
+    ).select("_id", *block_cols, "simhash", "band.band_idx", "band.band_value")
 
     # rename-style self-join (see minhash_lsh_pairs note on alias-style
     # self-join mis-resolution)
-    left = banded.select(
-        *block_cols, "band_idx", "band_value", F.col("_id").alias("id_a")
-    )
-    right = banded.select(
-        *block_cols, "band_idx", "band_value", F.col("_id").alias("id_b")
-    )
-    cands = (
-        left.join(right, on=[*block_cols, "band_idx", "band_value"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            *block_cols,
+            "band_idx",
+            "band_value",
+            F.col("_id").alias(f"id_{s}"),
+            F.col("simhash").alias(f"sh_{s}"),
+        )
+
     return (
-        cands.join(
-            sh.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a")),
-            on="id_a",
-        )
-        .join(
-            sh.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b")),
-            on="id_b",
-        )
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+        side("a")
+        .join(side("b"), on=[*block_cols, "band_idx", "band_value"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -929,12 +924,12 @@ def simhash_component_edges(
         id_col, text_col, *block_cols, fp.alias("_fp")
     )
     # one vote aggregation for ALL rows; fp + blocks ride as carries
-    # (functionally dependent on the id). MATERIALIZED as an eager
-    # localCheckpoint (r14, was .persist() through r13) — the star
-    # branch and the band branch both consume it, and the checkpoint
+    # (functionally dependent on the id). MATERIALIZED through
+    # cache.materialize (a .persist() through r13) — the star branch
+    # and the band branch both consume it, and the materialization
     # does three things the cache did not:
     #   1. every downstream op builds on a LogicalRDD LEAF, so the
-    #      ~25-op banded/star/sym construction stops re-walking the
+    #      ~25-op banded/star construction stops re-walking the
     #      48-aggregate vote subtree in the analyzer (~0.6 s/build of
     #      driver time at sf0.1 — the r13 verdict's top item);
     #   2. per-build RDD identity makes the bench's per-sample rebuilds
@@ -946,23 +941,19 @@ def simhash_component_edges(
     # dedup_clusters 3.3-4.7 s -> 2.0-2.7 s, dedup_canonical_docs
     # 3.3-3.5 s -> 2.0-2.2 s per cold sample. Trade: the vote job runs
     # eagerly at build (REBUILD_PURE queries may run build jobs), and
-    # checkpoint blocks are per-build (GC'd with the frame) instead of
-    # a shared cache entry — a service that builds once is unaffected.
-    sh = simhash_bits(
-        base,
-        id_col,
-        text_col,
-        bits,
-        hash_family,
-        carry_cols=[*block_cols, "_fp"],
-        keep_empty=True,
-    ).localCheckpoint(eager=True)
-    # Consumers of the PERSISTED sh stay on the DataFrame API: a
-    # spark.sql() form of groups/star/reps was built and REVERTED —
-    # `{df}` temp-view references to a persisted frame (or to a frame
-    # whose subtree is persisted) are not substituted by the
-    # CacheManager (withCachedData does not rewrite under View nodes),
-    # so the SQL form re-executed the vote pass per consumer (r14).
+    # the blocks are per-build (GC'd with the frame) instead of a
+    # shared cache entry — a service that builds once is unaffected.
+    sh = materialize(
+        simhash_bits(
+            base,
+            id_col,
+            text_col,
+            bits,
+            hash_family,
+            carry_cols=[*block_cols, "_fp"],
+            keep_empty=True,
+        )
+    )
     clonable = sh.filter(F.col("_fp").isNotNull())
     # ONE collapse aggregate delivers both the rep id and the rep's
     # fingerprint row: ids are unique and lead the struct, so
@@ -991,21 +982,16 @@ def simhash_component_edges(
     )
     # representatives: one per clone group, plus every NULL-keyed row
     # (they can never pair — NULL block/simhash never equi-joins).
-    # Persisted: the band self-join reads it twice and the Hamming
-    # verify twice more — without the cache the whole collapse subtree
-    # would re-execute four times.
-    reps_sh = (
-        groups.select(
-            F.col(f"_r.{id_col}").alias(id_col),
-            *[F.col(f"_r.{c}").alias(c) for c in block_cols],
-            F.col("_r.simhash").alias("simhash"),
-        )
-        .unionByName(
-            sh.filter(F.col("_fp").isNull()).select(
-                id_col, *block_cols, "simhash"
-            )
-        )
-        .persist()
+    # Not cached: the banded relation is its only consumer, and the
+    # collapse groupBy's exchange is shared with the star branch and
+    # both band self-join sides (ReusedExchange), so the collapse
+    # shuffle runs once per execution.
+    reps_sh = groups.select(
+        F.col(f"_r.{id_col}").alias(id_col),
+        *[F.col(f"_r.{c}").alias(c) for c in block_cols],
+        F.col("_r.simhash").alias("simhash"),
+    ).unionByName(
+        sh.filter(F.col("_fp").isNull()).select(id_col, *block_cols, "simhash")
     )
     rep_pairs = _banded_pairs_from_simhash(
         reps_sh, id_col, bits, max_hamming, block_cols

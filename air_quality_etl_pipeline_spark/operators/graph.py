@@ -15,7 +15,7 @@ actually matters at 100 TB:
 
 * The pair graph after LSH blocking is orders of magnitude smaller than
   the corpus (edges ∝ near-duplicate docs, not total docs). When it
-  fits in one task (≤ *local_threshold* edges), a single-pass
+  fits in one task (2 × edges ≤ *local_threshold*), a single-pass
   union-find over a coalesced partition resolves all components in ONE
   job — no per-round scheduling overhead, O(E·α(E)) work. Measured at
   sf0.1: 14 distributed min-propagation rounds (~6 s of job overhead
@@ -42,9 +42,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-#: pair-graph size (edges, after symmetrize+distinct) up to which the
-#: single-task union-find path is used. Sized for single-task comfort:
-#: ~5e6 edges is tens of MB of longs plus two dict passes in one worker.
+from air_quality_etl_pipeline_spark.operators.cache import materialize
+
+#: pair-graph size up to which the single-task union-find path is
+#: used, compared against TWICE the raw edge count — an upper bound on
+#: the symmetrized distinct edge set, so the local path is never taken
+#: for a graph whose symmetrized form exceeds it. Sized for single-task
+#: comfort: ~5e6 edges is tens of MB of longs plus two dict passes in
+#: one worker.
 LOCAL_EDGE_THRESHOLD = 5_000_000
 
 
@@ -60,25 +65,20 @@ def connected_components(
     node id in the component (a deterministic, engine-portable
     canonical label).
 
+    The edge list is materialized once (``cache.materialize``) as
+    given — direction and duplicates included — so its producing plan
+    runs exactly once. If ``2 × edges ≤ local_threshold`` the
+    union-find path reads that relation directly (it ignores direction
+    and duplicate edges); otherwise the distributed path symmetrizes it
+    with one ``inline`` generator, not a self-union.
+
     Only nodes that appear in *edges* are returned — callers decide
     how isolated nodes label themselves (see :func:`dedup_clusters`).
     """
     id_type = edges.schema[src].dataType
-    # DataFrame API on purpose (r14 note): a spark.sql() form of the
-    # symmetrize+distinct was built and REVERTED — the edge lineage
-    # contains PERSISTED fingerprint frames, and the CacheManager does
-    # not substitute caches under the View node a `{df}` temp-view
-    # reference resolves to, so the SQL form re-executed the cascade's
-    # vote pass instead of reading its cache (probed r14).
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (
-        sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist()
-    )
-    n_edges = sym.count()
+    raw = materialize(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
 
-    if n_edges <= local_threshold:
+    if 2 * raw.count() <= local_threshold:
         out_schema = StructType(
             [
                 StructField("node", id_type, False),
@@ -116,7 +116,7 @@ def connected_components(
                 {"node": out, "component": [find(n) for n in out]}
             )
 
-        return sym.coalesce(1).mapInPandas(local_union_find, out_schema)
+        return raw.coalesce(1).mapInPandas(local_union_find, out_schema)
 
     # distributed min-label propagation + pointer jumping (see module
     # docstring). Neighbor propagation alone converges in O(diameter)
@@ -125,6 +125,10 @@ def connected_components(
     # The pointer-jump step (lbl ← lbl of lbl) doubles the propagation
     # distance per round, so convergence is O(log diameter): 30 rounds
     # cover any graph that fits on hardware.
+    sym = materialize(
+        raw.selectExpr("inline(array(struct(u, v), struct(v AS u, u AS v)))")
+        .distinct()
+    )
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -158,7 +162,6 @@ def connected_components(
             converged = True
             break
         prev_sum = new_sum
-    sym.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"

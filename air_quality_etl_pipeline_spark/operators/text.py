@@ -562,9 +562,11 @@ def quality_classifier_weights(
         labeled, text_col, id_col, n_buckets, salt, keep_cols=[label_col]
     )
     # persist the ≤n_buckets-row count relation: it is referenced
-    # twice below (per-bucket weights + the totals), and this runtime
-    # performs no subtree reuse — uncached, the corpus-sized gram
-    # aggregation would execute once per reference
+    # twice below (per-bucket weights + the totals). AQE reuses an
+    # exchange only while both consumer subtrees stay canonically equal
+    # (OPTIMIZATION_r14.md, "Mechanism re-probes" #1), which these two
+    # differently-pruned consumers do not guarantee — the cache keeps
+    # the corpus-sized gram aggregation at one execution
     from air_quality_etl_pipeline_spark.operators.cache import (
         register_persist,
     )

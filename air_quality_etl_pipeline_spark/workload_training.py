@@ -1084,18 +1084,22 @@ def q_trigram_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer multiple of an exact decimal) so document sums are
     order-independent."""
     d = _t(spark, sf_dir, "documents")
-    # NOTE (round-9, revised round-10): this environment performs NO
-    # exchange/subtree reuse (zero ReusedExchange even for trivially
-    # identical aggregate subtrees, probed directly), so every
-    # REFERENCE to a count relation re-runs its corpus pass. Two
-    # rewrites were measured and REJECTED this round: localCheckpoint
-    # of the vocab-sized count relations under REBUILD_PURE (the
-    # per-sample rebuild pays plan construction + eager checkpoint
-    # jobs, 6.7 s vs 3.25 prepared) and a single-reference linear
-    # join chain (5.4 s — extra shuffles beat the saved passes);
-    # round 9 had already rejected checkpointing the tokenized
-    # corpus. The five-join tv lookup below is the measured optimum
-    # for this runtime; SCALE.md r10 records all three attempts.
+    # NOTE (round-9, revised round-10 and round-14): the r9/r10 premise
+    # that this environment performs NO exchange/subtree reuse is
+    # stale — AQE deduplicates identical exchange subtrees within one
+    # execution (OPTIMIZATION_r14.md, "Mechanism re-probes" #1: this
+    # query's final plan holds 3 ReusedExchange), but only while the
+    # consumer subtrees stay canonically equal, so a count relation
+    # whose references are pruned or filtered differently still re-runs
+    # its corpus pass per reference. Two rewrites were measured and
+    # REJECTED in round 10: localCheckpoint of the vocab-sized count
+    # relations under REBUILD_PURE (the per-sample rebuild pays plan
+    # construction + eager checkpoint jobs, 6.7 s vs 3.25 prepared)
+    # and a single-reference linear join chain (5.4 s — extra shuffles
+    # beat the saved passes); round 9 had already rejected
+    # checkpointing the tokenized corpus. The five-join tv lookup
+    # below is the measured optimum for this runtime; SCALE.md r10
+    # records all three attempts.
     toks = d.select(
         "doc_id",
         F.transform(token_array(F.col("text")), lambda x: F.lower(x)).alias(

@@ -89,3 +89,38 @@ def test_classifier_retrain_loop_leaks_nothing_with_registry(spark):
                 labeled, n_buckets=64, cache_registry=reg
             ).count()
         assert _n_persistent(spark) == base
+
+
+def test_materialize_local_checkpoint_without_checkpoint_dir(spark):
+    from air_quality_etl_pipeline_spark.operators.cache import materialize
+
+    assert spark.sparkContext.getCheckpointDir() is None
+    spark.catalog.clearCache()
+    out = materialize(spark.range(20).withColumn("sq", F.col("id") * F.col("id")))
+    # lineage cut at a LogicalRDD leaf, and no CacheManager entry
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in plan and "Range" not in plan
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert sorted(r.sq for r in out.collect()) == [i * i for i in range(20)]
+
+
+def test_materialize_reliable_checkpoint_with_checkpoint_dir(spark, tmp_path):
+    from air_quality_etl_pipeline_spark.operators.cache import materialize
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        out = materialize(spark.range(20).withColumn("x", F.col("id") + 1))
+        # the reliable branch writes the rows under the checkpoint dir
+        written = [p for p in tmp_path.rglob("part-*") if p.is_file()]
+        assert written
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" in plan and "Range" not in plan
+        assert sorted(r.x for r in out.collect()) == list(range(1, 21))
+    finally:
+        # SparkContext has no public unset: clear the JVM-side field so
+        # later tests keep the default localCheckpoint branch
+        setter = getattr(sc._jsc.sc(), "checkpointDir_$eq")
+        setter(spark._jvm.scala.Option.apply(None))
+    assert sc.getCheckpointDir() is None

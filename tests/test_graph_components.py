@@ -307,3 +307,128 @@ def test_component_edges_rebuilds_are_cache_independent(spark, sf_dir):
     # relation's analyzed plan
     assert "LogicalRDD" in p1.toString()
     assert "parquet" not in p1.toString().lower()
+
+
+def _path(cc) -> str:
+    """Which connected_components path built *cc*: the union-find path
+    ends in a MapInPandas node, the distributed one in a LogicalRDD."""
+    plan = cc._jdf.queryExecution().optimizedPlan().toString()
+    return "local" if "MapInPandas" in plan else "distributed"
+
+
+def test_local_path_decision_bounds_symmetrized_count(spark):
+    """The path decision counts RAW edges and takes the local path only
+    when 2 × raw ≤ local_threshold. 2 × raw bounds the symmetrized
+    distinct edge count the decision used to compare, so no graph the
+    old decision sent to the distributed path can go local. Pinned at
+    the boundary, on a graph whose symmetrized distinct count is
+    exactly 2 × raw (no duplicate, reverse or self-loop edges)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"]
+    )
+    # symmetrized distinct = 6 = 2 × 3 raw edges
+    assert _path(connected_components(edges, local_threshold=6)) == "local"
+    # one below: the old decision (6 > 5) went distributed, so must we
+    assert (
+        _path(connected_components(edges, local_threshold=5))
+        == "distributed"
+    )
+    # duplicate and reverse edges count toward raw: 6 raw edges whose
+    # symmetrized distinct count is still 6 go distributed below 12
+    # (conservative — never local where the old count was larger)
+    dup = edges.unionByName(
+        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    )
+    assert _path(connected_components(dup, local_threshold=11)) == "distributed"
+    assert _path(connected_components(dup, local_threshold=12)) == "local"
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    for cc in (
+        connected_components(dup, local_threshold=11),
+        connected_components(dup, local_threshold=12),
+    ):
+        assert {(r.node, r.component) for r in cc.collect()} == want
+
+
+def _edge_plan_counts(spark, monkeypatch, sf_dir) -> tuple[int, int]:
+    """(band explodes, joins) in the FINAL executed plan of the edge
+    relation connected_components materializes for dedup_clusters'
+    star-edge cascade."""
+    import air_quality_etl_pipeline_spark.operators.graph as graph
+    from air_quality_etl_pipeline_spark.operators.dedup import (
+        simhash_component_edges,
+    )
+
+    seen = []
+    real = graph.materialize
+
+    def recording(df):
+        seen.append(df)
+        return real(df)
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    edges = simhash_component_edges(
+        d, "doc_id", "text", bits=48, max_hamming=3, block_cols=["lang"]
+    )
+    with monkeypatch.context() as m:
+        m.setattr(graph, "materialize", recording)
+        assert _path(connected_components(edges)) == "local"
+    assert len(seen) == 1, "local path materializes the edges once"
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    n_gen = final.count("Generate explode")
+    n_join = sum(
+        final.count(j)
+        for j in (
+            "BroadcastHashJoin",
+            "SortMergeJoin",
+            "ShuffledHashJoin",
+            "BroadcastNestedLoopJoin",
+            "CartesianProduct",
+        )
+    )
+    return n_gen, n_join
+
+
+def test_component_edge_relation_runs_band_join_once(
+    spark, monkeypatch, sf_dir
+):
+    """Plan-shape fence for the local path's edge relation. It holds
+    exactly two joins — the band self-join and the clone-star join:
+    the Hamming check reads both fingerprints off the band rows (no
+    join back to the fingerprint frame per pair endpoint), and the
+    edges are materialized as given (no self-union symmetrize, which
+    would plan every join above the reused exchanges twice).
+
+    With broadcast joins off, both band self-join sides are shuffled
+    and canonically equal, so the explode runs exactly once (the right
+    side is a ReusedExchange). Under the default config the small band
+    side is broadcast instead — a separate BroadcastExchange — so the
+    explode is planned once per side."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        assert _edge_plan_counts(spark, monkeypatch, sf_dir) == (1, 2)
+    finally:
+        spark.conf.set(key, old)
+    assert _edge_plan_counts(spark, monkeypatch, sf_dir) == (2, 2)
+
+
+def test_dedup_builds_leave_no_cache_entries(spark, sf_dir):
+    """dedup_clusters / dedup_canonical_docs rebuild every call; their
+    internal materializations are checkpoints owned by the returned
+    frame, so repeated build-plus-execute rounds leave no CacheManager
+    entry behind (each build used to leave its fingerprint and edge
+    persists cached)."""
+    from air_quality_etl_pipeline_spark.workload import QUERIES
+
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty()
+    for _ in range(3):
+        for name in ("dedup_clusters", "dedup_canonical_docs"):
+            QUERIES[name][0](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+    assert cache_manager.isEmpty()
