@@ -8,6 +8,10 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 All real logic lives in ``air_quality_etl_pipeline_spark`` — this module
 only adapts the registry in ``air_quality_etl_pipeline_spark.workload``
 to the driver's interface.
+
+``queries()`` and ``oracle_sql()`` follow the registry's registration
+order and hold the same names; ``scripts/verify_subset.py`` runs them
+through the compare in ``air_quality_etl_pipeline_spark.oracle``.
 """
 
 from __future__ import annotations
@@ -17,7 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from air_quality_etl_pipeline_spark.session import tune_session
-from air_quality_etl_pipeline_spark.workload import QUERIES, ROWS_ONLY_QUERIES
+from air_quality_etl_pipeline_spark.workload import QUERIES
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -42,13 +46,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle twin for each query. Exactly the registry's
-    ``ROWS_ONLY_QUERIES`` members are omitted (→ driver records a
-    rows-only check); every other registered query ships an oracle —
-    the single-definition-site contract is asserted by
-    tests/test_invariants.py."""
-    return {
-        name: oracle
-        for name, (_, oracle) in QUERIES.items()
-        if name not in ROWS_ONLY_QUERIES and oracle is not None
-    }
+    """DuckDB oracle twin for every query in :func:`queries`."""
+    return {name: oracle for name, (_, oracle) in QUERIES.items()}

@@ -42,8 +42,8 @@ def owned_caches() -> Iterator[list]:
             out.write.format("noop").mode("overwrite").save()
         # every internal persist freed here; loop callers stay bounded
 
-    Leak-pinned in tests/test_cache_lifecycle.py via
-    ``getPersistentRDDs`` before/after.
+    Leak-pinned in tests/test_cache_lifecycle.py via the
+    CacheManager's entry count before/after.
     """
     reg: list[DataFrame] = []
     try:

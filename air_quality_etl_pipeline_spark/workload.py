@@ -1,9 +1,13 @@
 """The query workload: every SURVEY §2 operator expressed as a named
 query over the driver's testdata tables, each with a DuckDB oracle twin.
 
-Layout: ``QUERIES[name] = (spark_fn, oracle_sql_or_None)`` where
+Layout: ``QUERIES[name] = (spark_fn, oracle_sql)`` where
 ``spark_fn(spark, sf_dir) -> DataFrame``. ``__spark_entry__.py`` exposes
 these to the driver harness.
+
+The order is the registration order: this module's queries, then each
+``workload_*`` module's in import order. ``oracle.compare`` checks one
+query against its oracle.
 
 Engine-portability rules used throughout (so order-insensitive value
 hashes match across Spark and DuckDB):
@@ -40,16 +44,15 @@ from air_quality_etl_pipeline_spark.plans.merge import merge_insert_if_absent
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
-#: registry filled at import time: name -> (spark_fn, oracle_sql | None)
-QUERIES: dict[str, tuple[SparkQuery, str | None]] = {}
+#: registry filled at import time: name -> (spark_fn, oracle_sql)
+QUERIES: dict[str, tuple[SparkQuery, str]] = {}
 
 
-def register(name: str, oracle: str | None):
+def register(name: str, oracle: str):
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in QUERIES:
-            # a silent overwrite detaches the name from its driver
-            # receipts and drops the old query's coverage on the floor
-            # (round 8 nearly shipped exactly that: a new
+            # a silent overwrite drops the old query's coverage on the
+            # floor (round 8 nearly shipped exactly that: a new
             # 'cdc_apply_latest' shadowing the round-5 one)
             raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = (fn, oracle)
@@ -1416,336 +1419,3 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, str] = {
     "boilerplate_gram_coverage": "vocabulary top-20 window, TakeOrderedAndProject-bounded",
     "sketch_cm_heavy_hitters": "top-k candidate rank window, WindowGroupLimit-bounded",
 }
-
-#: Queries REGISTERED WITHOUT a DuckDB oracle, by design — the single
-#: definition site for the rows-only contract (round-4 verdict #7):
-#: ``__spark_entry__.oracle_sql()`` omits exactly these names, and
-#: ``_driver_checked_rounds`` below counts their ``err: no_oracle``
-#: receipts (with rows returned) as a checked rows-only pass so they
-#: stop re-entering the driver gate's first-50 window every round.
-#: tests/test_invariants.py asserts this set equals the queries whose
-#: registered oracle is ``None``.
-#:
-#: EMPTY since round 11: the last member, ``bpe_encode_corpus``,
-#: gained a real unrolled-CTE oracle (the trainer oracle's round-t
-#: rewrite relation IS the encoded vocabulary — see
-#: workload_training._bpe_encode_oracle), so every registered query is
-#: now hash-compared cross-engine. Leaving the set (per the round-5
-#: advisor rule below in _driver_checked_rounds) drops its old
-#: ``no_oracle`` credit, re-queueing it at the front of the driver
-#: gate so the new oracle is driver-verified immediately.
-ROWS_ONLY_QUERIES: frozenset[str] = frozenset()
-
-#: Driver-verification priority. The driver's correctness gate checks
-#: the FIRST 50 registered queries per round. Lifetime through round 3:
-#: 146 distinct driver-green, 0 ever-failed, 107 never checked.
-#:
-#: This static list is the BASE order; the effective registry order is
-#: computed at import by ``_driver_checked_rounds`` below, which reads
-#: the driver-written ``CORRECTNESS_r*.json`` receipts and re-sorts so
-#: that (1) never-driver-checked (or last-check-failed) queries come
-#: first in base order, then (2) checked-green queries by OLDEST last
-#: check first (drift re-confirmation). The round-3 verdict's
-#: highest-leverage finding was that this re-ordering had to be done
-#: by hand each round or the gate re-confirms known greens and retires
-#: zero backlog — deriving it from the receipts makes the rotation
-#: self-maintaining: each gate run demotes what it just checked.
-#: Every queued name is locally verified at sf0.001 AND sf0.01 by
-#: tests/test_oracle_parity.py — the driver signal is confirmation,
-#: not first contact.
-_DRIVER_PRIORITY = [
-    # never driver-checked (107) — rounds 4+5 gate fodder, oldest-first
-    "bm25_search",
-    "chi2_lang_tokens",
-    "train_val_test_split",
-    "orders_gini",
-    "bpe_pair_counts",
-    "dedup_span_runs",
-    "sql_volume_shipping",
-    "sql_product_profit",
-    "sql_important_parts",
-    "sql_late_shipments",
-    "sql_potential_promotion",
-    "sql_waiting_suppliers",
-    "sql_sales_opportunity",
-    "semantic_dedup",
-    "pq_codes",
-    "pq_adc_search",
-    "bigram_logprob_score",
-    "sketch_cm_heavy_hitters",
-    "embedding_covariance",
-    "bpe_learn_merges",
-    "pagerank_trade_graph",
-    "ann_recall_at_k",
-    "pca_project",
-    "sketch_kmv_jaccard",
-    "copurchase_pairs",
-    "triangle_count",
-    "entity_link_names",
-    "dedup_canonical_docs",
-    "lsh_recall_eval",
-    "ivf_pq_search",
-    "orc_roundtrip",
-    "jsonl_roundtrip",
-    "streaming_topk_daily",
-    "bfs_reach_3",
-    "hybrid_rrf_search",
-    "boilerplate_gram_coverage",
-    "trigram_backoff_score",
-    "csv_quarantine_split",
-    "sql_forecast_revenue",
-    "matryoshka_recall",
-    "quantization_error_stats",
-    "cdc_apply_latest",
-    "right_to_forget_scrub",
-    "variant_props_extract",
-    "sql_lateral_topn",
-    "streaming_rest_ingest",
-    "null_safe_join_counts",
-    "pearson_corr_qty_price",
-    "drill_across_monthly",
-    "ppr_from_seeds",
-    "bpe_encode_corpus",
-    "fk_integrity_audit",
-    "weighted_median_price",
-    "topk_with_ties_orders",
-    "dataset_card_summary",
-    "rerank_crossencoder_stub",
-    "multimodal_blob_dedup",
-    "association_rules",
-    "sft_pairs_assembly",
-    "padding_waste_report",
-    "mad_outliers",
-    "late_dim_backfill",
-    "table_fingerprint",
-    "knn_classifier_eval",
-    "keyword_extraction_topk",
-    "text_char_entropy",
-    "ols_price_by_qty",
-    "benford_first_digit",
-    "event_streaks",
-    "winsorize_values",
-    "tz_daily_counts",
-    "largest_remainder_alloc",
-    "streaming_outer_join",
-    "event_transition_matrix",
-    "dwell_time_stats",
-    "multitouch_attribution",
-    "sql_recursive_paths",
-    "cube_grouping_flags",
-    "revenue_reconciliation",
-    "dow_seasonality",
-    "retrieval_mrr_ndcg",
-    "churn_flags",
-    "class_separability",
-    "vocab_similarity_langs",
-    "target_encoding_smoothed",
-    "abc_pareto_classes",
-    "calendar_densify",
-    "auc_rank_sum",
-    "psi_value_drift",
-    "lid_macro_f1",
-    "jaccard_threshold_sweep",
-    "join_fanout_audit",
-    "bounce_rate_daily",
-    "peak_concurrent_sessions",
-    "revenue_decomposition",
-    "shipping_latency_bands",
-    "growth_accounting_daily",
-    "supplier_hhi_by_nation",
-    "ttr_by_length_band",
-    "order_backlog_daily",
-    "dead_stock_report",
-    "id_gap_audit",
-    "sql_keyset_pagination",
-    "mean_imputation_report",
-    "double_charge_detection",
-    "priority_mix_shift",
-    "repeat_purchase_interval",
-    # driver-green, last verified round 1 — drift re-confirmation queue
-    "silver_filter_dedup",
-    "dim_date",
-    "dim_part_category",
-    "avg_by_month",
-    "filtered_count",
-    "filtered_distinct_count",
-    "leading_group_top1",
-    "argmax_with_ties",
-    "mom_change",
-    "yoy_change",
-    "group_rank",
-    "per_100k",
-    "share_of_total",
-    "segment_region_map",
-    "anti_join_new_keys",
-    "merge_upsert",
-    "cube_measures",
-    "topk_orders",
-    "events_daily_window",
-    "quantiles",
-    "rollup_measures",
-    "star_join_wide",
-    "display_labels",
-    "month_rollup",
-    "union_append",
-    "distinct_coverage",
-    "text_stats",
-    "lang_id",
-    "quality_score",
-    "bpe_token_count",
-    "text_scrub",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "corpus_composition",
-    "ann_cosine_topk",
-    "ann_sign_lsh_topk",
-    "ann_ivf_topk",
-    "embedding_near_dup",
-    "embedding_normalize",
-    "multimodal_decode_meta",
-    "multimodal_frame_sample",
-    "dedup_fuzzy_edit",
-    "doc_repetition",
-    "embedding_quantize_int8",
-    # driver-green, last verified round 3
-    "kmeans_parallel_init",
-    "decontaminate_eval",
-    "pack_sequences",
-    "streaming_static_enrich",
-    "hard_negative_mining",
-    "sql_shipping_priority",
-    "sql_local_supplier_volume",
-    "chunk_documents",
-    "mixture_sample",
-    "cross_doc_ngram_dup",
-    "vocab_oov_rate",
-    "zscore_anomalies",
-    "moving_avg_7d",
-    "ntile_deciles",
-    "above_avg_orders",
-    "iqr_outliers",
-    "histogram_bins",
-    "snapshot_diff",
-    "user_journey",
-    "funnel_steps",
-    "sql_returned_items",
-    "sql_top_supplier",
-    "sql_parts_supplier",
-    "sql_small_qty_revenue",
-    "sql_large_volume_customer",
-    "sql_discounted_revenue",
-    "sql_promo_revenue",
-    "sql_market_share",
-    "unigram_logprob_score",
-    "heavy_hitter_ngrams",
-    "kl_corpus_divergence",
-    "percent_rank_docs",
-    "random_projection_lsh",
-    "url_canonical_dedup",
-    "suffix_prefix_dup",
-    "zipf_token_ranks",
-    "bloom_filter_join",
-    "stopword_profile",
-    "char_ngram_lid_confusion",
-    "token_histogram_bands",
-    "minhash_containment",
-    "doc_dup_fraction_by_lang",
-    "robots_quality_gate",
-    "domain_balance_sample",
-    "contamination_overlap_stats",
-    "sql_order_priority_count",
-    "sql_customer_distribution",
-    "sql_min_cost_supplier",
-    "asof_nearest_join",
-    "embedding_drift_centroids",
-]
-
-def _driver_checked_rounds(root: str | None = None) -> dict[str, int]:
-    """``name -> latest round whose driver gate checked it GREEN``,
-    parsed from the driver-written ``CORRECTNESS_r*.json`` receipts at
-    the repo root (or *root*, for tests). A query whose LATEST check
-    failed or errored is excluded entirely — even if an earlier round
-    was green — so a regression re-queues it at the front with the
-    never-checked block. Missing/unreadable files contribute nothing,
-    so a fresh clone falls back to the static base order.
-
-    A receipt with ``err == "no_oracle"`` and ``spark_rows > 0`` counts
-    as a checked ROWS-ONLY pass — but ONLY for current
-    :data:`ROWS_ONLY_QUERIES` members: that is the strongest signal the
-    driver can ever record for them, so treating it as unchecked would
-    re-queue those queries into the gate's first-50 window every round
-    forever, burning slots that should retire real backlog (round-4
-    verdict, "What's wrong" #2). A query that has since GAINED an
-    oracle (left the set) must NOT keep its old no_oracle credit, or
-    its brand-new oracle would go driver-unverified for many rounds
-    (round-5 advisor finding: bpe_learn_merges / pca_project)."""
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest_green: dict[str, int] = {}
-    latest_any: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            latest_any[name] = max(rnd, latest_any.get(name, 0))
-            err = rec.get("err")
-            green = (
-                rec.get("rows_match") is True
-                and rec.get("schema_match", True) is not False
-                and rec.get("hash_match", True) is not False
-                and err is None
-            ) or (
-                # rows-only pass: the driver ran the query, it returned
-                # rows, and the query is STILL registered oracle-less
-                err == "no_oracle"
-                and (rec.get("spark_rows") or 0) > 0
-                and name in ROWS_ONLY_QUERIES
-            )
-            if green:
-                latest_green[name] = max(rnd, latest_green.get(name, 0))
-    return {
-        name: rnd
-        for name, rnd in latest_green.items()
-        if rnd >= latest_any[name]
-    }
-
-
-_snapshot = dict(QUERIES)
-_base = [n for n in _DRIVER_PRIORITY if n in _snapshot] + [
-    n for n in _snapshot if n not in _DRIVER_PRIORITY
-]
-_base_pos = {n: i for i, n in enumerate(_base)}
-# SPARK_GRAFT_STATIC_ORDER=1 pins the registry to the static base order
-# (receipt files vary per working tree, so two clones of one commit can
-# otherwise expose different QUERIES orderings — set this for
-# reproducible iteration/collection order; the receipt-driven rotation
-# stays the default because the driver gate depends on it).
-if os.environ.get("SPARK_GRAFT_STATIC_ORDER", "") not in ("", "0"):
-    _checked: dict[str, int] = {}
-else:
-    _checked = _driver_checked_rounds()
-# never-checked (and last-check-failed) first in base order, then
-# checked-green by oldest-latest-check round first, ties in base order
-_order = sorted(
-    _base, key=lambda n: (_checked.get(n, -1), _base_pos[n])
-)
-QUERIES.clear()
-QUERIES.update({n: _snapshot[n] for n in _order})

@@ -18,6 +18,7 @@ first headline query.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -124,68 +125,79 @@ def _set_windowexec_level(spark, level_name: str) -> None:
     )
 
 
+@contextlib.contextmanager
+def _quiet_allowlisted_windows(spark, name: str):
+    """Silence WindowExec's logger while *name* runs, if *name* is in
+    the allowlist of bounded-grain global windows."""
+    from air_quality_etl_pipeline_spark.workload import GLOBAL_WINDOW_ALLOWLIST
+
+    silenced = name in GLOBAL_WINDOW_ALLOWLIST
+    if silenced:
+        _set_windowexec_level(spark, "ERROR")
+    try:
+        yield
+    finally:
+        if silenced:
+            _set_windowexec_level(spark, "WARN")
+
+
+def warm_up(spark, names) -> None:
+    """Warm up JVM JIT + whole-stage codegen (Janino class compilation
+    is plan-shape-specific, so running every query once at the
+    smallest SF compiles the same generated classes) — steady-state
+    throughput is what the benchmark should measure, not one-time JIT."""
+    from air_quality_etl_pipeline_spark.workload import QUERIES
+
+    warm_dir = "/root/testdata/sf0.001"
+    for warm_name in names:
+        if warm_name in QUERIES:
+            with _quiet_allowlisted_windows(spark, warm_name):
+                QUERIES[warm_name][0](spark, warm_dir).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+
+
+def time_query(spark, sf_dir: str, name: str) -> tuple[float, list[float]]:
+    """Best-of-3 seconds and the three samples for *name* at *sf_dir*.
+
+    Each sample runs a prepared plan: every headline query is a pure
+    DataFrame pipeline, so the plan is built once (a prepared statement
+    — run 1 pays it) and each sample re-executes it in full; best-of-3
+    therefore measures steady-state execution, not py4j
+    plan-construction chatter, and scheduler noise (shared CPUs) is
+    squeezed out by the min."""
+    from air_quality_etl_pipeline_spark.workload import prepared
+
+    samples = []
+    with _quiet_allowlisted_windows(spark, name):
+        for _ in range(3):
+            t0 = time.perf_counter()
+            prepared(spark, sf_dir, name).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            samples.append(round(time.perf_counter() - t0, 3))
+    return round(min(samples), 3), samples
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from air_quality_etl_pipeline_spark.session import get_spark
-    from air_quality_etl_pipeline_spark.workload import (
-        GLOBAL_WINDOW_ALLOWLIST,
-        QUERIES,
-        prepared,
-    )
+    from air_quality_etl_pipeline_spark.workload import QUERIES
 
     spark = get_spark(app_name="bench")
-    # Warm up JVM JIT + whole-stage codegen (Janino class compilation is
-    # plan-shape-specific, so running every headline query once at the
-    # smallest SF compiles the same generated classes) — steady-state
-    # throughput is what the benchmark should measure, not one-time JIT.
-    warm_dir = "/root/testdata/sf0.001"
-    for warm_name in HEADLINE:
-        if warm_name in QUERIES:
-            silenced = warm_name in GLOBAL_WINDOW_ALLOWLIST
-            if silenced:
-                _set_windowexec_level(spark, "ERROR")
-            try:
-                QUERIES[warm_name][0](spark, warm_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            finally:
-                if silenced:
-                    _set_windowexec_level(spark, "WARN")
+    warm_up(spark, HEADLINE)
 
     names = [n for n in HEADLINE if n in QUERIES]
     missing = [n for n in HEADLINE if n not in QUERIES]
     if missing:
         print(f"bench: skipping unknown queries {missing}", file=sys.stderr)
 
-    # best-of-3 per query on a prepared plan: every headline query is a
-    # pure DataFrame pipeline, so the plan is built once (a prepared
-    # statement — run 1 pays it) and each sample re-executes it in full;
-    # best-of-3 therefore measures steady-state execution, not py4j
-    # plan-construction chatter, and scheduler noise (shared CPUs) is
-    # squeezed out by the min.
-    def time_query(name: str) -> tuple[float, list[float]]:
-        silenced = name in GLOBAL_WINDOW_ALLOWLIST
-        if silenced:
-            _set_windowexec_level(spark, "ERROR")
-        try:
-            samples = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                prepared(spark, sf_dir, name).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(round(time.perf_counter() - t0, 3))
-        finally:
-            if silenced:
-                _set_windowexec_level(spark, "WARN")
-        return round(min(samples), 3), samples
-
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
     for name in names:
-        timings[name], all_samples[name] = time_query(name)
+        timings[name], all_samples[name] = time_query(spark, sf_dir, name)
 
     # Intra-suite drift guard (round-8 verdict #6): re-time the anchor
     # AFTER the whole suite so session aging across ~50 queries is
@@ -196,7 +208,7 @@ def main() -> None:
     anchor = "silver_filter_dedup"
     anchor_first = timings.get(anchor)
     anchor_last, anchor_last_samples = (
-        time_query(anchor) if anchor in timings else (None, [])
+        time_query(spark, sf_dir, anchor) if anchor in timings else (None, [])
     )
 
     samples_out = os.environ.get("SPARK_GRAFT_BENCH_SAMPLES_OUT", "")

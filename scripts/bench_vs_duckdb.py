@@ -9,6 +9,10 @@ DuckDB's fetchall always materialized every output column, while
 Spark's count() let Catalyst prune projection-terminal outputs, so
 pre-r10 ratios were tilted IN SPARK'S FAVOR on those queries.
 
+The Spark side reuses ``bench.py``'s warm-up and ``time_query``; the
+DuckDB side reads the tables through ``oracle.duck_con``, so a
+Spark-written sf dir (``scripts/stress_sf1.py``) works too.
+
 Prints one JSON line: both totals, the ratio, and per-query seconds.
 
 Usage: python scripts/bench_vs_duckdb.py  (solo box)
@@ -21,93 +25,42 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from bench import HEADLINE, _set_windowexec_level
+    from bench import HEADLINE, time_query, warm_up
 
+    from air_quality_etl_pipeline_spark.oracle import duck_con
     from air_quality_etl_pipeline_spark.session import get_spark
-    from air_quality_etl_pipeline_spark.workload import (
-        GLOBAL_WINDOW_ALLOWLIST,
-        QUERIES,
-        prepared,
-    )
+    from air_quality_etl_pipeline_spark.workload import QUERIES
 
     spark = get_spark(app_name="bench-vs-duckdb")
-    for name in HEADLINE:  # warm codegen at the smallest SF
-        silenced = name in GLOBAL_WINDOW_ALLOWLIST
-        if silenced:
-            _set_windowexec_level(spark, "ERROR")
-        try:
-            QUERIES[name][0](spark, "/root/testdata/sf0.001").write.format(
-                "noop"
-            ).mode("overwrite").save()
-        finally:
-            if silenced:
-                _set_windowexec_level(spark, "WARN")
-    spark_t: dict[str, float] = {}
-    for name in HEADLINE:
-        silenced = name in GLOBAL_WINDOW_ALLOWLIST
-        if silenced:
-            _set_windowexec_level(spark, "ERROR")
-        try:
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                prepared(spark, sf_dir, name).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-        finally:
-            if silenced:
-                _set_windowexec_level(spark, "WARN")
-        spark_t[name] = round(best, 3)
+    warm_up(spark, HEADLINE)
+    spark_t = {name: time_query(spark, sf_dir, name)[0] for name in HEADLINE}
     spark.stop()
 
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_con(sf_dir)
     con.execute(f"SET threads TO {os.cpu_count()}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
     duck_t: dict[str, float] = {}
-    no_oracle = []
     for name in HEADLINE:
-        sql = QUERIES[name][1]
-        if not sql:
-            no_oracle.append(name)
-            continue
         best = float("inf")
         for _ in range(3):
             t0 = time.perf_counter()
-            con.execute(sql).fetchall()
+            con.execute(QUERIES[name][1]).fetchall()
             best = min(best, time.perf_counter() - t0)
         duck_t[name] = round(best, 3)
 
     s_total = round(sum(spark_t.values()), 2)
     d_total = round(sum(duck_t.values()), 2)
-    comparable = round(
-        sum(v for k, v in spark_t.items() if k in duck_t), 2
-    )
     print(
         json.dumps(
             {
                 "spark_total_sec": s_total,
                 "duckdb_total_sec": d_total,
-                "spark_comparable_sec": comparable,
-                "ratio_spark_over_duckdb": round(comparable / d_total, 3),
+                "ratio_spark_over_duckdb": round(s_total / d_total, 3),
                 "n_queries": len(spark_t),
-                "no_oracle": no_oracle,
                 "spark": spark_t,
                 "duckdb": duck_t,
             }

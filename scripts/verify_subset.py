@@ -1,185 +1,105 @@
-"""Verify a subset of registered queries against their DuckDB oracles
-— the same canon/compare the driver's gate applies, runnable per-query
-while iterating: ``python scripts/verify_subset.py name1 name2``
-(no names = all).  ``--sf=/root/testdata/sf0.1`` (or env
-``SPARK_GRAFT_VERIFY_SF``) retargets the scale factor; default sf0.01.
+"""Verify registered queries against their DuckDB oracles through
+``__spark_entry__``: ``entry`` as a smoke check, then each
+``queries()[name]`` (which applies ``tune_session``) compared with
+``oracle_sql()[name]`` by ``air_quality_etl_pipeline_spark.oracle``,
+the same column-name, type, row-count and row-set checks Tier-1's
+``tests/test_oracle_parity.py`` applies.
 
-``--since=N`` slices to queries first driver-receipted at round ≥ N
-plus never-receipted ones (i.e. "registered since round N") — the
-round-close mode at 295+ registrations (round-11 verdict #8): run
-changed queries by NAME plus ``--since=<round>`` at sf0.1, and save
-the FULL sweep for registry-affecting changes. Composable with
-explicit names (union).
+    python scripts/verify_subset.py [name ...] [--sf=DIR] [--workers=N]
+
+No names = the whole registry. ``--sf=DIR`` (or env
+``SPARK_GRAFT_VERIFY_SF``) retargets the scale factor; default sf0.01.
+A Spark-written sf dir (tables as directories of part files, the layout
+``scripts/stress_sf1.py`` writes) works too. Run it from any working
+directory; the session has the default conf, so ``queries()`` must
+tune it.
 
 ``--workers=N`` (default 8) shards the DuckDB oracle side across a
-process pool (round-12 verdict #7: the oracle side is embarrassingly
-parallel and dominated the ~47-min single-threaded full sweep — the
-Spark side shares ONE session in the main process while every oracle
-runs concurrently in its own connection). ``--workers=0`` restores
-the fully-serial path.
+process pool: the Spark side shares one session in the main process
+while every oracle runs concurrently in its worker's connection.
+``--workers=0`` runs the oracles serially in-process.
+
+Prints one ``OK``/``FAIL`` line per query, then ``RESULT: ALL MATCH``
+(exit 0) or ``RESULT: MISMATCH: [...]`` (exit 1).
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from air_quality_etl_pipeline_spark import oracle  # noqa: E402
 
 _WORKER_CON = None
 
 
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    return str(v)
-
-
 def _init_worker(sf: str) -> None:
-    """Per-process DuckDB connection with the table views — one-time
-    setup per pool worker."""
     global _WORKER_CON
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf}/{t}.parquet"
-        if os.path.isdir(p):
-            p = f"{p}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    _WORKER_CON = con
+    _WORKER_CON = oracle.duck_con(sf)
 
 
-def _run_oracle(sql: str):
-    """Execute one oracle and return (sorted_cols, canon-sorted rows)
-    — canon + sort happen IN the worker so the parallel section covers
-    the whole oracle-side cost, and only strings cross the pipe."""
-    cur = _WORKER_CON.execute(sql)
-    dcols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    di = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    return sorted(dcols), sorted(
-        tuple(canon(r[i]) for i in di) for r in drows
-    )
+def _run_oracle(sql: str) -> oracle.OracleResult:
+    # canon + sort happen in the worker, so the parallel section covers
+    # the whole oracle-side cost and only strings cross the pipe
+    return oracle.run_oracle(_WORKER_CON, sql)
 
 
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    from air_quality_etl_pipeline_spark.workload import QUERIES
+    import __spark_entry__ as entrymod
 
-    # --sf=DIR (or SPARK_GRAFT_VERIFY_SF) retargets the comparison —
-    # an sf0.1 sweep is the cheapest detector of scale-dependent
-    # divergence (it caught the round-6 decimal/ulp findings that
-    # sf0.01 can't see).
     sf = os.environ.get("SPARK_GRAFT_VERIFY_SF", "/root/testdata/sf0.01")
-    since = None
     workers = 8
-    args = []
+    names = []
     for a in sys.argv[1:]:
         if a.startswith("--sf="):
             sf = a[5:]
-        elif a.startswith("--since="):
-            since = int(a[8:])
         elif a.startswith("--workers="):
             workers = int(a[10:])
         else:
-            args.append(a)
-    names = args
-    if since is not None:
-        # first-receipt round per query, from the driver's own files —
-        # never-receipted queries (first seen this round) always slice in
-        import glob
-        import json as _json
-        import re
-
-        first_seen: dict[str, int] = {}
-        for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-            m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-            if not m:
-                continue
-            rnd = int(m.group(1))
-            try:
-                with open(path) as f:
-                    data = _json.load(f)
-            except (OSError, ValueError):
-                continue
-            for qn in data if isinstance(data, dict) else ():
-                # minimum round, NOT setdefault: the glob sorts
-                # lexicographically (r10..r12 before r2..r9), so
-                # setdefault would record a later round as "first"
-                first_seen[qn] = min(first_seen.get(qn, rnd), rnd)
-        sliced = [
-            n for n in QUERIES
-            if first_seen.get(n, 10**9) >= since and n not in names
-        ]
-        print(f"--since={since}: +{len(sliced)} queries")
-        names = names + sliced
-        if not names:
-            # an empty slice must NOT fall through to the full sweep —
-            # that would fire the ~45-min run the flag exists to avoid
-            print("RESULT: ALL MATCH (empty --since slice, nothing to run)")
-            return 0
-    names = names or list(QUERIES)
+            names.append(a)
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    names = names or list(qs)
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    if not entrymod.entry(spark).collect():
+        print("RESULT: entry() smoke returned no rows")
+        return 1
 
-    oracle_futs: dict[str, object] = {}
     pool = None
     if workers > 0:
         import concurrent.futures as cf
+        import multiprocessing
 
+        # spawn, not fork: this process already runs py4j threads
         pool = cf.ProcessPoolExecutor(
-            max_workers=workers, initializer=_init_worker, initargs=(sf,)
+            max_workers=workers,
+            mp_context=multiprocessing.get_context("spawn"),
+            initializer=_init_worker,
+            initargs=(sf,),
         )
-        # submit EVERY oracle up front: they drain across the pool
+        # submit every oracle up front: they drain across the pool
         # while the main process works through the Spark side
-        for name in names:
-            oracle = QUERIES[name][1]
-            if oracle is not None:
-                oracle_futs[name] = pool.submit(_run_oracle, oracle)
+        futs = {n: pool.submit(_run_oracle, oracles[n]) for n in names}
     else:
-        _init_worker(sf)  # serial fallback: connection in-process
+        _init_worker(sf)
 
     fails = []
     for name in names:
-        fn, oracle = QUERIES[name]
-        sdf = fn(spark, sf)
-        scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
-        if oracle is None:
-            print(f"rows-only {name}: {len(srows)} rows")
-            continue
-        if name in oracle_futs:
-            dcols_sorted, d = oracle_futs.pop(name).result()
+        sdf = qs[name](spark, sf)
+        result = futs.pop(name).result() if pool else _run_oracle(oracles[name])
+        failure = oracle.compare_result(sdf, result)
+        if failure is None:
+            print("OK  ", name, f"({len(result[2])} rows)")
         else:
-            dcols_sorted, d = _run_oracle(oracle)
-        si = sorted(range(len(scols)), key=lambda i: scols[i])
-        s = sorted(tuple(canon(r[i]) for i in si) for r in srows)
-        ok = sorted(scols) == dcols_sorted and s == d
-        print(("OK  " if ok else "FAIL"), name, f"({len(srows)} rows)")
-        if not ok:
+            print("FAIL", name, failure)
             fails.append(name)
-            if sorted(scols) != dcols_sorted:
-                print("  cols:", sorted(scols), "vs", dcols_sorted)
-            else:
-                diff = [(a, b) for a, b in zip(s, d) if a != b][:3]
-                for a, b in diff:
-                    print("  spark:", a)
-                    print("  duck :", b)
     if pool is not None:
         pool.shutdown()
     print("RESULT:", "ALL MATCH" if not fails else f"MISMATCH: {fails}")

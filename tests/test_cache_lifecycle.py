@@ -1,10 +1,17 @@
 """Bounded cache lifecycle (round-12 verdict #4): persist-building
 operators must be loop-safe when the caller passes ``cache_registry``
-— no cached blocks may survive an ``owned_caches()`` block, asserted
-via the JVM's own persistent-RDD registry."""
+— no cached blocks may survive an ``owned_caches()`` block.
+
+The tests count CacheManager entries, which is what ``persist()`` adds
+and ``owned_caches`` must remove, and check each handle the registry
+collected. They do not count the SparkContext's persistent RDDs: those
+include the ``localCheckpoint`` blocks of earlier tests, which the
+ContextCleaner frees asynchronously, so such a count drifts with the
+test order."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.operators.cache import (
@@ -13,8 +20,16 @@ from air_quality_etl_pipeline_spark.operators.cache import (
 )
 
 
-def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _n_cached(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _assert_freed(spark, base: int, reg: list) -> None:
+    """Every handle *reg* collected is unpersisted and the CacheManager
+    is back to *base* entries."""
+    assert reg, "the operator registered no persisted handle"
+    assert [df for df in reg if df.storageLevel != StorageLevel.NONE] == []
+    assert _n_cached(spark) == base
 
 
 def _vecs(spark, rows):
@@ -23,24 +38,24 @@ def _vecs(spark, rows):
 
 def test_owned_caches_unpersists_on_exit(spark):
     spark.catalog.clearCache()
-    base = _n_persistent(spark)
+    base = _n_cached(spark)
     with owned_caches() as reg:
         df = register_persist(spark.range(10), reg)
         df.count()  # materialize so blocks actually exist
-        assert _n_persistent(spark) == base + 1
-    assert _n_persistent(spark) == base
+        assert _n_cached(spark) == base + 1
+    _assert_freed(spark, base, reg)
 
 
 def test_owned_caches_unpersists_on_error(spark):
     spark.catalog.clearCache()
-    base = _n_persistent(spark)
+    base = _n_cached(spark)
     try:
         with owned_caches() as reg:
             register_persist(spark.range(10), reg).count()
             raise RuntimeError("boom")
     except RuntimeError:
         pass
-    assert _n_persistent(spark) == base
+    _assert_freed(spark, base, reg)
 
 
 def test_bitext_loop_leaks_nothing_with_registry(spark):
@@ -53,7 +68,7 @@ def test_bitext_loop_leaks_nothing_with_registry(spark):
     )
 
     spark.catalog.clearCache()
-    base = _n_persistent(spark)
+    base = _n_cached(spark)
     src = _vecs(spark, [(0, [1.0, 0.0]), (2, [0.6, 0.8])])
     tgt = _vecs(spark, [(1, [1.0, 0.0]), (3, [0.0, 1.0])])
     docs = spark.createDataFrame(
@@ -63,12 +78,14 @@ def test_bitext_loop_leaks_nothing_with_registry(spark):
     for _ in range(2):
         with owned_caches() as reg:
             bitext_margin_mine(src, tgt, k=1, cache_registry=reg).count()
-        assert _n_persistent(spark) == base
+            assert _n_cached(spark) > base
+        _assert_freed(spark, base, reg)
         with owned_caches() as reg:
             bitext_doc_align(
                 docs, docs, doc_col="d", k=1, cache_registry=reg
             ).count()
-        assert _n_persistent(spark) == base
+            assert _n_cached(spark) > base
+        _assert_freed(spark, base, reg)
 
 
 def test_classifier_retrain_loop_leaks_nothing_with_registry(spark):
@@ -77,7 +94,7 @@ def test_classifier_retrain_loop_leaks_nothing_with_registry(spark):
     )
 
     spark.catalog.clearCache()
-    base = _n_persistent(spark)
+    base = _n_cached(spark)
     labeled = spark.createDataFrame(
         [(1, "good clean prose here", 1), (2, "spam spam spam", 0),
          (3, "more quality writing", 1), (4, "buy now click here", 0)],
@@ -88,7 +105,8 @@ def test_classifier_retrain_loop_leaks_nothing_with_registry(spark):
             quality_classifier_weights(
                 labeled, n_buckets=64, cache_registry=reg
             ).count()
-        assert _n_persistent(spark) == base
+            assert _n_cached(spark) > base
+        _assert_freed(spark, base, reg)
 
 
 def test_materialize_local_checkpoint_without_checkpoint_dir(spark):

@@ -375,44 +375,18 @@ def test_minhash_signatures_match_python_ground_truth(spark):
     assert got_affine == expected_affine
 
 
-def test_driver_priority_names_all_registered():
-    """Every name in _DRIVER_PRIORITY must be a registered query — the
-    ordering code silently skips unknown names, so a typo would
-    quietly drop a query from the driver's 50-slot verification gate."""
-    from air_quality_etl_pipeline_spark.workload import (
-        _DRIVER_PRIORITY,
-        QUERIES,
-    )
-
-    unknown = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
-    assert unknown == [], f"priority names not in registry: {unknown}"
-    dupes = [
-        n for n in set(_DRIVER_PRIORITY)
-        if _DRIVER_PRIORITY.count(n) > 1
-    ]
-    assert dupes == [], f"duplicate priority names: {dupes}"
-
-
-def test_rows_only_queries_single_definition_site():
-    """ROWS_ONLY_QUERIES is the one place the no-oracle contract lives:
-    it must equal the set of registered queries whose oracle is None,
-    and __spark_entry__.oracle_sql() must omit exactly those names."""
+def test_every_query_has_an_oracle():
+    """Every registered query is hash-compared cross-engine: its oracle
+    is a non-empty SQL string, and __spark_entry__ exposes the same names
+    from queries() and oracle_sql()."""
     import importlib
 
-    from air_quality_etl_pipeline_spark.workload import (
-        QUERIES,
-        ROWS_ONLY_QUERIES,
-    )
+    from air_quality_etl_pipeline_spark.workload import QUERIES
 
-    no_oracle = {n for n, (_, o) in QUERIES.items() if o is None}
-    assert no_oracle == set(ROWS_ONLY_QUERIES), (
-        "registered-None oracles and ROWS_ONLY_QUERIES diverged: "
-        f"only-registered={sorted(no_oracle - ROWS_ONLY_QUERIES)} "
-        f"only-declared={sorted(ROWS_ONLY_QUERIES - no_oracle)}"
-    )
     entry = importlib.import_module("__spark_entry__")
     oracles = entry.oracle_sql()
-    assert set(oracles) == set(QUERIES) - ROWS_ONLY_QUERIES
+    assert all(isinstance(o, str) and o.strip() for o in oracles.values())
+    assert set(oracles) == set(entry.queries()) == set(QUERIES)
 
 
 def test_side_effect_queries_all_registered():
@@ -581,109 +555,3 @@ def test_psi_array_binning_equals_min_bin_rule(spark, vals, edges):
     }
     for v in set(vals):
         assert got[v] == naive_bin(v), (v, sorted_edges)
-
-
-def test_driver_priority_rotation_from_receipts(tmp_path):
-    # the registry order is derived from the driver's CORRECTNESS
-    # receipts: green checks demote a query behind every never-checked
-    # one (oldest check first among greens); failed/errored checks do
-    # NOT count, so the query re-queues at the front. This is what
-    # makes the 50-slot gate retire backlog every round without a
-    # manual re-order.
-    import json
-
-    from air_quality_etl_pipeline_spark.workload import (
-        QUERIES,
-        _driver_checked_rounds,
-    )
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(
-            {
-                "green_old": {
-                    "rows_match": True, "schema_match": True,
-                    "hash_match": True, "err": None,
-                },
-                "failed": {
-                    "rows_match": True, "schema_match": True,
-                    "hash_match": False, "err": None,
-                },
-                "errored": {
-                    "rows_match": False, "schema_match": False,
-                    "hash_match": False, "err": "boom",
-                },
-                "rows_only_green": {"rows_match": True, "err": None},
-                "rows_only_keeps": {"rows_match": True, "err": None},
-                # bpe_encode_corpus's historical no_oracle receipts: it
-                # GAINED an oracle in round 11 (ROWS_ONLY_QUERIES is now
-                # empty), so the stale rows-only credit must NOT stick —
-                # the query re-queues at the front so the new oracle is
-                # driver-verified immediately (round-5 advisor rule)
-                "bpe_encode_corpus": {
-                    "rows_match": None, "schema_match": None,
-                    "hash_match": None, "spark_rows": 6,
-                    "oracle_rows": None, "err": "no_oracle",
-                },
-                # same shape under a synthetic name: no_oracle + rows
-                # but not a ROWS_ONLY_QUERIES member — credit dropped
-                "no_oracle_rows": {
-                    "rows_match": None, "schema_match": None,
-                    "hash_match": None, "spark_rows": 6,
-                    "oracle_rows": None, "err": "no_oracle",
-                },
-                # no_oracle but ZERO rows: not a pass — stays queued
-                "no_oracle_empty": {
-                    "rows_match": None, "spark_rows": 0,
-                    "err": "no_oracle",
-                },
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps(
-            {
-                "green_old": {
-                    "rows_match": True, "schema_match": True,
-                    "hash_match": True, "err": None,
-                },
-                "green_new": {
-                    "rows_match": True, "schema_match": True,
-                    "hash_match": True, "err": None,
-                },
-                # green in r1, REGRESSED in r2: the stale green must
-                # not keep it in the checked block — it re-queues with
-                # the never-checked front
-                "rows_only_green": {
-                    "rows_match": False, "err": "rows diverged",
-                },
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r9x.json").write_text("not json")
-
-    latest = _driver_checked_rounds(root=str(tmp_path))
-    assert latest == {
-        "green_old": 2,  # re-checked green in r2 -> latest wins
-        "green_new": 2,
-        "rows_only_keeps": 1,  # rows-only (no hash field) still green
-    }
-    assert "failed" not in latest and "errored" not in latest
-    assert "rows_only_green" not in latest  # latest check failed
-    assert "no_oracle_empty" not in latest  # no rows -> not a pass
-    assert "no_oracle_rows" not in latest  # gained an oracle: re-queue
-    assert "bpe_encode_corpus" not in latest  # gained an oracle (r11)
-
-    base = ["failed", "green_new", "never_a", "green_old", "never_b"]
-    pos = {n: i for i, n in enumerate(base)}
-    order = sorted(base, key=lambda n: (latest.get(n, -1), pos[n]))
-    # never-checked + failed first (base order), then greens — both
-    # latest=2, so base order breaks the tie
-    assert order == ["failed", "never_a", "never_b", "green_new",
-                     "green_old"]
-
-    # and the import-time re-sort kept every registered query: the
-    # effective registry must be a permutation of the base priority
-    # list plus any unprioritized registrations (nothing dropped)
-    from air_quality_etl_pipeline_spark.workload import _snapshot
-
-    assert set(QUERIES) == set(_snapshot) and len(QUERIES) == len(_snapshot)

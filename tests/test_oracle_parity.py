@@ -10,6 +10,9 @@ produced int64 — the type check catches that class before the driver
 does. Any mismatch here would fail the driver's CORRECTNESS gate at
 sf0.01.
 
+The checks are ``air_quality_etl_pipeline_spark.oracle.compare``, the
+same compare ``scripts/verify_subset.py`` runs at other scale factors.
+
 Scale retarget: ``SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.1`` runs
 this same sweep at sf0.1 — the cheapest detector of scale-dependent
 cross-engine divergence. The round-6 sf0.1 sweep caught three classes
@@ -21,83 +24,29 @@ is green at sf0.1 (257 OK + 1 rows-only).
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
-from air_quality_etl_pipeline_spark.functions.typealign import arrow_ok
+# duck_con and rows_canon are re-exported: perfbench/run.py imports them
+# from this module
+from air_quality_etl_pipeline_spark.oracle import (  # noqa: F401
+    compare,
+    duck_con,
+    rows_canon,
+)
 from air_quality_etl_pipeline_spark.workload import QUERIES
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+ORACLE_QUERIES = list(QUERIES)
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            # Spark-written table: a DIRECTORY of part files (the shape
-            # scripts/stress_sf1.py generates); DuckDB needs the glob
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
-
-
-def canon(value):
-    """Canonicalize a cell the way a value hash would: floats to a fixed
-    repr (exact — rounding already happened inside the query)."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return str(int(value))
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        return repr(value)
-    return str(value)
-
-
-def rows_canon(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in idx) for r in rows)
-
-
-ORACLE_QUERIES = [n for n, (_, o) in QUERIES.items() if o is not None]
+@pytest.fixture(scope="module")
+def con(sf_dir):
+    c = duck_con(sf_dir)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_query_matches_oracle(spark, sf_dir, name):
+def test_query_matches_oracle(spark, sf_dir, con, name):
     fn, oracle = QUERIES[name]
-    sdf = fn(spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    con = duck_con(sf_dir)
-    tb = con.execute(oracle).arrow()
-    d_arrow = {f.name: str(f.type) for f in tb.schema}
-    cur = con.execute(oracle)
-    d_cols = [d[0] for d in cur.description]
-    d_rows = cur.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: column names differ: spark={sorted(s_cols)} duck={sorted(d_cols)}"
-    )
-    type_bad = [
-        (col, st, d_arrow[col])
-        for col, st in sdf.dtypes
-        if not arrow_ok(st, d_arrow[col], strict=False)
-    ]
-    assert not type_bad, (
-        f"{name}: hash-incompatible result types (spark vs duckdb-arrow): {type_bad}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: row count differs: spark={len(s_rows)} duck={len(d_rows)}"
-    )
-    sc, dc = rows_canon(s_cols, s_rows), rows_canon(d_cols, d_rows)
-    mismatches = [(a, b) for a, b in zip(sc, dc) if a != b]
-    assert not mismatches, f"{name}: first mismatches: {mismatches[:5]}"
+    failure = compare(fn(spark, sf_dir), con, oracle)
+    assert failure is None, f"{name}: {failure}"
