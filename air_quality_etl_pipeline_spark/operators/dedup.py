@@ -163,8 +163,11 @@ def _shingled(
     shingler: str = "char",
 ) -> DataFrame:
     """``(_id, *blocks, _sh)`` — per-doc distinct n-gram arrays (char
-    or word shingles), persisted (read twice: candidate generation +
-    verification)."""
+    or word shingles), materialized (:func:`~.cache.materialize`): the
+    prefix-filter candidate pass and both verification join-backs read
+    it with different projections, which AQE cannot reuse across
+    (cache-cleared at sf0.1, lazy lsh_recall_eval was 7.4 → 8.4 s
+    cold)."""
     blocks = [F.col(c) for c in block_cols]
     if shingler == "word":
         sh = word_shingles_of_tokens(token_array(F.col(text_col)), n)
@@ -172,9 +175,9 @@ def _shingled(
         sh = char_shingles(F.col(text_col), n)
     else:
         raise ValueError(f"unknown shingler: {shingler!r}")
-    return df.select(
-        F.col(id_col).alias("_id"), *blocks, sh.alias("_sh")
-    ).persist()
+    return materialize(
+        df.select(F.col(id_col).alias("_id"), *blocks, sh.alias("_sh"))
+    )
 
 
 def ppjoin_candidates(
@@ -387,7 +390,7 @@ def fuzzy_pairs(
         *[F.col(c) for c in block_cols],
         F.col(text_col).alias("_txt"),
         F.floor(F.length(text_col) / F.lit(w)).alias("_bkt"),
-    ).persist()
+    )
     left = base.select(
         *block_cols,
         F.col("_bkt").alias("_join_bkt"),
@@ -591,10 +594,10 @@ def minhash_lsh_pairs_between(
     self-contained."""
     sh_new = minhash_signatures(
         new_df, id_col, text_col, n, num_hashes, hash_family, shingler
-    ).persist()
+    )
     sh_old = minhash_signatures(
         corpus_df, id_col, text_col, n, num_hashes, hash_family, shingler
-    ).persist()
+    )
     left = banded_relation(sh_new, num_hashes, bands).select(
         "band_idx", "band_hash", F.col("_id").alias("new_id")
     )
@@ -650,7 +653,10 @@ def minhash_lsh_candidates(
     # minhash_signatures for why the signature is aggregate-based); the
     # cached relation feeds the band self-join (both sides) and both
     # verify join-backs — without it the tokenize→shingle→hash scan
-    # re-runs four times.
+    # re-runs four times. The one lazy persist a registered query keeps
+    # (its CacheManager entry is fenced in tests/test_oracle_parity.py):
+    # deleting it measured perfbench corpus_heavy's warm total +29%
+    # (SCALE.md, "Builders leave nothing in the session cache").
     sh = minhash_signatures(
         df, id_col, text_col, n, num_hashes, hash_family, shingler
     ).persist()
@@ -775,15 +781,22 @@ def simhash_pairs(
     band join is near-linear until bands saturate.
     """
     # block cols ride through the vote aggregation (functionally
-    # dependent on the id) — no second scan of df to re-attach them
-    sh = simhash_bits(
-        df.select(id_col, text_col, *block_cols),
-        id_col,
-        text_col,
-        bits,
-        hash_family,
-        carry_cols=block_cols,
-    ).persist()
+    # dependent on the id) — no second scan of df to re-attach them.
+    # Materialized: lazily, both band self-join sides re-ran the vote
+    # aggregation above its reused exchange (cache-cleared at sf0.1,
+    # build + cold: dedup_simhash 1.47 s lazy vs 1.40 s materialized,
+    # dedup_fuzzy_edit 1.85 s vs 1.38 s; SCALE.md, "Builders leave
+    # nothing in the session cache")
+    sh = materialize(
+        simhash_bits(
+            df.select(id_col, text_col, *block_cols),
+            id_col,
+            text_col,
+            bits,
+            hash_family,
+            carry_cols=block_cols,
+        )
+    )
     return _banded_pairs_from_simhash(
         sh, id_col, bits, max_hamming, block_cols
     )

@@ -23,7 +23,7 @@ actually matters at 100 TB:
 * Past the threshold, fall back to distributed min-label propagation —
   each round every node adopts the smallest label among itself and its
   neighbors (one join + one partial-aggregated min-groupBy per round),
-  converging in O(graph diameter) rounds with ``localCheckpoint``
+  converging in O(graph diameter) rounds with ``cache.materialize``
   lineage truncation and a monotone-label-sum convergence test (one
   scalar action per round, no driver-side row collection). The
   round-efficient refinement for adversarially-chained graphs is
@@ -132,7 +132,7 @@ def connected_components(
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    labels = labels.localCheckpoint(eager=True)
+    labels = materialize(labels)
     prev_sum = labels.agg(F.sum("lbl")).first()[0]
     converged = False
     for _ in range(max_iter):
@@ -149,13 +149,11 @@ def connected_components(
         parent = labels.select(
             F.col("node").alias("lbl"), F.col("lbl").alias("lbl2")
         )
-        labels = (
-            labels.join(parent, on="lbl", how="left")
-            .select(
+        labels = materialize(
+            labels.join(parent, on="lbl", how="left").select(
                 "node",
                 F.least(F.col("lbl"), F.col("lbl2")).alias("lbl"),
             )
-            .localCheckpoint(eager=True)
         )
         new_sum = labels.agg(F.sum("lbl")).first()[0]
         if new_sum == prev_sum:  # labels are monotone ⇒ fixpoint
@@ -230,7 +228,7 @@ def pagerank_pico(
     set. Ranks are one BIGINT per node — at 100 TB the edge list
     dominates and it co-partitions on ``src`` across rounds, so only
     the (node-sized) rank relation reshuffles. The loop materializes
-    per round (Spark: small rank relation → ``localCheckpoint`` keeps
+    per round (``cache.materialize`` of the small rank relation keeps
     lineage O(1)); *iterations* is fixed so an oracle can unroll it.
 
     Returns ``(node, rank_pico)``. ``Σ rank_pico ≤ 10^12`` strictly:
@@ -254,7 +252,7 @@ def pagerank_pico(
     ranks = nodes.crossJoin(n_rel).select(
         "id", F.expr("CAST(1000000000000 AS BIGINT) div n").alias("pico")
     )
-    ranks = ranks.localCheckpoint(eager=True)
+    ranks = materialize(ranks)
     for _ in range(iterations):
         contrib = (
             e.join(ranks.withColumnRenamed("id", "src"), on="src")
@@ -278,7 +276,7 @@ def pagerank_pico(
                 ).alias("pico"),
             )
         )
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks)
     return ranks.select(F.col("id").alias("node"), F.col("pico").alias("rank_pico"))
 
 
@@ -331,7 +329,7 @@ def personalized_pagerank_pico(
             " ELSE CAST(0 AS BIGINT) END"
         ).alias("pico"),
     )
-    ranks = ranks.localCheckpoint(eager=True)
+    ranks = materialize(ranks)
     for _ in range(iterations):
         contrib = (
             e.join(ranks.withColumnRenamed("id", "src"), on="src")
@@ -357,7 +355,7 @@ def personalized_pagerank_pico(
                 ).alias("pico"),
             )
         )
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks)
     return ranks.select(
         F.col("id").alias("node"), F.col("pico").alias("rank_pico")
     )

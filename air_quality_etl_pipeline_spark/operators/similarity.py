@@ -37,7 +37,6 @@ from air_quality_etl_pipeline_spark.functions.core import (
     round_portable,
     safe_div,
 )
-from air_quality_etl_pipeline_spark.operators.cache import register_persist
 
 
 def balanced_stride(n: int) -> int:
@@ -1027,7 +1026,6 @@ def bitext_margin_mine(
     vec_col: str = "embedding",
     k: int = 4,
     method: str = "exact",
-    cache_registry: list | None = None,
     **ivf_kwargs,
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk, ACL'19): mine
@@ -1058,15 +1056,10 @@ def bitext_margin_mine(
     :func:`ivf_topk` with ``**ivf_kwargs`` — the 100 TB path: each
     direction probes inverted lists instead of the full cross product,
     and with ``nprobe`` = all lists it degenerates to the exact
-    answer (pinned in tests). Both kNN relations are ``persist()``-ed:
-    each is referenced twice (neighborhood sums + candidate pairs),
-    and under this runtime's no-subtree-reuse behavior an uncached
-    second reference would re-run the whole scoring pass. Cache
-    lifecycle is CALLER-OWNED (round-11 advisor): pass
-    ``cache_registry`` (see :func:`~.cache.owned_caches`) to receive
-    the persisted handles and unpersist them when done — loop callers
-    (stress sweeps) stay bounded that way; without it the persists
-    live until the session evicts them.
+    answer (pinned in tests). Each kNN relation is referenced twice
+    (neighborhood sums + candidate pairs); nothing is cached, so the
+    miner leaves no session state behind and a loop of calls stays
+    bounded.
 
     *src* and *tgt* may share id values (two independently-numbered
     embedding tables — the natural bitext shape): the kNN passes run
@@ -1105,7 +1098,6 @@ def bitext_margin_mine(
             cm.alias("cm"),
         )
     )
-    fwd = register_persist(fwd, cache_registry)
     bwd = (
         knn(
             src,
@@ -1122,7 +1114,6 @@ def bitext_margin_mine(
             cm.alias("cm"),
         )
     )
-    bwd = register_persist(bwd, cache_registry)
     sum_f = fwd.groupBy("src_id").agg(
         F.sum("cm").cast("long").alias("sum_f")
     )
@@ -1218,7 +1209,6 @@ def bitext_doc_align(
     vec_col: str = "embedding",
     k: int = 3,
     method: str = "exact",
-    cache_registry: list | None = None,
     **ivf_kwargs,
 ) -> DataFrame:
     """Parallel-DOCUMENT mining — the other half of the
@@ -1234,12 +1224,8 @@ def bitext_doc_align(
     The two sides' document id spaces may overlap (independently
     numbered corpora — the natural shape): the margin miner runs its
     kNN with ``exclude_self=False``, so equal-id cross pairs are fully
-    mineable. Both centroid relations are ``persist()``-ed — each is
-    referenced by BOTH kNN directions, and under this runtime's
-    no-subtree-reuse behavior an uncached second reference would
-    re-run the grouped-map pooling; cache lifecycle is caller-owned —
-    pass ``cache_registry`` (:func:`~.cache.owned_caches`) to bound it,
-    as in :func:`bitext_margin_mine`.
+    mineable. Each centroid relation is referenced by BOTH kNN
+    directions; nothing is cached, as in :func:`bitext_margin_mine`.
 
     Scale: centroid pooling is one label shuffle per side and shrinks
     the problem from sentences to documents BEFORE any cross-relation
@@ -1250,15 +1236,10 @@ def bitext_doc_align(
     *doc_col* must be integer-typed (see :func:`doc_centroids` — the
     pooling casts it to long).
     """
-    s = register_persist(
-        doc_centroids(src_sents, doc_col, vec_col), cache_registry
-    )
-    t = register_persist(
-        doc_centroids(tgt_sents, doc_col, vec_col), cache_registry
-    )
     return bitext_margin_mine(
-        s, t, id_col=doc_col, vec_col=vec_col, k=k, method=method,
-        cache_registry=cache_registry, **ivf_kwargs,
+        doc_centroids(src_sents, doc_col, vec_col),
+        doc_centroids(tgt_sents, doc_col, vec_col),
+        id_col=doc_col, vec_col=vec_col, k=k, method=method, **ivf_kwargs,
     )
 
 
@@ -1378,9 +1359,9 @@ def semantic_dedup(
     # every vector survives into the aggregate and no third join is
     # needed to restore the keeps: the assignment subtree is executed
     # exactly twice (the self-join's two sides — its floor), not
-    # three times. This matters doubly in this runtime, which never
-    # reuses identical exchange subtrees (each reference re-executes
-    # the broadcast-centroid assignment pass).
+    # three times. AQE only reuses an exchange subtree while its
+    # consumers stay canonically equal, so a third, differently-pruned
+    # reference would re-execute the broadcast-centroid assignment pass.
     L, R = assigned.alias("L"), earlier.alias("R")
     paired = L.join(
         R,

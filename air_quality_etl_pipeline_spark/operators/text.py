@@ -20,6 +20,7 @@ from air_quality_etl_pipeline_spark.functions.core import (
     safe_div,
     token_array,
 )
+from air_quality_etl_pipeline_spark.operators.cache import materialize
 
 #: Tiny per-language stopword lists for the n-gram/stopword LID heuristic.
 #: Deliberately small + deterministic so the oracle can mirror them.
@@ -370,9 +371,9 @@ def learn_bpe_merges(
        back to the driver (ONE row — the only driver data per round),
        and :func:`apply_bpe_merge` rewrites the symbol arrays in place.
 
-    The vocab relation is re-cached each round so lineage stays O(1)
-    deep (the same ``localCheckpoint`` discipline as the connected-
-    components loop in operators/graph.py). Returns
+    The vocab relation is re-materialized each round
+    (:func:`~.cache.materialize`) so lineage stays O(1) deep (the same
+    discipline as the connected-components loop in operators/graph.py). Returns
     ``[(rank, left, right, pair_count), ...]``.
 
     At 100 TB: the corpus pass is one shuffle to build word counts;
@@ -389,7 +390,7 @@ def learn_bpe_merges(
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.split(F.col("word"), "").alias("syms"), "n")
     )
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = materialize(vocab)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
         pairs = (
@@ -416,10 +417,12 @@ def learn_bpe_merges(
             break
         top = pairs[0]
         merges.append((rank, top["l"], top["r"], top["cnt"]))
-        vocab = vocab.select(
-            apply_bpe_merge(F.col("syms"), top["l"], top["r"]).alias("syms"),
-            "n",
-        ).localCheckpoint(eager=True)
+        vocab = materialize(
+            vocab.select(
+                apply_bpe_merge(F.col("syms"), top["l"], top["r"]).alias("syms"),
+                "n",
+            )
+        )
     return merges
 
 
@@ -515,7 +518,6 @@ def quality_classifier_weights(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
     salt: str = "qc",
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Train a linear text-quality classifier (the CCNet/fastText
     curation stage) on a labeled split: multinomial Naive Bayes
@@ -544,12 +546,15 @@ def quality_classifier_weights(
     aggregation; everything after (totals, lns, the all-buckets
     fill-in) is O(n_buckets) work on a relation that broadcasts.
 
-    Cache lifecycle is CALLER-OWNED (round-11 advisor): the internal
-    ``persist()`` of the ≤ n_buckets-row count relation lives until
-    the session evicts it — pass ``cache_registry``
-    (:func:`~.cache.owned_caches`) to receive the handle and bound a
-    retraining loop, or materialize the weight table once (persist +
-    count, as the streaming twin does).
+    The weight table is returned MATERIALIZED
+    (:func:`~.cache.materialize`): training runs its jobs at the call,
+    once, and every consumer — the scorer's broadcast and its prior
+    cross join, a stream's micro-batches — reads the ≤ n_buckets + 1
+    materialized rows. Lazily, each differently-filtered consumer
+    re-ran the corpus-sized gram aggregation (cache-cleared at sf0.1:
+    quality_classifier_score 1.8 → 3.3 s cold; SCALE.md, "Builders
+    leave nothing in the session cache"). No CacheManager entry is
+    created, so a retraining loop leaves no session state behind.
     """
     from air_quality_etl_pipeline_spark.functions.portable_math import (
         ln_int_portable,
@@ -561,22 +566,9 @@ def quality_classifier_weights(
     g = hashed_gram_buckets(
         labeled, text_col, id_col, n_buckets, salt, keep_cols=[label_col]
     )
-    # persist the ≤n_buckets-row count relation: it is referenced
-    # twice below (per-bucket weights + the totals). AQE reuses an
-    # exchange only while both consumer subtrees stay canonically equal
-    # (OPTIMIZATION_r14.md, "Mechanism re-probes" #1), which these two
-    # differently-pruned consumers do not guarantee — the cache keeps
-    # the corpus-sized gram aggregation at one execution
-    from air_quality_etl_pipeline_spark.operators.cache import (
-        register_persist,
-    )
-
-    cnt = register_persist(
-        g.groupBy("bucket").agg(
-            F.sum(F.when(y == 1, 1).otherwise(0)).cast("long").alias("c1"),
-            F.sum(F.when(y == 0, 1).otherwise(0)).cast("long").alias("c0"),
-        ),
-        cache_registry,
+    cnt = g.groupBy("bucket").agg(
+        F.sum(F.when(y == 1, 1).otherwise(0)).cast("long").alias("c1"),
+        F.sum(F.when(y == 0, 1).otherwise(0)).cast("long").alias("c0"),
     )
     # every bucket gets a row (unseen buckets still carry the
     # smoothing-only weight — exactly what an absent feature scores)
@@ -612,7 +604,7 @@ def quality_classifier_weights(
             (qln(F.col("n1")) - qln(F.col("n0"))).alias("w_micro9"),
         )
     )
-    return w.unionByName(prior)
+    return materialize(w.unionByName(prior))
 
 
 def quality_classifier_score(
@@ -632,8 +624,9 @@ def quality_classifier_score(
     (grouped alongside ``id_col`` — they must be functionally
     dependent on it), so a pipeline can score and keep its payload
     columns in ONE corpus pass instead of scoring then self-joining —
-    under this runtime's no-subtree-reuse behavior a join-back would
-    re-execute the whole upstream plan.
+    a join-back's two sides differ in their pruned columns, so AQE
+    cannot reuse the shared subtree and would re-execute the whole
+    upstream plan.
 
     Scale: the gram stream aggregates to ``(doc, bucket)`` grain in
     one doc-keyed exchange; the ≤ ``n_buckets + 1``-row weight

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from air_quality_etl_pipeline_spark.operators.cache import materialize
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S5: hive-partitioned parquet scan; partition columns come from
@@ -60,16 +62,19 @@ def read_csv_with_quarantine(
     guard (``automated_ingestion...py:202-206`` in the reference repo),
     except nothing is silently lost: the quarantine side is a real
     DataFrame a pipeline can count (gate), persist (triage), or replay
-    after a schema fix. One scan serves both sides.
+    after a schema fix. One scan serves both sides: the parsed relation
+    is materialized (``cache.materialize``) at the call, which leaves no
+    session cache entry behind and also lifts Spark's ban on raw-CSV
+    queries that reference only the corrupt-record column.
     """
+
     full = f"{schema_ddl}, _corrupt_record STRING"
-    df = (
+    df = materialize(
         spark.read.option("header", str(header).lower())
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(full)
         .csv(path)
-        .cache()  # one scan; both filters read the parsed relation
     )
     clean = df.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"

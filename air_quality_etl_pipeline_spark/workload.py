@@ -1375,6 +1375,21 @@ REBUILD_PURE_QUERIES: set[str] = {
     "pq_adc_search",
     "ivf_pq_search",
     "bloom_filter_join",
+    # builders that materialize an intermediate several consumers read
+    # (cache.materialize; lazily, AQE could not reuse it across their
+    # differently-filtered references): the Naive Bayes weight table,
+    # the co-purchase edge lists, the PPJoin shingle relation and the
+    # SimHash fingerprints, and dedup_ngram_jaccard's candidate pairs
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_fuzzy_edit",
+    "quality_classifier_score",
+    "quality_classifier_eval",
+    "corpus_curation_e2e_v2",
+    "corpus_curation_e2e_v3",
+    "triangle_count",
+    "bfs_reach_3",
+    "lsh_recall_eval",
     # merge_full_sync / merge_multi_clause left this list in round 9:
     # check_multiple_matches="lazy" compiles the Delta duplicate-match
     # probe into the plan as a raise_error branch, so their builders

@@ -174,7 +174,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: iterative min-label propagation over the pair graph
     (operators/graph.py — O(diameter) rounds, one join + one
-    partial-aggregated min per round, localCheckpoint-truncated
+    partial-aggregated min per round, materialize-truncated
     lineage); the oracle resolves the same closure with a recursive
     CTE. The corpus-sized relation never enters the loop — only the
     pair graph iterates, and near-dup graphs are tiny relative to the
@@ -260,7 +260,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     pairs = simhash_pairs(
         d, "doc_id", "text", bits=48, max_hamming=3, block_cols=["lang"]
-    ).select("id_a", "id_b").persist()
+    ).select("id_a", "id_b")
     clusters = dedup_clusters(d, pairs, "doc_id").select(
         "doc_id", "cluster_id"
     )
@@ -520,7 +520,7 @@ def _register_corpus_curation_e2e_v2() -> None:
         )
         w = quality_classifier_weights(
             labeled, label_col="y", n_buckets=_QC_B
-        ).persist()
+        )
         gated = scrubbed.filter(quality_score(F.col("text")) >= 0.5)
         keyed = gated.select(
             "doc_id",
@@ -753,7 +753,7 @@ def _register_corpus_curation_e2e_v3() -> None:
         )
         w = quality_classifier_weights(
             labeled, label_col="y", n_buckets=_QC_B
-        ).persist()
+        )
         gated = corp.filter(quality_score(F.col("text")) >= 0.5)
         keyed = gated.select(
             "doc_id",

@@ -18,9 +18,9 @@ from air_quality_etl_pipeline_spark.functions.core import (
     token_array,
 )
 from air_quality_etl_pipeline_spark.operators import multimodal
+from air_quality_etl_pipeline_spark.operators.cache import materialize
 from air_quality_etl_pipeline_spark.operators.dedup import (
     exact_dup_groups,
-    fuzzy_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_bits,
@@ -495,7 +495,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 10× data); collapsed, the heavy stages are distinct-text-sized
     # and only the irreducible output expansion scales with clones.
     members, reps = collapse_exact_clones(d, "doc_id")
-    members = members.persist()
     _, cands = minhash_lsh_candidates(
         reps, "doc_id", "text", n=5, num_hashes=8, bands=4, shingler="word"
     )
@@ -503,12 +502,11 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(len²) per row and costs ~2 s over the full sf0.1 corpus, while
     # LSH leaves a few hundred docs to verify — the semi-join makes the
     # verify stage candidate-sized instead of corpus-sized (measured
-    # 2.9 s → 1.1 s end-to-end; the candidate subtree re-executes once
-    # more for the id set, which the signature pipeline's 0.15 s makes
-    # a good trade)
-    # the pair set feeds both the verify join and the id semi-join —
-    # persist so the band self-join runs once, not twice
-    cands = cands.persist()
+    # 2.9 s → 1.1 s end-to-end). The pair set feeds the id semi-join
+    # and the verify join, whose pushed-down key filters keep AQE from
+    # reusing the band self-join across them: it is materialized
+    # (cache-cleared at sf0.1, build + cold 8.5 s lazy vs 7.2 s)
+    cands = materialize(cands)
     cand_ids = (
         cands.select(F.col("id_a").alias("doc_id"))
         .union(cands.select(F.col("id_b").alias("doc_id")))
@@ -2131,7 +2129,7 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidate generation is the broadcast-query corpus scan of
     :func:`~.operators.similarity.cosine_topk`; everything after runs
     on the BOUNDED candidate relation (20 rows, 380 pairs). The
-    candidate and pair relations are localCheckpointed before the
+    candidate and pair relations are materialized before the
     greedy rounds — the unrolled selection references them ~3x per
     round, and without the lineage cut Catalyst re-executes the
     corpus-scan subtree per reference (measured at sf1: 8.1 s lazy vs
@@ -2141,20 +2139,22 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded at any corpus size; scaling to many queries =
     partitionBy(query_id) over the same bounded-per-query relation."""
     e = _t(spark, sf_dir, "embeddings")
-    cands = cosine_topk(
-        e, e.filter(F.col("vec_id") == 0), k=20, dims=64
-    ).select(
-        F.col("neighbor_id").alias("id"), F.col("cosine").alias("rel")
-    ).localCheckpoint()
+    cands = materialize(
+        cosine_topk(e, e.filter(F.col("vec_id") == 0), k=20, dims=64).select(
+            F.col("neighbor_id").alias("id"), F.col("cosine").alias("rel")
+        )
+    )
     cvecs = e.join(
         F.broadcast(cands.select("id")),
         e["vec_id"] == F.col("id"),
     ).select("vec_id", "embedding")
-    pairs = cosine_topk(cvecs, cvecs, k=19, dims=64).select(
-        F.col("query_id").alias("ia"),
-        F.col("neighbor_id").alias("ib"),
-        F.col("cosine").alias("sim"),
-    ).localCheckpoint()
+    pairs = materialize(
+        cosine_topk(cvecs, cvecs, k=19, dims=64).select(
+            F.col("query_id").alias("ia"),
+            F.col("neighbor_id").alias("ib"),
+            F.col("cosine").alias("sim"),
+        )
+    )
     lam, mu = F.lit(0.7), F.lit(0.3)
     sel = (
         cands.orderBy(F.desc("rel"), F.asc("id"))

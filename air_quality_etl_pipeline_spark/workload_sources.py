@@ -1060,11 +1060,11 @@ def _register_streaming_quality_score() -> None:
         (availableNow) and each micro-batch is scored inside
         ``foreachBatch`` with FROZEN weights — the ≤1025-row Naive
         Bayes weight table is trained ONCE on the static labeled split
-        (``doc_id % 5 != 0``, class 1 = ``lang = 'en'``), persisted
-        and MATERIALIZED before the stream starts (the production
-        amortization: one training pass for the whole drain, scoring
-        is map-side per batch — mirror of the span twin's once-built
-        corpus gram table). Per-document scores depend only on
+        (``doc_id % 5 != 0``, class 1 = ``lang = 'en'``), which the
+        operator returns MATERIALIZED before the stream starts (the
+        production amortization: one training pass for the whole
+        drain, scoring is map-side per batch — mirror of the span
+        twin's once-built corpus gram table). Per-document scores depend only on
         (document, weights), never on batch slicing, so the drained
         output equals the batch twin row-for-row and the SAME DuckDB
         oracle applies — that equality IS the exactly-once test. No
@@ -1083,10 +1083,8 @@ def _register_streaming_quality_score() -> None:
         labeled = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
             "y", (F.col("lang") == "en").cast("int")
         )
-        w = quality_classifier_weights(
-            labeled, label_col="y", n_buckets=_QC_B
-        ).persist()
-        w.count()  # materialize: train once, BEFORE the drain
+        # trains once, BEFORE the drain
+        w = quality_classifier_weights(labeled, label_col="y", n_buckets=_QC_B)
 
         def score(batch_df: DataFrame, batch_id: int) -> None:
             (
@@ -1107,7 +1105,6 @@ def _register_streaming_quality_score() -> None:
             .start()
         )
         q.awaitTermination()
-        w.unpersist()
         return spark.read.parquet(out_dir)
 
 

@@ -246,11 +246,7 @@ def q_bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each doc-bigram's quantized lp is weighted by its count —
     # DECIMAL × integer is exact, so the sum equals the per-occurrence
     # sum the oracle computes. Measured at sf0.1: 0.76 s → ~0.3 s.
-    db = (
-        flat.groupBy("doc_id", "w1", "w2")
-        .agg(F.count("*").alias("cnt"))
-        .persist()
-    )
+    db = flat.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("cnt"))
     c12 = db.groupBy("w1", "w2").agg(F.sum("cnt").alias("n12"))
     c1 = c12.groupBy("w1").agg(F.sum("n12").alias("n1"))
     # lp per DISTINCT pair via the bit-portable ln (Spark's Math.log
@@ -1667,10 +1663,7 @@ def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-portable ln, so weights, scores and predictions are integer-
     exact cross-engine. Scale: the training stream collapses to the
     1024-bucket grain map-side; scoring is one doc-keyed aggregation
-    with the ≤1025-row weight relation broadcast onto it; the weight
-    relation is persisted so its two references (weights + prior) cost
-    one training pass, not two, under this runtime's no-subtree-reuse
-    behavior."""
+    with the ≤1025-row weight relation broadcast onto it."""
     from air_quality_etl_pipeline_spark.operators.text import (
         quality_classifier_score,
         quality_classifier_weights,
@@ -1680,9 +1673,7 @@ def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = d.filter(F.col("doc_id") % 5 != 0).withColumn(
         "y", (F.col("lang") == "en").cast("int")
     )
-    w = quality_classifier_weights(
-        labeled, label_col="y", n_buckets=_QC_B
-    ).persist()
+    w = quality_classifier_weights(labeled, label_col="y", n_buckets=_QC_B)
     return quality_classifier_score(d, w, n_buckets=_QC_B)
 
 
@@ -1824,9 +1815,7 @@ def q_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = (F.col("lang") == "en").cast("int")
     train = d.filter(F.col("doc_id") % 5 != 0).withColumn("y", y)
     held = d.filter(F.col("doc_id") % 5 == 0).withColumn("y", y)
-    w = quality_classifier_weights(
-        train, label_col="y", n_buckets=_QC_B
-    ).persist()
+    w = quality_classifier_weights(train, label_col="y", n_buckets=_QC_B)
     scored = quality_classifier_score(held, w, n_buckets=_QC_B).join(
         held.select("doc_id", "y"), on="doc_id"
     )

@@ -10,7 +10,10 @@ then each query is sampled *N* times, and each sample
 1. clears the CacheManager (``spark.catalog.clearCache()``), so no
    sample re-matches an entry an earlier build left behind;
 2. builds the query through ``QUERIES[name][0]`` in a traced span
-   (``build_s``, and ``build_jobs``: the Spark jobs the builder ran);
+   (``build_s``, and ``build_jobs``: the Spark jobs the builder ran)
+   and counts the CacheManager entries the build left behind
+   (``cache_entries``; a lazy ``persist`` registers its entry when it is
+   called, and later builds of the same plan would re-match it);
 3. forces the physical plan (``Tracer.catalyst``: Catalyst phase times
    and ``plan.*`` node counts);
 4. runs the frame to the ``noop`` sink in a traced span (cold:
@@ -25,7 +28,8 @@ status store formatted it, that plan's node counts, and the distinct
 plan digests over samples (the final plan with ``#123``-style ids
 stripped): more than one digest means the query did not plan the same
 way every time. ``per_layer`` at the top sums the per-query medians the
-way ``perfbench/run.py --trace 1`` does. A query's first build in the
+way ``perfbench/run.py --trace 1`` does, and ``cache_entries`` at the
+top sums the per-query ``cache_entries`` medians. A query's first build in the
 session can also run a job for each table it is the first to read; the
 median over three or more samples leaves those out, and with
 ``--samples 1`` ``build_jobs`` and ``plan.*`` equal those of a traced
@@ -83,6 +87,7 @@ def _final_plan(spark) -> str:
 def profile_query(spark, tracer: Tracer, sf_dir: str, name: str, samples: int) -> dict:
     from air_quality_etl_pipeline_spark.workload import QUERIES
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     plans = []
     for _ in range(samples):
         spark.catalog.clearCache()
@@ -91,6 +96,7 @@ def profile_query(spark, tracer: Tracer, sf_dir: str, name: str, samples: int) -
             df = QUERIES[name][0](spark, sf_dir)
             tracer.record("build_s", name, time.perf_counter() - t)
         tracer.record("build_jobs", name, attrs.get("exec.jobs", 0))
+        tracer.record("cache_entries", name, cache.numCachedEntries())
         tracer.catalyst(df, name)
         with tracer.span(f"cold:{name}", spark_deltas=True) as cold:
             t = time.perf_counter()
@@ -159,7 +165,14 @@ def main(argv=None) -> int:
     wall = tracer.per_layer(["exec.wall_s"])["exec.wall_s"]
     totals["exec.core_util"] = totals["exec.task_s"] / (wall * cores)
     totals["trace.overhead_s"] = tracer.overhead_s
-    out = {"sf": args.sf, "samples": args.samples, "cores": cores, "per_layer": totals, "queries": queries}
+    out = {
+        "sf": args.sf,
+        "samples": args.samples,
+        "cores": cores,
+        "per_layer": totals,
+        "cache_entries": tracer.per_layer(["cache_entries"])["cache_entries"],
+        "queries": queries,
+    }
     with open(args.out, "w") as f:
         json.dump(out, f, indent=1)
     return 0

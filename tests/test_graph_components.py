@@ -413,22 +413,3 @@ def test_component_edge_relation_runs_band_join_once(
     finally:
         spark.conf.set(key, old)
     assert _edge_plan_counts(spark, monkeypatch, sf_dir) == (2, 2)
-
-
-def test_dedup_builds_leave_no_cache_entries(spark, sf_dir):
-    """dedup_clusters / dedup_canonical_docs rebuild every call; their
-    internal materializations are checkpoints owned by the returned
-    frame, so repeated build-plus-execute rounds leave no CacheManager
-    entry behind (each build used to leave its fingerprint and edge
-    persists cached)."""
-    from air_quality_etl_pipeline_spark.workload import QUERIES
-
-    spark.catalog.clearCache()
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    assert cache_manager.isEmpty()
-    for _ in range(3):
-        for name in ("dedup_clusters", "dedup_canonical_docs"):
-            QUERIES[name][0](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-    assert cache_manager.isEmpty()

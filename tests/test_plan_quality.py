@@ -596,6 +596,12 @@ REPEATED_SCAN_ALLOWLIST: dict[str, str] = {
     "ann_recall_at_k": "8: approximate arm + exact-baseline arm + recall join",
     "sketch_kmv_jaccard": "12: per-sketch-pair branches (KMV build per arm x pairs)",
     "retrieval_mrr_ndcg": "12: per-metric @k branches over the ranked hits",
+    "dedup_ngram_jaccard": "10 static: the clone-members relation feeds both ends of the cross-pair expansion and both sides of the intra-group self-join, plus reps and the candidate-shingle semi-join; measured at sf0.1 (SCALE.md, 'Builders leave nothing in the session cache'): build + cold 7.2 s with members lazy vs 8.2 s with members materialized",
+    "dedup_incremental_batch": "9 static: new-side and corpus-side signatures each read by the band join and a verify join-back; measured cold 4.2 s persisted -> 3.4 s lazy at sf0.1 (SCALE.md, 'Builders leave nothing in the session cache')",
+    "bitext_margin_mine": "8 static: forward/backward kNN relations each read by the neighbourhood sums and the candidate union; measured cold 18.3 s persisted -> 8.8 s lazy at sf0.1 (SCALE.md, 'Builders leave nothing in the session cache')",
+    "bitext_margin_mine_ivf": "16 static: the IVF kNN per direction (coarse assignment + probe) read by sums and candidates; measured cold 2.5 s persisted -> 1.6 s lazy at sf0.1 (SCALE.md, 'Builders leave nothing in the session cache')",
+    "bitext_doc_align": "8 static: both centroid relations read by both kNN directions; measured cold 2.0 s persisted -> 1.3 s lazy at sf0.1 (SCALE.md, 'Builders leave nothing in the session cache')",
+    "bitext_doc_align_ivf": "16 static: centroids x IVF kNN per direction; measured cold 1.9 s persisted -> 1.9 s lazy at sf0.1, runtime FileScans 2 (SCALE.md, 'Builders leave nothing in the session cache')",
     "split_leakage_audit": "72 static: csp (clusters x splits) referenced 3x atop cluster lineage; measured flat — lazy 2.2 s vs csp-checkpointed 1.6-1.9 s at sf0.1 (runtime exchange reuse collapses the fan-out), and csp is corpus-sized so a checkpoint costs more than it saves at scale",
 }
 

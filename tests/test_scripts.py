@@ -109,7 +109,8 @@ def test_script_imports_resolve(script):
 
 def test_profile_script_splits_layers(sf_dir, tmp_path):
     """A rebuild-per-call query shows its builder's jobs; a pure one
-    shows none and plans the same way in every sample."""
+    shows none and plans the same way in every sample; neither build
+    leaves a CacheManager entry."""
     out = tmp_path / "profile.json"
     proc = subprocess.run(
         [
@@ -133,10 +134,14 @@ def test_profile_script_splits_layers(sf_dir, tmp_path):
             for m in json.load(f)["per_layer"]
             if m["name"].split(".")[0] in ("build_s", "build_jobs", "catalyst", "plan", "exec", "python")
         }
-    queries = json.loads(out.read_text())["queries"]
+    profile = json.loads(out.read_text())
+    assert profile["cache_entries"] == 0
+    queries = profile["queries"]
     for name, q in queries.items():
         assert per_query <= q["per_layer"].keys(), name
     assert queries["orders_gini"]["per_layer"]["build_jobs"] >= 1
+    for q in queries.values():
+        assert q["per_layer"]["cache_entries"] == 0
     pure = queries["silver_filter_dedup"]
     assert pure["per_layer"]["build_jobs"] == 0
     assert len(pure["plan_digests"]) == 1

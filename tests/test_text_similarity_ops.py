@@ -617,6 +617,7 @@ def test_csv_quarantine_splits_clean_and_corrupt(spark, tmp_path):
         "2,not_a_number\n"   # type mismatch -> corrupt
         "3,30.25\n"
     )
+    spark.catalog.clearCache()
     clean, corrupt = read_csv_with_quarantine(
         spark, str(p), "id INT, score DOUBLE"
     )
@@ -624,6 +625,8 @@ def test_csv_quarantine_splits_clean_and_corrupt(spark, tmp_path):
     assert clean_rows == [(1, 10.5), (3, 30.25)]
     bad = [r._corrupt_record for r in corrupt.collect()]
     assert bad == ["2,not_a_number"]  # raw text preserved for triage
+    # one materialized scan serves both sides; no session cache entry
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_minhash_lsh_pairs_between_matches_cross_subset(spark):
