@@ -14,8 +14,8 @@ cache-cleared measurement shows the engine re-executing an expensive
 subtree anyway, or an iterative operator must cut its lineage or count
 a relation before it can plan the next step, the builder calls
 :func:`materialize`. Being eager, it runs Spark jobs at build time, so
-a registered query that reaches it belongs in
-``workload.REBUILD_PURE_QUERIES``.
+``workload.prepared`` rebuilds a registered query that reaches it on
+every call.
 
 Per-site decisions and their measurements are in SCALE.md ("Builders
 leave nothing in the session cache"); ``tests/test_oracle_parity.py``

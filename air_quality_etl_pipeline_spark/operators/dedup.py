@@ -953,7 +953,7 @@ def simhash_component_edges(
     # Interleaved cold receipts (commit 6ff543a, SCALE.md):
     # dedup_clusters 3.3-4.7 s -> 2.0-2.7 s, dedup_canonical_docs
     # 3.3-3.5 s -> 2.0-2.2 s per cold sample. Trade: the vote job runs
-    # eagerly at build (REBUILD_PURE queries may run build jobs), and
+    # eagerly at build (so ``prepared`` rebuilds its queries per call), and
     # the blocks are per-build (GC'd with the frame) instead of a
     # shared cache entry — a service that builds once is unaffected.
     sh = materialize(

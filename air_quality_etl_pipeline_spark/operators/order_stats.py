@@ -463,13 +463,9 @@ def _summary(
         F.max(kd).alias("__mx"),
         *payload,
     )
-    try:
-        tbl = summary.toArrow()
-        cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-        rows = list(zip(*cols))
-    except Exception:  # pragma: no cover - Arrow-less fallback
-        rows = [tuple(r) for r in summary.collect()]
-    return df, rows, num_ranges
+    tbl = summary.toArrow()
+    cols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
+    return df, list(zip(*cols)), num_ranges
 
 
 def with_global_rank(

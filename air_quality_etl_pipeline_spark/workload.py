@@ -24,7 +24,9 @@ hashes match across Spark and DuckDB):
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,6 +45,7 @@ from air_quality_etl_pipeline_spark.plans.gold import star_join, surrogate_key
 from air_quality_etl_pipeline_spark.plans.merge import merge_insert_if_absent
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+T = TypeVar("T")
 
 #: registry filled at import time: name -> (spark_fn, oracle_sql)
 QUERIES: dict[str, tuple[SparkQuery, str]] = {}
@@ -161,32 +164,49 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: on this rig while executing it costs 40-200 ms at sf0.1 — a real
 #: engine parses/plans a repeated query once (prepared statements, plan
 #: caches in Presto/Trino and Spark's own IR caching for SQL strings).
-#: Only valid for side-effect-free queries: the cached object re-executes
-#: the read path on every action but never re-runs Python-side writes.
+#: A cached object re-executes the plan on every action but never
+#: re-runs its builder, so only builds that ran no Spark job land here.
 _PLAN_CACHE: dict[tuple, DataFrame] = {}
 
-#: Queries whose BUILDER performs the work the query represents (sink
-#: round-trip writes, REST ingest, DAG execution, streaming
-#: run-to-completion): their returned DataFrame is only a read-back of
-#: an already-materialized result, so a cached plan re-times the
-#: read-back, not the operator. ``prepared`` rebuilds these per call;
-#: populated here and extended by the workload_* modules at import.
+#: Queries whose builder writes files or drives a stream (sink
+#: round-trips, REST ingest, index writes, streaming run-to-completion),
+#: so a registry plan sweep must not build them. Extended by the
+#: workload_* modules at import.
 SIDE_EFFECT_QUERIES: set[str] = set()
+
+def count_jobs(spark: SparkSession, build: Callable[[], T]) -> tuple[T, int]:
+    """``build()``'s result and the number of Spark jobs it launched.
+
+    The jobs are counted through a job tag unique to this call. A tag
+    adds to a job and leaves the caller's job group alone, so a tracer
+    that attributes jobs through ``setJobGroup`` still sees them. The
+    status tracker is fed by an asynchronous listener; a job's start
+    event reaches it before the action that ran the job returns
+    (``tests/test_plan_quality.py::test_build_job_audit_still_detects``
+    fences that)."""
+    sc = spark.sparkContext
+    tag = f"aq-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = build()
+    finally:
+        sc.removeJobTag(tag)
+    return out, len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
 
 
 def prepared(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The resolved DataFrame for a registered pure query, built once
-    per (session, sf_dir) — re-running an action on it re-executes the
-    plan against current data, exactly like a prepared statement.
-    Queries in :data:`SIDE_EFFECT_QUERIES` are rebuilt on every call so
-    each sample repeats the builder-time work they represent."""
-    if name in SIDE_EFFECT_QUERIES:
-        return QUERIES[name][0](spark, sf_dir)
+    """The built DataFrame for a registered query, kept per (session,
+    sf_dir) once a build of it ran no Spark job — re-running an action
+    on it re-executes the plan against current data, exactly like a
+    prepared statement. A build that ran jobs (a write, a stream, an
+    iteration, a summary collect, a materialize, or the first read of
+    a table's schema) is not kept, so every call repeats that work."""
     key = (spark, sf_dir, name)
     df = _PLAN_CACHE.get(key)
     if df is None:
-        df = QUERIES[name][0](spark, sf_dir)
-        _PLAN_CACHE[key] = df
+        df, jobs = count_jobs(spark, lambda: QUERIES[name][0](spark, sf_dir))
+        if jobs == 0:
+            _PLAN_CACHE[key] = df
     return df
 
 
@@ -1311,92 +1331,6 @@ from air_quality_etl_pipeline_spark import workload_sql  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_training  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_graph  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_lakehouse  # noqa: E402,F401
-
-# Iterative/training queries whose CONSTRUCTION executes Spark jobs
-# (eager localCheckpoint rounds, driver-side union-find, trainer
-# argmax collects, moment passes): a cached prepared plan would re-time
-# only the post-iteration stages, silently under-reporting the real
-# cost — rebuild these per bench sample, same contract as the
-# write/ingest/stream side-effect queries above them in this set.
-#: Pure read-only queries whose BUILD phase runs driver-side actions
-#: (iteration loops, or the tiny min/max + per-bucket-totals collects
-#: of the two-phase order-statistics operators). They must be rebuilt
-#: per bench sample so each timing includes that work — but unlike the
-#: write/stream side-effect queries they are safe to construct
-#: anywhere (plan sweeps, oracle checks) with no filesystem effects.
-REBUILD_PURE_QUERIES: set[str] = {
-    # r13: the √N auto-stride default runs the corpus count() that
-    # sizes the coarse quantizer at BUILD time — rebuild per sample so
-    # every timing pays the sizing job (the bench-honesty fence
-    # test_pure_query_builds_run_no_jobs catches this mechanically)
-    "ann_ivf_topk_auto",
-    "dedup_clusters",
-    "dedup_canonical_docs",
-    "split_leakage_audit",
-    "pagerank_trade_graph",
-    "ppr_from_seeds",
-    "bpe_learn_merges",
-    "bpe_encode_corpus",
-    "kmeans_parallel_init",
-    "pca_project",
-    "pack_sequences",
-    # bucketed two-phase order statistics (operators/order_stats.py):
-    # the round-6 fused builders run ONE summary-collect job at build
-    # (and localCheckpoint their input — a reused DataFrame would serve
-    # materialized blocks to samples 2+), so each sample rebuilds to
-    # pay the summary job and the materialization honestly
-    "orders_gini",
-    "abc_pareto_classes",
-    "psi_value_drift",
-    "curriculum_shards",
-    "shuffle_shards_audit",  # r10: seeded_shuffle rides with_global_rank
-    "peak_concurrent_sessions",
-    "id_gap_audit",
-    "repeat_purchase_interval",
-    "padding_waste_report",
-    "dim_part_category",
-    "ntile_deciles",
-    "rfm_segments",
-    "record_breaking_orders",
-    "skyline_running_max",
-    # MMR checkpoints its bounded candidate/pair relations before the
-    # unrolled greedy rounds (the rounds reference them ~3x each; an
-    # un-cut lineage re-executes the corpus scan per reference —
-    # measured 8.1 s vs sub-second at sf1), so the builder runs the
-    # candidate-generation jobs and each bench sample must pay them
-    "mmr_diversified_rerank",
-    # builders that execute Spark jobs at construction (found by the
-    # job-group audit that is now the plan-quality fence
-    # tests/test_plan_quality.py::test_pure_query_builds_run_no_jobs):
-    # the PQ codebook collect (k lowest-id vectors) and the Bloom
-    # bitmap build (dim scan → ≤4096 positions) are the operator's own
-    # training/build work, so bench samples must pay them
-    "pq_codes",
-    "pq_adc_search",
-    "ivf_pq_search",
-    "bloom_filter_join",
-    # builders that materialize an intermediate several consumers read
-    # (cache.materialize; lazily, AQE could not reuse it across their
-    # differently-filtered references): the Naive Bayes weight table,
-    # the co-purchase edge lists, the PPJoin shingle relation and the
-    # SimHash fingerprints, and dedup_ngram_jaccard's candidate pairs
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_fuzzy_edit",
-    "quality_classifier_score",
-    "quality_classifier_eval",
-    "corpus_curation_e2e_v2",
-    "corpus_curation_e2e_v3",
-    "triangle_count",
-    "bfs_reach_3",
-    "lsh_recall_eval",
-    # merge_full_sync / merge_multi_clause left this list in round 9:
-    # check_multiple_matches="lazy" compiles the Delta duplicate-match
-    # probe into the plan as a raise_error branch, so their builders
-    # run zero jobs again (verified by the builds-run-no-jobs fence)
-    # and the whole validation cost is inside every timed sample
-}
-SIDE_EFFECT_QUERIES.update(REBUILD_PURE_QUERIES)
 
 #: Queries whose physical plan carries a Window ON a single-partition
 #: exchange over a relation that is provably BOUNDED (a fixed dimension

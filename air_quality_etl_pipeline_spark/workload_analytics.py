@@ -4897,7 +4897,8 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`~.operators.order_stats.with_global_rank` — never a
     single-partition sort; ties break on custkey so the assignment is
     reproducible across engines. Three rank passes = three bounded
-    summary collects (in REBUILD_PURE_QUERIES so the bench pays them)."""
+    summary collects, so ``prepared`` rebuilds it and the bench pays
+    them)."""
     from air_quality_etl_pipeline_spark.operators.order_stats import (
         with_global_rank,
     )
@@ -5205,8 +5206,9 @@ def q_record_breaking_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: uses :func:`~.operators.order_stats.with_running_max` — the
     bucketed two-phase carve with a per-bucket exclusive prefix-max
-    offset (summary collect bounded by the timestamp band count; in
-    REBUILD_PURE_QUERIES so the bench pays it). The oracle is the
+    offset (summary collect bounded by the timestamp band count; the
+    build runs it, so ``prepared`` rebuilds the query and the bench
+    pays it). The oracle is the
     plain windowed-frame SQL, so the two engines verify each other
     through different algorithms."""
     from air_quality_etl_pipeline_spark.operators.order_stats import (
@@ -5251,9 +5253,9 @@ def q_skyline_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed a row's size IFF some STRICTLY cheaper part carries a
     strictly larger size — same-price rows earlier in the order have
     sizes <= the current row's, so they can never trigger the test —
-    which is exactly strict 2-D dominance. One summary collect
-    (REBUILD_PURE), one partitioned window pass, no join back, no
-    bounded-domain assumption. Oracle: the quadratic NOT EXISTS form
+    which is exactly strict 2-D dominance. One summary collect (run at
+    build, so ``prepared`` rebuilds it), one partitioned window pass,
+    no join back, no bounded-domain assumption. Oracle: the quadratic NOT EXISTS form
     (cross-algorithm check, shared with the sibling)."""
     from air_quality_etl_pipeline_spark.operators.order_stats import (
         with_running_max,

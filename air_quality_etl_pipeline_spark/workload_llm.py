@@ -61,8 +61,8 @@ from air_quality_etl_pipeline_spark.workload import (
     register,
 )
 
-# builder writes the bucketed index table — each bench sample must pay
-# the index build + write, and the plan sweep must not construct it
+# builder writes the bucketed index table — the plan sweep must not
+# construct it
 SIDE_EFFECT_QUERIES.add("ann_ivf_bucketed_batch")
 
 # ---- shared SQL fragments -------------------------------------------------
@@ -958,8 +958,8 @@ def q_ann_ivf_bucketed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ann_ivf_topk``, so the oracle is the same SQL with the query
     predicate opened up. The self-kNN graph is the input for
     graph-based clustering, SemDeDup-style pruning, and hard-negative
-    mining. WRITE side effect: rebuilt per bench sample
-    (SIDE_EFFECT_QUERIES)."""
+    mining. WRITE side effect (SIDE_EFFECT_QUERIES): the build runs the
+    index write, so ``prepared`` rebuilds it per call."""
     import os as _os
 
     from air_quality_etl_pipeline_spark.operators.similarity import (
@@ -2134,7 +2134,7 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     round, and without the lineage cut Catalyst re-executes the
     corpus-scan subtree per reference (measured at sf1: 8.1 s lazy vs
     sub-second checkpointed), so the builder runs the candidate-
-    generation jobs and the query lives in REBUILD_PURE_QUERIES (bench
+    generation jobs and ``prepared`` rebuilds it per call (bench
     samples pay that work honestly). Per-query candidate sets stay
     bounded at any corpus size; scaling to many queries =
     partitionBy(query_id) over the same bounded-per-query relation."""

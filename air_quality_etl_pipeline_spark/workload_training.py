@@ -1089,8 +1089,8 @@ def q_trigram_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose references are pruned or filtered differently still re-runs
     # its corpus pass per reference. Two rewrites were measured and
     # REJECTED in round 10: localCheckpoint of the vocab-sized count
-    # relations under REBUILD_PURE (the per-sample rebuild pays plan
-    # construction + eager checkpoint jobs, 6.7 s vs 3.25 prepared)
+    # relations (the build jobs make each bench sample rebuild it, paying
+    # plan construction + eager checkpoint jobs, 6.7 s vs 3.25 prepared)
     # and a single-reference linear join chain (5.4 s — extra shuffles
     # beat the saved passes); round 9 had already rejected
     # checkpointing the tokenized corpus. The five-join tv lookup

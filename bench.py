@@ -71,8 +71,9 @@ HEADLINE = [
     # streaming twins
     "session_windows",
     # round-4: bucketed two-phase order statistics (the scale-safe
-    # reformulation of the global-window analytics family — timings
-    # include the per-sample offset collects via SIDE_EFFECT_QUERIES)
+    # reformulation of the global-window analytics family — their
+    # builds run the offset collects, so prepared() rebuilds them and
+    # each sample pays those jobs)
     "orders_gini",
     "abc_pareto_classes",
     "psi_value_drift",
@@ -89,8 +90,9 @@ HEADLINE = [
     "bitmap_distinct_rollup",
     "zorder_layout_audit",
     # round-7: real multimodal codecs (Arrow mapInPandas hot path),
-    # DSIR selection, the full-matrix MERGE (pays its duplicate probe
-    # per sample via SIDE_EFFECT_QUERIES), and the AQI summary cube
+    # DSIR selection, the full-matrix MERGE (its duplicate-match probe
+    # is a raise_error branch inside the plan, so every sample runs it),
+    # and the AQI summary cube
     "image_decode_channel_stats",
     "audio_decode_stats",
     "dsir_importance_weights",
@@ -160,9 +162,10 @@ def warm_up(spark, names) -> None:
 def time_query(spark, sf_dir: str, name: str) -> tuple[float, list[float]]:
     """Best-of-3 seconds and the three samples for *name* at *sf_dir*.
 
-    Each sample runs a prepared plan: every headline query is a pure
-    DataFrame pipeline, so the plan is built once (a prepared statement
-    — run 1 pays it) and each sample re-executes it in full; best-of-3
+    Each sample runs ``prepared``'s plan: a build that ran no Spark job
+    happens once (a prepared statement — run 1 pays it) and each sample
+    re-executes the plan in full; a build that runs jobs is repeated
+    per sample, so each sample pays them. Best-of-3
     therefore measures steady-state execution, not py4j
     plan-construction chatter, and scheduler noise (shared CPUs) is
     squeezed out by the min."""

@@ -34,9 +34,9 @@ session can also run a job for each table it is the first to read; the
 median over three or more samples leaves those out, and with
 ``--samples 1`` ``build_jobs`` and ``plan.*`` equal those of a traced
 perfbench cold pass over the same queries. (perfbench's warm pass goes
-through ``workload.prepared``, which rebuilds ``REBUILD_PURE_QUERIES``,
-so its ``exec.*`` also hold their builder jobs; here warm re-runs the
-built frame.)
+through ``workload.prepared``, which rebuilds every query whose build
+ran jobs, so its ``exec.*`` also hold those builder jobs; here warm
+re-runs the built frame.)
 """
 
 from __future__ import annotations

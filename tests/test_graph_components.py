@@ -273,7 +273,7 @@ def test_star_edges_fingerprint_null_safe_and_injective(spark):
 
 
 def test_component_edges_rebuilds_are_cache_independent(spark, sf_dir):
-    """Round-14 honesty fence for the REBUILD dedup family: the
+    """Round-14 honesty fence for the dedup family rebuilt per call: the
     fingerprint frame is materialized by an EAGER localCheckpoint, so
     (1) every downstream op builds on a LogicalRDD leaf (no analyzer
     re-walk of the 48-aggregate vote subtree per op), and (2) two

@@ -186,6 +186,29 @@ def test_total_col_equals_global_aggregate(skewed_df):
     assert len(tots) == 1 and tots[0]["tot"] == expected
 
 
+def test_failing_summary_runs_once(spark):
+    # a summary whose final merge fails (long overflow of the bucket
+    # total, raised in the result stage) must surface that error after
+    # the jobs one summary takes — the same input with small values
+    # builds with that many — not run the summary a second way
+    from air_quality_etl_pipeline_spark.workload import count_jobs
+
+    def build(v):
+        df = spark.range(0, 8, numPartitions=8).select(
+            "id", F.lit(0).alias("k"), F.lit(v).alias("v")
+        )
+        return with_running_sum(df, F.col("k"), [F.col("id")], "v")
+
+    _, ok_jobs = count_jobs(spark, lambda: build(1))
+
+    def failing():
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            build(2**62)
+
+    _, jobs = count_jobs(spark, failing)
+    assert jobs == ok_jobs
+
+
 def test_no_single_partition_window_in_plans(spark, skewed_df):
     # the DATA-sized window must be partitioned by __obkt, and since
     # the round-6 fused formulation the summary is collected (never

@@ -416,17 +416,17 @@ CARTESIAN_ALLOWLIST: dict[str, str] = {}
 
 @pytest.fixture(scope="module")
 def registry_audit(spark) -> tuple[dict[str, str], dict[str, int], dict]:
-    # one plan-build pass over every registered pure query, shared by
-    # the registry-wide sweeps below (building ~240 physical plans
-    # costs ~1 min; do it once). Each build runs under its own Spark
-    # job group so the no-jobs-at-construction fence can count what
-    # the BUILDER executed; table scans are warmed first so first-touch
-    # parquet listing/schema jobs don't charge to the first query.
+    # one plan-build pass over every registered query the sweep may
+    # build (building ~280 physical plans costs ~1 min; do it once),
+    # shared by the registry-wide sweeps below. ``build_jobs`` holds
+    # each builder's Spark job count, counted the way ``prepared``
+    # counts it; table scans are warmed first so first-touch parquet
+    # listing/schema jobs don't charge to the first query.
     from air_quality_etl_pipeline_spark.workload import (
-        REBUILD_PURE_QUERIES,
         SIDE_EFFECT_QUERIES,
         _events,
         _t,
+        count_jobs,
     )
 
     for t in (
@@ -436,21 +436,13 @@ def registry_audit(spark) -> tuple[dict[str, str], dict[str, int], dict]:
         _t(spark, SF, t).schema
     _events(spark, SF).schema
 
-    skip = SIDE_EFFECT_QUERIES - REBUILD_PURE_QUERIES  # writes/streams only
-    sc = spark.sparkContext
     plans: dict[str, str] = {}
     build_jobs: dict[str, int] = {}
     dfs: dict = {}
     for name, (fn, _) in QUERIES.items():
-        if name in skip:
+        if name in SIDE_EFFECT_QUERIES:
             continue
-        group = f"plan-audit:{name}"
-        sc.setJobGroup(group, name)
-        df = fn(spark, SF)
-        sc.setJobGroup("plan-audit:idle", "idle")
-        build_jobs[name] = len(
-            sc.statusTracker().getJobIdsForGroup(group)
-        )
+        df, build_jobs[name] = count_jobs(spark, lambda: fn(spark, SF))
         plans[name] = _executed_plan_str(df)
         dfs[name] = df
     return plans, build_jobs, dfs
@@ -488,30 +480,6 @@ def test_no_cartesian_product_anywhere(registry_plans):
         for name, plan in registry_plans.items()
         if "CartesianProduct" in plan and name not in CARTESIAN_ALLOWLIST
     ]
-    assert not offenders, offenders
-
-
-def test_pure_query_builds_run_no_jobs(registry_audit):
-    # bench honesty fence (the round-3 bug class, made mechanical): a
-    # query OUTSIDE SIDE_EFFECT_QUERIES is timed on a cached prepared
-    # plan, so its builder must not execute Spark jobs — any build-time
-    # collect (codebook training, Bloom bitmap, range offsets) would
-    # silently drop out of every bench sample. A builder that needs
-    # jobs belongs in REBUILD_PURE_QUERIES / SIDE_EFFECT_QUERIES so
-    # samples rebuild it and pay the work. Found-by-audit members:
-    # pq_codes / pq_adc_search / ivf_pq_search (codebook collect),
-    # bloom_filter_join (bitmap build), the order-stats family
-    # (offset collects).
-    from air_quality_etl_pipeline_spark.workload import (
-        SIDE_EFFECT_QUERIES,
-    )
-
-    build_jobs = registry_audit[1]
-    offenders = {
-        name: n
-        for name, n in build_jobs.items()
-        if n > 0 and name not in SIDE_EFFECT_QUERIES
-    }
     assert not offenders, offenders
 
 
@@ -737,14 +705,72 @@ def test_window_fence_detector_still_detects(spark):
 
 
 def test_build_job_audit_still_detects(spark):
-    # same canary for the bench-honesty fence: a builder that runs a
-    # Spark job must show up in the job-group audit
-    sc = spark.sparkContext
-    group = "plan-audit-canary"
-    sc.setJobGroup(group, "canary")
-    spark.range(10).collect()  # a real job inside the group
-    sc.setJobGroup("plan-audit-canary-idle", "idle")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    # canary for the builder-job count ``prepared`` and registry_audit
+    # share: each of 20 back-to-back builds that runs one tiny job must
+    # count exactly that job when read right after the build returns
+    # (the status tracker is fed by an asynchronous listener)
+    from air_quality_etl_pipeline_spark.workload import count_jobs
+
+    counts = [
+        count_jobs(spark, lambda: spark.range(1).collect())[1]
+        for _ in range(20)
+    ]
+    assert counts == [1] * 20, counts
+
+
+def _rebuilt(spark, name: str, monkeypatch) -> list[bool]:
+    """Whether each of three ``prepared`` calls ran *name*'s builder."""
+    from air_quality_etl_pipeline_spark.workload import _PLAN_CACHE, prepared
+
+    fn, oracle = QUERIES[name]
+    calls = []
+
+    def counted(spark, sf_dir):
+        calls.append(name)
+        return fn(spark, sf_dir)
+
+    monkeypatch.setitem(QUERIES, name, (counted, oracle))
+    _PLAN_CACHE.pop((spark, SF, name), None)
+    ran = []
+    for _ in range(3):
+        before = len(calls)
+        prepared(spark, SF, name)
+        ran.append(len(calls) > before)
+    _PLAN_CACHE.pop((spark, SF, name), None)
+    return ran
+
+
+def test_prepared_rebuilds_a_builder_that_runs_a_job(spark, monkeypatch):
+    # any builder that runs a Spark job is rebuilt on every call, with
+    # no list to keep: here a query registered only for this test
+    def build(spark, sf_dir):
+        spark.range(1).count()
+        return spark.range(1)
+
+    monkeypatch.setitem(QUERIES, "probe_build_job", (build, "SELECT 0 AS id"))
+    assert _rebuilt(spark, "probe_build_job", monkeypatch) == [True] * 3
+
+
+@pytest.mark.parametrize("name", ["orders_gini", "dedup_clusters"])
+def test_prepared_rebuilds_job_running_queries(spark, monkeypatch, name):
+    # their builders collect a summary / iterate: the job count, not a
+    # side-effect list, is what keeps them from a cached plan
+    from air_quality_etl_pipeline_spark.workload import SIDE_EFFECT_QUERIES
+
+    assert name not in SIDE_EFFECT_QUERIES
+    assert _rebuilt(spark, name, monkeypatch) == [True] * 3
+
+
+def test_prepared_caches_the_first_zero_job_build(spark, monkeypatch):
+    # silver_filter_dedup's build runs a job only while it is the first
+    # to read lineitem (the parquet schema job): that build is not
+    # kept, and the next one, which runs no job, is
+    from air_quality_etl_pipeline_spark.workload import _SCAN_CACHE
+
+    monkeypatch.delitem(_SCAN_CACHE, (spark, SF, "lineitem"), raising=False)
+    assert _rebuilt(spark, "silver_filter_dedup", monkeypatch) == [
+        True, True, False,
+    ]
 
 
 def test_curation_v3_decontam_stage_plan_shape(spark):
