@@ -47,12 +47,6 @@ DECODE_META_SCHEMA = StructType(
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Make an opaque binary payload column (here: the utf-8 bytes of the
-    text column — stands in for real image/audio bytes)."""
-    return df.withColumn("payload", F.col(text_col).cast("binary"))
-
-
 # The AVI parser/packer below share these closed forms with the DuckDB
 # oracle (workload_llm video queries): per document id,
 #   width     = 8 + id % 5          (8..12 — odd widths exercise the

@@ -67,20 +67,16 @@ ties must share a bucket) and only parallelism degrades, never
 correctness.
 
 The operators ``localCheckpoint`` the input by default
-(``materialize=True``). This was RE-MEASURED for the two-pass
-formulation (round 6) and kept — but for a different reason than the
-three-pass era: for a SINGLE consumer the checkpoint is now a slight
-net loss (shuffle-stage reuse lets the second job re-read the first
-job's exchanges: isolated A/B at sf0.1, checkpoint on/off —
-aggregated input 1.02/0.62 s, distinct ids 1.00/0.95 s, narrow scan
-0.56/0.52 s), yet the REGISTERED queries run FASTER with it (family
-6.6 s vs 8.4-8.7 s same-box) because their downstream references the
-ranked output — and through it the input — SEVERAL times (class
-stats + share-of-total + boundary lookups), and Spark does not dedup
-common subplans: each reference re-executes everything above the
-nearest reusable exchange. The checkpoint caps that at one
-materialization. Pass ``materialize=False`` when the caller already
-checkpoints the input at the query level (padding_waste,
+(``materialize=True``), lazily: the summary's ``toArrow()`` fills the
+checkpoint and the query's own execution reads it. The two are
+separate actions, and AQE reuses identical exchanges only within one
+execution, so without the checkpoint the query's action runs the
+input's whole subtree a second time. Re-measured cache-cleared with
+the checkpoint removed (SCALE.md, "Global order statistics"): cold runs
+of five of the six consumers measured there slow down 1.8–3.7× and
+build plus cold by 0.13–0.75 s; record_breaking_orders, whose input is
+a plain table scan, is within noise. Pass ``materialize=False`` when the
+caller already checkpoints the input at the query level (padding_waste,
 repeat_purchase) or the input is too large to materialize.
 Correctness never depends on the flag: the bucket id is a pure
 function of row values, so re-evaluation cannot disagree with

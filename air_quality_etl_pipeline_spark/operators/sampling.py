@@ -166,7 +166,6 @@ def seeded_shuffle(
     seed: str = "shuffle",
     shard_col: str = "shard",
     pos_col: str = "pos",
-    check_unique: bool | str = "lazy",
 ) -> DataFrame:
     """Deterministic uniform GLOBAL shuffle into balanced fixed-count
     shards — the training-data export staple: break all source
@@ -188,16 +187,15 @@ def seeded_shuffle(
     ``(draw, key)``, so duplicate keys tie completely and their
     relative order (hence shard/pos) would be partition-dependent,
     breaking both determinism claims. Dedup or add a disambiguating
-    suffix first. ENFORCED IN-PLAN by default (``check_unique="lazy"``,
-    the same discipline as ``merge_apply(check_multiple_matches=
-    "lazy")``): the draw is a pure function of the key, so duplicate
-    keys are exactly the ties of the rank's ``(draw, key)`` order, and
-    the rank machinery asserts strictness via a ``rank() !=
-    row_number()`` guard inside its existing window — zero extra
-    exchanges or actions; the plan raises on the first duplicate
-    instead of emitting a partition-dependent layout. Pass
-    ``check_unique=False`` only when uniqueness is already enforced
-    upstream and the (tiny) extra window function matters.
+    suffix first. ENFORCED IN-PLAN: the draw is a pure function of
+    the key, so duplicate keys are exactly the ties of the rank's
+    ``(draw, key)`` order, and the rank machinery asserts strictness
+    via a ``rank() != row_number()`` guard inside its existing window —
+    zero extra exchanges or actions. A read that evaluates the rank
+    (``collect``, a write, anything using ``shard``/``pos``) raises on
+    the first duplicate instead of emitting a partition-dependent
+    layout; one that column pruning leaves without the rank window
+    (``count()``, a ``select`` of input columns only) does not.
 
     Scale: one draw-keyed exchange for the rank's bucket window;
     per-bucket counts are the only cross-partition traffic beyond it.
@@ -222,9 +220,7 @@ def seeded_shuffle(
             f"seeded_shuffle: duplicate {key_col!r} — key_col must be "
             "unique (shard/pos would be partition-dependent); dedup or "
             "disambiguate first"
-        )
-        if check_unique
-        else None,
+        ),
     )
     return (
         ranked.withColumn(

@@ -62,11 +62,6 @@ def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
     return safe_div(hits.cast("double"), F.size(toks).cast("double"))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the LID feature vector)."""
-    return lang_scores_of_tokens(F.transform(token_array(text), F.lower))
-
-
 def lang_scores_of_tokens(toks: Column) -> dict[str, Column]:
     """Per-language stopword-hit counts over a (lowercased) token-array
     column. PERF: pass a materialized column reference — Catalyst does
@@ -276,22 +271,6 @@ def normalize_for_fingerprint(text: Column) -> Column:
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of the normalized text. Exact-dup key."""
     return F.md5(normalize_for_fingerprint(text))
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-stat columns to a documents frame."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_chars_text": F.length(t),
-            "uniq_token_ratio": unique_token_ratio(t),
-            "stopword_ratio": stopword_ratio(t),
-            "lang_pred": predicted_lang(t),
-            "quality": quality_score(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
 
 
 def tfidf_terms(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

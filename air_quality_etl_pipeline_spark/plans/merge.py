@@ -74,13 +74,6 @@ def upsert_replace(
     return source.select(*target.columns).unionByName(survivors)
 
 
-class MergeMultipleMatchesError(ValueError):
-    """A target row matched more than one source row while an
-    update/delete clause applies — the nondeterministic case Delta
-    rejects (``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``,
-    Delta MERGE docs: "can produce unexpected results ... error")."""
-
-
 def merge_apply(
     target: DataFrame,
     source: DataFrame,
@@ -93,7 +86,6 @@ def merge_apply(
     not_matched_by_source_condition=None,
     matched_set: dict | None = None,
     not_matched_by_source_set: dict | None = None,
-    check_multiple_matches: bool | str = True,
     matched_clauses: Sequence[dict] | None = None,
     not_matched_clauses: Sequence[dict] | None = None,
     not_matched_by_source_clauses: Sequence[dict] | None = None,
@@ -143,29 +135,18 @@ def merge_apply(
     * ``not_matched_by_source_clauses``: same ordered form for the
       by-source side — ``{"action": "update"|"delete", "condition":
       fn|None, "set": dict|None}``; overrides the legacy trio.
-    * ``check_multiple_matches``: Delta errors when the same target
-      row would ACTUALLY be modified by more than one source row
+    * Multiple matches: Delta errors when the same target row would
+      ACTUALLY be modified by more than one source row
       (``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW``) — matched
-      source rows that no clause condition qualifies don't count
-      (round-8 advisor fix; the previous probe was stricter, erroring
-      on any duplicate matched key). Multiple source rows on an
-      UNMATCHED key are fine and all insert, as in Delta. Two modes:
-
-      * ``True`` (default) — FAIL-FAST: the check runs as one eager
-        bounded action (``first()`` of a count, not a data-sized
-        collect) inside an otherwise lazy builder, and raises a typed
-        :class:`MergeMultipleMatchesError` from ``merge_apply``
-        itself.
-      * ``"lazy"`` — IN-PLAN: the check is compiled into the returned
-        plan as a ``raise_error`` branch, so it costs NOTHING beyond
-        the merge's own pass (no extra action, and on the general
-        path no second execution of the fan-out join). The error
-        surfaces at the caller's first action as Spark's
-        ``USER_RAISED_EXCEPTION`` carrying the message below — which
-        is exactly WHEN Delta's own ``.execute()`` raises it. Prefer
-        this at scale; the default stays fail-fast for interactive
-        use and the typed exception.
-
+      source rows that no clause condition qualifies don't count, and
+      multiple source rows on an UNMATCHED key all insert. The check
+      is compiled into the returned plan as a ``raise_error`` branch,
+      so it costs no action beyond the merge's own pass, and the
+      error surfaces as Spark's ``USER_RAISED_EXCEPTION`` carrying
+      ``MERGE_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW`` when the plan
+      runs — when Delta's own ``.execute()`` raises it. A full
+      evaluation (write, count, collect, aggregate) raises; a partial
+      read (``limit``) sees only the rows it evaluates and may not.
     * ``schema_evolution``: Delta's ``withSchemaEvolution()`` —
       source columns ABSENT from the target are appended to the
       output schema (in source order, after the target's columns);
@@ -182,8 +163,7 @@ def merge_apply(
     Scale: everything shuffles on the one natural key — the source
     key-dedup aggregate, the left join (target pass), and the
     anti-join (insert pass) share the same partitioning, so Spark
-    reuses the exchange across them; the duplicate probe is an
-    aggregate to one scalar on that same key. The cost class is Delta
+    reuses the exchange across them. The cost class is Delta
     MERGE's own join phase. At 100 TB both sides would be bucketed by
     the key so the joins run exchange-free.
     """
@@ -328,21 +308,6 @@ def merge_apply(
 
         return with_sets
 
-    conditional = any(c["condition"] is not None for c in clauses)
-
-    def dup_matched_keys() -> int:
-        # cheap probe: matched keys carrying >1 source rows — a
-        # source-side aggregate + key join, NO target fan-out
-        return (
-            source.groupBy(*key_list)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .join(target.select(*key_list).distinct(), on=key_list)
-            .agg(F.count(F.lit(1)))
-            .first()[0]
-        )
-
-    lazy_check = check_multiple_matches == "lazy"
     _raise_dup = F.raise_error(
         F.lit(
             "MERGE_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW: a target "
@@ -350,38 +315,18 @@ def merge_apply(
         )
     )
 
-    # Route: the general (fan-out) path is needed ONLY when duplicate
-    # matched keys can coexist with conditions — i.e. a disqualified
-    # duplicate must neither error nor win. With no duplicates the
-    # cheap pre-agg path is exact for any clause list; with duplicates
-    # and NO conditions every duplicate modifies, which IS Delta's
-    # error — caught by the cheap probe (fail-fast mode) or by an
-    # in-plan raise_error guard (lazy mode). Lazy mode NEVER probes:
-    # conditional clause lists go straight to the general path (exact
-    # for any duplicate profile), so the whole merge is ONE action.
-    use_general = False
-    fast_guard = False
-    if clauses and conditional:
-        if lazy_check or not check_multiple_matches:
-            use_general = True  # exact with pairs; no routing probe
-        else:
-            use_general = dup_matched_keys() > 0
-    elif clauses and check_multiple_matches:
-        if lazy_check:
-            fast_guard = True
-        else:
-            dup = dup_matched_keys()
-            if dup:
-                raise MergeMultipleMatchesError(
-                    f"{dup} target key(s) would be modified by multiple "
-                    f"source rows (action {clauses[0]['action']!r})"
-                )
-    if not use_general:
-        # FAST PATH — at most one source row per matched key (probed,
-        # or no update/delete clause so only key EXISTENCE matters).
-        # LEFT join against ONE source row per key (min(struct) is
-        # exact, not a choice); the first-match-wins clause chain
-        # evaluates directly on that single (t, s) pair.
+    # Route on the clauses alone: conditional clause lists take the
+    # general (fan-out) path, exact for any duplicate profile (a
+    # disqualified duplicate must neither error nor win). Without
+    # conditions the cheap pre-aggregated path is exact: every matched
+    # duplicate modifies, which IS Delta's error, raised in-plan by the
+    # ``_n > 1`` guard. Insert-only merges need no guard (only key
+    # EXISTENCE matters).
+    if not any(c["condition"] is not None for c in clauses):
+        fast_guard = bool(clauses)
+        # FAST PATH — LEFT join against ONE source row per key
+        # (min(struct) is exact, not a choice); the first-match-wins
+        # clause chain evaluates directly on that single (t, s) pair.
         t = target.select(*key_list, t_struct.alias("_t"))
         s1 = (
             source.select(*key_list, t_struct.alias("_s"))
@@ -400,11 +345,9 @@ def merge_apply(
         null_row = F.lit(None).cast(j.schema["_t"].dataType)
         chooser = None
         if fast_guard:
-            # lazy multiple-match check: every clause here is
-            # UNCONDITIONAL (conditional routes through the probe), so
-            # a matched key with >1 source rows is always modified
-            # twice — Delta's error, raised from inside the merge's
-            # own pass
+            # every clause here is UNCONDITIONAL, so a matched key with
+            # >1 source rows is always modified twice — Delta's error,
+            # raised from inside the merge's own pass
             chooser = F.when(matched & (F.col("_n") > 1), _raise_dup)
         for c in clauses:
             fires = matched & cond(c["condition"], ts, ss)
@@ -428,7 +371,7 @@ def merge_apply(
         # clauses. The join may fan a target row out across several
         # source rows; per target row we pick the FIRST clause any
         # source row qualifies (min over (clause_idx, source)), and
-        # the Delta probe counts QUALIFYING source rows per target row
+        # the Delta check counts QUALIFYING source rows per target row
         # (>1 → error), not raw key duplicates — a matched source row
         # that no condition qualifies never modifies, so it never
         # errors (Delta-exact, round-8 advisor fix).
@@ -463,20 +406,6 @@ def merge_apply(
             F.min(winner).alias("_w"),
             F.sum(F.when(ci.isNotNull(), 1).otherwise(0)).alias("_nq"),
         )
-        if check_multiple_matches and not lazy_check:
-            # fail-fast mode pays a FULL second execution of the
-            # fan-out join + reduction for the early typed error;
-            # "lazy" folds the same check into the plan below for free
-            dup = (
-                per_t.filter(F.col("_nq") > 1)
-                .agg(F.count(F.lit(1)))
-                .first()[0]
-            )
-            if dup:
-                raise MergeMultipleMatchesError(
-                    f"{dup} target row(s) would be modified by multiple "
-                    "qualifying source rows"
-                )
         with_sets = make_with_sets(
             {
                 f.name: f.dataType
@@ -486,11 +415,9 @@ def merge_apply(
         null_row = F.lit(None).cast(per_t.schema["_t"].dataType)
         tt, win = F.col("_t"), F.col("_w")
         ts = tt
-        chooser = None
-        if check_multiple_matches and lazy_check:
-            # in-plan Delta error: >1 QUALIFYING source rows for this
-            # target row (disqualified duplicates don't count)
-            chooser = F.when(F.col("_nq") > 1, _raise_dup)
+        # in-plan Delta error: >1 QUALIFYING source rows for this
+        # target row (disqualified duplicates don't count)
+        chooser = F.when(F.col("_nq") > 1, _raise_dup)
         for i, c in enumerate(clauses):
             hits = win.isNotNull() & (win["ci"] == i)
             if c["action"] == "update":
@@ -501,11 +428,7 @@ def merge_apply(
                 )
             else:
                 val = null_row
-            chooser = (
-                F.when(hits, val)
-                if chooser is None
-                else chooser.when(hits, val)
-            )
+            chooser = chooser.when(hits, val)
         # matched but no clause qualified → Delta fall-through: keep
         chooser = chooser.when(F.col("_m") == 1, tt)
         base = per_t
@@ -977,6 +900,9 @@ def merge_into_table(
 ) -> None:
     """MERGE into a catalog table: Delta ``merge`` when available,
     anti-join + append otherwise (identical insert-if-absent result).
+    Both branches match keys with ``=``, like every MERGE in this
+    module: a NULL-key source row never matches, so it inserts on
+    every run.
 
     The fallback triggers ONLY when Delta is genuinely unusable —
     ``delta-spark`` not importable, or the target not a Delta table
@@ -997,7 +923,7 @@ def merge_into_table(
         except AnalysisException:
             dt = None  # catalog table exists but is not Delta-backed
     if dt is not None:
-        cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
+        cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
         (
             dt.alias("t")
             .merge(source.alias("s"), cond)

@@ -510,9 +510,9 @@ def q_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``plans/merge.merge_apply``, the pure-Spark formulation pinned
     test-by-test against Delta's documented semantics in
     tests/test_merge_matrix.py.  The oracle spells the same matrix as
-    four UNION ALL branches. ``check_multiple_matches="lazy"`` folds
-    the Delta multiple-match error into the plan (raise_error branch),
-    so the merge runs as ONE action with no probe."""
+    four UNION ALL branches. ``merge_apply`` folds the Delta
+    multiple-match error into the plan (raise_error branch), so the
+    merge runs as ONE action with no probe."""
     o = _t(spark, sf_dir, "orders")
     tgt = o.filter(F.col("o_orderkey") % 7 != 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -529,7 +529,6 @@ def q_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         matched_condition=lambda t, s: s["o_orderstatus"] == "O",
         when_not_matched_by_source="delete",
         not_matched_by_source_condition=lambda t: t["o_orderstatus"] == "F",
-        check_multiple_matches="lazy",
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_rows"), _dec_sum("o_totalprice", "sum_price")
@@ -572,7 +571,7 @@ def q_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     source deliberately carries TWO rows per key (the real correction
     plus a disqualified 'X' shadow copy), so duplicate matched keys
     coexist with clause conditions — the exact shape where the
-    round-8 Delta-exact probe must count QUALIFYING rows per target
+    round-8 Delta-exact check must count QUALIFYING rows per target
     row (the shadow never qualifies, so no error) and first-match-wins
     must pick the right clause per source row. Clause 1 updates open
     orders ('O'), clause 2 deletes finished ones ('F'), anything else
@@ -581,11 +580,10 @@ def q_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL branches over the qualifying relation.
 
     Scale: one key shuffle for the fan-out join + one for the
-    per-target-row reduction; ``check_multiple_matches="lazy"``
-    compiles the Delta multiple-match error into the plan as a
-    raise_error branch, so the whole merge is ONE action — no routing
-    probe and no second execution of the fan-out join (the fail-fast
-    mode's eager probe re-ran both per bench sample)."""
+    per-target-row reduction; ``merge_apply`` compiles the Delta
+    multiple-match error into the plan as a raise_error branch, so the
+    whole merge is ONE action — no routing probe and no second
+    execution of the fan-out join."""
     o = _t(spark, sf_dir, "orders")
     tgt = o.filter(F.col("o_orderkey") % 7 != 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -625,7 +623,6 @@ def q_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "condition": lambda t, s: s["o_orderstatus"] == "F",
             },
         ],
-        check_multiple_matches="lazy",
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_rows"), _dec_sum("o_totalprice", "sum_price")

@@ -543,13 +543,6 @@ _BF_BITS = 4096
 _BF_HASHES = 3
 
 
-def _bf_pos_sql(key: str, i: int) -> str:
-    return (
-        f"(('0x' || substr(md5('bf{i}:' || CAST({key} AS VARCHAR)), 1, 15))"
-        f"::BIGINT % {_BF_BITS})"
-    )
-
-
 @register(
     "bloom_filter_join",
     """

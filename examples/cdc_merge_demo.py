@@ -6,8 +6,8 @@ notebook) to its modern lakehouse completion on this engine:
    reference's own K4/W2 pattern),
 2. Delta's full clause matrix via ``merge_apply`` — ordered
    conditional WHEN MATCHED clauses, WHEN NOT MATCHED BY SOURCE,
-   with the multiple-match check compiled into the plan
-   (``check_multiple_matches="lazy"``, one action per merge),
+   with the multiple-match check compiled into the plan (one action
+   per merge),
 3. DLT ``APPLY CHANGES INTO`` (SCD-1): latest-wins snapshot apply,
 4. DLT ``APPLY CHANGES ... STORED AS SCD TYPE 2``: version-interval
    history, out-of-order backfill, and ``TRACK HISTORY ON`` with
@@ -56,7 +56,7 @@ def main() -> None:
     )
     print("1. insert-if-absent:", sorted(map(tuple, grown.collect())))
 
-    # 2. full clause matrix, one-action lazy plan: open rows take the
+    # 2. full clause matrix, one-action plan: open rows take the
     # correction, stale rows retire, new rows insert
     src = spark.createDataFrame(
         [(1, "alpha", 11.0, "open"), (9, "iota", 90.0, "open")],
@@ -70,7 +70,6 @@ def main() -> None:
         matched_condition=lambda t, s: s["status"] == "open",
         when_not_matched_by_source="delete",
         not_matched_by_source_condition=lambda t: t["score"] < 25,
-        check_multiple_matches="lazy",
     )
     print("2. clause-matrix merge:", sorted(map(tuple, merged.collect())))
 

@@ -31,17 +31,28 @@ Reference semantics (Delta Lake MERGE docs):
 
 from __future__ import annotations
 
+import sys
+import types
+
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.plans.merge import (
-    MergeMultipleMatchesError,
     merge_apply,
     merge_insert_if_absent,
     upsert_replace,
 )
+from air_quality_etl_pipeline_spark.workload import count_jobs
 
 SCHEMA = "k long, ver long, val string"
+
+#: the message merge_apply's in-plan multiple-match check raises with
+MULTIPLE_MATCH = "MERGE_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW"
+
+
+class RefMultipleMatches(Exception):
+    """The reference model's multiple-source-match error."""
 
 # target: keys 1..4 plus a NULL-key row; source: overlap 3..4 (one
 # newer, one older version), fresh 5..6, its own NULL-key row.
@@ -146,7 +157,7 @@ def ref_merge(
                         qual.append((i, c, srow))
                         break
             if len(qual) > 1:
-                raise MergeMultipleMatchesError(str(k))
+                raise RefMultipleMatches(str(k))
             if qual:
                 _, c, srow = qual[0]
                 if c["action"] == "update":
@@ -426,11 +437,6 @@ MATRIX = [
 def test_merge_matrix_matches_reference(spark, name, skw, rkw):
     want = ref_merge(TARGET, SOURCE, [0], **rkw)
     assert run_spark(spark, **skw) == want
-    # the in-plan ("lazy") multiple-match mode must be result-identical
-    # on every matrix case — it swaps probe actions for a raise_error
-    # branch and routes conditional clause lists to the general path,
-    # neither of which may change a single row
-    assert run_spark(spark, check_multiple_matches="lazy", **skw) == want
 
 
 def test_multiple_source_match_errors_like_delta(spark):
@@ -438,10 +444,10 @@ def test_multiple_source_match_errors_like_delta(spark):
     dup = spark.createDataFrame(
         SOURCE + [(3, 9, "s3b")], SCHEMA  # second source row for key 3
     )
-    with pytest.raises(MergeMultipleMatchesError):
-        merge_apply(t, dup, ["k"])
-    with pytest.raises(MergeMultipleMatchesError):
-        merge_apply(t, dup, ["k"], when_matched="delete")
+    with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+        merge_apply(t, dup, ["k"]).collect()
+    with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+        merge_apply(t, dup, ["k"], when_matched="delete").collect()
     # insert-only: duplicates on a MATCHED key are irrelevant (no
     # update/delete fires) — Delta does not error here
     got = merge_apply(t, dup, ["k"], when_matched=None).collect()
@@ -475,13 +481,13 @@ def test_multiple_match_errors_only_when_actually_modified(spark):
     assert (3, 2, "s3") in got and (3, 1, "t3") not in got
     both_qual = SOURCE + [(3, 9, "s3b")]
     s2 = spark.createDataFrame(both_qual, SCHEMA)
-    with pytest.raises(MergeMultipleMatchesError):
-        merge_apply(t, s2, ["k"], matched_condition=NEWER_T)
-    with pytest.raises(MergeMultipleMatchesError):
+    with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+        merge_apply(t, s2, ["k"], matched_condition=NEWER_T).collect()
+    with pytest.raises(RefMultipleMatches, match="3"):
         ref_merge(TARGET, both_qual, [0], matched_condition=NEWER_PY)
     # across TWO clauses: one source row qualifying each still means
     # two modifications of the same target row → error
-    with pytest.raises(MergeMultipleMatchesError):
+    with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
         merge_apply(
             t,
             s1,  # s3 ver2 (newer → clause 1), s3b ver0 (clause 2)
@@ -490,64 +496,66 @@ def test_multiple_match_errors_only_when_actually_modified(spark):
                 {"action": "update", "condition": NEWER_T},
                 {"action": "delete"},
             ],
-        )
+        ).collect()
 
 
-def test_check_multiple_matches_lazy_mode(spark):
-    """check_multiple_matches='lazy' compiles the Delta
-    multiple-match error INTO the plan (raise_error branch) instead of
-    an eager probe action: results identical to fail-fast on clean
-    inputs, error surfaces at ACTION time (like Delta's .execute())
-    with the documented message, and a disqualified duplicate still
-    doesn't error on the general path."""
-
-    def rows(df):
-        return sorted((tuple(r) for r in df.collect()), key=str)
-
+def test_multiple_match_check_runs_in_plan(spark):
+    """The Delta multiple-match error is compiled INTO the plan (a
+    raise_error branch): building never raises, the caller's action
+    does (like Delta's .execute()), a disqualified duplicate on the
+    general path never errors, and duplicates on an unmatched key all
+    insert."""
     t = spark.createDataFrame(TARGET, SCHEMA)
-    s = spark.createDataFrame(SOURCE, SCHEMA)
-    # clean source, fast path: lazy == eager
-    assert rows(
-        merge_apply(t, s, ["k"], check_multiple_matches="lazy")
-    ) == rows(merge_apply(t, s, ["k"]))
-    # clean source, conditional (lazy routes through the GENERAL path
-    # with no probe): still identical to eager
-    assert rows(
-        merge_apply(
-            t, s, ["k"],
-            matched_condition=NEWER_T,
-            check_multiple_matches="lazy",
-        )
-    ) == rows(merge_apply(t, s, ["k"], matched_condition=NEWER_T))
     dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
-    # duplicate modifying rows: building the plan does NOT raise...
-    out = merge_apply(t, dup, ["k"], check_multiple_matches="lazy")
-    with pytest.raises(Exception, match="MULTIPLE_SOURCE_ROW"):
-        out.collect()  # ...the caller's action does
-    # general path (conditional, both duplicates qualify)
-    out2 = merge_apply(
-        t, dup, ["k"],
-        matched_condition=NEWER_T,
-        check_multiple_matches="lazy",
-    )
-    with pytest.raises(Exception, match="MULTIPLE_SOURCE_ROW"):
-        out2.collect()
+    # duplicate modifying rows, fast and general path: building the
+    # plan does NOT raise...
+    out = merge_apply(t, dup, ["k"])
+    out2 = merge_apply(t, dup, ["k"], matched_condition=NEWER_T)
+    for df in (out, out2):
+        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+            df.collect()  # ...the caller's action does
     # general path, only ONE duplicate qualifies (ver0 disqualified by
-    # NEWER_T): no error, identical to the eager result
-    one_qual = spark.createDataFrame(SOURCE + [(3, 0, "s3b")], SCHEMA)
-    assert rows(
-        merge_apply(
-            t, one_qual, ["k"],
-            matched_condition=NEWER_T,
-            check_multiple_matches="lazy",
-        )
-    ) == rows(merge_apply(t, one_qual, ["k"], matched_condition=NEWER_T))
+    # NEWER_T): no error, the qualifying row wins
+    one_qual = SOURCE + [(3, 0, "s3b")]
+    got = sorted(
+        (
+            tuple(r)
+            for r in merge_apply(
+                t,
+                spark.createDataFrame(one_qual, SCHEMA),
+                ["k"],
+                matched_condition=NEWER_T,
+            ).collect()
+        ),
+        key=str,
+    )
+    assert got == ref_merge(TARGET, one_qual, [0], matched_condition=NEWER_PY)
     # duplicates on an UNMATCHED key still all insert, no error
     dup_new = spark.createDataFrame([(7, 1, "a"), (7, 2, "b")], SCHEMA)
-    got = merge_apply(
-        t, dup_new, ["k"], check_multiple_matches="lazy"
-    ).collect()
+    got = merge_apply(t, dup_new, ["k"]).collect()
     assert sorted(r["val"] for r in got if r["k"] == 7) == ["a", "b"]
+
+
+def test_merge_build_runs_no_jobs_over_duplicates(spark):
+    """Building a merge over a duplicate-key source launches no Spark
+    job, on the conditional (general) path and on the unconditional
+    (pre-aggregated) path alike: the multiple-match check is part of
+    the plan, not a probe at build time."""
+    t = spark.createDataFrame(TARGET, SCHEMA)
+    dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
+    for kw in (dict(matched_condition=NEWER_T), {}):
+        _, jobs = count_jobs(spark, lambda: merge_apply(t, dup, ["k"], **kw))
+        assert jobs == 0, kw
+
+
+def test_merge_count_over_duplicates_raises(spark):
+    """``count()`` evaluates every output row, so it raises the
+    multiple-match error like ``collect()`` does, on both paths."""
+    t = spark.createDataFrame(TARGET, SCHEMA)
+    dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
+    for kw in (dict(matched_condition=NEWER_T), {}):
+        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+            merge_apply(t, dup, ["k"], **kw).count()
 
 
 def test_non_last_unconditional_clause_rejected(spark):
@@ -670,9 +678,9 @@ def test_merge_property_matches_reference(spark, target, source, clauses):
     )
     try:
         want = ref_merge(target, source, [0], **rkw)
-    except MergeMultipleMatchesError:
-        with pytest.raises(MergeMultipleMatchesError):
-            merge_apply(t, s, ["k"], **skw)
+    except RefMultipleMatches:
+        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
+            merge_apply(t, s, ["k"], **skw).collect()
         return
     got = sorted(
         (tuple(r) for r in merge_apply(t, s, ["k"], **skw).collect()),
@@ -810,8 +818,8 @@ def test_merge_clause_lists_property_matches_reference(
     )
     try:
         want = ref_merge(target, source, [0], **rkw)
-    except MergeMultipleMatchesError:
-        with pytest.raises(MergeMultipleMatchesError):
+    except RefMultipleMatches:
+        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
             merge_apply(t, s, ["k"], **skw).collect()
         return
     got = sorted(
@@ -981,8 +989,8 @@ def test_merge_schema_evolution_clause_lists_matches_reference(
     )
     try:
         want = ref_merge(tgt_unified, src_unified, [0], **rkw)
-    except MergeMultipleMatchesError:
-        with pytest.raises(MergeMultipleMatchesError):
+    except RefMultipleMatches:
+        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
             merge_apply(t, s, ["k"], **skw).collect()
         return
     out = merge_apply(t, s, ["k"], **skw)
@@ -1011,6 +1019,51 @@ def test_merge_into_table_fallback_insert_if_absent(spark, tmp_path):
     got2 = sorted(tuple(r) for r in spark.table(table).collect())
     assert got2 == got
     spark.sql(f"DROP TABLE {table}")
+
+
+def test_merge_into_table_delta_branch_matches_keys_with_equals(monkeypatch):
+    """With Delta importable, ``merge_into_table`` merges on ``=`` per
+    key, the same NULL-never-matches condition as its anti-join
+    fallback, then inserts every unmatched source row. ``delta.tables``
+    is stubbed to record the calls."""
+    from air_quality_etl_pipeline_spark.plans.merge import merge_into_table
+
+    calls = []
+
+    class Merge:
+        def whenNotMatchedInsertAll(self):
+            calls.append("insert_all")
+            return self
+
+        def execute(self):
+            calls.append("execute")
+
+    class Table:
+        def alias(self, name):
+            calls.append(("alias", name))
+            return self
+
+        def merge(self, source, condition):
+            calls.append(("merge", source, condition))
+            return Merge()
+
+    class Source:
+        def alias(self, name):
+            return f"source as {name}"
+
+    delta_tables = types.ModuleType("delta.tables")
+    delta_tables.DeltaTable = types.SimpleNamespace(
+        forName=lambda spark, table: Table()
+    )
+    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
+    monkeypatch.setitem(sys.modules, "delta.tables", delta_tables)
+    merge_into_table(None, "tgt", Source(), ["k", "j"])
+    assert calls == [
+        ("alias", "t"),
+        ("merge", "source as s", "t.k = s.k AND t.j = s.j"),
+        "insert_all",
+        "execute",
+    ]
 
 
 def test_merge_schema_evolution(spark):

@@ -1,7 +1,9 @@
-"""The scripts under ``scripts/``: each compiles, takes its own
-directory off the head of ``sys.path`` and every name it imports from
-this repository resolves (read from the source, no Spark), and
-``profile.py`` runs end to end."""
+"""The scripts under ``scripts/`` and the examples under ``examples/``:
+each compiles, every name it imports from this repository resolves and
+every keyword argument it passes to a function imported from there is
+one that function's ``def`` accepts (read from the source, no Spark).
+Each script also takes its own directory off the head of ``sys.path``,
+and ``profile.py`` runs end to end."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
+EXAMPLES = sorted(glob.glob(os.path.join(REPO, "examples", "*.py")))
 
 #: the directory each in-repo module the scripts import is found under
 #: (``profile.py`` puts ``perfbench`` on its path to import the tracer)
@@ -61,16 +64,96 @@ def _top_level_names(path: str) -> set[str]:
     return names
 
 
+def _find_def(path: str, name: str) -> ast.FunctionDef | None:
+    """The top-level ``def`` of *name* in the module at *path*,
+    following in-repo re-exports; None for a class or anything else."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and node.name == name:
+            return node
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            for a in node.names:
+                if (a.asname or a.name) == name:
+                    src = _module_file(node.module)
+                    return src and _find_def(src, a.name)
+    return None
+
+
+def _check_imports(path: str) -> tuple[ast.Module, list[tuple[ast.AST, str, str]]]:
+    """Compile *path* and assert every name it imports from this
+    repository exists. Returns its tree and the ``(node, module file,
+    name)`` of each reference bound by those imports: a name imported
+    from a module, or an attribute of an imported module."""
+    with open(path) as f:
+        source = f.read()
+    compile(source, path, "exec")
+    tree = ast.parse(source)
+    modules: dict[str, str] = {}  # local name -> module file
+    names: dict[str, tuple[str, str]] = {}  # local name -> (file, name)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                mod = _module_file(a.name)
+                if mod:
+                    modules[a.asname or a.name] = mod
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            mod = _module_file(node.module)
+            if mod is None:
+                continue
+            defined = _top_level_names(mod)
+            for a in node.names:
+                sub = os.path.join(os.path.dirname(mod), a.name + ".py")
+                if mod.endswith("__init__.py") and os.path.exists(sub):
+                    modules[a.asname or a.name] = sub
+                else:
+                    assert a.name in defined, f"{node.module}.{a.name}"
+                    names[a.asname or a.name] = (mod, a.name)
+    refs = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+        ):
+            mod = modules[node.value.id]
+            assert node.attr in _top_level_names(mod), (
+                f"{node.value.id}.{node.attr}"
+            )
+            refs.append((node, mod, node.attr))
+        elif isinstance(node, ast.Name) and node.id in names:
+            refs.append((node, *names[node.id]))
+    return tree, refs
+
+
+def _check_call_keywords(path: str) -> None:
+    """Every call of a function imported from this repository passes
+    only keywords its ``def`` accepts (any, when it takes ``**``)."""
+    tree, refs = _check_imports(path)
+    funcs = {id(node): (mod, name) for node, mod, name in refs}
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call) or id(call.func) not in funcs:
+            continue
+        mod, name = funcs[id(call.func)]
+        fn = _find_def(mod, name)
+        if fn is None or fn.args.kwarg is not None:
+            continue
+        accepted = {a.arg for a in fn.args.args + fn.args.kwonlyargs}
+        for kw in call.keywords:
+            assert kw.arg is None or kw.arg in accepted, (
+                f"{os.path.basename(path)}:{call.lineno}: "
+                f"{name}() takes no keyword {kw.arg!r}"
+            )
+
+
 def test_scripts_exist():
-    assert SCRIPTS
+    assert SCRIPTS and EXAMPLES
 
 
 @pytest.mark.parametrize("script", SCRIPTS, ids=os.path.basename)
 def test_script_imports_resolve(script):
     with open(script) as f:
-        source = f.read()
-    compile(source, script, "exec")
-    tree = ast.parse(source)
+        tree = ast.parse(f.read())
     # scripts/profile.py would shadow the standard library module that
     # pyspark imports for any script that leaves this directory first
     assert any(
@@ -78,33 +161,21 @@ def test_script_imports_resolve(script):
         and ast.unparse(node.targets[0]) in ("sys.path[0]", "sys.path[:1]")
         for node in tree.body
     ), "replace sys.path[0] before importing pyspark"
-    modules: dict[str, str] = {}  # local name -> module file
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                path = _module_file(a.name)
-                if path:
-                    modules[a.asname or a.name] = path
-        elif isinstance(node, ast.ImportFrom) and node.level == 0:
-            path = _module_file(node.module)
-            if path is None:
-                continue
-            defined = _top_level_names(path)
-            for a in node.names:
-                sub = os.path.join(os.path.dirname(path), a.name + ".py")
-                if path.endswith("__init__.py") and os.path.exists(sub):
-                    modules[a.asname or a.name] = sub
-                else:
-                    assert a.name in defined, f"{node.module}.{a.name}"
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Attribute)
-            and isinstance(node.value, ast.Name)
-            and node.value.id in modules
-        ):
-            assert node.attr in _top_level_names(modules[node.value.id]), (
-                f"{node.value.id}.{node.attr}"
-            )
+    _check_imports(script)
+
+
+@pytest.mark.parametrize("example", EXAMPLES, ids=os.path.basename)
+def test_example_imports_resolve(example):
+    _check_imports(example)
+
+
+@pytest.mark.parametrize(
+    "path",
+    SCRIPTS + EXAMPLES,
+    ids=lambda p: os.path.relpath(p, REPO),
+)
+def test_calls_pass_accepted_keywords(path):
+    _check_call_keywords(path)
 
 
 def test_profile_script_splits_layers(sf_dir, tmp_path):
