@@ -5,7 +5,6 @@ from air_quality_etl_pipeline_spark.functions.core import (
     token_array,
     dot_product,
     l2_norm,
-    cosine_similarity,
 )
 
 __all__ = [
@@ -15,5 +14,4 @@ __all__ = [
     "token_array",
     "dot_product",
     "l2_norm",
-    "cosine_similarity",
 ]

@@ -167,16 +167,6 @@ def word_shingles_of_tokens(toks: Column, n: int = 5) -> Column:
     return F.array_distinct(grams)
 
 
-def _sum_in_order(terms: list[Column]) -> Column:
-    """Left-associated sum — the same evaluation order as a fold, so the
-    unrolled variants below produce BIT-IDENTICAL doubles to the lambda
-    ones (float addition isn't associative; order is the contract)."""
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def dot_product(a: Column, b: Column, dims: int | None = None) -> Column:
     """Dot product of two numeric array columns (JVM-side, no UDF).
 
@@ -185,12 +175,14 @@ def dot_product(a: Column, b: Column, dims: int | None = None) -> Column:
     whole-stage codegen compiles, ~2× the throughput of the interpreted
     ``zip_with``/``aggregate`` lambda path (Catalyst evaluates
     higher-order functions per element in the interpreter). Summation
-    order matches the fold exactly, so results are bit-identical.
+    order matches the fold exactly (left-associated; float addition is
+    not associative), so results are bit-identical.
     """
     if dims:
-        return _sum_in_order(
-            [F.element_at(a, i) * F.element_at(b, i) for i in range(1, dims + 1)]
-        )
+        out = F.element_at(a, 1) * F.element_at(b, 1)
+        for i in range(2, dims + 1):
+            out = out + F.element_at(a, i) * F.element_at(b, i)
+        return out
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -198,27 +190,6 @@ def dot_product(a: Column, b: Column, dims: int | None = None) -> Column:
     )
 
 
-def l2_norm(a: Column, dims: int | None = None) -> Column:
-    """Euclidean norm of a numeric array column (unrolled when *dims*
-    is known — see :func:`dot_product`)."""
-    if dims:
-        return F.sqrt(
-            _sum_in_order(
-                [F.element_at(a, i) * F.element_at(a, i) for i in range(1, dims + 1)]
-            )
-        )
+def l2_norm(a: Column) -> Column:
+    """Euclidean norm of a numeric array column."""
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_similarity(
-    a: Column, b: Column, dims: int | None = None
-) -> Column:
-    """Cosine similarity of two numeric array columns, null-safe on zero
-    norms (returns NULL rather than NaN, matching DIVIDE semantics).
-
-    In pair loops (ANN scoring, near-dup thresholds) don't call this
-    per pair — precompute each side's :func:`l2_norm` once per ROW and
-    divide the per-pair :func:`dot_product` by the norm product; the
-    norms are the 2/3 of the work that doesn't depend on the pair.
-    """
-    return safe_div(dot_product(a, b, dims), l2_norm(a, dims) * l2_norm(b, dims))

@@ -31,10 +31,17 @@ min).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.operators.similarity import _as_double
+from air_quality_etl_pipeline_spark.operators.similarity import (
+    _assign,
+    _centroids,
+    _probe,
+    _resolve_stride,
+    _top_k,
+    _vectors,
+)
 
 
 def collect_codebook(
@@ -47,14 +54,12 @@ def collect_codebook(
 ) -> list[list[list[float]]]:
     """Deterministic codebook: sub-vectors of the ``k`` lowest-id corpus
     vectors. ``codebook[j][c]`` is the ``dims//m``-wide centroid for
-    code ``c`` of sub-space ``j``. The collect is O(k·dims) scalars —
-    the same bounded-closure pattern as the k-means centroid matrix
-    (similarity.assign_nearest_numpy)."""
+    code ``c`` of sub-space ``j``. The collect is O(k·dims) scalars, the
+    same bounded collect as :func:`similarity.kmeans_fit`'s centroid
+    sums."""
     dsub = dims // m
     rows = (
-        corpus.select(
-            F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-        )
+        _vectors(corpus, id_col, vec_col, norm_as=None)
         .filter(F.col("_id") < k)
         .orderBy("_id")
         .collect()
@@ -119,9 +124,9 @@ def pq_encode(
     ``collect_list`` if a code column is wanted). Entirely map-side:
     per sub-space the argmin over the distance row is
     ``array_position(min)`` (first index ⇒ lowest code wins ties)."""
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_dmat", _dmat("_v", codebook))
+    v = _vectors(corpus, id_col, vec_col, "vec_id", norm_as=None).withColumn(
+        "_dmat", _dmat("_v", codebook)
+    )
     return v.select(
         "vec_id", F.posexplode("_dmat").alias("subspace", "_dd")
     ).select(
@@ -133,6 +138,45 @@ def pq_encode(
     )
 
 
+def _adc_lut(q: DataFrame, codebook: list[list[list[float]]]) -> DataFrame:
+    """The broadcast ADC lookup table of a ``(query_id, _q, ...)``
+    projection: ``(query_id, subspace, code, dmicro)``, queries × m × k
+    rows, ``dmicro`` the micro-quantized distance from the query's
+    sub-vector to that code's centroid (:func:`_dmat`)."""
+    return F.broadcast(
+        q.withColumn("_dmat", _dmat("_q", codebook))
+        .select("query_id", F.posexplode("_dmat").alias("subspace", "_dd"))
+        .select(
+            "query_id",
+            F.col("subspace").cast("long").alias("subspace"),
+            F.posexplode("_dd").alias("code", "dmicro"),
+        )
+        .select(
+            "query_id",
+            "subspace",
+            F.col("code").cast("long").alias("code"),
+            "dmicro",
+        )
+    )
+
+
+def _adc_top_k(scored: DataFrame, topk: int, exclude_self: bool) -> DataFrame:
+    """Sum the ``m`` LUT hits per (query, vector) of a code ⋈ LUT
+    relation and keep each query's *topk* smallest ``adc_micro``."""
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
+    adc = scored.groupBy(
+        "query_id", F.col("vec_id").alias("neighbor_id")
+    ).agg(F.sum("dmicro").cast("long").alias("adc_micro"))
+    return _top_k(
+        adc,
+        topk,
+        F.col("adc_micro").asc(),
+        ("query_id", "neighbor_id", "adc_micro", "rank"),
+        long_rank=True,
+    )
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -140,7 +184,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     topk: int = 5,
-    encode_mode: str = "arrow",
     exclude_self: bool = True,
 ) -> DataFrame:
     """Asymmetric-distance top-k: exact query sub-vector → quantized
@@ -155,43 +198,13 @@ def pq_adc_topk(
     Plan shape: the LUT is queries × m × k rows (tiny — broadcast); the
     code relation streams through the join and the (query, vector) sum
     partial-aggregates map-side. The corpus vectors are never touched
-    after encoding — that is the point of PQ. *encode_mode* picks the
-    corpus-encode path — ``"arrow"`` (default; ~20× throughput) or
-    ``"catalyst"`` (pure-JVM plan); both are bit-identical
-    (agreement-tested), so the choice is operational, not semantic."""
-    enc = pq_encode_arrow if encode_mode == "arrow" else pq_encode
-    codes = enc(corpus, codebook, id_col, vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_q")
-    ).withColumn("_dmat", _dmat("_q", codebook))
-    lut = F.broadcast(
-        q.select("query_id", F.posexplode("_dmat").alias("subspace", "_dd"))
-        .select(
-            "query_id",
-            F.col("subspace").cast("long").alias("subspace"),
-            F.posexplode("_dd").alias("code", "dmicro"),
-        )
-        .select(
-            "query_id",
-            "subspace",
-            F.col("code").cast("long").alias("code"),
-            "dmicro",
-        )
-    )
-    scored = codes.join(lut, on=["subspace", "code"])
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("vec_id"))
-    scored = scored.groupBy(
-        "query_id", F.col("vec_id").alias("neighbor_id")
-    ).agg(F.sum("dmicro").cast("long").alias("adc_micro"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_micro").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
-    )
+    after encoding — that is the point of PQ. The corpus encodes
+    through :func:`pq_encode_arrow` (~20× the throughput of the
+    bit-identical Catalyst :func:`pq_encode`)."""
+    codes = pq_encode_arrow(corpus, codebook, id_col, vec_col)
+    q = _vectors(queries, id_col, vec_col, "query_id", "_q", norm_as=None)
+    scored = codes.join(_adc_lut(q, codebook), on=["subspace", "code"])
+    return _adc_top_k(scored, topk, exclude_self)
 
 
 def pq_encode_arrow(
@@ -249,9 +262,9 @@ def pq_encode_arrow(
                 }
             )
 
-    return corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).mapInPandas(encode, "vec_id long, subspace long, code long")
+    return _vectors(corpus, id_col, vec_col, "vec_id", norm_as=None).mapInPandas(
+        encode, "vec_id long, subspace long, code long"
+    )
 
 
 def ivf_pq_topk(
@@ -288,78 +301,19 @@ def ivf_pq_topk(
     state (probes, LUT) is broadcast-sized. Distances are integer
     micro-units end-to-end, so ranking is exact and engine-portable.
     """
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        _norm_expr,
-        _pair_cosine,
-        _resolve_stride,
-    )
-
     # None → √N-balanced coarse quantizer (see similarity.balanced_stride)
     centroid_stride = _resolve_stride(centroid_stride, corpus)
-    c = corpus.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", _norm_expr("_v"))
-    cents = F.broadcast(
-        c.filter(F.col("_id") % centroid_stride == 0).select(
-            F.col("_id").alias("cid"),
-            F.col("_v").alias("centv"),
-            F.col("_n").alias("centn"),
-        )
+    c = _vectors(corpus, id_col, vec_col)
+    cents = F.broadcast(_centroids(c, F.col("_id") % centroid_stride == 0))
+    # rank-1 list assignment; only cid rides the max_by buffer
+    assign = _assign(c, cents, sim_decimals, vectors=False).withColumnRenamed(
+        "_id", "vec_id"
     )
-    # rank-1 list assignment: max_by on (rounded cosine DESC, cid ASC)
-    # — ties break to the LOWEST cid via the negated id in the struct
-    scored = c.crossJoin(cents).withColumn(
-        "_cos", _pair_cosine("_v", "_n", "centv", "centn", None, sim_decimals)
-    )
-    assign = scored.groupBy(F.col("_id").alias("vec_id")).agg(
-        F.max_by(
-            "cid", F.struct(F.col("_cos").alias("c"), (-F.col("cid")).alias("t"))
-        ).alias("cid")
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("_q")
-    ).withColumn("_qn", _norm_expr("_q"))
-    qscored = q.crossJoin(cents).withColumn(
-        "_cos", _pair_cosine("_q", "_qn", "centv", "centn", None, sim_decimals)
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cid").asc()
-    )
+    q = _vectors(queries, id_col, vec_col, "query_id", "_q", "_qn")
     probes = F.broadcast(
-        qscored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "cid")
+        _probe(q, cents, "_q", "_qn", nprobe, sim_decimals).select("query_id", "cid")
     )
-
     codes = pq_encode_arrow(corpus, codebook, id_col, vec_col)
-    lut = F.broadcast(
-        q.withColumn("_dmat", _dmat("_q", codebook))
-        .select("query_id", F.posexplode("_dmat").alias("subspace", "_dd"))
-        .select(
-            "query_id",
-            F.col("subspace").cast("long").alias("subspace"),
-            F.posexplode("_dd").alias("code", "dmicro"),
-        )
-        .select(
-            "query_id",
-            "subspace",
-            F.col("code").cast("long").alias("code"),
-            "dmicro",
-        )
-    )
     cand = codes.join(assign, on="vec_id").join(probes, on="cid")
-    adc = cand.join(lut, on=["query_id", "subspace", "code"])
-    if exclude_self:
-        adc = adc.filter(F.col("query_id") != F.col("vec_id"))
-    adc = adc.groupBy(
-        "query_id", F.col("vec_id").alias("neighbor_id")
-    ).agg(F.sum("dmicro").cast("long").alias("adc_micro"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_micro").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
-    )
+    adc = cand.join(_adc_lut(q, codebook), on=["query_id", "subspace", "code"])
+    return _adc_top_k(adc, topk, exclude_self)

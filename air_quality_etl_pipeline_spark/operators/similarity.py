@@ -30,13 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.functions.core import (
-    dot_product,
-    l2_norm,
-    md5_long,
-    round_portable,
-    safe_div,
-)
+from air_quality_etl_pipeline_spark.functions.core import md5_long
 
 
 def balanced_stride(n: int) -> int:
@@ -75,19 +69,15 @@ def _norm_expr(v: str) -> Column:
     return F.expr(f"sqrt(aggregate(`{v}`, 0.0D, (acc, x) -> acc + x * x))")
 
 
-def _pair_cosine(
-    av: str, an: str, bv: str, bn: str, dims: int | None, decimals: int
-) -> Column:
+def _pair_cosine(av: str, an: str, bv: str, bn: str, decimals: int) -> Column:
     """Per-pair cosine from PRECOMPUTED norms: dot(av,bv)/(an·bn).
     The norms are 2/3 of a cosine's flops and don't depend on the pair
     — computing them once per ROW instead of once per PAIR is the
-    difference between O(rows·dims) and O(pairs·dims) norm work. Same
-    doubles as cosine_similarity (same fold order, same sqrt, same
-    DIVIDE null semantics), built as one SQL string (see
-    :func:`_norm_expr` for why). *dims* kept for the unrolled-codegen
-    experiment in functions.core — measured: unrolling wins ~2× on
-    execution but loses 3× on plan construction at bench query sizes,
-    so the fold string is the default."""
+    difference between O(rows·dims) and O(pairs·dims) norm work. NULL
+    on a zero or NULL norm product (DIVIDE semantics), built as one SQL
+    string (see :func:`_norm_expr` for why). An unrolled ``element_at``
+    sum measured ~2× faster to execute but 3× slower to construct at
+    bench query sizes, so the dot product stays a fold."""
     f = float(10**decimals)
     dot = (
         f"aggregate(zip_with(`{av}`, `{bv}`, (x, y) -> x * y), "
@@ -103,6 +93,120 @@ def _pair_cosine(
     return F.expr(f"floor(({cos}) * {f}D + 0.5D) / {f}D")
 
 
+def _vectors(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    id_as: str = "_id",
+    vec_as: str = "_v",
+    norm_as: str | None = "_n",
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The ``(id, [carry...,] vec, norm)`` projection every ANN step
+    starts from: the vector cast to ``array<double>`` and its L2 norm
+    computed once per row (no norm when *norm_as* is None)."""
+    out = df.select(
+        F.col(id_col).alias(id_as), *carry, _as_double(F.col(vec_col)).alias(vec_as)
+    )
+    return out if norm_as is None else out.withColumn(norm_as, _norm_expr(vec_as))
+
+
+def _centroids(v: DataFrame, keep: Column) -> DataFrame:
+    """The coarse quantizer: the rows of an ``(_id, _v[, _n])``
+    projection that *keep* selects, as ``(cid, centv[, centn])``.
+    Callers broadcast it: it is √N-sized against an N-row corpus."""
+    cols = [F.col("_id").alias("cid"), F.col("_v").alias("centv")]
+    if "_n" in v.columns:
+        cols.append(F.col("_n").alias("centn"))
+    return v.filter(keep).select(*cols)
+
+
+def _assign(
+    c: DataFrame, cents: DataFrame, decimals: int, vectors: bool = True
+) -> DataFrame:
+    """Rank-1 list assignment of an ``(_id, _v, _n)`` projection to its
+    nearest centroid. Rank-1 needs no window sort: ``max_by`` over the
+    broadcast-joined scores aggregates map-side (partial max per id
+    collapses before any exchange), so the shuffle carries ONE row per
+    vector. The ordering struct ``(cos, −cid)`` is the window's
+    ``(cos DESC, cid ASC)`` tie-break. Returns ``(_id, _v, _n, cid)``,
+    or ``(_id, cid)`` when *vectors* is False (the vector and norm then
+    stay out of the aggregate buffer)."""
+    scored = c.crossJoin(cents).withColumn(
+        "_cos", _pair_cosine("_v", "_n", "centv", "centn", decimals)
+    )
+    order = F.struct(F.col("_cos"), (-F.col("cid")).alias("_nc"))
+    if not vectors:
+        return scored.groupBy("_id").agg(F.max_by("cid", order).alias("cid"))
+    return (
+        scored.groupBy("_id")
+        .agg(
+            F.max_by(
+                F.struct(F.col("_v"), F.col("_n"), F.col("cid")), order
+            ).alias("_b")
+        )
+        .select(
+            "_id",
+            F.col("_b._v").alias("_v"),
+            F.col("_b._n").alias("_n"),
+            F.col("_b.cid").alias("cid"),
+        )
+    )
+
+
+def _inverted_lists(c: DataFrame, cents: DataFrame, decimals: int) -> DataFrame:
+    """The IVF list relation ``(neighbor_id, cv, cn, cid)``."""
+    return _assign(c, cents, decimals).select(
+        F.col("_id").alias("neighbor_id"),
+        F.col("_v").alias("cv"),
+        F.col("_n").alias("cn"),
+        "cid",
+    )
+
+
+def _probe(
+    q: DataFrame, cents: DataFrame, vec: str, norm: str, nprobe: int, decimals: int
+) -> DataFrame:
+    """Each query's *nprobe* nearest lists: *q* (keyed by ``query_id``)
+    crossed with the coarse quantizer, ranked per query by (rounded
+    cosine DESC, cid ASC). Returns *q*'s columns plus ``cid``."""
+    scored = q.crossJoin(cents).withColumn(
+        "_cos", _pair_cosine(vec, norm, "centv", "centn", decimals)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("_cos").desc(), F.col("cid").asc()
+    )
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= nprobe)
+        .drop("centv", "centn", "_cos", "_rn")
+    )
+
+
+_TOPK_COLS = ("query_id", "neighbor_id", "cosine", "rank")
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    by: Column,
+    cols: tuple[str, ...] = _TOPK_COLS,
+    long_rank: bool = False,
+) -> DataFrame:
+    """The per-query top-k window: ``rank`` = row_number per
+    ``query_id`` over (*by*, neighbor_id ASC), kept while ``rank <= k``
+    and projected to *cols*. *long_rank* types the rank ``bigint``."""
+    w = Window.partitionBy("query_id").orderBy(by, F.col("neighbor_id").asc())
+    rank = F.row_number().over(w)
+    if long_rank:
+        rank = rank.cast("long")
+    return (
+        scored.withColumn("rank", rank)
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -110,7 +214,6 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 5,
     sim_decimals: int = 6,
-    dims: int | None = None,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
@@ -118,9 +221,8 @@ def cosine_topk(
     Returns ``(query_id, neighbor_id, cosine, rank)``; self-matches are
     excluded by id when *exclude_self* (the within-relation default);
     rank ties broken by neighbor id on the *rounded* cosine so
-    results are engine-reproducible. Pass *dims* for fixed-width
-    embeddings: the dot product unrolls into codegen and norms
-    precompute per row (see :func:`_pair_cosine`).
+    results are engine-reproducible. Norms precompute per row (see
+    :func:`_pair_cosine`).
 
     CROSS-RELATION callers (queries and corpus are different tables
     with independent id spaces — e.g. bitext mining) must pass
@@ -128,30 +230,15 @@ def cosine_topk(
     across relations and would silently drop every equal-id cross
     pair — often exactly the aligned rows (round-11 advisor).
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", _norm_expr("qv"))
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cn", _norm_expr("cv"))
+    q = F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "qv", "qn"))
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv", "cn")
     scored = q.crossJoin(c)
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = scored.withColumn(
-        "cosine", _pair_cosine("qv", "qn", "cv", "cn", dims, sim_decimals)
+        "cosine", _pair_cosine("qv", "qn", "cv", "cn", sim_decimals)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, F.col("cosine").desc())
 
 
 def sign_bucket(vec: Column, bits: int = 6, offset: int = 0) -> Column:
@@ -177,7 +264,6 @@ def sign_lsh_topk(
     bits: int = 6,
     tables: int = 4,
     sim_decimals: int = 6,
-    dims: int | None = None,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate top-k via MULTI-TABLE sign LSH: *tables* independent
@@ -190,10 +276,7 @@ def sign_lsh_topk(
     with independent id spaces must pass ``exclude_self=False``."""
 
     def tabled(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
-        base = df.select(
-            F.col(id_col).alias(id_alias),
-            _as_double(F.col(vec_col)).alias(vec_alias),
-        ).withColumn(f"{vec_alias}_n", _norm_expr(vec_alias))
+        base = _vectors(df, id_col, vec_col, id_alias, vec_alias, f"{vec_alias}_n")
         sides = [
             base.select(
                 id_alias,
@@ -220,16 +303,9 @@ def sign_lsh_topk(
         "query_id", "qv", "qv_n", "neighbor_id", "cv", "cv_n"
     ).dropDuplicates(["query_id", "neighbor_id"])
     scored = cands.withColumn(
-        "cosine", _pair_cosine("qv", "qv_n", "cv", "cv_n", dims, sim_decimals)
+        "cosine", _pair_cosine("qv", "qv_n", "cv", "cv_n", sim_decimals)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, F.col("cosine").desc())
 
 
 def ivf_topk(
@@ -241,8 +317,6 @@ def ivf_topk(
     centroid_stride: int | None = None,
     nprobe: int = 2,
     sim_decimals: int = 6,
-    dims: int | None = None,
-    assign_mode: str = "catalyst",
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF-style approximate top-k — the inverted-file architecture
@@ -256,15 +330,10 @@ def ivf_topk(
        a fixed stride makes nlist ∝ N and assignment N²/stride, the
        r12-measured scale-killer.
     2. *Assignment*: every corpus vector joins its nearest centroid
-       (broadcast centroids ⨯ corpus, rank-1 by cosine) — this is the
-       inverted list: at scale you'd repartition + persist it keyed by
-       ``cid``, amortized over every later query.
-       ``assign_mode="numpy"`` swaps this one step for the Arrow/BLAS
-       matmul of :func:`assign_nearest_numpy` — the production build
-       path when corpus × centroids is large (500 k × 500 × 64
-       measured: ~90 s Catalyst vs a few s BLAS); hairline cosine ties
-       may assign differently there, so oracle-twinned queries keep
-       the default.
+       (broadcast centroids ⨯ corpus, rank-1 ``max_by`` by cosine —
+       :func:`_assign`) — this is the inverted list: at scale you'd
+       repartition + persist it keyed by ``cid``, amortized over every
+       later query (:func:`ivf_batch_knn_bucketed`).
     3. *Probe*: each query ranks the same centroids and searches only
        its ``nprobe`` nearest lists — the equi-join on ``cid`` replaces
        the full corpus scan, cutting work by ~``nprobe/num_centroids``.
@@ -275,94 +344,20 @@ def ivf_topk(
     with independent id spaces must pass ``exclude_self=False``.
     """
     centroid_stride = _resolve_stride(centroid_stride, corpus)
-    c = corpus.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", _norm_expr("_v"))
-    cents = F.broadcast(
-        c.filter(F.col("_id") % centroid_stride == 0).select(
-            F.col("_id").alias("cid"),
-            F.col("_v").alias("centv"),
-            F.col("_n").alias("centn"),
-        )
-    )
-
-    def nearest(df: DataFrame, vec: str, norm: str, keep: int) -> DataFrame:
-        scored = df.crossJoin(cents).withColumn(
-            "_cos", _pair_cosine(vec, norm, "centv", "centn", dims, sim_decimals)
-        )
-        w = Window.partitionBy(df.columns[0]).orderBy(
-            F.col("_cos").desc(), F.col("cid").asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= keep)
-            .drop("centv", "centn", "_cos", "_rn")
-        )
-
-    if assign_mode == "numpy":
-        picked = assign_nearest_numpy(
-            c, cents, id_col="_id", vec_col="_v"
-        )
-        assigned = c.join(picked, on="_id").select(
-            F.col("_id").alias("neighbor_id"),
-            F.col("_v").alias("cv"),
-            F.col("_n").alias("cn"),
-            "cid",
-        )
-    elif assign_mode == "catalyst":
-        # Assignment is rank-1, so it needs no window sort at all:
-        # max_by over the broadcast-joined scores aggregates map-side
-        # (partial max per corpus id collapses before any exchange), so
-        # the shuffle carries ONE row per corpus vector instead of the
-        # whole corpus × centroid scored relation with its vectors. The
-        # ordering struct (cos, −cid) reproduces the window's
-        # (cos DESC, cid ASC) tie-break exactly.
-        scored_c = c.crossJoin(cents).withColumn(
-            "_cos",
-            _pair_cosine("_v", "_n", "centv", "centn", dims, sim_decimals),
-        )
-        assigned = (
-            scored_c.groupBy("_id")
-            .agg(
-                F.max_by(
-                    F.struct(F.col("_v"), F.col("_n"), F.col("cid")),
-                    F.struct(F.col("_cos"), (-F.col("cid")).alias("_nc")),
-                ).alias("_b")
-            )
-            .select(
-                F.col("_id").alias("neighbor_id"),
-                F.col("_b._v").alias("cv"),
-                F.col("_b._n").alias("cn"),
-                F.col("_b.cid").alias("cid"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown assign_mode: {assign_mode!r}")
-    probes = nearest(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", _norm_expr("qv")),
-        "qv",
-        "qn",
-        nprobe,
-    )
+    c = _vectors(corpus, id_col, vec_col)
+    cents = F.broadcast(_centroids(c, F.col("_id") % centroid_stride == 0))
+    assigned = _inverted_lists(c, cents, sim_decimals)
+    q = _vectors(queries, id_col, vec_col, "query_id", "qv", "qn")
+    probes = _probe(q, cents, "qv", "qn", nprobe, sim_decimals)
     # queries × nprobe is tiny — broadcast it so the inverted lists
     # stream through the probe join without shuffling the corpus.
     scored = F.broadcast(probes).join(assigned, on="cid")
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = scored.withColumn(
-        "cosine", _pair_cosine("qv", "qn", "cv", "cn", dims, sim_decimals)
+        "cosine", _pair_cosine("qv", "qn", "cv", "cn", sim_decimals)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, F.col("cosine").desc())
 
 
 def ivf_batch_knn_bucketed(
@@ -374,7 +369,6 @@ def ivf_batch_knn_bucketed(
     centroid_stride: int | None = None,
     nprobe: int = 2,
     sim_decimals: int = 6,
-    dims: int | None = None,
     num_buckets: int = 8,
     exclude_self: bool = True,
 ) -> DataFrame:
@@ -400,37 +394,11 @@ def ivf_batch_knn_bucketed(
 
     spark = corpus.sparkSession
     centroid_stride = _resolve_stride(centroid_stride, corpus)
-    c = corpus.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", _norm_expr("_v"))
-    cents = F.broadcast(
-        c.filter(F.col("_id") % centroid_stride == 0).select(
-            F.col("_id").alias("cid"),
-            F.col("_v").alias("centv"),
-            F.col("_n").alias("centn"),
-        )
+    c = _vectors(corpus, id_col, vec_col)
+    cents = F.broadcast(_centroids(c, F.col("_id") % centroid_stride == 0))
+    write_bucketed_table(
+        _inverted_lists(c, cents, sim_decimals), table_name, ["cid"], num_buckets
     )
-    # rank-1 assignment via map-side max_by — same shape (and the same
-    # (cos, −cid) tie-break) as ivf_topk's catalyst path
-    scored_c = c.crossJoin(cents).withColumn(
-        "_cos", _pair_cosine("_v", "_n", "centv", "centn", dims, sim_decimals)
-    )
-    assigned = (
-        scored_c.groupBy("_id")
-        .agg(
-            F.max_by(
-                F.struct(F.col("_v"), F.col("_n"), F.col("cid")),
-                F.struct(F.col("_cos"), (-F.col("cid")).alias("_nc")),
-            ).alias("_b")
-        )
-        .select(
-            F.col("_id").alias("neighbor_id"),
-            F.col("_b._v").alias("cv"),
-            F.col("_b._n").alias("cn"),
-            F.col("_b.cid").alias("cid"),
-        )
-    )
-    write_bucketed_table(assigned, table_name, ["cid"], num_buckets)
     index = spark.table(table_name)
 
     q = c.select(
@@ -438,97 +406,30 @@ def ivf_batch_knn_bucketed(
         F.col("_v").alias("qv"),
         F.col("_n").alias("qn"),
     )
-    probe_scored = q.crossJoin(cents).withColumn(
-        "_cos", _pair_cosine("qv", "qn", "centv", "centn", dims, sim_decimals)
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cos").desc(), F.col("cid").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "qn", "cid")
-    )
+    probes = _probe(q, cents, "qv", "qn", nprobe, sim_decimals)
     scored = probes.hint("shuffle_hash").join(index, on="cid")
     if exclude_self:
         scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = scored.withColumn(
-        "cosine", _pair_cosine("qv", "qn", "cv", "cn", dims, sim_decimals)
+        "cosine", _pair_cosine("qv", "qn", "cv", "cn", sim_decimals)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    return _top_k(scored, k, F.col("cosine").desc())
+
+
+def _sq_dist(dist_decimals: int, as_long: bool = False) -> Column:
+    """Squared euclidean distance between the ``_v`` and ``centv``
+    array<double> columns, rounded half up at *dist_decimals*: a double,
+    or with *as_long* the INTEGER count of 10^-dist_decimals units, which
+    makes every downstream comparison (argmin ties, sampling decisions)
+    exact. The float fold is left-to-right, identical in Spark's
+    ``aggregate`` and DuckDB's ``list_sum``, and the single rounding
+    point removes repr ambiguity."""
+    f = float(10**dist_decimals)
+    scaled = (
+        "floor(aggregate(zip_with(_v, centv, (x, y) -> (x - y) * (x - y)), "
+        f"0.0D, (acc, x) -> acc + x) * {f}D + 0.5D)"
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def assign_nearest_numpy(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "_id",
-    vec_col: str = "_v",
-    cid_col: str = "cid",
-    centv_col: str = "centv",
-    metric: str = "cosine",
-) -> DataFrame:
-    """BLAS-speed nearest-centroid assignment: Arrow-batched
-    ``mapInPandas`` computing one ``(batch × dims) @ (dims × k)``
-    matmul per batch — the production path for INDEX BUILDS (IVF list
-    assignment, k-means at corpus scale), where the Catalyst
-    crossJoin + fold evaluates ``rows × k × dims`` scalar expressions
-    (measured at 500 k × 500 × 64: ~90 s Catalyst vs seconds in BLAS).
-
-    ``metric="cosine"`` picks the maximum cosine (IVF); ``"euclidean"``
-    the minimum squared distance (k-means). Ties go to the smallest
-    centroid id (the centroid matrix is ordered by cid; argmax/argmin
-    keep the first extremum). Float summation ORDER differs from the
-    Catalyst fold, so hairline ties can assign differently — this is
-    the documented production/oracle split (same policy as xxhash64 vs
-    md5 hash families): oracle-twinned queries keep the Catalyst path.
-    The closure is self-contained (k·dims centroid list captured by
-    value, imports inside), so executors need nothing on sys.path.
-    Returns ``(id_col, cid)``.
-    """
-    if metric not in ("cosine", "euclidean"):
-        raise ValueError(f"unknown metric: {metric!r}")
-    cent_rows = sorted(
-        (r[cid_col], list(r[centv_col])) for r in centroids.collect()
-    )
-    cids = [c for c, _ in cent_rows]
-    cent_mat = [v for _, v in cent_rows]
-    id_type = vectors.schema[id_col].dataType.simpleString()
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cent_mat, dtype=np.float64)
-        ids = np.asarray(cids)
-        if metric == "cosine":
-            Cn = np.linalg.norm(C, axis=1)
-            Cn[Cn == 0] = 1.0
-            Cu = C / Cn[:, None]
-        else:
-            C2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if metric == "cosine":
-                Vn = np.linalg.norm(V, axis=1)
-                Vn[Vn == 0] = 1.0
-                pick = np.argmax((V / Vn[:, None]) @ Cu.T, axis=1)
-            else:
-                d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + C2[None, :]
-                pick = np.argmin(d2, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "cid": ids[pick]})
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        assign, f"`{id_col}` {id_type}, cid long"
-    )
+    return F.expr(f"cast({scaled} as bigint)" if as_long else f"{scaled} / {f}D")
 
 
 def kmeans_update_step(
@@ -538,17 +439,12 @@ def kmeans_update_step(
     centroid_stride: int | None = None,
     dist_decimals: int = 6,
     centroids: DataFrame | None = None,
-    assign_mode: str = "catalyst",
 ) -> DataFrame:
     """One Lloyd (k-means) iteration, fully relational:
 
     1. *Assign*: each vector to its nearest centroid by squared
        euclidean distance (broadcast centroids, ``min_by`` aggregate —
        map-side partials, no window sort; ties break on centroid id).
-       ``assign_mode="numpy"`` swaps this step for the Arrow/BLAS
-       matmul (:func:`assign_nearest_numpy`, euclidean metric) — the
-       corpus-scale build path; oracle-twinned queries keep the
-       default.
     2. *Update*: new centroid sums per (cluster, dimension) via
        posexplode + one groupBy — returns
        ``(cid, dim, sum_micro, n_points)``; the caller divides
@@ -565,45 +461,25 @@ def kmeans_update_step(
     ``centroid_stride=None`` (with no explicit *centroids*) auto-sizes
     the seed set to k ≈ √N (:func:`balanced_stride`).
     """
-    v = df.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    )
+    v = _vectors(df, id_col, vec_col, norm_as=None)
     if centroids is None:
         centroid_stride = _resolve_stride(centroid_stride, df)
-    cents = F.broadcast(
-        centroids
-        if centroids is not None
-        else v.filter(F.col("_id") % centroid_stride == 0).select(
-            F.col("_id").alias("cid"), F.col("_v").alias("centv")
+        centroids = _centroids(v, F.col("_id") % centroid_stride == 0)
+    cents = F.broadcast(centroids)
+    assigned = (
+        v.crossJoin(cents)
+        .withColumn("_dist", _sq_dist(dist_decimals))
+        .groupBy("_id")
+        .agg(
+            F.min_by(
+                F.struct(F.col("cid"), F.col("_v")),
+                F.struct(F.col("_dist"), F.col("cid")),
+            ).alias("_b")
+        )
+        .select(
+            "_id", F.col("_b.cid").alias("cid"), F.col("_b._v").alias("_v")
         )
     )
-    if assign_mode == "numpy":
-        picked = assign_nearest_numpy(
-            v, cents, id_col="_id", vec_col="_v", metric="euclidean"
-        )
-        assigned = v.join(picked, on="_id")
-    elif assign_mode == "catalyst":
-        f = float(10**dist_decimals)
-        dist = F.expr(
-            "floor(aggregate(zip_with(_v, centv, (x, y) -> (x - y) * (x - y)), "
-            f"0.0D, (acc, x) -> acc + x) * {f}D + 0.5D) / {f}D"
-        )
-        assigned = (
-            v.crossJoin(cents)
-            .withColumn("_dist", dist)
-            .groupBy("_id")
-            .agg(
-                F.min_by(
-                    F.struct(F.col("cid"), F.col("_v")),
-                    F.struct(F.col("_dist"), F.col("cid")),
-                ).alias("_b")
-            )
-            .select(
-                "_id", F.col("_b.cid").alias("cid"), F.col("_b._v").alias("_v")
-            )
-        )
-    else:
-        raise ValueError(f"unknown assign_mode: {assign_mode!r}")
     exploded = assigned.select(
         "cid", F.posexplode("_v").alias("_pos", "_x")
     )
@@ -625,7 +501,6 @@ def hard_negatives(
     label_col: str = "label",
     k: int = 5,
     sim_decimals: int = 6,
-    dims: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query vector,
     the top-*k* most-similar corpus vectors whose *label_col* DIFFERS
@@ -640,53 +515,35 @@ def hard_negatives(
     ``(query_id, query_label, neighbor_id, neighbor_label, cosine,
     rank)``."""
     q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(label_col).alias("query_label"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", _norm_expr("qv"))
+        _vectors(
+            queries, id_col, vec_col, "query_id", "qv", "qn",
+            carry=(F.col(label_col).alias("query_label"),),
+        )
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        _as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cn", _norm_expr("cv"))
+    c = _vectors(
+        corpus, id_col, vec_col, "neighbor_id", "cv", "cn",
+        carry=(F.col(label_col).alias("neighbor_label"),),
+    )
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_label") != F.col("neighbor_label"))
         .withColumn(
-            "cosine", _pair_cosine("qv", "qn", "cv", "cn", dims, sim_decimals)
+            "cosine", _pair_cosine("qv", "qn", "cv", "cn", sim_decimals)
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
+    return _top_k(
+        scored,
+        k,
+        F.col("cosine").desc(),
+        (
             "query_id",
             "query_label",
             "neighbor_id",
             "neighbor_label",
             "cosine",
             "rank",
-        )
-    )
-
-
-def _d2_micro(v_col: str, c_col: str, dist_decimals: int = 6):
-    """Squared euclidean distance between two array<double> columns,
-    micro-rounded to an INTEGER (long). Integer distances make every
-    downstream comparison (argmin ties, sampling decisions) exact and
-    engine-portable — the float fold is identical in Spark's
-    ``aggregate`` and DuckDB's ``list_sum`` (sequential left-to-right),
-    and the single rounding point removes repr ambiguity."""
-    f = float(10**dist_decimals)
-    return F.expr(
-        f"cast(floor(aggregate(zip_with({v_col}, {c_col}, "
-        f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x) "
-        f"* {f}D + 0.5D) as bigint)"
+        ),
+        long_rank=True,
     )
 
 
@@ -725,9 +582,7 @@ def kmeans_parallel_candidates(
     """
     two60 = 1 << 60
     dec = "decimal(38,0)"
-    v = df.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    )
+    v = _vectors(df, id_col, vec_col, norm_as=None)
     seed = F.broadcast(
         v.select(
             F.min_by(
@@ -742,7 +597,7 @@ def kmeans_parallel_candidates(
     for r in range(1, rounds + 1):
         cost = (
             v.crossJoin(F.broadcast(cents))
-            .withColumn("_d2", _d2_micro("_v", "centv", dist_decimals))
+            .withColumn("_d2", _sq_dist(dist_decimals, as_long=True))
             .groupBy("_id", "_v")
             .agg(F.min("_d2").alias("_cost"))
         )
@@ -759,7 +614,7 @@ def kmeans_parallel_candidates(
         cents = cents.unionByName(sampled)
     assigned = (
         v.crossJoin(F.broadcast(cents))
-        .withColumn("_d2", _d2_micro("_v", "centv", dist_decimals))
+        .withColumn("_d2", _sq_dist(dist_decimals, as_long=True))
         .groupBy("_id")
         .agg(F.min_by("cid", F.struct(F.col("_d2"), F.col("cid"))).alias("cid"))
     )
@@ -791,9 +646,7 @@ def kmeans_parallel_init(
     cand = kmeans_parallel_candidates(
         df, id_col, vec_col, rounds, oversample, dist_decimals
     )
-    vecs = df.select(
-        F.col(id_col).alias(id_col), _as_double(F.col(vec_col)).alias("_v")
-    )
+    vecs = _vectors(df, id_col, vec_col, id_as=id_col, norm_as=None)
     rows = (
         cand.join(vecs, on=id_col)
         .select(id_col, "weight", "_v")
@@ -853,25 +706,17 @@ def kmeans_fit(
     """
     spark = df.sparkSession
     centroid_stride = _resolve_stride(centroid_stride, df)
-    v = df.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    )
+    v = _vectors(df, id_col, vec_col, norm_as=None)
     if init == "parallel":
         k = max(1, v.count() // centroid_stride)
         cents = kmeans_parallel_init(
             df, k, id_col, vec_col, dist_decimals=dist_decimals
         )
     elif init == "stride":
-        cents = v.filter(F.col("_id") % centroid_stride == 0).select(
-            F.col("_id").alias("cid"), F.col("_v").alias("centv")
-        )
+        cents = _centroids(v, F.col("_id") % centroid_stride == 0)
     else:
         raise ValueError(f"unknown init: {init!r}")
-    f = float(10**dist_decimals)
-    dist = F.expr(
-        "floor(aggregate(zip_with(_v, centv, (x, y) -> (x - y) * (x - y)), "
-        f"0.0D, (acc, x) -> acc + x) * {f}D + 0.5D) / {f}D"
-    )
+    dist = _sq_dist(dist_decimals)
     sse_history: list[float] = []
     for _ in range(iterations):
         scored = v.crossJoin(F.broadcast(cents)).withColumn("_dist", dist)
@@ -916,9 +761,7 @@ def kmeans_fit(
             )
             for cid, dims in sorted(by_cid.items())
         ]
-        cents = spark.createDataFrame(
-            rows, "cid long, centv array<double>"
-        )
+        cents = spark.createDataFrame(rows, "cid long, centv array<double>")
     return cents, sse_history
 
 
@@ -1250,7 +1093,6 @@ def cosine_pairs(
     threshold: float = 0.95,
     bits: int = 6,
     sim_decimals: int = 6,
-    dims: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: same-bucket candidates with cosine ≥
     *threshold* (near-dup vectors almost surely share the sign bucket)."""
@@ -1275,7 +1117,7 @@ def cosine_pairs(
         left.join(right, on="bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine", _pair_cosine("v_a", "n_a", "v_b", "n_b", dims, sim_decimals)
+            "cosine", _pair_cosine("v_a", "n_a", "v_b", "n_b", sim_decimals)
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -1290,7 +1132,6 @@ def semantic_dedup(
     threshold: float = 0.35,
     centroid_stride: int | None = None,
     sim_decimals: int = 6,
-    dims: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540): cluster the embedding
     space coarsely, then drop any vector whose cosine to a LOWER-id
@@ -1302,8 +1143,8 @@ def semantic_dedup(
     1. *Cluster*: assign every vector to its nearest of *num_clusters*
        deterministic centroids (ids ``< num_clusters``, or every
        ``centroid_stride``-th id) — broadcast centroids, map-side
-       ``max_by`` rank-1, ONE row per vector on the exchange (same
-       shape as :func:`ivf_topk`'s assignment; a k-means fit slots in
+       ``max_by`` rank-1, ONE row per vector on the exchange (the
+       :func:`ivf_topk` assignment, :func:`_assign`; a k-means fit slots in
        via :func:`kmeans_fit` when determinism isn't required).
     2. *Pair*: self-join WITHIN clusters on ``id_a < id_b`` — the
        quadratic term is bounded by the largest cluster, which is the
@@ -1317,38 +1158,13 @@ def semantic_dedup(
     max_dup_cosine)`` with status ``keep``/``drop``; the rounded-cosine
     tie policy makes the output engine-reproducible.
     """
-    c = df.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", _norm_expr("_v"))
+    c = _vectors(df, id_col, vec_col)
     if centroid_stride is None:
         cent_filter = F.col("_id") < num_clusters
     else:
         cent_filter = F.col("_id") % centroid_stride == 0
-    cents = F.broadcast(
-        c.filter(cent_filter).select(
-            F.col("_id").alias("cid"),
-            F.col("_v").alias("centv"),
-            F.col("_n").alias("centn"),
-        )
-    )
-    scored = c.crossJoin(cents).withColumn(
-        "_cos", _pair_cosine("_v", "_n", "centv", "centn", dims, sim_decimals)
-    )
-    assigned = (
-        scored.groupBy("_id")
-        .agg(
-            F.max_by(
-                F.struct(F.col("_v"), F.col("_n"), F.col("cid")),
-                F.struct(F.col("_cos"), (-F.col("cid")).alias("_nc")),
-            ).alias("_b")
-        )
-        .select(
-            "_id",
-            F.col("_b._v").alias("_v"),
-            F.col("_b._n").alias("_n"),
-            F.col("_b.cid").alias("cluster"),
-        )
-    )
+    cents = F.broadcast(_centroids(c, cent_filter))
+    assigned = _assign(c, cents, sim_decimals).withColumnRenamed("cid", "cluster")
     earlier = assigned.select(
         F.col("cluster"),
         F.col("_id").alias("id_b"),
@@ -1371,7 +1187,7 @@ def semantic_dedup(
             # _v/_n live only on L, v_b/n_b only on R — unqualified
             # names are unambiguous (_pair_cosine backticks its
             # arguments whole, so qualified names would not resolve)
-            _pair_cosine("_v", "_n", "v_b", "n_b", dims, sim_decimals)
+            _pair_cosine("_v", "_n", "v_b", "n_b", sim_decimals)
             >= threshold
         ),
         "left",
@@ -1381,7 +1197,7 @@ def semantic_dedup(
         F.col("id_b"),
         F.when(
             F.col("id_b").isNotNull(),
-            _pair_cosine("_v", "_n", "v_b", "n_b", dims, sim_decimals),
+            _pair_cosine("_v", "_n", "v_b", "n_b", sim_decimals),
         ).alias("_cos"),
     )
     return paired.groupBy("_id", "cluster").agg(

@@ -504,11 +504,7 @@ def run_cdc_stream(
 
 
 def run_cdc_scd2_stream(
-    changes_stream: DataFrame,
-    log_path: str,
-    keys,
-    seq_col: str,
-    checkpoint: str,
+    changes_stream: DataFrame, log_path: str, checkpoint: str
 ) -> None:
     """Streaming twin of ``plans/merge.apply_cdc_scd2``: drain an
     (availableNow) change-feed stream into an append-only DEDUPED
@@ -520,11 +516,12 @@ def run_cdc_scd2_stream(
     distinct event set regardless of micro-batching, the rebuilt
     intervals equal the one-shot batch apply.
 
-    Full-row dedup, NOT ``(keys, seq_col)`` dedup, deliberately: the
-    batch apply resolves CONFLICTING events at the same ``(key, seq)``
-    by an op-blind total-order ``max`` over every event ever
-    delivered. A key-level anti-join would keep whichever conflicting
-    event ARRIVED first — a batch-slicing-dependent answer that
+    Full-row dedup, NOT ``(key, seq)`` dedup, deliberately, so the
+    stream takes no key or sequence column: the batch apply resolves
+    CONFLICTING events at the same ``(key, seq)`` by an op-blind
+    total-order ``max`` over every event ever delivered. A key-level
+    anti-join would keep whichever conflicting event ARRIVED first — a
+    batch-slicing-dependent answer that
     diverges from the one-shot apply. Full-row dedup suppresses exact
     redeliveries (the at-least-once case the log exists for) while
     letting genuine conflicts append; the rebuild's own ``(key, seq)``

@@ -238,7 +238,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _dec_sum(col, alias: str, scale: int = 2):
+def _dec_sum(col, alias: str):
     """Order-independent sum: decimal accumulate, double at the end.
 
     Cross-engine exactness bound: DuckDB double-rounds decimal→double

@@ -798,7 +798,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 for 8 query vectors: broadcast
     queries ⨯ one corpus scan, JVM-side fold arithmetic."""
     e = _t(spark, sf_dir, "embeddings")
-    out = cosine_topk(e, e.filter(F.col("vec_id") < 8), k=5, dims=64)
+    out = cosine_topk(e, e.filter(F.col("vec_id") < 8), k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -835,7 +835,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings").withColumn(
         "label", F.col("label").cast("long")
     )
-    return hard_negatives(e, e.filter(F.col("vec_id") < 8), k=5, dims=64)
+    return hard_negatives(e, e.filter(F.col("vec_id") < 8), k=5)
 
 
 def _sign_lsh_oracle(bits: int = 6, tables: int = 4, k: int = 5) -> str:
@@ -885,7 +885,7 @@ def q_ann_sign_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability geometrically."""
     e = _t(spark, sf_dir, "embeddings")
     out = sign_lsh_topk(
-        e, e.filter(F.col("vec_id") < 8), k=5, bits=6, tables=4, dims=64
+        e, e.filter(F.col("vec_id") < 8), k=5, bits=6, tables=4
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -973,7 +973,6 @@ def q_ann_ivf_bucketed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         centroid_stride=128,
         nprobe=2,
-        dims=64,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1107,7 +1106,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         centroid_stride=128,
         nprobe=2,
-        dims=64,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1122,7 +1120,7 @@ def q_ann_ivf_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break, and rounded-cosine semantics as ``ann_ivf_topk``."""
     e = _t(spark, sf_dir, "embeddings")
     out = ivf_topk(
-        e, e.filter(F.col("vec_id") < 8), k=5, nprobe=2, dims=64
+        e, e.filter(F.col("vec_id") < 8), k=5, nprobe=2
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1142,7 +1140,7 @@ def q_ann_ivf_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within LSH buckets (cos ≥ 0.4)."""
     e = _t(spark, sf_dir, "embeddings")
-    return cosine_pairs(e, threshold=0.4, bits=6, dims=64)
+    return cosine_pairs(e, threshold=0.4, bits=6)
 
 
 @register(
@@ -2140,7 +2138,7 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(query_id) over the same bounded-per-query relation."""
     e = _t(spark, sf_dir, "embeddings")
     cands = materialize(
-        cosine_topk(e, e.filter(F.col("vec_id") == 0), k=20, dims=64).select(
+        cosine_topk(e, e.filter(F.col("vec_id") == 0), k=20).select(
             F.col("neighbor_id").alias("id"), F.col("cosine").alias("rel")
         )
     )
@@ -2149,7 +2147,7 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         e["vec_id"] == F.col("id"),
     ).select("vec_id", "embedding")
     pairs = materialize(
-        cosine_topk(cvecs, cvecs, k=19, dims=64).select(
+        cosine_topk(cvecs, cvecs, k=19).select(
             F.col("query_id").alias("ia"),
             F.col("neighbor_id").alias("ib"),
             F.col("cosine").alias("sim"),

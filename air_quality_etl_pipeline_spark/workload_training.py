@@ -700,12 +700,10 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    exact = cosine_topk(e, q, k=5, dims=64).select(
+    exact = cosine_topk(e, q, k=5).select("query_id", "neighbor_id")
+    approx = ivf_topk(e, q, k=5, centroid_stride=128, nprobe=2).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_topk(
-        e, q, k=5, centroid_stride=128, nprobe=2, dims=64
-    ).select("query_id", "neighbor_id")
     hits = (
         exact.join(approx, on=["query_id", "neighbor_id"])
         .groupBy("query_id")

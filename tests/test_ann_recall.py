@@ -101,46 +101,6 @@ def test_kmeans_parallel_init_and_fit(spark, sf_dir):
     assert len(sse) == 2 and sse[0] >= sse[1] > 0
 
 
-def test_ivf_numpy_assignment_matches_catalyst(spark, sf_dir):
-    """The BLAS build path (assign_mode='numpy') must produce the same
-    top-k as the oracle-exact Catalyst assignment away from hairline
-    cosine ties (this corpus has none at the default parameters)."""
-    from pyspark.sql import functions as F
-
-    from air_quality_etl_pipeline_spark.operators.similarity import ivf_topk
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 8)
-    a = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(e, q, k=5, dims=64).collect()
-    }
-    b = {
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk(e, q, k=5, dims=64, assign_mode="numpy").collect()
-    }
-    assert a == b
-
-
-def test_kmeans_numpy_assignment_matches_catalyst(spark, sf_dir):
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        kmeans_update_step,
-    )
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = sorted(
-        (r.cid, r.dim, r.sum_micro, r.n_points)
-        for r in kmeans_update_step(e, centroid_stride=128).collect()
-    )
-    b = sorted(
-        (r.cid, r.dim, r.sum_micro, r.n_points)
-        for r in kmeans_update_step(
-            e, centroid_stride=128, assign_mode="numpy"
-        ).collect()
-    )
-    assert a == b
-
-
 def test_balanced_stride_monotone_sqrt_and_sql_agreement():
     """r12 verdict #1: the auto default must keep nlist ≈ √N (so
     assignment is N^1.5, never N²/stride), be monotone in N, and agree

@@ -208,7 +208,7 @@ def test_mmr_matches_pure_python_greedy(spark, sf_dir):
     rel = {
         r.neighbor_id: r.cosine
         for r in cosine_topk(
-            e, e.filter(F.col("vec_id") == 0), k=20, dims=64
+            e, e.filter(F.col("vec_id") == 0), k=20
         ).collect()
     }
     cvecs = e.filter(F.col("vec_id").isin(*rel)).select(
@@ -216,7 +216,7 @@ def test_mmr_matches_pure_python_greedy(spark, sf_dir):
     )
     sim = {
         (r.query_id, r.neighbor_id): r.cosine
-        for r in cosine_topk(cvecs, cvecs, k=19, dims=64).collect()
+        for r in cosine_topk(cvecs, cvecs, k=19).collect()
     }
     selected: list = []
     want = []

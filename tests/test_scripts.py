@@ -3,7 +3,8 @@ each compiles, every name it imports from this repository resolves and
 every keyword argument it passes to a function imported from there is
 one that function's ``def`` accepts (read from the source, no Spark).
 Each script also takes its own directory off the head of ``sys.path``,
-and ``profile.py`` runs end to end."""
+and ``profile.py`` runs end to end. Also from the source: every
+module-level function of the package reads each of its parameters."""
 
 from __future__ import annotations
 
@@ -18,6 +19,12 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRIPTS = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
+PACKAGE = sorted(
+    glob.glob(
+        os.path.join(REPO, "air_quality_etl_pipeline_spark", "**", "*.py"),
+        recursive=True,
+    )
+)
 EXAMPLES = sorted(glob.glob(os.path.join(REPO, "examples", "*.py")))
 
 #: the directory each in-repo module the scripts import is found under
@@ -144,6 +151,42 @@ def _check_call_keywords(path: str) -> None:
                 f"{os.path.basename(path)}:{call.lineno}: "
                 f"{name}() takes no keyword {kw.arg!r}"
             )
+
+
+def _unread_parameters(path: str) -> list[str]:
+    """``name(param)`` for each parameter of a module-level, undecorated
+    function in *path* that its body (nested functions included) never
+    reads. Methods, nested callbacks and decorated functions keep the
+    signature their protocol or registry fixes, so they are skipped."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    unread = []
+    for fn in tree.body:
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if fn.decorator_list:
+            continue
+        a = fn.args
+        params = [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+        params += [p.arg for p in (a.vararg, a.kwarg) if p is not None]
+        read = {
+            n.id
+            for stmt in fn.body
+            for n in ast.walk(stmt)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        unread += [f"{fn.name}({p})" for p in params if p not in read]
+    return unread
+
+
+def test_package_functions_read_every_parameter():
+    unread = [
+        f"{os.path.relpath(path, REPO)}: {u}"
+        for path in PACKAGE
+        for u in _unread_parameters(path)
+    ]
+    assert PACKAGE
+    assert not unread, "parameters never read:\n" + "\n".join(unread)
 
 
 def test_scripts_exist():

@@ -377,7 +377,7 @@ def test_streaming_scd2_log_converges_to_batch_history(spark, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        run_cdc_scd2_stream(stream, log, ["k"], "seq", checkpoint=ckpt)
+        run_cdc_scd2_stream(stream, log, checkpoint=ckpt)
 
     drain(str(tmp_path / "ck1"))
     assert spark.read.parquet(log).count() == len(feed_rows)  # deduped
@@ -441,7 +441,7 @@ def test_streaming_scd2_track_history_out_of_order(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    run_cdc_scd2_stream(stream, log, ["k"], "seq", str(tmp_path / "ck"))
+    run_cdc_scd2_stream(stream, log, str(tmp_path / "ck"))
 
     def rows_of(df):
         return sorted(
@@ -509,7 +509,7 @@ def test_streaming_scd2_conflicting_same_seq_across_batches(spark, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        run_cdc_scd2_stream(stream, log, ["k"], "seq", checkpoint=ckpt)
+        run_cdc_scd2_stream(stream, log, checkpoint=ckpt)
 
     drain(str(tmp_path / "ck1"))
     assert spark.read.parquet(log).count() == 2  # both conflict rows
