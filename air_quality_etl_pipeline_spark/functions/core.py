@@ -46,25 +46,6 @@ def sql_round(expr: str, decimals: int) -> str:
     return f"floor(({expr}) * {f} + 0.5) / {f}"
 
 
-def hash_of(col: Column, salt: str | None = None, family: str = "md5") -> Column:
-    """Salted deterministic hash with a selectable family.
-
-    ``"md5"`` (default) is engine-portable — required wherever a DuckDB
-    oracle must reproduce bucket/candidate decisions. ``"xxhash64"`` is
-    the production fast path: a JVM-native non-cryptographic hash,
-    ~5-10× cheaper per call, same distribution quality for
-    MinHash/SimHash purposes — but its constants are Spark-specific, so
-    nothing outside Spark can replay it.
-    """
-    if family == "xxhash64":
-        if salt is not None:
-            return F.xxhash64(F.lit(salt), col)
-        return F.xxhash64(col)
-    if family == "md5":
-        return md5_long(col, salt)
-    raise ValueError(f"unknown hash family: {family!r}")
-
-
 def md5_hex15(col: Column, salt: str | None = None) -> Column:
     """Deterministic 60-bit hash as a FIXED-WIDTH lowercase hex string
     (first 15 md5 chars). Lexicographic order on fixed-width hex equals
@@ -81,10 +62,12 @@ def md5_long(col: Column, salt: str | None = None) -> Column:
     """Deterministic 60-bit non-negative hash of a string column.
 
     ``conv(substr(md5(x), 1, 15), 16, 10)`` — 15 hex chars = 60 bits, so
-    the value always fits a signed BIGINT. Used as the hash family for
-    MinHash / SimHash (salted per hash function) because ``md5`` is
-    available verbatim in every SQL engine the oracle harness may use,
-    unlike ``xxhash64``/``murmur3`` whose constants differ per engine.
+    the value always fits a signed BIGINT. The package's portable hash:
+    gram hashes, salted buckets and samples, and the affine MinHash
+    family's shared hash all use it (SimHash writes the same expression
+    as SQL text), because ``md5`` is available verbatim in every SQL
+    engine the oracle harness may use, unlike ``xxhash64``/``murmur3``
+    whose constants differ per engine.
     """
     if salt is not None:
         col = F.concat(F.lit(salt), F.lit(":"), col)
@@ -135,20 +118,6 @@ def char_shingles(text: Column, n: int = 3) -> Column:
         lambda i: text.substr(i, F.lit(n)),
     )
     return F.array_distinct(grams)
-
-
-def word_shingles(text: Column, n: int = 5) -> Column:
-    """Distinct word n-grams (space-joined token windows) of a string.
-
-    The shingle set for MinHash near-dup detection. Word-level shingles
-    (à la Gopher / RefinedWeb dedup) separate true near-duplicates from
-    same-vocabulary noise far better than character n-grams: for docs
-    drawn from one vocabulary, char-3-gram Jaccard of unrelated pairs
-    sits at 0.4-0.6 (LSH buckets degenerate), while word-5-gram Jaccard
-    is ~0 for unrelated and ~1 for near-dup pairs. Docs shorter than *n*
-    tokens shingle to the whole text. Pure Catalyst expressions.
-    """
-    return word_shingles_of_tokens(token_array(text), n)
 
 
 def word_shingles_of_tokens(toks: Column, n: int = 5) -> Column:

@@ -1,4 +1,5 @@
-"""Date-derivation operators (reference X4-X6, X12 and the dim_date build).
+"""Date-derivation operators (reference X4-X6 and the dim_date build;
+X12's month truncation lives in the ``month_rollup`` query).
 
 The reference derives ``year, month, dayofmonth, dayofweek, quarter``,
 month/day display names and an ``is_weekend`` flag when building
@@ -13,7 +14,7 @@ we implement the correct automated variant, per SURVEY §2.2 X6.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,8 +35,3 @@ def with_date_parts(df: DataFrame, date_col: str, prefix: str = "") -> DataFrame
         }
     )
 
-
-def month_start(c: Column) -> Column:
-    """X12 — truncate to first-of-month (Power Query ``Date.StartOfMonth``,
-    reference: ``Population Dataflow.Dataflow/mashup.pq:17``)."""
-    return F.trunc(c, "month")

@@ -22,8 +22,9 @@ the O(n²) pair space:
 
 Hashes are salted md5 (:func:`~air_quality_etl_pipeline_spark.functions
 .core.md5_long`) — engine-portable and deterministic, which the oracle
-harness requires; swap for ``xxhash64`` when portability doesn't matter
-and you want cheaper hashing.
+harness requires. Where hashing cost matters, the MinHash signature
+pass derives its k functions from ONE md5 per shingle
+(``hash_family="md5_affine"``), still replayable in every engine.
 """
 
 from __future__ import annotations
@@ -31,14 +32,13 @@ from __future__ import annotations
 from collections.abc import Sequence
 from fractions import Fraction
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.functions.core import (
     char_shingles,
     MINHASH_P31,
     affine_coeffs,
-    hash_of,
     md5_hex15,
     md5_long,
     safe_div,
@@ -154,6 +154,57 @@ def jaccard_of_arrays(a: Column, b: Column) -> Column:
     return safe_div(inter, union)
 
 
+def jaccard_join_back(
+    cands: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """Verify candidate pairs ``(a, b)`` with true Jaccard ≥
+    *threshold*: ``cands ⋈ sh_a on a ⋈ sh_b on b`` over the
+    ``(_id, _sh)`` shingle arrays, scored by :func:`jaccard_of_arrays`
+    → ``(a, b, jaccard)``. Shingles are never recomputed per pair, and
+    only the candidate id pairs are shuffled against the shingle table."""
+    return (
+        cands.join(
+            sh_a.select(F.col("_id").alias(a), F.col("_sh").alias("sh_a")),
+            on=a,
+        )
+        .join(
+            sh_b.select(F.col("_id").alias(b), F.col("_sh").alias("sh_b")),
+            on=b,
+        )
+        .withColumn("jaccard", jaccard_of_arrays(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
+    )
+
+
+def _shingle_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    shingler: str,
+    block_cols: Sequence[str] = (),
+) -> DataFrame:
+    """``(_id, *block_cols, _sh)`` — per-doc distinct n-gram arrays,
+    char or word shingles. Word shingles read a token column projected
+    first: inlined, the tokenizer would re-run per gram inside the
+    lambda (see ``word_shingles_of_tokens``)."""
+    keys = [F.col(id_col).alias("_id"), *[F.col(c) for c in block_cols]]
+    if shingler == "char":
+        sh = char_shingles(F.col(text_col), n)
+        return df.select(*keys, sh.alias("_sh"))
+    if shingler != "word":
+        raise ValueError(f"unknown shingler: {shingler!r}")
+    toks = df.select(*keys, token_array(F.col(text_col)).alias("_toks"))
+    sh = word_shingles_of_tokens(F.col("_toks"), n)
+    return toks.select("_id", *block_cols, sh.alias("_sh"))
+
+
 def _shingled(
     df: DataFrame,
     id_col: str,
@@ -162,21 +213,13 @@ def _shingled(
     block_cols: Sequence[str],
     shingler: str = "char",
 ) -> DataFrame:
-    """``(_id, *blocks, _sh)`` — per-doc distinct n-gram arrays (char
-    or word shingles), materialized (:func:`~.cache.materialize`): the
-    prefix-filter candidate pass and both verification join-backs read
-    it with different projections, which AQE cannot reuse across
+    """:func:`_shingle_sets`, materialized (:func:`~.cache.materialize`):
+    the prefix-filter candidate pass and both verification join-backs
+    read it with different projections, which AQE cannot reuse across
     (cache-cleared at sf0.1, lazy lsh_recall_eval was 7.4 → 8.4 s
     cold)."""
-    blocks = [F.col(c) for c in block_cols]
-    if shingler == "word":
-        sh = word_shingles_of_tokens(token_array(F.col(text_col)), n)
-    elif shingler == "char":
-        sh = char_shingles(F.col(text_col), n)
-    else:
-        raise ValueError(f"unknown shingler: {shingler!r}")
     return materialize(
-        df.select(F.col(id_col).alias("_id"), *blocks, sh.alias("_sh"))
+        _shingle_sets(df, id_col, text_col, n, shingler, block_cols)
     )
 
 
@@ -246,21 +289,17 @@ def ppjoin_candidates(
             )
         ).alias("_pos", "_pt"),
     )
-    left = prefixes.select(
-        *block_cols,
-        "_pt",
-        F.col("_id").alias("id_a"),
-        F.col("_sz").alias("_sza"),
-        F.col("_pos").alias("_pa"),
-    )
-    right = prefixes.select(
-        *block_cols,
-        "_pt",
-        F.col("_id").alias("id_b"),
-        F.col("_sz").alias("_szb"),
-        F.col("_pos").alias("_pb"),
-    )
-    matched = left.join(right, on=[*block_cols, "_pt"]).filter(
+
+    def side(s: str) -> DataFrame:
+        return prefixes.select(
+            *block_cols,
+            "_pt",
+            F.col("_id").alias(f"id_{s}"),
+            F.col("_sz").alias(f"_sz{s}"),
+            F.col("_pos").alias(f"_p{s}"),
+        )
+
+    matched = side("a").join(side("b"), on=[*block_cols, "_pt"]).filter(
         F.col("id_a") < F.col("id_b")
     )
     if not positional:
@@ -320,39 +359,19 @@ def ngram_jaccard_pairs(
     candidate volume is capped by the banding scheme rather than the
     token distribution.
 
-    Verification joins candidate ids back to the shingle arrays: the
-    size prefilter ``min ≥ t·max`` first, then exact Jaccard computed
-    as ``∩ / (|A| + |B| − ∩)`` — arrays are distinct, so the union
-    size is arithmetic and the expensive ``array_union``
-    materialization disappears.
+    Verification joins candidate ids back to the shingle arrays
+    (:func:`jaccard_join_back`). No size prefilter is needed: the
+    positional bound already implies ``min(|A|,|B|)·den ≥
+    num·max(|A|,|B|)`` exactly (the bound never exceeds the smaller
+    set), while a float ``min ≥ t·max`` test would drop pairs whose
+    Jaccard equals the threshold (``55 ≥ 0.55·100`` is false in
+    double).
     """
     sh = _shingled(df, id_col, text_col, n, block_cols, shingler)
     cands = ppjoin_candidates(
         sh, threshold, block_cols, positional=positional
     )
-    verified = (
-        cands.join(
-            sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")),
-            on="id_a",
-        )
-        .join(
-            sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")),
-            on="id_b",
-        )
-    )
-    sa, sb = F.size(F.col("sh_a")), F.size(F.col("sh_b"))
-    verified = verified.filter(
-        F.least(sa, sb) >= F.lit(threshold) * F.greatest(sa, sb)
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast(
-        "double"
-    )
-    jac = safe_div(inter, (sa + sb).cast("double") - inter)
-    return (
-        verified.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return jaccard_join_back(cands, sh, sh, threshold)
 
 
 def fuzzy_pairs(
@@ -361,7 +380,6 @@ def fuzzy_pairs(
     text_col: str = "text",
     max_dist: int = 10,
     block_cols: Sequence[str] = (),
-    band_width: int | None = None,
 ) -> DataFrame:
     """Fuzzy near-dup pairs by bounded Levenshtein edit distance.
 
@@ -371,7 +389,7 @@ def fuzzy_pairs(
 
     * ``|len(a) − len(b)| > max_dist ⇒ dist > max_dist`` (each unmatched
       character costs ≥1 edit), so rows bucket by
-      ``floor(len / band_width)`` with ``band_width = max_dist + 1``;
+      ``floor(len / (max_dist + 1))``;
       a qualifying pair's buckets differ by at most 1, so the right side
       is exploded into ``{bucket, bucket+1}`` and an equi-join on
       (block, bucket) has perfect recall.
@@ -384,7 +402,7 @@ def fuzzy_pairs(
     and the quadratic term is confined to same-bucket rows — the same
     shape as the MinHash/SimHash candidate joins.
     """
-    w = band_width or (max_dist + 1)
+    w = max_dist + 1
     base = df.select(
         F.col(id_col).alias("_id"),
         *[F.col(c) for c in block_cols],
@@ -430,9 +448,9 @@ def minhash_signatures(
     n: int = 5,
     num_hashes: int = 8,
     hash_family: str = "md5",
-    shingler: str = "word",
 ) -> DataFrame:
-    """Per-row MinHash signatures → ``(_id, _sh, _h0.._h{k-1})``.
+    """Per-row MinHash signatures over word-*n*-gram shingles →
+    ``(_id, _sh, _h0.._h{k-1})``.
 
     LAMBDA-FREE formulation: shingles explode to rows and each hash
     function is a plain ``min(salted_hash(shingle))`` aggregate — one
@@ -448,28 +466,11 @@ def minhash_signatures(
     hex strings (lexicographic min ≡ numeric min — see md5_hex15);
     ``"md5_affine"`` (oracle-portable, ~8× less hashing at k=8) takes
     ONE md5 per shingle and derives the k functions as Carter-Wegman
-    affine rehashes of its low 30 bits (functions.core.affine_coeffs);
-    ``"xxhash64"`` is the ~5-10× cheaper JVM-native production path
-    (not replayable outside Spark). ``shingler="word"`` (default)
-    shingles word *n*-grams; ``"char"`` shingles character *n*-grams
-    (the right unit when docs share a tiny vocabulary and word-level
-    sets are near-identical everywhere).
+    affine rehashes of its low 30 bits (functions.core.affine_coeffs).
     """
-    if shingler == "char":
-        sh = df.select(
-            F.col(id_col).alias("_id"),
-            char_shingles(F.col(text_col), n).alias("_sh"),
-        )
-    else:
-        sh = (
-            df.select(
-                F.col(id_col).alias("_id"),
-                token_array(F.col(text_col)).alias("_toks"),
-            )
-            .select(
-                "_id", word_shingles_of_tokens(F.col("_toks"), n).alias("_sh")
-            )
-        )
+    if hash_family not in ("md5", "md5_affine"):
+        raise ValueError(f"unknown hash family: {hash_family!r}")
+    sh = _shingle_sets(df, id_col, text_col, n, "word")
     exploded = sh.select("_id", F.explode("_sh").alias("_s"))
     if hash_family == "md5_affine":
         # one md5 per shingle, k Carter-Wegman rehashes of its low 30
@@ -482,9 +483,7 @@ def minhash_signatures(
         if hash_family == "md5_affine":
             a, c = affine_coeffs(i)
             return (F.lit(a) * F.col("_b30") + F.lit(c)) % F.lit(MINHASH_P31)
-        if hash_family == "md5":
-            return md5_hex15(F.col("_s"), salt=str(i))
-        return hash_of(F.col("_s"), salt=str(i), family=hash_family)
+        return md5_hex15(F.col("_s"), salt=str(i))
 
     sig = exploded.groupBy("_id").agg(
         *[F.min(one(i)).alias(f"_h{i}") for i in range(num_hashes)]
@@ -501,7 +500,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.7,
     hash_family: str = "md5",
-    shingler: str = "word",
 ) -> DataFrame:
     """MinHash + banded LSH near-dup detection over word-*n*-gram
     shingles.
@@ -520,17 +518,9 @@ def minhash_lsh_pairs(
     (small) against the shingle table on id.
     """
     sh, cands = minhash_lsh_candidates(
-        df, id_col, text_col, n, num_hashes, bands, hash_family, shingler
+        df, id_col, text_col, n, num_hashes, bands, hash_family
     )
-    verified = (
-        cands.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), on="id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), on="id_b")
-        .withColumn("jaccard", jaccard_of_arrays(F.col("sh_a"), F.col("sh_b")))
-    )
-    return (
-        verified.filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return jaccard_join_back(cands, sh, sh, threshold)
 
 
 def banded_relation(
@@ -566,6 +556,17 @@ def banded_relation(
     ).select("_id", "band.band_idx", "band.band_hash")
 
 
+def _band_keys(
+    sh: DataFrame, num_hashes: int, bands: int, id_alias: str
+) -> DataFrame:
+    """``(band_idx, band_hash, id_alias)`` — one side of a band
+    equi-join, renamed so both sides join by name (see
+    :func:`minhash_lsh_candidates` on alias-style self-joins)."""
+    return banded_relation(sh, num_hashes, bands).select(
+        "band_idx", "band_hash", F.col("_id").alias(id_alias)
+    )
+
+
 def minhash_lsh_pairs_between(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -576,7 +577,6 @@ def minhash_lsh_pairs_between(
     bands: int = 4,
     threshold: float = 0.7,
     hash_family: str = "md5",
-    shingler: str = "word",
 ) -> DataFrame:
     """INCREMENTAL MinHash-LSH dedup: near-dup pairs BETWEEN two
     relations — ``(new_id, corpus_id, jaccard)`` for every *new_df*
@@ -593,42 +593,22 @@ def minhash_lsh_pairs_between(
     is recomputed because the registry queries must be
     self-contained."""
     sh_new = minhash_signatures(
-        new_df, id_col, text_col, n, num_hashes, hash_family, shingler
+        new_df, id_col, text_col, n, num_hashes, hash_family
     )
     sh_old = minhash_signatures(
-        corpus_df, id_col, text_col, n, num_hashes, hash_family, shingler
-    )
-    left = banded_relation(sh_new, num_hashes, bands).select(
-        "band_idx", "band_hash", F.col("_id").alias("new_id")
-    )
-    right = banded_relation(sh_old, num_hashes, bands).select(
-        "band_idx", "band_hash", F.col("_id").alias("corpus_id")
+        corpus_df, id_col, text_col, n, num_hashes, hash_family
     )
     cands = (
-        left.join(right, on=["band_idx", "band_hash"])
+        _band_keys(sh_new, num_hashes, bands, "new_id")
+        .join(
+            _band_keys(sh_old, num_hashes, bands, "corpus_id"),
+            on=["band_idx", "band_hash"],
+        )
         .select("new_id", "corpus_id")
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    verified = (
-        cands.join(
-            sh_new.select(
-                F.col("_id").alias("new_id"), F.col("_sh").alias("sh_a")
-            ),
-            on="new_id",
-        )
-        .join(
-            sh_old.select(
-                F.col("_id").alias("corpus_id"),
-                F.col("_sh").alias("sh_b"),
-            ),
-            on="corpus_id",
-        )
-        .withColumn(
-            "jaccard", jaccard_of_arrays(F.col("sh_a"), F.col("sh_b"))
-        )
-    )
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "new_id", "corpus_id", "jaccard"
+    return jaccard_join_back(
+        cands, sh_new, sh_old, threshold, "new_id", "corpus_id"
     )
 
 
@@ -640,7 +620,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 8,
     bands: int = 4,
     hash_family: str = "md5",
-    shingler: str = "word",
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate generation half of MinHash-LSH: returns
     ``(shingle_relation(_id, _sh, _h*), candidate_pairs(id_a, id_b))``
@@ -658,23 +637,20 @@ def minhash_lsh_candidates(
     # deleting it measured perfbench corpus_heavy's warm total +29%
     # (SCALE.md, "Builders leave nothing in the session cache").
     sh = minhash_signatures(
-        df, id_col, text_col, n, num_hashes, hash_family, shingler
+        df, id_col, text_col, n, num_hashes, hash_family
     ).persist()
-    banded = banded_relation(sh, num_hashes, bands)
 
     # Self-join via RENAMED projections + join-by-name, NOT
     # .alias("a")/.alias("b") with qualified F.col refs: when both sides
     # share one unpersisted plan, Spark's self-join attribute
     # de-duplication can mis-resolve the qualified columns and silently
     # drop candidate pairs (observed: cold runs returned a subset).
-    left = banded.select(
-        "band_idx", "band_hash", F.col("_id").alias("id_a")
-    )
-    right = banded.select(
-        "band_idx", "band_hash", F.col("_id").alias("id_b")
-    )
     cands = (
-        left.join(right, on=["band_idx", "band_hash"])
+        _band_keys(sh, num_hashes, bands, "id_a")
+        .join(
+            _band_keys(sh, num_hashes, bands, "id_b"),
+            on=["band_idx", "band_hash"],
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -687,7 +663,6 @@ def simhash_bits(
     id_col: str,
     text_col: str = "text",
     bits: int = 32,
-    hash_family: str = "md5",
     carry_cols: Sequence[str] = (),
     keep_empty: bool = False,
 ) -> DataFrame:
@@ -733,15 +708,11 @@ def simhash_bits(
         f"{explode_fn}(CASE WHEN trim(`{text_col}`) = '' THEN array() "
         f"ELSE split(trim(`{text_col}`), '\\\\s+') END) AS _tok",
     )
-    if hash_family == "md5":
-        h_expr = "CAST(conv(substring(md5(_tok), 1, 15), 16, 10) AS LONG)"
-    elif hash_family == "xxhash64":
-        # xxhash64 maps a NULL arg to the seed, not NULL — guard so
-        # tokenless rows stay NULL under keep_empty
-        h_expr = "CASE WHEN _tok IS NULL THEN NULL ELSE xxhash64(_tok) END"
-    else:
-        raise ValueError(f"unknown hash family: {hash_family!r}")
-    hashed = toks.selectExpr("_id", *qcarry, f"{h_expr} AS _h")
+    hashed = toks.selectExpr(
+        "_id",
+        *qcarry,
+        "CAST(conv(substring(md5(_tok), 1, 15), 16, 10) AS LONG) AS _h",
+    )
     aggs = [
         F.expr(f"sum(shiftright(_h, {b}) & 1) AS _b{b}") for b in range(bits)
     ]
@@ -767,7 +738,6 @@ def simhash_pairs(
     bits: int = 32,
     max_hamming: int = 3,
     block_cols: Sequence[str] = (),
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ *max_hamming*,
     blocked by *block_cols*.
@@ -793,7 +763,6 @@ def simhash_pairs(
             id_col,
             text_col,
             bits,
-            hash_family,
             carry_cols=block_cols,
         )
     )
@@ -880,7 +849,6 @@ def simhash_component_edges(
     bits: int = 32,
     max_hamming: int = 3,
     block_cols: Sequence[str] = (),
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Connectivity-equivalent edge set for near-dup CLUSTERING — the
     exact→near cascade with LINEAR star edges.
@@ -962,7 +930,6 @@ def simhash_component_edges(
             id_col,
             text_col,
             bits,
-            hash_family,
             carry_cols=[*block_cols, "_fp"],
             keep_empty=True,
         )
@@ -1012,12 +979,21 @@ def simhash_component_edges(
     return rep_pairs.unionByName(star)
 
 
+def _lowered_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id_col, otoks, toks)`` — whitespace tokens as written, and
+    lowercased. Grams and span contents hash the lowered tokens; the
+    emitted text keeps the original ones."""
+    return df.select(
+        id_col, token_array(F.col(text_col)).alias("otoks")
+    ).withColumn("toks", F.transform(F.col("otoks"), F.lower))
+
+
 def _gram_hashes(t: DataFrame, id_col: str, n: int) -> DataFrame:
     """``(id_col, pos, gh)`` — 1-based word-*n*-gram start positions
-    with 60-bit md5 gram hashes, over a prepared ``(id, toks)``
-    relation (lowered tokens). Documents shorter than *n* tokens
-    contribute one truncated gram (the whole doc). Positions ride the
-    explode — one scan, no shuffle."""
+    with 60-bit md5 gram hashes, over a :func:`_lowered_tokens`
+    relation. Documents shorter than *n* tokens contribute one
+    truncated gram (the whole doc). Positions ride the explode — one
+    scan, no shuffle."""
     return t.select(
         id_col,
         F.posexplode(
@@ -1036,12 +1012,61 @@ def _gram_hashes(t: DataFrame, id_col: str, n: int) -> DataFrame:
     )
 
 
+def _runs(flagged: DataFrame, id_col: str, min_run: int) -> DataFrame:
+    """``(id_col, p1, p2)`` — the maximal runs of ≥ *min_run*
+    consecutive flagged gram positions per document (gaps-and-islands:
+    ``pos − row_number`` is constant along a run)."""
+    w = Window.partitionBy(id_col).orderBy(F.asc("pos"))
+    islands = flagged.select(
+        id_col,
+        "pos",
+        (F.col("pos") - F.row_number().over(w)).alias("island"),
+    )
+    return (
+        islands.groupBy(id_col, "island")
+        .agg(
+            F.min("pos").alias("p1"),
+            F.max("pos").alias("p2"),
+            F.count("*").alias("run_len"),
+        )
+        .filter(F.col("run_len") >= min_run)
+        .drop("island", "run_len")
+    )
+
+
+def _cut_and_report(t: DataFrame, cut: DataFrame, id_col: str) -> DataFrame:
+    """Apply per-doc cut intervals ``cut(id_col, cut_ivals)`` — sorted
+    ``(p1, tend)`` 1-based token ranges — to the original tokens of
+    *t* and report ``(id_col, n_tokens, n_removed, n_kept,
+    dedup_text)`` per affected document. Coverage is an interval-
+    membership test per position, so a whole-clone document costs
+    O(tokens), overlapping intervals cannot double-count, and the cut
+    is a Catalyst ``filter`` lambda — no token-level shuffle."""
+    out = t.join(cut, on=id_col).select(
+        id_col,
+        F.col("otoks"),
+        F.filter(
+            F.col("otoks"),
+            lambda x, i: ~F.exists(
+                F.col("cut_ivals"),
+                lambda iv: (i + 1 >= iv["p1"]) & (i + 1 <= iv["tend"]),
+            ),
+        ).alias("kept"),
+    )
+    return out.select(
+        id_col,
+        F.size("otoks").cast("long").alias("n_tokens"),
+        (F.size("otoks") - F.size("kept")).cast("long").alias("n_removed"),
+        F.size("kept").cast("long").alias("n_kept"),
+        F.array_join(F.col("kept"), " ").alias("dedup_text"),
+    )
+
+
 def shared_gram_positions(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 5,
-    approx: bool = False,
 ) -> DataFrame:
     """Positions of word-*n*-grams shared across ≥2 distinct documents
     (the flagging pass of Lee et al., "Deduplicating Training Data
@@ -1058,31 +1083,14 @@ def shared_gram_positions(
     map-side partials. The ≥2-docs predicate needs only "more than
     one distinct doc", which ``min(id) != max(id)`` answers EXACTLY
     with two 8-byte accumulators — no distinct-set state at all, so
-    the default is both exact and cheaper than ``countDistinct``.
-    ``approx=True`` swaps in ``approx_count_distinct(rsd=0.05) >= 2``
-    for the case where the caller also wants the df counts at 100 TB
-    sketch cost; it can only over-flag never-shared grams at the
-    sketch's error rate (flagged grams still verify via the run-length
-    threshold downstream), and is NOT oracle-exact — keep the default
-    for anything hash-compared cross-engine.
+    it is both exact and cheaper than ``countDistinct``.
     """
-    t = df.select(
-        id_col,
-        F.transform(token_array(F.col(text_col)), F.lower).alias("toks"),
+    g = _gram_hashes(_lowered_tokens(df, text_col, id_col), id_col, n)
+    shared = (
+        g.groupBy("gh")
+        .agg(F.min(id_col).alias("_lo"), F.max(id_col).alias("_hi"))
+        .filter(F.col("_lo") != F.col("_hi"))
     )
-    g = _gram_hashes(t, id_col, n)
-    if approx:
-        shared = (
-            g.groupBy("gh")
-            .agg(F.approx_count_distinct(id_col, rsd=0.05).alias("_nd"))
-            .filter(F.col("_nd") >= 2)
-        )
-    else:
-        shared = (
-            g.groupBy("gh")
-            .agg(F.min(id_col).alias("_lo"), F.max(id_col).alias("_hi"))
-            .filter(F.col("_lo") != F.col("_hi"))
-        )
     return g.join(shared.select("gh"), on="gh").select(id_col, "pos")
 
 
@@ -1092,7 +1100,6 @@ def span_removal(
     id_col: str = "doc_id",
     n: int = 5,
     min_run: int = 8,
-    approx: bool = False,
 ) -> DataFrame:
     """Exact-substring span REMOVAL (Lee et al., ACL 2022 §4.1): cut
     duplicated spans from each document, keeping exactly one canonical
@@ -1128,35 +1135,11 @@ def span_removal(
     per-doc INTERVAL array (one entry per removable span, NOT one per
     position — a whole-clone document carries a single interval, so
     the removal filter is O(tokens × spans), never O(tokens²); round-10
-    advisor) before touching the corpus; the removal itself is a pure
-    Catalyst ``filter`` lambda over the token array — no token-level
-    shuffle anywhere. Overlapping islands cannot double-count:
-    coverage is a per-position interval-membership test, and
-    ``n_removed`` counts positions, not interval lengths.
+    advisor) before touching the corpus (:func:`_cut_and_report`).
     """
-    t = df.select(
-        id_col,
-        token_array(F.col(text_col)).alias("otoks"),
-    ).withColumn("toks", F.transform(F.col("otoks"), F.lower))
-    flagged = shared_gram_positions(df, text_col, id_col, n, approx=approx)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(id_col).orderBy(F.asc("pos"))
-    islands = flagged.select(
-        id_col,
-        "pos",
-        (F.col("pos") - F.row_number().over(w)).alias("island"),
-    )
-    runs = (
-        islands.groupBy(id_col, "island")
-        .agg(
-            F.min("pos").alias("p1"),
-            F.max("pos").alias("p2"),
-            F.count("*").alias("run_len"),
-        )
-        .filter(F.col("run_len") >= min_run)
-        .drop("island", "run_len")
-    )
+    t = _lowered_tokens(df, text_col, id_col)
+    flagged = shared_gram_positions(df, text_col, id_col, n)
+    runs = _runs(flagged, id_col, min_run)
     # span CONTENT rides one doc-keyed inner join (runs is small —
     # only long-shared-run docs survive the min_run filter)
     spans = runs.join(t, on=id_col).select(
@@ -1176,38 +1159,19 @@ def span_removal(
             )
         ).alias("span_h"),
     )
-    wc = W.partitionBy("span_h").orderBy(F.asc(id_col), F.asc("p1"))
+    wc = Window.partitionBy("span_h").orderBy(F.asc(id_col), F.asc("p1"))
     removable = (
         spans.withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") >= 2)
         .select(id_col, "p1", "tend")
     )
-    # one struct per removable SPAN (not per position): the coverage
-    # test below is interval membership, so a whole-clone doc costs
-    # O(tokens), not O(tokens²)
+    # one struct per removable SPAN (not per position)
     cut = removable.groupBy(id_col).agg(
         F.sort_array(F.collect_list(F.struct("p1", "tend"))).alias(
             "cut_ivals"
         )
     )
-    out = t.join(cut, on=id_col).select(
-        id_col,
-        F.col("otoks"),
-        F.filter(
-            F.col("otoks"),
-            lambda x, i: ~F.exists(
-                F.col("cut_ivals"),
-                lambda iv: (i + 1 >= iv["p1"]) & (i + 1 <= iv["tend"]),
-            ),
-        ).alias("kept"),
-    )
-    return out.select(
-        id_col,
-        F.size("otoks").cast("long").alias("n_tokens"),
-        (F.size("otoks") - F.size("kept")).cast("long").alias("n_removed"),
-        F.size("kept").cast("long").alias("n_kept"),
-        F.array_join(F.col("kept"), " ").alias("dedup_text"),
-    )
+    return _cut_and_report(t, cut, id_col)
 
 
 def corpus_gram_hashes(
@@ -1222,10 +1186,7 @@ def corpus_gram_hashes(
     production pipeline materializes ONCE per corpus snapshot and
     reuses for every incoming crawl batch (persist it, or write it
     bucketed by ``gh`` so the batch semi-join co-locates)."""
-    t = corpus.select(
-        id_col,
-        F.transform(token_array(F.col(text_col)), F.lower).alias("toks"),
-    )
+    t = _lowered_tokens(corpus, text_col, id_col)
     return _gram_hashes(t, id_col, n).select("gh").distinct()
 
 
@@ -1275,10 +1236,7 @@ def span_removal_between(
         raise ValueError(
             "exactly one of corpus / corpus_grams must be given"
         )
-    t = batch.select(
-        id_col,
-        token_array(F.col(text_col)).alias("otoks"),
-    ).withColumn("toks", F.transform(F.col("otoks"), F.lower))
+    t = _lowered_tokens(batch, text_col, id_col)
     cg = (
         corpus_grams.select("gh")
         if corpus_grams is not None
@@ -1294,26 +1252,9 @@ def span_removal_between(
         .join(cg, on="gh", how="left_semi")
         .select(id_col, "pos")
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(id_col).orderBy(F.asc("pos"))
-    islands = flagged.select(
-        id_col,
-        "pos",
-        (F.col("pos") - F.row_number().over(w)).alias("island"),
-    )
-    runs = (
-        islands.groupBy(id_col, "island")
-        .agg(
-            F.min("pos").alias("p1"),
-            F.max("pos").alias("p2"),
-            F.count("*").alias("run_len"),
-        )
-        .filter(F.col("run_len") >= min_run)
-        .drop("island", "run_len")
-    )
     cut = (
-        runs.join(t.select(id_col, F.size("toks").alias("_sz")), on=id_col)
+        _runs(flagged, id_col, min_run)
+        .join(t.select(id_col, F.size("toks").alias("_sz")), on=id_col)
         .select(
             id_col,
             F.struct(
@@ -1326,21 +1267,4 @@ def span_removal_between(
         .groupBy(id_col)
         .agg(F.sort_array(F.collect_list("_iv")).alias("cut_ivals"))
     )
-    out = t.join(cut, on=id_col).select(
-        id_col,
-        F.col("otoks"),
-        F.filter(
-            F.col("otoks"),
-            lambda x, i: ~F.exists(
-                F.col("cut_ivals"),
-                lambda iv: (i + 1 >= iv["p1"]) & (i + 1 <= iv["tend"]),
-            ),
-        ).alias("kept"),
-    )
-    return out.select(
-        id_col,
-        F.size("otoks").cast("long").alias("n_tokens"),
-        (F.size("otoks") - F.size("kept")).cast("long").alias("n_removed"),
-        F.size("kept").cast("long").alias("n_kept"),
-        F.array_join(F.col("kept"), " ").alias("dedup_text"),
-    )
+    return _cut_and_report(t, cut, id_col)

@@ -25,7 +25,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,

@@ -73,13 +73,6 @@ def lang_scores_of_tokens(toks: Column) -> dict[str, Column]:
     return out
 
 
-def predicted_lang(text: Column) -> Column:
-    """Heuristic language ID from raw text — see
-    :func:`predicted_lang_of_tokens` (and prefer it with a materialized
-    token column in hot paths)."""
-    return predicted_lang_of_tokens(F.transform(token_array(text), F.lower))
-
-
 def predicted_lang_of_tokens(toks: Column) -> Column:
     """Heuristic language ID: argmax of stopword hits, ties broken by
     language code order, 'und' when no list scores > 0.

@@ -514,23 +514,52 @@ def apply_cdc(
     involved. At 100 TB the change feed aggregates before it ever
     meets the (bucketed) target.
     """
+    return cdc_snapshot(
+        target, cdc_winners(changes, keys, seq_col, op_col), keys, op_col,
+        delete_op,
+    )
+
+
+def cdc_winners(
+    changes: DataFrame, keys: Sequence[str], seq_col: str, op_col: str
+) -> DataFrame:
+    """Per key, the winning change ``max(struct(seq, payload...))``,
+    unpacked to the change columns (keys, *seq_col*, op, payload): the
+    winner step of :func:`apply_cdc` and of the streaming twin's
+    compacted-changelog fold (``streaming/jobs.cdc_state_update``)."""
     key_list = list(keys)
     rest = [c for c in changes.columns if c not in {*key_list, seq_col}]
     if op_col not in rest:
         raise ValueError(f"op_col {op_col!r} must be a changes column")
-    latest = (
+    return (
         changes.groupBy(*key_list)
         .agg(
             F.max(
                 F.struct(F.col(seq_col), *[F.col(c) for c in rest])
             ).alias("_c")
         )
-        .select(*key_list, *[F.col(f"_c.{c}").alias(c) for c in rest])
+        .select(
+            *key_list,
+            *[F.col(f"_c.{c}").alias(c) for c in [seq_col, *rest]],
+        )
     )
+
+
+def cdc_snapshot(
+    target: DataFrame,
+    winners: DataFrame,
+    keys: Sequence[str],
+    op_col: str,
+    delete_op: str = "delete",
+) -> DataFrame:
+    """SCD-1 snapshot of *target* after the :func:`cdc_winners`
+    *winners*: target rows the feed never spoke for survive (anti-join
+    on the keys), and every non-delete winner upserts its payload."""
+    key_list = list(keys)
     kept = target.join(
-        latest.select(*key_list), on=key_list, how="left_anti"
+        winners.select(*key_list), on=key_list, how="left_anti"
     )
-    ups = latest.filter(F.col(op_col) != F.lit(delete_op))
+    ups = winners.filter(F.col(op_col) != F.lit(delete_op))
     return kept.unionByName(ups.select(*target.columns))
 
 

@@ -27,6 +27,12 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from air_quality_etl_pipeline_spark.plans.merge import (
+    apply_cdc_scd2,
+    cdc_snapshot,
+    cdc_winners,
+)
+
 _sink_ids = itertools.count()
 
 
@@ -405,8 +411,8 @@ def cdc_state_update(
     sequence + op + payload) into the running per-key winner state.
 
     The state is the COMPACTED CHANGELOG — per key, ``max(struct(seq,
-    op, payload...))``, the identical total order ``plans/merge.
-    apply_cdc`` resolves winners with. ``max`` is associative,
+    op, payload...))`` (``plans/merge.cdc_winners``, the same winner
+    step ``apply_cdc`` runs). ``max`` is associative,
     commutative and idempotent, so ANY micro-batching of the feed —
     including duplicate deliveries repeated across batch boundaries —
     converges to the state of a single batch apply; that algebraic
@@ -417,24 +423,8 @@ def cdc_state_update(
     state stays key-cardinality-sized (tombstones included, so a
     late-redelivered stale upsert can never resurrect a deleted key).
     """
-    key_list = list(keys)
-    rest = [c for c in batch.columns if c not in {*key_list, seq_col}]
-    if op_col not in rest:
-        raise ValueError(f"op_col {op_col!r} must be a changes column")
     ev = batch if prev is None else prev.unionByName(batch)
-    return (
-        ev.groupBy(*key_list)
-        .agg(
-            F.max(
-                F.struct(F.col(seq_col), *[F.col(c) for c in rest])
-            ).alias("_c")
-        )
-        .select(
-            *key_list,
-            F.col(f"_c.{seq_col}").alias(seq_col),
-            *[F.col(f"_c.{c}").alias(c) for c in rest if c != seq_col],
-        )
-    )
+    return cdc_winners(ev, keys, seq_col, op_col)
 
 
 def cdc_snapshot_from_state(
@@ -448,18 +438,14 @@ def cdc_snapshot_from_state(
     """Materialize the SCD-1 snapshot from the compacted changelog
     state: live winners project their payload; *baseline* rows (the
     pre-stream target) survive only where the feed never spoke —
-    exactly ``plans/merge.apply_cdc``'s kept ∪ upserts split, so the
-    streaming and batch paths converge to the same table."""
-    key_list = list(keys)
-    live = state.filter(F.col(op_col) != F.lit(delete_op)).drop(
-        seq_col, op_col
-    )
+    ``plans/merge.cdc_snapshot``, the kept ∪ upserts split
+    ``apply_cdc`` ends with, so the streaming and batch paths converge
+    to the same table."""
     if baseline is None:
-        return live
-    kept = baseline.join(
-        state.select(*key_list), on=key_list, how="left_anti"
-    )
-    return kept.unionByName(live.select(*baseline.columns))
+        return state.filter(F.col(op_col) != F.lit(delete_op)).drop(
+            seq_col, op_col
+        )
+    return cdc_snapshot(baseline, state, keys, op_col, delete_op)
 
 
 def run_cdc_stream(
@@ -620,8 +606,6 @@ def cdc_scd2_history(
     ``track_history_on`` with out-of-order first deliveries (see the
     contract note on ``apply_cdc_scd2``; DLT gets the same guarantee
     from events retained in pipeline state)."""
-    from air_quality_etl_pipeline_spark.plans.merge import apply_cdc_scd2
-
     return apply_cdc_scd2(
         None,
         spark.read.parquet(log_path),

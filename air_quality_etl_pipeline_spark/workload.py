@@ -31,7 +31,7 @@ from typing import TypeVar
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.functions.core import round_portable, safe_div
+from air_quality_etl_pipeline_spark.functions.core import round_portable
 from air_quality_etl_pipeline_spark.operators.buckets import (
     binary_category,
     bucketize,

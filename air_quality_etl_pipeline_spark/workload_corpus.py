@@ -2282,7 +2282,6 @@ def q_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=4,
         threshold=0.5,
         hash_family="md5",
-        shingler="word",
     )
     band = (
         F.when(F.col("jaccard") >= 0.9, F.lit("0.9+"))

@@ -367,7 +367,6 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=4,
         threshold=0.7,
         hash_family="md5",
-        shingler="word",
     )
     nt = truth.agg(F.count("*").cast("long").alias("n_true"))
     nf = found.agg(F.count("*").cast("long").alias("n_found"))

@@ -22,7 +22,6 @@ from air_quality_etl_pipeline_spark.operators.cache import materialize
 from air_quality_etl_pipeline_spark.operators.dedup import (
     exact_dup_groups,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     simhash_bits,
     simhash_pairs,
 )
@@ -46,8 +45,6 @@ from air_quality_etl_pipeline_spark.operators.text import (
     PHONE_PATTERN,
     URL_PATTERN,
     bpe_token_count,
-    fingerprint,
-    predicted_lang,
     quality_score,
     repetition_stats,
     scrub_text,
@@ -87,7 +84,7 @@ def _shingles_sql(expr: str = "text", n: int = 3) -> str:
 
 def _word_shingles_sql(n: int = 5) -> str:
     """Distinct word n-grams over a ``toks`` array column — mirrors
-    functions.core.word_shingles (DuckDB list slice is inclusive, Spark
+    functions.core.word_shingles_of_tokens (DuckDB list slice is inclusive, Spark
     ``slice(toks, i, n)`` is start+length; both clamp at the end)."""
     return (
         f"list_distinct([array_to_string(toks[i:i+{n - 1}], ' ') "
@@ -480,7 +477,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from air_quality_etl_pipeline_spark.functions.core import char_shingles
     from air_quality_etl_pipeline_spark.operators.dedup import (
         collapse_exact_clones,
-        jaccard_of_arrays,
+        jaccard_join_back,
         minhash_lsh_candidates,
     )
 
@@ -496,7 +493,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and only the irreducible output expansion scales with clones.
     members, reps = collapse_exact_clones(d, "doc_id")
     _, cands = minhash_lsh_candidates(
-        reps, "doc_id", "text", n=5, num_hashes=8, bands=4, shingler="word"
+        reps, "doc_id", "text", n=5, num_hashes=8, bands=4
     )
     # shingle ONLY the candidate docs: char_shingles' array_distinct is
     # O(len²) per row and costs ~2 s over the full sf0.1 corpus, while
@@ -516,24 +513,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(F.broadcast(cand_ids), on="doc_id", how="left_semi")
         .select(
             F.col("doc_id").alias("_id"),
-            char_shingles(F.col("text"), 3).alias("_c"),
+            char_shingles(F.col("text"), 3).alias("_sh"),
         )
     )
-    verified = (
-        cands.join(
-            csh.select(F.col("_id").alias("id_a"), F.col("_c").alias("c_a")),
-            on="id_a",
-        )
-        .join(
-            csh.select(F.col("_id").alias("id_b"), F.col("_c").alias("c_b")),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard", jaccard_of_arrays(F.col("c_a"), F.col("c_b"))
-        )
-        .filter(F.col("jaccard") >= 0.8)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = jaccard_join_back(cands, csh, csh, 0.8)
     rep_pairs = verified.withColumn(
         "jaccard", round_portable(F.col("jaccard"), 4)
     )

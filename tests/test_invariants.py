@@ -249,11 +249,11 @@ def test_simhash_band_lsh_has_exact_recall(spark, texts):
     assert banded == brute
 
 
-def test_hash_family_fast_path_finds_same_pairs(spark):
-    """The xxhash64 production path changes only CANDIDATE generation;
-    verification filters on true Jaccard/Hamming, so on clearly-separated
-    data (near-identical vs unrelated docs) both families must emit the
-    same verified pair set."""
+def test_md5_lsh_paths_find_near_dup_pairs(spark):
+    """On clearly-separated data (near-identical vs unrelated docs),
+    both md5 LSH paths surface the near-dup pairs: MinHash banding
+    verified by true Jaccard, and SimHash bit bands verified by
+    Hamming distance."""
     from air_quality_etl_pipeline_spark.operators.dedup import (
         minhash_lsh_pairs,
         simhash_pairs,
@@ -271,36 +271,19 @@ def test_hash_family_fast_path_finds_same_pairs(spark):
 
     mh = {
         tuple(sorted((r["id_a"], r["id_b"])))
-        for fam in ("md5", "xxhash64")
         for r in minhash_lsh_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5, hash_family=fam
+            df, "doc_id", "text", n=3, threshold=0.5
         ).collect()
     }
-    md5_only = {
-        tuple(sorted((r["id_a"], r["id_b"])))
-        for r in minhash_lsh_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5, hash_family="md5"
-        ).collect()
-    }
-    assert mh == md5_only  # union equals md5's set → xxhash64 found the same
-    assert (0, 1) in md5_only and (0, 3) in md5_only
+    assert (0, 1) in mh and (0, 3) in mh
 
-    sim_sets = []
-    for fam in ("md5", "xxhash64"):
-        sim_sets.append(
-            {
-                tuple(sorted((r["id_a"], r["id_b"])))
-                for r in simhash_pairs(
-                    df, "doc_id", "text", bits=48, max_hamming=10,
-                    hash_family=fam,
-                ).collect()
-            }
-        )
-    # hamming VALUES differ per family; the banded recall property (all
-    # pairs within max_hamming found) holds for both — each family's set
-    # must contain the near-dup pairs
-    for s in sim_sets:
-        assert (0, 1) in s and (0, 3) in s
+    sim = {
+        tuple(sorted((r["id_a"], r["id_b"])))
+        for r in simhash_pairs(
+            df, "doc_id", "text", bits=48, max_hamming=10
+        ).collect()
+    }
+    assert (0, 1) in sim and (0, 3) in sim
 
 
 def test_minhash_signatures_match_python_ground_truth(spark):

@@ -4,7 +4,8 @@ every keyword argument it passes to a function imported from there is
 one that function's ``def`` accepts (read from the source, no Spark).
 Each script also takes its own directory off the head of ``sys.path``,
 and ``profile.py`` runs end to end. Also from the source: every
-module-level function of the package reads each of its parameters."""
+module-level function of the package reads each of its parameters, and
+every package module uses each name it imports."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import ast
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -187,6 +189,48 @@ def test_package_functions_read_every_parameter():
     ]
     assert PACKAGE
     assert not unread, "parameters never read:\n" + "\n".join(unread)
+
+
+def _unused_imports(path: str) -> list[str]:
+    """``name (line N)`` for each name *path* imports and never reads.
+    An import on a line marked ``# noqa: F401`` is kept on purpose (a
+    registry side-effect import or a re-export) and is skipped, as are
+    names listed in ``__all__``."""
+    with open(path) as f:
+        source = f.read()
+    lines = source.splitlines()
+    tree = ast.parse(source)
+    imported: dict[str, int] = {}
+    exported: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                marked = {lines[node.lineno - 1], lines[a.lineno - 1]}
+                if not any(re.search(r"noqa:[^#]*F401", ln) for ln in marked):
+                    imported[(a.asname or a.name).split(".")[0]] = a.lineno
+        elif isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            exported |= {
+                c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)
+            }
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [
+        f"{name} (line {line})"
+        for name, line in sorted(imported.items())
+        if name not in read and name not in exported
+    ]
+
+
+def test_package_modules_use_every_import():
+    unused = [
+        f"{os.path.relpath(path, REPO)}: {u}"
+        for path in PACKAGE
+        for u in _unused_imports(path)
+    ]
+    assert not unused, "imported but never used:\n" + "\n".join(unused)
 
 
 def test_scripts_exist():

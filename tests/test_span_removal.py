@@ -11,10 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.functions.core import token_array
-from air_quality_etl_pipeline_spark.operators.dedup import (
-    shared_gram_positions,
-    span_removal,
-)
+from air_quality_etl_pipeline_spark.operators.dedup import span_removal
 
 SPAN = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
 
@@ -128,25 +125,6 @@ def test_overlapping_islands_never_double_count(spark):
         assert len(r["dedup_text"].split()) == r["n_kept"] or (
             r["dedup_text"] == "" and r["n_kept"] == 0
         )
-
-
-def test_shared_gram_positions_approx_matches_exact_small(spark):
-    """approx=True (approx_count_distinct gate) flags the same
-    positions as the exact min≠max fold at small cardinalities —
-    the sketch is exact when every gram has ≤2 distinct docs."""
-    d = _docs(
-        spark,
-        [(1, f"u1 {SPAN} t1"), (2, f"u2 {SPAN} t2"), (3, "zz yy xx ww vv")],
-    )
-    exact = {
-        (r["doc_id"], r["pos"])
-        for r in shared_gram_positions(d).collect()
-    }
-    approx = {
-        (r["doc_id"], r["pos"])
-        for r in shared_gram_positions(d, approx=True).collect()
-    }
-    assert exact == approx and exact
 
 
 # ---------------------------------------------------------------------------

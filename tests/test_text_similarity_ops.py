@@ -545,6 +545,29 @@ def test_ppjoin_exact_rational_threshold_arithmetic(spark):
         assert ("a", "b") in got, f"positional={positional}"
 
 
+def test_ngram_jaccard_keeps_pair_at_exact_threshold(spark):
+    """Boundary regression: A's 55 words are a subset of B's 100, so
+    J = 55/100 = 0.55 is EXACTLY the threshold and the pair must be
+    returned. A float size prefilter ``min ≥ t·max`` evaluated
+    55 ≥ 55.00000000000001 and dropped it."""
+    from air_quality_etl_pipeline_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    words = [f"w{i:03d}" for i in range(100)]
+    df = spark.createDataFrame(
+        [(0, " ".join(words[:55])), (1, " ".join(words))],
+        ["doc_id", "text"],
+    )
+    got = [
+        (r.id_a, r.id_b, r.jaccard)
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", "text", n=1, threshold=0.55, shingler="word"
+        ).collect()
+    ]
+    assert got == [(0, 1, 0.55)]
+
+
 # ---------------------------------------------------------------------------
 # write_with_metrics: QA counters ride the write job (no second scan)
 # ---------------------------------------------------------------------------
