@@ -9,6 +9,11 @@ The order is the registration order: this module's queries, then each
 ``workload_*`` module's in import order. ``oracle.compare`` checks one
 query against its oracle.
 
+Import rule: a ``workload_*`` module imports this module's helpers (all
+defined above the tail block that loads the ``workload_*`` modules),
+``oracle_fragments`` and the layers below, never another ``workload_*``
+module.
+
 Engine-portability rules used throughout (so order-insensitive value
 hashes match across Spark and DuckDB):
 
@@ -38,10 +43,18 @@ from air_quality_etl_pipeline_spark.operators.buckets import (
     flag_threshold,
     map_by_lists,
 )
-from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first, keep_in, valid_rows
+from air_quality_etl_pipeline_spark.operators.cleaning import (
+    dedup_first,
+    keep_in,
+    valid_rows,
+)
 from air_quality_etl_pipeline_spark.operators.dates import with_date_parts
 from air_quality_etl_pipeline_spark.plans import metrics
-from air_quality_etl_pipeline_spark.plans.gold import star_join, surrogate_key
+from air_quality_etl_pipeline_spark.plans.gold import (
+    star_join,
+    surrogate_key,
+    surrogate_key_ranked,
+)
 from air_quality_etl_pipeline_spark.plans.merge import merge_insert_if_absent
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
@@ -157,6 +170,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = _spread_small_scan(spark, spark.read.parquet(path), path)
         _SCAN_CACHE[key] = df
     return df
+
+
+def _sql_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
+    for t in tables:
+        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
 
 
 #: prepared-statement cache: (session, sf_dir, query name) -> the fully
@@ -366,7 +384,6 @@ def q_dim_part_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key comes from the bucketed two-phase
     :func:`~.plans.gold.surrogate_key_ranked`, not the
     single-partition `surrogate_key` window."""
-    from air_quality_etl_pipeline_spark.plans.gold import surrogate_key_ranked
 
     p = _t(spark, sf_dir, "part")
     p = surrogate_key_ranked(
@@ -1322,11 +1339,11 @@ def q_distinct_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # These register themselves into QUERIES on import.
 from air_quality_etl_pipeline_spark import workload_llm  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_sources  # noqa: E402,F401
+from air_quality_etl_pipeline_spark import workload_corpus  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_curation  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_temporal  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_analytics  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_sketches  # noqa: E402,F401
-from air_quality_etl_pipeline_spark import workload_corpus  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_sql  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_training  # noqa: E402,F401
 from air_quality_etl_pipeline_spark import workload_graph  # noqa: E402,F401

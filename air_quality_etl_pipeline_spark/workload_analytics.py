@@ -42,11 +42,19 @@ from air_quality_etl_pipeline_spark.functions.core import (
     round_portable,
     token_array,
 )
-from air_quality_etl_pipeline_spark.operators.buckets import aqi_category
 from air_quality_etl_pipeline_spark.functions.portable_math import (
     dec38_to_double_portable,
     sql_dec38_to_double,
 )
+from air_quality_etl_pipeline_spark.operators.buckets import aqi_category
+from air_quality_etl_pipeline_spark.operators.cleaning import quality_report
+from air_quality_etl_pipeline_spark.operators.order_stats import (
+    sequence_gaps,
+    with_global_rank,
+    with_running_max,
+    with_running_sum,
+)
+from air_quality_etl_pipeline_spark.oracle_fragments import TOKS, _REV
 from air_quality_etl_pipeline_spark.plans.merge import (
     apply_cdc,
     apply_cdc_scd2,
@@ -54,8 +62,13 @@ from air_quality_etl_pipeline_spark.plans.merge import (
     table_diff,
     upsert_replace,
 )
-from air_quality_etl_pipeline_spark.workload import _dec_sum, _events, _t, register
-from air_quality_etl_pipeline_spark.workload_llm import TOKS
+from air_quality_etl_pipeline_spark.workload import (
+    _dec_sum,
+    _events,
+    _sql_views,
+    _t,
+    register,
+)
 
 # ---------------------------------------------------------------------------
 # Multi-grain: GROUPING SETS (complements cube_measures / rollup_measures)
@@ -196,9 +209,6 @@ def q_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first ``n mod k`` buckets ``⌈n/k⌉`` rows and the rest ``⌊n/k⌋``;
     with the total tie order, cume_dist is exactly ``rn / n``. Both are
     EXACT — no approx-quantile tradeoff needed."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     o = _t(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
@@ -1545,7 +1555,6 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported as (rule, n_violations) rows a pipeline gate can assert
     on. The reference's 45-states ingest gate (C6) is the special case
     of one rule."""
-    from air_quality_etl_pipeline_spark.operators.cleaning import quality_report
 
     li = _t(spark, sf_dir, "lineitem")
     return quality_report(
@@ -1918,17 +1927,6 @@ def q_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # independent) cast to DOUBLE only at the end, so both engines see
 # bit-identical values.
 # ---------------------------------------------------------------------------
-
-_REV = (
-    "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)"
-)
-
-
-def _sql_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
-    for t in tables:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-
 
 @register(
     "sql_returned_items",
@@ -2404,9 +2402,6 @@ def q_orders_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA in TPC-H proportions, so it uses the bucketed two-phase
     :func:`~.operators.order_stats.with_global_rank` (never a global
     single-partition sort)."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     o = _t(spark, sf_dir, "orders")
     x = o.groupBy("o_custkey").agg(F.count("*").alias("n_orders"))
@@ -3462,9 +3457,6 @@ def q_abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator's own bucket-totals collect (``total_col`` — zero extra
     jobs), never an unpartitioned window and never a second scan of
     the lineitem aggregate."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_running_sum,
-    )
 
     li = _t(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
@@ -3694,9 +3686,6 @@ def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count rides the operator's bucket-counts collect
     (``total_col`` — no separate count job re-scanning events) — no
     unpartitioned window anywhere."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     e = _events(spark, sf_dir)
     # PSI is defined over OBSERVED values: exclude nulls explicitly
@@ -3979,10 +3968,6 @@ def q_peak_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`~.operators.order_stats.with_running_sum` (time-range
     buckets, exact offsets), never an unpartitioned window."""
     from pyspark.sql import Window
-
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_running_sum,
-    )
 
     # Collapse duplicate-(user, ts) peers BEFORE the window: session
     # intervals are functions of the DISTINCT timestamps (sid
@@ -4484,9 +4469,6 @@ def q_id_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary, never a global single-partition sort. Arithmetic is
     integer. (Degenerate zero-gap data yields the 0/0/0 row on both
     engines.)"""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        sequence_gaps,
-    )
 
     o = _t(spark, sf_dir, "orders")
     k = o.select(F.col("o_orderkey").alias("id")).distinct()
@@ -4896,9 +4878,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across engines. Three rank passes = three bounded
     summary collects, so ``prepared`` rebuilds it and the bench pays
     them)."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     o = _t(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
@@ -5208,9 +5187,6 @@ def q_record_breaking_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays it). The oracle is the
     plain windowed-frame SQL, so the two engines verify each other
     through different algorithms."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_running_max,
-    )
 
     o = _t(spark, sf_dir, "orders")
     r = with_running_max(
@@ -5254,9 +5230,6 @@ def q_skyline_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     build, so ``prepared`` rebuilds it), one partitioned window pass,
     no join back, no bounded-domain assumption. Oracle: the quadratic NOT EXISTS form
     (cross-algorithm check, shared with the sibling)."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_running_max,
-    )
 
     p = _t(spark, sf_dir, "part")
     r = with_running_max(

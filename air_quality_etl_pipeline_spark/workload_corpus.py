@@ -38,22 +38,27 @@ from air_quality_etl_pipeline_spark.functions.portable_math import (
     sql_mean_round6,
     sql_quantize_micro9,
 )
+from air_quality_etl_pipeline_spark.operators.dedup import (
+    minhash_lsh_pairs,
+    shared_gram_positions,
+    span_removal,
+    span_removal_between,
+)
 from air_quality_etl_pipeline_spark.operators.text import (
     LANG_STOPWORDS,
+    crossencoder_rerank_stub,
     fingerprint,
     predicted_lang_of_tokens,
     word_bigrams,
 )
-from air_quality_etl_pipeline_spark.workload import _t, register
-from air_quality_etl_pipeline_spark.operators.dedup import minhash_lsh_pairs
-from air_quality_etl_pipeline_spark.workload_llm import (
+from air_quality_etl_pipeline_spark.oracle_fragments import (
+    LTOKS,
+    SPAN_BETWEEN_ORACLE,
     TOKS,
     _minhash_oracle,
     _sql_list,
 )
-
-#: lowercased whitespace tokens — the shared tokenization of this module
-LTOKS = f"list_transform({TOKS}, x -> lower(x))"
+from air_quality_etl_pipeline_spark.workload import _t, register
 
 #: distinct word-5-gram SQL over a ``toks`` array column (mirrors
 #: functions.core.word_shingles_of_tokens, incl. the ≥1 clamp)
@@ -1518,10 +1523,6 @@ def q_dedup_span_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id."""
     from pyspark.sql import Window as W
 
-    from air_quality_etl_pipeline_spark.operators.dedup import (
-        shared_gram_positions,
-    )
-
     d = _t(spark, sf_dir, "documents")
     flagged = shared_gram_positions(d, "text", "doc_id", 5)
     w = W.partitionBy("doc_id").orderBy(F.asc("pos"))
@@ -1595,54 +1596,9 @@ def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical cut text via substring arithmetic over the same island
     bounds. Token arrays never enter a gram-keyed exchange — two
     doc-keyed inner joins only (span-content slice, final cut)."""
-    from air_quality_etl_pipeline_spark.operators.dedup import span_removal
 
     d = _t(spark, sf_dir, "documents")
     return span_removal(d, "text", "doc_id", n=5, min_run=8)
-
-
-#: shared by the batch query below and its streaming twin in
-#: workload_sources (same oracle applies because per-document output
-#: depends only on (document, corpus), never on batch slicing)
-SPAN_BETWEEN_ORACLE = f"""
-    WITH t AS (SELECT doc_id, {TOKS} AS otoks, {LTOKS} AS toks
-               FROM documents),
-    b AS (SELECT * FROM t WHERE doc_id % 4 = 0),
-    c AS (SELECT * FROM t WHERE doc_id % 4 <> 0),
-    cg AS (SELECT DISTINCT
-             ('0x' || substr(md5(array_to_string(toks[u.i:u.i+4], ' ')),
-              1, 15))::BIGINT AS gh
-           FROM c, unnest(range(1, greatest(len(toks) - 4, 1) + 1)) AS u(i)),
-    bg AS (SELECT doc_id, u.i AS pos,
-             ('0x' || substr(md5(array_to_string(toks[u.i:u.i+4], ' ')),
-              1, 15))::BIGINT AS gh
-           FROM b, unnest(range(1, greatest(len(toks) - 4, 1) + 1)) AS u(i)),
-    flagged AS (SELECT bg.doc_id, bg.pos FROM bg JOIN cg USING (gh)),
-    isl AS (SELECT doc_id, pos, pos - row_number() OVER (
-              PARTITION BY doc_id ORDER BY pos ASC) AS island
-            FROM flagged),
-    runs AS (SELECT doc_id, min(pos) AS p1, max(pos) AS p2
-             FROM isl GROUP BY doc_id, island HAVING count(*) >= 8),
-    spans AS (SELECT r.doc_id, r.p1,
-                     least(r.p2 + 4, len(t2.otoks)) AS tend
-              FROM runs r JOIN b t2 USING (doc_id)),
-    cut AS (SELECT DISTINCT doc_id, u.tp
-            FROM spans, unnest(range(p1, tend + 1)) AS u(tp)),
-    toks_pos AS (SELECT doc_id, u.i AS tp, otoks[u.i] AS tok
-                 FROM b, unnest(range(1, len(otoks) + 1)) AS u(i)),
-    joined AS (SELECT tp2.doc_id, tp2.tok, tp2.tp,
-                      (c2.tp IS NOT NULL) AS removed
-               FROM toks_pos tp2 LEFT JOIN cut c2
-                 ON tp2.doc_id = c2.doc_id AND tp2.tp = c2.tp
-               WHERE tp2.doc_id IN (SELECT DISTINCT doc_id FROM cut))
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(count(*) FILTER (removed) AS BIGINT) AS n_removed,
-           CAST(count(*) FILTER (NOT removed) AS BIGINT) AS n_kept,
-           coalesce(string_agg(tok, ' ' ORDER BY tp)
-                    FILTER (NOT removed), '') AS dedup_text
-    FROM joined GROUP BY doc_id
-    """
 
 
 @register("span_removal_between", SPAN_BETWEEN_ORACLE)
@@ -1658,9 +1614,6 @@ def q_span_removal_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_span_removal_between.py. All logic in
     :func:`operators.dedup.span_removal_between`; the corpus ships
     only 8-byte gram hashes into the semi-join."""
-    from air_quality_etl_pipeline_spark.operators.dedup import (
-        span_removal_between,
-    )
 
     d = _t(spark, sf_dir, "documents")
     return span_removal_between(
@@ -1916,9 +1869,6 @@ def q_rerank_crossencoder_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     search stack runs — cheap recall stage feeding an expensive
     precision stage over a constant-sized candidate set. See
     operators.text.crossencoder_rerank_stub."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        crossencoder_rerank_stub,
-    )
 
     cands = q_bm25_search(spark, sf_dir)
     return crossencoder_rerank_stub(cands, topk=5)

@@ -12,20 +12,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.functions.core import round_portable
+from air_quality_etl_pipeline_spark.functions.core import (
+    md5_long,
+    round_portable,
+    token_array,
+    word_shingles_of_tokens,
+)
+from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first
 from air_quality_etl_pipeline_spark.operators.dedup import (
     simhash_component_edges,
     simhash_pairs,
 )
 from air_quality_etl_pipeline_spark.operators.graph import dedup_clusters
+from air_quality_etl_pipeline_spark.operators.packing import (
+    chunk_documents,
+    decontaminate,
+    pack_sequences,
+)
 from air_quality_etl_pipeline_spark.operators.sampling import (
     hash_sample,
     keep_top_k_per_group,
+    mixture_sample,
+    sample_weighted,
     stratified_hash_sample,
 )
-from air_quality_etl_pipeline_spark.operators.text import tfidf_terms
+from air_quality_etl_pipeline_spark.operators.text import (
+    fingerprint,
+    quality_classifier_score,
+    quality_classifier_weights,
+    quality_score,
+    scrub_text,
+    tfidf_terms,
+)
+from air_quality_etl_pipeline_spark.oracle_fragments import (
+    LTOKS,
+    QC_B,
+    QC_BUCKET,
+    QC_GRAMS,
+    SIMHASH_PAIRS_CTES,
+    TOKS,
+    qc_qln,
+)
 from air_quality_etl_pipeline_spark.workload import _t, register
-from air_quality_etl_pipeline_spark.workload_llm import SIMHASH_PAIRS_CTES
 
 # SQL twin of operators.sampling.sample_bucket (md5_long % 100).
 _BUCKET_SQL = (
@@ -33,17 +61,10 @@ _BUCKET_SQL = (
     "::BIGINT % 100)"
 )
 
-#: whitespace tokens, [] on blank — mirrors functions.core.token_array
-_TOKS = (
-    "CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(text), '\\s+') END"
-)
-
-
 @register(
     "tfidf_terms",
     f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
+    WITH t AS (SELECT doc_id, {LTOKS} AS toks
                FROM documents),
     terms AS (SELECT doc_id, unnest(toks) AS term FROM t),
     n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
@@ -255,7 +276,6 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the split is a scan-local hash; only the PAIR GRAPH
     and the (doc, cluster) relation join — both near-dup-sized, never
     corpus² (same contract as dedup_clusters)."""
-    from air_quality_etl_pipeline_spark.functions.core import md5_long
 
     d = _t(spark, sf_dir, "documents")
     pairs = simhash_pairs(
@@ -339,7 +359,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  '<EMAIL>', 'g') AS text
       FROM documents),
     scored AS (
-      SELECT doc_id, source, text, {_TOKS} AS toks FROM scrubbed),
+      SELECT doc_id, source, text, {TOKS} AS toks FROM scrubbed),
     gated AS (
       SELECT doc_id, source, text, toks,
              0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
@@ -372,13 +392,6 @@ def q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Catalyst expressions rather than materialized stages, which is
     exactly how the 100 TB pipeline should run (no intermediate
     tables, full pushdown through every stage)."""
-    from air_quality_etl_pipeline_spark.functions.core import token_array
-    from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first
-    from air_quality_etl_pipeline_spark.operators.text import (
-        fingerprint,
-        quality_score,
-        scrub_text,
-    )
 
     d = _t(spark, sf_dir, "documents")
     scrubbed = d.select(
@@ -398,19 +411,9 @@ def q_corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_corpus_curation_e2e_v2() -> None:
-    """Classifier-oracle fragments come from the LEAF module
-    oracle_fragments (r13): importing them from workload_training
-    here was a circular-import landmine — this module loads before
-    workload_training under workload.py's import order."""
-    from air_quality_etl_pipeline_spark.oracle_fragments import (
-        QC_B as _QC_B,
-        QC_BUCKET as _QC_BUCKET,
-        QC_GRAMS as _QC_GRAMS,
-        qc_qln as _qc_qln,
-    )
-
-    oracle = f"""
+@register(
+    "corpus_curation_e2e_v2",
+    f"""
     WITH scrubbed AS (
       SELECT doc_id, source, lang,
              regexp_replace(regexp_replace(text,
@@ -418,31 +421,31 @@ def _register_corpus_curation_e2e_v2() -> None:
                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}',
                  '<EMAIL>', 'g') AS text
       FROM documents),
-    lab AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks,
+    lab AS (SELECT doc_id, {LTOKS} AS toks,
                    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
             FROM scrubbed WHERE doc_id % 5 <> 0),
-    lg AS ({_QC_GRAMS.format(rel="lab", keep="y")}),
-    lb AS (SELECT {_QC_BUCKET} AS bucket, y FROM lg),
+    lg AS ({QC_GRAMS.format(rel="lab", keep="y")}),
+    lb AS (SELECT {QC_BUCKET} AS bucket, y FROM lg),
     cnt AS (SELECT bucket,
                    CAST(count(*) FILTER (y = 1) AS BIGINT) AS c1,
                    CAST(count(*) FILTER (y = 0) AS BIGINT) AS c0
             FROM lb GROUP BY 1),
     allb AS (SELECT r.range AS bucket,
                     coalesce(c1, 0) AS c1, coalesce(c0, 0) AS c0
-             FROM range(0, {_QC_B}) r
+             FROM range(0, {QC_B}) r
              LEFT JOIN cnt ON r.range = cnt.bucket),
-    tot AS (SELECT CAST(sum(c1) + {_QC_B} AS BIGINT) AS t1b,
-                   CAST(sum(c0) + {_QC_B} AS BIGINT) AS t0b
+    tot AS (SELECT CAST(sum(c1) + {QC_B} AS BIGINT) AS t1b,
+                   CAST(sum(c0) + {QC_B} AS BIGINT) AS t0b
             FROM allb),
     w AS (SELECT bucket,
-                 {_qc_qln("c1 + 1")} - {_qc_qln("t1b")}
-                 - {_qc_qln("c0 + 1")} + {_qc_qln("t0b")} AS wm
+                 {qc_qln("c1 + 1")} - {qc_qln("t1b")}
+                 - {qc_qln("c0 + 1")} + {qc_qln("t0b")} AS wm
           FROM allb, tot),
-    pr AS (SELECT {_qc_qln("n1")} - {_qc_qln("n0")} AS pm FROM (
+    pr AS (SELECT {qc_qln("n1")} - {qc_qln("n0")} AS pm FROM (
              SELECT CAST(count(*) FILTER (y = 1) AS BIGINT) AS n1,
                     CAST(count(*) FILTER (y = 0) AS BIGINT) AS n0
              FROM lab)),
-    tokd AS (SELECT doc_id, source, text, {_TOKS} AS toks FROM scrubbed),
+    tokd AS (SELECT doc_id, source, text, {TOKS} AS toks FROM scrubbed),
     gated AS (
       SELECT doc_id, source, text, toks,
              0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
@@ -455,8 +458,8 @@ def _register_corpus_curation_e2e_v2() -> None:
     kept AS (SELECT doc_id, source, text, toks FROM gated WHERE q >= 0.5),
     kd AS (SELECT doc_id, list_transform(toks, x -> lower(x)) AS toks
            FROM kept),
-    kg AS ({_QC_GRAMS.format(rel="kd", keep="doc_id")}),
-    kb AS (SELECT doc_id, {_QC_BUCKET} AS bucket,
+    kg AS ({QC_GRAMS.format(rel="kd", keep="doc_id")}),
+    kb AS (SELECT doc_id, {QC_BUCKET} AS bucket,
                   CAST(count(*) AS BIGINT) AS cnt
            FROM kg GROUP BY 1, 2),
     ks AS (SELECT doc_id, CAST(sum(cnt * wm) AS BIGINT) AS dot
@@ -474,75 +477,57 @@ def _register_corpus_curation_e2e_v2() -> None:
            count(*) AS n_docs,
            CAST(sum(len(toks)) AS BIGINT) AS n_tokens
     FROM deduped GROUP BY source
-    """
+    """,
+)
+def q_corpus_curation_e2e_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production curation pipeline in CCNet stage order
+    (round-11 verdict #2): scrub URLs/emails -> cheap rule gate
+    (composite quality >= 0.5) -> TRAINED quality classifier
+    (Naive Bayes log-odds over hashed grams, fit on the lang='en'
+    labeled 80% split of the scrubbed corpus, keep pred = 1) ->
+    exact dedup on the normalized-content fingerprint -> per-source
+    document/token budget report. Still ONE fused DAG: the rule
+    gate is a scan-level predicate, the classifier stage carries
+    (source, n_toks, fp) through its scoring aggregation via
+    ``keep_cols`` — one corpus pass, no score-then-self-join (this
+    runtime re-executes referenced subtrees) — and the ≤1025-row
+    weight table is trained once, persisted, and broadcast into
+    the scoring join. The rules-then-classifier ordering matters
+    at 100 TB: the cheap predicate prunes the gram explosion the
+    classifier pays for, so the expensive stage sees only
+    rule-surviving documents."""
 
-    @register("corpus_curation_e2e_v2", oracle)
-    def q_corpus_curation_e2e_v2(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The production curation pipeline in CCNet stage order
-        (round-11 verdict #2): scrub URLs/emails -> cheap rule gate
-        (composite quality >= 0.5) -> TRAINED quality classifier
-        (Naive Bayes log-odds over hashed grams, fit on the lang='en'
-        labeled 80% split of the scrubbed corpus, keep pred = 1) ->
-        exact dedup on the normalized-content fingerprint -> per-source
-        document/token budget report. Still ONE fused DAG: the rule
-        gate is a scan-level predicate, the classifier stage carries
-        (source, n_toks, fp) through its scoring aggregation via
-        ``keep_cols`` — one corpus pass, no score-then-self-join (this
-        runtime re-executes referenced subtrees) — and the ≤1025-row
-        weight table is trained once, persisted, and broadcast into
-        the scoring join. The rules-then-classifier ordering matters
-        at 100 TB: the cheap predicate prunes the gram explosion the
-        classifier pays for, so the expensive stage sees only
-        rule-surviving documents."""
-        from air_quality_etl_pipeline_spark.functions.core import (
-            token_array,
-        )
-        from air_quality_etl_pipeline_spark.operators.cleaning import (
-            dedup_first,
-        )
-        from air_quality_etl_pipeline_spark.operators.text import (
-            fingerprint,
-            quality_classifier_score,
-            quality_classifier_weights,
-            quality_score,
-            scrub_text,
-        )
+    d = _t(spark, sf_dir, "documents")
+    scrubbed = d.select(
+        "doc_id", "source", "lang",
+        scrub_text(F.col("text")).alias("text"),
+    )
+    labeled = scrubbed.filter(F.col("doc_id") % 5 != 0).withColumn(
+        "y", (F.col("lang") == "en").cast("int")
+    )
+    w = quality_classifier_weights(
+        labeled, label_col="y", n_buckets=QC_B
+    )
+    gated = scrubbed.filter(quality_score(F.col("text")) >= 0.5)
+    keyed = gated.select(
+        "doc_id",
+        "source",
+        F.size(token_array(F.col("text"))).alias("n_toks"),
+        fingerprint(F.col("text")).alias("fp"),
+        "text",
+    )
+    scored = quality_classifier_score(
+        keyed, w, n_buckets=QC_B, keep_cols=["source", "n_toks", "fp"]
+    )
+    kept = scored.filter(F.col("pred") == 1).select(
+        "doc_id", "source", "n_toks", "fp"
+    )
+    deduped = dedup_first(kept, ["fp"], order_by=["doc_id"])
+    return deduped.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_toks").cast("long").alias("n_tokens"),
+    )
 
-        d = _t(spark, sf_dir, "documents")
-        scrubbed = d.select(
-            "doc_id", "source", "lang",
-            scrub_text(F.col("text")).alias("text"),
-        )
-        labeled = scrubbed.filter(F.col("doc_id") % 5 != 0).withColumn(
-            "y", (F.col("lang") == "en").cast("int")
-        )
-        w = quality_classifier_weights(
-            labeled, label_col="y", n_buckets=_QC_B
-        )
-        gated = scrubbed.filter(quality_score(F.col("text")) >= 0.5)
-        keyed = gated.select(
-            "doc_id",
-            "source",
-            F.size(token_array(F.col("text"))).alias("n_toks"),
-            fingerprint(F.col("text")).alias("fp"),
-            "text",
-        )
-        scored = quality_classifier_score(
-            keyed, w, n_buckets=_QC_B, keep_cols=["source", "n_toks", "fp"]
-        )
-        kept = scored.filter(F.col("pred") == 1).select(
-            "doc_id", "source", "n_toks", "fp"
-        )
-        deduped = dedup_first(kept, ["fp"], order_by=["doc_id"])
-        return deduped.groupBy("source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_toks").cast("long").alias("n_tokens"),
-        )
-
-
-_register_corpus_curation_e2e_v2()
 
 
 @register(
@@ -563,9 +548,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     500, 1) — longer documents kept more often. Deterministic 60-bit
     md5 fraction as the uniform draw, so both engines make identical
     per-document decisions; reported as per-source kept counts."""
-    from air_quality_etl_pipeline_spark.operators.sampling import (
-        sample_weighted,
-    )
 
     d = _t(spark, sf_dir, "documents")
     wt = F.least(F.col("n_chars").cast("double") / F.lit(500.0), F.lit(1.0))
@@ -585,7 +567,7 @@ _GRAMS3 = (
 @register(
     "decontaminate_eval",
     f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
     raw AS (SELECT doc_id, unnest({_GRAMS3}) AS raw FROM t),
     grams AS (SELECT doc_id,
                      ('0x' || substr(md5(raw), 1, 15))::BIGINT AS g
@@ -609,7 +591,6 @@ def q_decontaminate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides before the join — the eval broadcast is ~6× smaller
     than raw strings; the corpus explodes, joins map-side, and
     re-aggregates — see operators.packing.decontaminate."""
-    from air_quality_etl_pipeline_spark.operators.packing import decontaminate
 
     d = _t(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 50 != 0)
@@ -617,20 +598,12 @@ def q_decontaminate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(train, ev, "doc_id", "text", n=3, min_hits=5)
 
 
-def _register_corpus_curation_e2e_v3() -> None:
-    """v3 = v2 + the decontamination stage between dedup and budget
-    (round-12 verdict #8) — the full production chain: scrub → rule
-    gate → trained classifier → exact dedup → eval-set decontamination
-    → budget, still ONE fused DAG."""
-    from air_quality_etl_pipeline_spark.oracle_fragments import (
-        QC_B as _QC_B,
-        QC_BUCKET as _QC_BUCKET,
-        QC_GRAMS as _QC_GRAMS,
-        qc_qln as _qc_qln,
-    )
+_G60 = "('0x' || substr(md5(raw), 1, 15))::BIGINT"
 
-    g60 = "('0x' || substr(md5(raw), 1, 15))::BIGINT"
-    oracle = f"""
+
+@register(
+    "corpus_curation_e2e_v3",
+    f"""
     WITH scrubbed AS (
       SELECT doc_id, source, lang,
              regexp_replace(regexp_replace(text,
@@ -639,31 +612,31 @@ def _register_corpus_curation_e2e_v3() -> None:
                  '<EMAIL>', 'g') AS text
       FROM documents),
     corp AS (SELECT * FROM scrubbed WHERE doc_id % 50 <> 0),
-    lab AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks,
+    lab AS (SELECT doc_id, {LTOKS} AS toks,
                    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
             FROM corp WHERE doc_id % 5 <> 0),
-    lg AS ({_QC_GRAMS.format(rel="lab", keep="y")}),
-    lb AS (SELECT {_QC_BUCKET} AS bucket, y FROM lg),
+    lg AS ({QC_GRAMS.format(rel="lab", keep="y")}),
+    lb AS (SELECT {QC_BUCKET} AS bucket, y FROM lg),
     cnt AS (SELECT bucket,
                    CAST(count(*) FILTER (y = 1) AS BIGINT) AS c1,
                    CAST(count(*) FILTER (y = 0) AS BIGINT) AS c0
             FROM lb GROUP BY 1),
     allb AS (SELECT r.range AS bucket,
                     coalesce(c1, 0) AS c1, coalesce(c0, 0) AS c0
-             FROM range(0, {_QC_B}) r
+             FROM range(0, {QC_B}) r
              LEFT JOIN cnt ON r.range = cnt.bucket),
-    tot AS (SELECT CAST(sum(c1) + {_QC_B} AS BIGINT) AS t1b,
-                   CAST(sum(c0) + {_QC_B} AS BIGINT) AS t0b
+    tot AS (SELECT CAST(sum(c1) + {QC_B} AS BIGINT) AS t1b,
+                   CAST(sum(c0) + {QC_B} AS BIGINT) AS t0b
             FROM allb),
     w AS (SELECT bucket,
-                 {_qc_qln("c1 + 1")} - {_qc_qln("t1b")}
-                 - {_qc_qln("c0 + 1")} + {_qc_qln("t0b")} AS wm
+                 {qc_qln("c1 + 1")} - {qc_qln("t1b")}
+                 - {qc_qln("c0 + 1")} + {qc_qln("t0b")} AS wm
           FROM allb, tot),
-    pr AS (SELECT {_qc_qln("n1")} - {_qc_qln("n0")} AS pm FROM (
+    pr AS (SELECT {qc_qln("n1")} - {qc_qln("n0")} AS pm FROM (
              SELECT CAST(count(*) FILTER (y = 1) AS BIGINT) AS n1,
                     CAST(count(*) FILTER (y = 0) AS BIGINT) AS n0
              FROM lab)),
-    tokd AS (SELECT doc_id, source, text, {_TOKS} AS toks FROM corp),
+    tokd AS (SELECT doc_id, source, text, {TOKS} AS toks FROM corp),
     gated AS (
       SELECT doc_id, source, text, toks,
              0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
@@ -676,8 +649,8 @@ def _register_corpus_curation_e2e_v3() -> None:
     kept AS (SELECT doc_id, source, text, toks FROM gated WHERE q >= 0.5),
     kd AS (SELECT doc_id, list_transform(toks, x -> lower(x)) AS toks
            FROM kept),
-    kg AS ({_QC_GRAMS.format(rel="kd", keep="doc_id")}),
-    kb AS (SELECT doc_id, {_QC_BUCKET} AS bucket,
+    kg AS ({QC_GRAMS.format(rel="kd", keep="doc_id")}),
+    kb AS (SELECT doc_id, {QC_BUCKET} AS bucket,
                   CAST(count(*) AS BIGINT) AS cnt
            FROM kg GROUP BY 1, 2),
     ks AS (SELECT doc_id, CAST(sum(cnt * wm) AS BIGINT) AS dot
@@ -692,10 +665,10 @@ def _register_corpus_curation_e2e_v3() -> None:
                  ORDER BY k.doc_id) AS rn
         FROM kept k JOIN cls USING (doc_id)) WHERE rn = 1),
     craw AS (SELECT doc_id, unnest({_GRAMS3}) AS raw FROM tokd),
-    cg AS (SELECT doc_id, {g60} AS g FROM craw),
-    evt AS (SELECT {_TOKS} AS toks FROM scrubbed WHERE doc_id % 50 = 0),
+    cg AS (SELECT doc_id, {_G60} AS g FROM craw),
+    evt AS (SELECT {TOKS} AS toks FROM scrubbed WHERE doc_id % 50 = 0),
     evraw AS (SELECT unnest({_GRAMS3}) AS raw FROM evt),
-    ev AS (SELECT DISTINCT {g60} AS g FROM evraw),
+    ev AS (SELECT DISTINCT {_G60} AS g FROM evraw),
     contam AS (SELECT doc_id FROM cg JOIN ev USING (g)
                GROUP BY doc_id HAVING count(DISTINCT g) >= 5),
     clean AS (SELECT * FROM deduped
@@ -704,91 +677,70 @@ def _register_corpus_curation_e2e_v3() -> None:
            count(*) AS n_docs,
            CAST(sum(len(toks)) AS BIGINT) AS n_tokens
     FROM clean GROUP BY source
-    """
+    """,
+)
+def q_corpus_curation_e2e_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The FULL production curation chain (r13, verdict #8): scrub
+    URLs/emails → cheap rule gate → trained NB quality classifier
+    (fit on the 80% labeled split of the train corpus) → exact
+    fingerprint dedup → eval-set DECONTAMINATION (GPT-3 §2.2:
+    drop survivors sharing ≥5 distinct word-3-grams with the
+    held-out eval split, every 50th document) → per-source budget.
+    Still one fused DAG: the eval side reduces to a broadcast
+    60-bit gram-hash set, the train side's gram stream joins it
+    map-side and aggregates to a doc-id-grain contaminated set,
+    and the exclusion is a LEFT ANTI join at the dedup-survivor
+    grain — no text ever shuffles for decontamination, so the
+    stage adds one corpus text re-scan and doc-id-sized exchanges
+    only. Decontamination runs AFTER dedup on purpose: a dropped
+    survivor is NOT replaced by a duplicate sibling (the
+    contaminated content itself is what must leave the corpus)."""
 
-    @register("corpus_curation_e2e_v3", oracle)
-    def q_corpus_curation_e2e_v3(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The FULL production curation chain (r13, verdict #8): scrub
-        URLs/emails → cheap rule gate → trained NB quality classifier
-        (fit on the 80% labeled split of the train corpus) → exact
-        fingerprint dedup → eval-set DECONTAMINATION (GPT-3 §2.2:
-        drop survivors sharing ≥5 distinct word-3-grams with the
-        held-out eval split, every 50th document) → per-source budget.
-        Still one fused DAG: the eval side reduces to a broadcast
-        60-bit gram-hash set, the train side's gram stream joins it
-        map-side and aggregates to a doc-id-grain contaminated set,
-        and the exclusion is a LEFT ANTI join at the dedup-survivor
-        grain — no text ever shuffles for decontamination, so the
-        stage adds one corpus text re-scan and doc-id-sized exchanges
-        only. Decontamination runs AFTER dedup on purpose: a dropped
-        survivor is NOT replaced by a duplicate sibling (the
-        contaminated content itself is what must leave the corpus)."""
-        from air_quality_etl_pipeline_spark.functions.core import (
-            token_array,
-        )
-        from air_quality_etl_pipeline_spark.operators.cleaning import (
-            dedup_first,
-        )
-        from air_quality_etl_pipeline_spark.operators.packing import (
-            decontaminate,
-        )
-        from air_quality_etl_pipeline_spark.operators.text import (
-            fingerprint,
-            quality_classifier_score,
-            quality_classifier_weights,
-            quality_score,
-            scrub_text,
-        )
+    d = _t(spark, sf_dir, "documents")
+    scrubbed = d.select(
+        "doc_id", "source", "lang",
+        scrub_text(F.col("text")).alias("text"),
+    )
+    corp = scrubbed.filter(F.col("doc_id") % 50 != 0)
+    labeled = corp.filter(F.col("doc_id") % 5 != 0).withColumn(
+        "y", (F.col("lang") == "en").cast("int")
+    )
+    w = quality_classifier_weights(
+        labeled, label_col="y", n_buckets=QC_B
+    )
+    gated = corp.filter(quality_score(F.col("text")) >= 0.5)
+    keyed = gated.select(
+        "doc_id",
+        "source",
+        F.size(token_array(F.col("text"))).alias("n_toks"),
+        fingerprint(F.col("text")).alias("fp"),
+        "text",
+    )
+    scored = quality_classifier_score(
+        keyed, w, n_buckets=QC_B, keep_cols=["source", "n_toks", "fp"]
+    )
+    kept = scored.filter(F.col("pred") == 1).select(
+        "doc_id", "source", "n_toks", "fp"
+    )
+    deduped = dedup_first(kept, ["fp"], order_by=["doc_id"])
+    ev = scrubbed.filter(F.col("doc_id") % 50 == 0)
+    contam = (
+        decontaminate(corp, ev, "doc_id", "text", n=3, min_hits=5)
+        .filter(F.col("contaminated") == 1)
+        .select("doc_id")
+    )
+    clean = deduped.join(contam, on="doc_id", how="left_anti")
+    return clean.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_toks").cast("long").alias("n_tokens"),
+    )
 
-        d = _t(spark, sf_dir, "documents")
-        scrubbed = d.select(
-            "doc_id", "source", "lang",
-            scrub_text(F.col("text")).alias("text"),
-        )
-        corp = scrubbed.filter(F.col("doc_id") % 50 != 0)
-        labeled = corp.filter(F.col("doc_id") % 5 != 0).withColumn(
-            "y", (F.col("lang") == "en").cast("int")
-        )
-        w = quality_classifier_weights(
-            labeled, label_col="y", n_buckets=_QC_B
-        )
-        gated = corp.filter(quality_score(F.col("text")) >= 0.5)
-        keyed = gated.select(
-            "doc_id",
-            "source",
-            F.size(token_array(F.col("text"))).alias("n_toks"),
-            fingerprint(F.col("text")).alias("fp"),
-            "text",
-        )
-        scored = quality_classifier_score(
-            keyed, w, n_buckets=_QC_B, keep_cols=["source", "n_toks", "fp"]
-        )
-        kept = scored.filter(F.col("pred") == 1).select(
-            "doc_id", "source", "n_toks", "fp"
-        )
-        deduped = dedup_first(kept, ["fp"], order_by=["doc_id"])
-        ev = scrubbed.filter(F.col("doc_id") % 50 == 0)
-        contam = (
-            decontaminate(corp, ev, "doc_id", "text", n=3, min_hits=5)
-            .filter(F.col("contaminated") == 1)
-            .select("doc_id")
-        )
-        clean = deduped.join(contam, on="doc_id", how="left_anti")
-        return clean.groupBy("source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_toks").cast("long").alias("n_tokens"),
-        )
-
-
-_register_corpus_curation_e2e_v3()
 
 
 @register(
     "pack_sequences",
     f"""
-    WITH t AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n
+    WITH t AS (SELECT doc_id, CAST(len({TOKS}) AS BIGINT) AS n
                FROM documents),
     c AS (SELECT doc_id, n,
                  CAST(sum(n) OVER (ORDER BY doc_id
@@ -810,7 +762,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort — range-partitioned two-phase cumsum), then each
     document explodes into the windows it spans. One row per window
     with its document count and filled-slot count."""
-    from air_quality_etl_pipeline_spark.operators.packing import pack_sequences
 
     d = _t(spark, sf_dir, "documents")
     return pack_sequences(d, "doc_id", "text", ctx=256)
@@ -819,7 +770,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "chunk_documents",
     f"""
-    WITH t AS (SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n
+    WITH t AS (SELECT doc_id, CAST(len({TOKS}) AS BIGINT) AS n
                FROM documents WHERE doc_id < 300),
     s AS (SELECT doc_id, n, unnest(range(0, (n - 1) // 64 + 1)) AS chunk_idx
           FROM t WHERE n > 0)
@@ -835,9 +786,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document arithmetic computed inside the scan, embarrassingly
     parallel. Bounded to doc_id < 300 to keep the compare payload
     fixed-size at any SF. See operators.packing.chunk_documents."""
-    from air_quality_etl_pipeline_spark.operators.packing import (
-        chunk_documents,
-    )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return chunk_documents(d, "doc_id", "text", chunk=128, stride=64)
@@ -870,9 +818,6 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(1, quota/actual) → deterministic 60-bit md5 draw. The count
     aggregate broadcasts back onto the scan, so the corpus is read
     once and never shuffled. See operators.sampling.mixture_sample."""
-    from air_quality_etl_pipeline_spark.operators.sampling import (
-        mixture_sample,
-    )
 
     d = _t(spark, sf_dir, "documents")
     kept = mixture_sample(
@@ -892,7 +837,7 @@ _GRAMS5 = (
 @register(
     "cross_doc_ngram_dup",
     f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
     grams AS (SELECT doc_id,
                      ('0x' || substr(md5(g), 1, 15))::BIGINT AS gh
               FROM (SELECT doc_id, unnest({_GRAMS5}) AS g FROM t)),
@@ -922,11 +867,6 @@ def q_cross_doc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys; the document text never re-shuffles. The same pipeline at a
     higher n and a min-count threshold IS the remove-duplicated-spans
     preprocessing pass."""
-    from air_quality_etl_pipeline_spark.functions.core import (
-        md5_long,
-        token_array,
-        word_shingles_of_tokens,
-    )
 
     d = _t(spark, sf_dir, "documents")
     grams = d.select(
@@ -959,7 +899,7 @@ def q_cross_doc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH toks AS (
       SELECT doc_id, lower(tok) AS tok
-      FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
+      FROM (SELECT doc_id, unnest({TOKS}) AS tok FROM documents)),
     freq AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
     vocab AS (
       SELECT tok FROM (
@@ -987,7 +927,6 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST back onto the token stream — the corpus shuffles once,
     on doc_id, for the final per-doc aggregate."""
     d = _t(spark, sf_dir, "documents")
-    from air_quality_etl_pipeline_spark.functions.core import token_array
     from pyspark.sql import Window
 
     toks = d.select(

@@ -28,14 +28,17 @@ from air_quality_etl_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_component_edges,
 )
-from air_quality_etl_pipeline_spark.operators.graph import connected_components
-from air_quality_etl_pipeline_spark.workload import _t, register
-from air_quality_etl_pipeline_spark.workload_llm import (
+from air_quality_etl_pipeline_spark.operators.graph import (
+    connected_components,
+    personalized_pagerank_pico,
+)
+from air_quality_etl_pipeline_spark.oracle_fragments import (
     SIMHASH_PAIRS_CTES,
     TOKS,
     _minhash_oracle,
     _word_shingles_sql,
 )
+from air_quality_etl_pipeline_spark.workload import _t, register
 
 #: distinct (order, part) pairs → co-purchase edge list with support.
 #: Shared CTE between copurchase_pairs and triangle_count so both
@@ -507,9 +510,6 @@ def q_ppr_from_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative algorithm is exactly reproduced by the unrolled oracle.
     Only nodes with nonzero mass are emitted (3 hops of seed
     reachability)."""
-    from air_quality_etl_pipeline_spark.operators.graph import (
-        personalized_pagerank_pico,
-    )
 
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")

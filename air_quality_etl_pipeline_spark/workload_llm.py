@@ -14,20 +14,33 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.functions.core import (
+    char_shingles,
+    l2_norm,
     round_portable,
     token_array,
 )
 from air_quality_etl_pipeline_spark.operators import multimodal
 from air_quality_etl_pipeline_spark.operators.cache import materialize
 from air_quality_etl_pipeline_spark.operators.dedup import (
+    collapse_exact_clones,
     exact_dup_groups,
+    jaccard_join_back,
+    minhash_lsh_candidates,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_between,
     simhash_bits,
     simhash_pairs,
+)
+from air_quality_etl_pipeline_spark.operators.order_stats import with_global_rank
+from air_quality_etl_pipeline_spark.operators.sampling import (
+    sample_bucket,
+    seeded_shuffle,
 )
 from air_quality_etl_pipeline_spark.operators.similarity import (
     cosine_pairs,
     cosine_topk,
+    hard_negatives,
+    ivf_batch_knn_bucketed,
     ivf_topk,
     kmeans_parallel_candidates,
     kmeans_update_step,
@@ -45,33 +58,31 @@ from air_quality_etl_pipeline_spark.operators.text import (
     PHONE_PATTERN,
     URL_PATTERN,
     bpe_token_count,
+    predicted_lang_of_tokens,
     quality_score,
     repetition_stats,
     scrub_text,
+    scrub_text_pii,
     stopword_ratio,
     token_count,
     unique_token_ratio,
 )
-from air_quality_etl_pipeline_spark.workload import (
-    SIDE_EFFECT_QUERIES,
-    _t,
-    register,
+from air_quality_etl_pipeline_spark.oracle_fragments import (
+    SIMHASH_PAIRS_CTES,
+    TOKS,
+    _incremental_dedup_oracle,
+    _ivf_oracle,
+    _minhash_oracle,
+    _sql_list,
+    _word_shingles_sql,
 )
+from air_quality_etl_pipeline_spark.workload import SIDE_EFFECT_QUERIES, _t, register
 
 # builder writes the bucketed index table — the plan sweep must not
 # construct it
 SIDE_EFFECT_QUERIES.add("ann_ivf_bucketed_batch")
 
-# ---- shared SQL fragments -------------------------------------------------
-
-#: whitespace tokens, [] on blank — mirrors functions.core.token_array
-# canonical definition moved to the LEAF oracle_fragments module
-# (r13 circular-import fix); re-exported here for the many importers
-from air_quality_etl_pipeline_spark.oracle_fragments import TOKS  # noqa: E402,F401
-
-
-def _sql_list(words: list[str]) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
+# ---- SQL fragments --------------------------------------------------------
 
 
 def _shingles_sql(expr: str = "text", n: int = 3) -> str:
@@ -79,16 +90,6 @@ def _shingles_sql(expr: str = "text", n: int = 3) -> str:
     return (
         f"list_distinct([substr({expr}, i, {n}) "
         f"for i in range(1, greatest(len({expr}) - {n - 1}, 1) + 1)])"
-    )
-
-
-def _word_shingles_sql(n: int = 5) -> str:
-    """Distinct word n-grams over a ``toks`` array column — mirrors
-    functions.core.word_shingles_of_tokens (DuckDB list slice is inclusive, Spark
-    ``slice(toks, i, n)`` is start+length; both clamp at the end)."""
-    return (
-        f"list_distinct([array_to_string(toks[i:i+{n - 1}], ' ') "
-        f"for i in range(1, greatest(len(toks) - {n - 1}, 1) + 1)])"
     )
 
 
@@ -158,10 +159,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie order) next to the labeled lang for accuracy inspection. The
     lowercased token array is materialized once per row; the five
     per-language scores read the column, not a re-inlined split."""
-    from air_quality_etl_pipeline_spark.functions.core import token_array
-    from air_quality_etl_pipeline_spark.operators.text import (
-        predicted_lang_of_tokens,
-    )
 
     d = _t(spark, sf_dir, "documents")
     return (
@@ -235,9 +232,6 @@ def q_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-dp scores in integer e4 micro-units, so the aggregate is
     exact, order-independent, and engine-portable (the result-type
     contract has no decimal lane — typealign.SPARK_TO_ARROW)."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     d = _t(spark, sf_dir, "documents")
     q = d.select(
@@ -301,9 +295,6 @@ def q_shuffle_shards_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines is the whole point of the seeded construction.
     The global rank rides the bucketed two-phase ``with_global_rank``
     (no single-partition sort); everything after it is shard-keyed."""
-    from air_quality_etl_pipeline_spark.operators.sampling import (
-        seeded_shuffle,
-    )
 
     d = _t(spark, sf_dir, "documents").select("doc_id")
     s = seeded_shuffle(d, "doc_id", 16, seed="shuffle7")
@@ -376,9 +367,6 @@ def q_text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary behavior (digits embedded in words untouched) is pinned
     by tests/test_text_similarity_ops.py. Six scan-local regex
     passes — no shuffle, no UDF."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        scrub_text_pii,
-    )
 
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -474,12 +462,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     md5-salted hashing makes the buckets — and so the result set —
     bit-identical in the oracle."""
-    from air_quality_etl_pipeline_spark.functions.core import char_shingles
-    from air_quality_etl_pipeline_spark.operators.dedup import (
-        collapse_exact_clones,
-        jaccard_join_back,
-        minhash_lsh_candidates,
-    )
 
     d = _t(spark, sf_dir, "documents")
     # Exact→near cascade (Lee et al. §4): every stage below depends
@@ -554,69 +536,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _minhash_oracle(
-    num_hashes: int = 8,
-    bands: int = 4,
-    thr: float = 0.7,
-    n: int = 5,
-    family: str = "md5",
-) -> str:
-    from air_quality_etl_pipeline_spark.functions.core import (
-        MINHASH_P31,
-        affine_coeffs,
-    )
-
-    rows = num_hashes // bands
-    if family == "md5_affine":
-        # one md5 per shingle; k Carter-Wegman affine rehashes of its
-        # low 30 bits — mirrors functions.core.affine_coeffs exactly
-        b30 = "(('0x' || substr(md5(x), 1, 15))::BIGINT % 1073741824)"
-        sig = ",\n           ".join(
-            "list_min(list_transform(s, x -> "
-            f"({a} * {b30} + {c}) % {MINHASH_P31})) AS h{i}"
-            for i, (a, c) in (
-                (j, affine_coeffs(j)) for j in range(num_hashes)
-            )
-        )
-    else:
-        # fixed-width lowercase hex: lexicographic min ≡ numeric min,
-        # matching the Spark side's decode-free md5_hex15 hash family.
-        sig = ",\n           ".join(
-            f"list_min(list_transform(s, x -> "
-            f"substr(md5('{i}:' || x), 1, 15))) AS h{i}"
-            for i in range(num_hashes)
-        )
-    band_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_idx, md5(concat_ws(','"
-        + "".join(f", h{b * rows + r}" for r in range(rows))
-        + ")) AS band_hash FROM sig"
-        for b in range(bands)
-    )
-    return f"""
-    WITH t AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_word_shingles_sql(n)} AS s FROM t),
-    sig AS (SELECT doc_id,
-           {sig}
-        FROM sh),
-    banded AS (
-      {band_rows}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id),
-    verified AS (
-      SELECT id_a, id_b,
-             CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / len(list_distinct(a.s || b.s)) AS jaccard
-      FROM cands JOIN sh a ON a.doc_id = cands.id_a
-                 JOIN sh b ON b.doc_id = cands.id_b)
-    SELECT id_a, id_b, floor((jaccard) * 10000.0 + 0.5) / 10000.0 AS jaccard
-    FROM verified WHERE jaccard >= {thr}
-    """
-
-
 @register("dedup_minhash_lsh", _minhash_oracle(family="md5_affine"))
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8) + 4-band LSH over word-5-gram shingles, candidates
@@ -663,33 +582,6 @@ def q_simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational explode→vote→bit-pack pipeline bit-for-bit."""
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
     return simhash_bits(d, "doc_id", "text", bits=32)
-
-
-#: DuckDB CTE chain producing the 48-bit/Hamming≤3 SimHash near-dup
-#: pair set as ``sim_pairs(id_a, id_b, hamming)`` — shared between the
-#: dedup_simhash oracle and the dedup_clusters oracle (workload_curation),
-#: so both engines resolve clusters over the exact same edge set.
-SIMHASH_PAIRS_CTES = """
-    toks AS (
-      SELECT doc_id, lang, unnest(CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-             ELSE regexp_split_to_array(trim(text), '\\s+') END) AS tok
-      FROM documents),
-    h AS (SELECT doc_id, lang, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-    votes AS (
-      SELECT doc_id, lang, b.bit,
-             sum(CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END) AS votes
-      FROM h, (SELECT unnest(range(0, 48)) AS bit) b
-      GROUP BY 1, 2, 3),
-    sh AS (
-      SELECT doc_id, lang,
-             sum(CASE WHEN votes > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
-               AS simhash
-      FROM votes GROUP BY doc_id, lang),
-    sim_pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3)"""
 
 
 @register(
@@ -811,9 +703,6 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5 most-cosine-similar corpus vectors with a DIFFERENT label —
     broadcast queries, one corpus scan, label filter before ranking.
     See operators.similarity.hard_negatives."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        hard_negatives,
-    )
 
     e = _t(spark, sf_dir, "embeddings").withColumn(
         "label", F.col("label").cast("long")
@@ -882,48 +771,6 @@ _AUTO_STRIDE_SQL = (
 )
 
 
-def _ivf_oracle(
-    stride: int | str = 128,
-    nprobe: int = 2,
-    k: int = 5,
-    query_pred: str = "q.vec_id < 8",
-) -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(1, 65), i -> {a}[i] * {b}[i])) / "
-            f"(sqrt(list_sum(list_transform({a}, x -> x * x))) * "
-            f"sqrt(list_sum(list_transform({b}, x -> x * x))))"
-        )
-
-    def r6(x: str) -> str:
-        return f"floor(({x}) * 1000000.0 + 0.5) / 1000000.0"
-
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % {stride} = 0),
-    assign AS (
-      SELECT vec_id AS neighbor_id, v AS nv, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {r6(cos('e.v', 'c.cv'))} DESC, c.cid ASC) AS rn
-        FROM e, cent c) WHERE rn = 1),
-    probes AS (
-      SELECT query_id, qv, cid FROM (
-        SELECT q.vec_id AS query_id, q.v AS qv, c.cid,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY {r6(cos('q.v', 'c.cv'))} DESC, c.cid ASC) AS rn
-        FROM e q, cent c WHERE {query_pred}) WHERE rn <= {nprobe}),
-    scored AS (
-      SELECT query_id, neighbor_id, {r6(cos('p.qv', 'a.nv'))} AS cosine
-      FROM probes p JOIN assign a
-        ON p.cid = a.cid AND a.neighbor_id <> p.query_id)
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-      FROM scored) WHERE rank <= {k}
-    """
-
-
 @register(
     "ann_ivf_bucketed_batch",
     _ivf_oracle(k=3, query_pred="TRUE"),
@@ -945,10 +792,6 @@ def q_ann_ivf_bucketed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     index write, so ``prepared`` rebuilds it per call."""
     import os as _os
 
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        ivf_batch_knn_bucketed,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     out = ivf_batch_knn_bucketed(
         e,
@@ -958,77 +801,6 @@ def q_ann_ivf_bucketed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=2,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-def _incremental_dedup_oracle(
-    num_hashes: int = 8,
-    bands: int = 4,
-    thr: float = 0.7,
-    n: int = 5,
-    corpus_pct: int = 80,
-) -> str:
-    """Cross-relation twin of the dedup_minhash_lsh oracle: documents
-    split by the deterministic sample bucket into corpus (< pct) and
-    incoming batch (>= pct); signatures per side; band join ACROSS the
-    sides only; word-shingle Jaccard verify; then one row per incoming
-    doc with its dup verdict."""
-    rows = num_hashes // bands
-    bucket = (
-        "(('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 15))"
-        "::BIGINT % 100)"
-    )
-    sig = ",\n           ".join(
-        f"list_min(list_transform(s, x -> "
-        f"substr(md5('{i}:' || x), 1, 15))) AS h{i}"
-        for i in range(num_hashes)
-    )
-
-    def banded(src: str) -> str:
-        return "\n      UNION ALL\n      ".join(
-            f"SELECT doc_id, {b} AS band_idx, md5(concat_ws(','"
-            + "".join(f", h{b * rows + r}" for r in range(rows))
-            + f")) AS band_hash FROM {src}"
-            for b in range(bands)
-        )
-
-    return f"""
-    WITH t AS (SELECT doc_id, {TOKS} AS toks,
-                      {bucket} >= {corpus_pct} AS incoming
-               FROM documents),
-    sh AS (SELECT doc_id, incoming, {_word_shingles_sql(n)} AS s FROM t),
-    sig_new AS (SELECT doc_id, s,
-           {sig}
-        FROM sh WHERE incoming),
-    sig_old AS (SELECT doc_id, s,
-           {sig}
-        FROM sh WHERE NOT incoming),
-    banded_new AS (
-      {banded('sig_new')}
-    ),
-    banded_old AS (
-      {banded('sig_old')}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS corpus_id
-      FROM banded_new a JOIN banded_old b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash),
-    verified AS (
-      SELECT new_id, corpus_id,
-             CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-             / len(list_distinct(a.s || b.s)) AS jaccard
-      FROM cands JOIN sig_new a ON a.doc_id = cands.new_id
-                 JOIN sig_old b ON b.doc_id = cands.corpus_id),
-    hits AS (
-      SELECT new_id, CAST(count(*) AS BIGINT) AS n_matches,
-             floor(max(jaccard) * 10000.0 + 0.5) / 10000.0 AS best_jaccard
-      FROM verified WHERE jaccard >= {thr} GROUP BY new_id)
-    SELECT t.doc_id AS new_id,
-           h.new_id IS NOT NULL AS is_dup,
-           CAST(coalesce(h.n_matches, 0) AS BIGINT) AS n_matches,
-           h.best_jaccard
-    FROM t LEFT JOIN hits h ON h.new_id = t.doc_id
-    WHERE t.incoming
-    """
 
 
 @register("dedup_incremental_batch", _incremental_dedup_oracle())
@@ -1044,12 +816,6 @@ def q_dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the corpus-side band relation is the narrow append-only
     thing a pipeline persists between batches
     (operators/dedup.minhash_lsh_pairs_between)."""
-    from air_quality_etl_pipeline_spark.operators.dedup import (
-        minhash_lsh_pairs_between,
-    )
-    from air_quality_etl_pipeline_spark.operators.sampling import (
-        sample_bucket,
-    )
 
     d = _t(spark, sf_dir, "documents")
     bucket = sample_bucket(F.col("doc_id"))
@@ -1166,7 +932,6 @@ def q_embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 normalization of the embedding column (the prep step before
     cosine = dot): emits pre/post norms; post must be exactly 1 at 6dp.
     JVM-side array arithmetic, no UDF."""
-    from air_quality_etl_pipeline_spark.functions.core import l2_norm
 
     e = _t(spark, sf_dir, "embeddings")
     # norm materialized as a column BEFORE the divide-transform: a
@@ -1457,7 +1222,6 @@ def q_dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratically with block size. ``operators/dedup.fuzzy_pairs``
     (blocking + length bands, no LSH) remains the right tool for SHORT
     strings (titles, names) where the DP is cheap."""
-    from air_quality_etl_pipeline_spark.operators.dedup import simhash_pairs
 
     d = _t(spark, sf_dir, "documents")
     cands = simhash_pairs(
@@ -1676,7 +1440,6 @@ def q_inverted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregation; the posting build is the amortizable part — at
     100 TB it is written once (bucketed by term) and every search
     becomes a selective posting-list lookup instead of a corpus scan."""
-    from air_quality_etl_pipeline_spark.functions.core import token_array
 
     terms = ["key", "hash", "table"]
     d = _t(spark, sf_dir, "documents")
@@ -1737,9 +1500,6 @@ def q_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard probe for "do these embeddings cluster by class".
     Composes the exact-scan ranking with two constant-sized
     aggregations; the corpus is read once per query batch."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        cosine_topk,
-    )
     from pyspark.sql import Window
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1950,10 +1710,6 @@ def q_class_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantizes before its sum, so both means are exact integer
     ratios. All post-centroid relations are label-sized."""
     from pyspark.sql import Window  # noqa: F401
-
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        label_centroid_micro,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     cs = label_centroid_micro(e)

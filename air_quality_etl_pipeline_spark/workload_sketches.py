@@ -20,12 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.functions.core import round_portable
+from air_quality_etl_pipeline_spark.functions.core import round_portable, token_array
 from air_quality_etl_pipeline_spark.operators.sketches import (
     hll_distinct_with_contract,
+    kmv_jaccard,
     quantile_band_contract,
 )
-from air_quality_etl_pipeline_spark.workload import _t, register
+from air_quality_etl_pipeline_spark.oracle_fragments import TOKS
+from air_quality_etl_pipeline_spark.workload import _events, _t, register
 
 _QB_PROBS = [0.25, 0.5, 0.75, 0.95]
 _QB_PAD = 0.01
@@ -93,10 +95,6 @@ def q_sketch_quantile_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KMV is fully deterministic (md5 order statistics), so unlike HLL /
 # t-digest the RAW estimates are oracle-verifiable, not just the
 # contract flag.
-_KMV_TOKS = (
-    "CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(text), '\\s+') END"
-)
 
 
 @register(
@@ -104,7 +102,7 @@ _KMV_TOKS = (
     f"""
     WITH toks AS (
       SELECT DISTINCT source AS g, lower(tok) AS tok
-      FROM (SELECT source, unnest({_KMV_TOKS}) AS tok FROM documents)),
+      FROM (SELECT source, unnest({TOKS}) AS tok FROM documents)),
     hashed AS (
       SELECT DISTINCT g,
              ('0x' || substr(md5('kmv:' || tok), 1, 15))::BIGINT AS h
@@ -148,8 +146,6 @@ def q_sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates against the exact value — the mergeable-sketch path for
     cross-source content-overlap monitoring (every pairwise step
     touches only k-row signatures). See operators.sketches.kmv_jaccard."""
-    from air_quality_etl_pipeline_spark.functions.core import token_array
-    from air_quality_etl_pipeline_spark.operators.sketches import kmv_jaccard
 
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
@@ -199,7 +195,6 @@ def q_rolling_hll_distinct_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin's explode is bounded at 7 copies of the distinct (day, user)
     relation — at 100 TB you drop the exact twin and keep the sketch
     path, which is the point."""
-    from air_quality_etl_pipeline_spark.workload import _events
     from pyspark.sql import Window
 
     e = _events(spark, sf_dir)

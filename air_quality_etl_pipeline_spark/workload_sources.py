@@ -11,36 +11,69 @@ fake transport whose payload the oracle regenerates in SQL.
 
 from __future__ import annotations
 
+import os as _os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from air_quality_etl_pipeline_spark.plans.pipeline import Activity
+from air_quality_etl_pipeline_spark.functions.core import round_portable
+from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first
+from air_quality_etl_pipeline_spark.operators.dedup import (
+    corpus_gram_hashes,
+    minhash_lsh_pairs_between,
+    span_removal_between,
+)
+from air_quality_etl_pipeline_spark.operators.sampling import sample_bucket
+from air_quality_etl_pipeline_spark.operators.skew import salted_join, two_phase_agg
+from air_quality_etl_pipeline_spark.operators.text import (
+    quality_classifier_score,
+    quality_classifier_weights,
+)
+from air_quality_etl_pipeline_spark.oracle_fragments import (
+    QC_B,
+    QC_SCORE_ORACLE,
+    SPAN_BETWEEN_ORACLE,
+    _incremental_dedup_oracle,
+)
+from air_quality_etl_pipeline_spark.plans.pipeline import (
+    Activity,
+    Schedule,
+    ScheduledPipeline,
+)
+from air_quality_etl_pipeline_spark.sources import rest_datasource
 from air_quality_etl_pipeline_spark.sources.ingest import (
     coverage_gate,
     ingest_distributed,
 )
-from air_quality_etl_pipeline_spark.sources.readers import cast_columns, read_csv
+from air_quality_etl_pipeline_spark.sources.readers import (
+    cast_columns,
+    read_csv,
+    read_csv_with_quarantine,
+)
 from air_quality_etl_pipeline_spark.sources.writers import (
     write_partitioned_append,
     write_partitioned_dynamic_overwrite,
     write_range_sorted,
 )
-from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first
-from air_quality_etl_pipeline_spark.operators.skew import salted_join, two_phase_agg
 from air_quality_etl_pipeline_spark.streaming.jobs import (
     daily_counts,
     read_events_stream,
     run_available_now,
+    run_process_all,
     sessionize,
     sliding_counts,
     stateful_user_counts,
+    stream_static_enrich,
+    stream_stream_attrib_join,
     stream_table_path,
 )
-from air_quality_etl_pipeline_spark.workload import _t, register
-
-import os as _os
+from air_quality_etl_pipeline_spark.workload import (
+    SIDE_EFFECT_QUERIES,
+    _events,
+    _t,
+    register,
+)
 
 #: per-process scratch root: two concurrent runs (a pytest session and
 #: the driver's verify, say) must never race on the same rmtree/write/
@@ -207,12 +240,6 @@ def q_pipeline_dag_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger path is exercised deterministically."""
     from datetime import datetime
 
-    from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first
-    from air_quality_etl_pipeline_spark.plans.pipeline import (
-        Schedule,
-        ScheduledPipeline,
-    )
-
     def scan(ctx):
         return _t(spark, sf_dir, "lineitem").filter(
             F.col("l_quantity").isNotNull()
@@ -370,7 +397,6 @@ def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the classic gaps-and-islands formulation. The same
     operator runs under streaming with a watermark; batch here so the
     result is deterministic."""
-    from air_quality_etl_pipeline_spark.workload import _events
 
     return sessionize(_events(spark, sf_dir), gap="30 minutes")
 
@@ -522,9 +548,6 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributed to same-user views in the preceding hour. The watermark
     + interval bound is what keeps both join-state buffers finite on an
     unbounded stream; the batch oracle is the equivalent self-join."""
-    from air_quality_etl_pipeline_spark.streaming.jobs import (
-        stream_stream_attrib_join,
-    )
 
     e = read_events_stream(spark, sf_dir)
     joined = stream_stream_attrib_join(e, "1 hour", "1 day")
@@ -636,9 +659,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no state store — the static side broadcasts into every
     micro-batch — then aggregates per (segment, event_type). The oracle
     is the equivalent batch join."""
-    from air_quality_etl_pipeline_spark.streaming.jobs import (
-        stream_static_enrich,
-    )
 
     stream = read_events_stream(spark, sf_dir)
     dim = _t(spark, sf_dir, "customer").select(
@@ -710,7 +730,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the decimal-quantized sum is exact)."""
     path = f"{SCRATCH}/events_jsonl"
     shutil.rmtree(path, ignore_errors=True)
-    from air_quality_etl_pipeline_spark.workload import _events
 
     e = _events(spark, sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -788,11 +807,6 @@ def q_streaming_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fake payload in SQL."""
     import json as _json
 
-    from air_quality_etl_pipeline_spark.sources import rest_datasource
-    from air_quality_etl_pipeline_spark.streaming.jobs import (
-        run_process_all,
-    )
-
     # the DataSource class is unpickled inside Spark's streaming-source
     # runner process, which inherits the JVM's PYTHONPATH — not the
     # driver's sys.path. Registering the module for by-VALUE pickling
@@ -841,9 +855,6 @@ def q_csv_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The oracle recomputes the same split rule from the
     source table — a quarantine reader that silently drops or
     mis-routes rows breaks either count."""
-    from air_quality_etl_pipeline_spark.sources.readers import (
-        read_csv_with_quarantine,
-    )
 
     path = f"{SCRATCH}/orders_quarantine_csv"
     shutil.rmtree(path, ignore_errors=True)
@@ -881,234 +892,177 @@ def q_csv_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming_stateful_counts with the same batch oracle.
 
 
-def _register_streaming_dedup_incremental() -> None:
-    """Registered via a function so the oracle builder import from
-    workload_llm stays local (workload_llm itself imports nothing from
-    this module, so the direction is acyclic but kept lazy anyway)."""
-    from air_quality_etl_pipeline_spark.workload_llm import (
-        _incremental_dedup_oracle,
+@register("streaming_dedup_incremental", _incremental_dedup_oracle())
+def q_streaming_dedup_incremental(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The continuous-ingestion form of ``dedup_incremental_batch``:
+    incoming documents arrive as a STREAM (availableNow over the
+    documents parquet, filtered to the incoming ~20 % bucket) and
+    each micro-batch is screened against the STATIC existing corpus
+    inside ``foreachBatch`` — the hook where a production pipeline
+    appends verdicts (or drops dups) transactionally. Per-document
+    verdicts depend only on (document, static corpus), not on batch
+    boundaries, so the result equals the batch twin row-for-row and
+    the same DuckDB oracle applies — that equality IS the
+    exactly-once test. No stream-side state store: the LSH band
+    join runs batch-side per micro-batch."""
+
+    out_dir = f"{SCRATCH}/streaming_incremental_dedup"
+    ckpt = out_dir + "_ckpt"
+    shutil.rmtree(out_dir, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+    docs = _t(spark, sf_dir, "documents")
+    corpus = docs.filter(sample_bucket(F.col("doc_id")) < 80)
+
+    def screen(batch_df: DataFrame, batch_id: int) -> None:
+        pairs = minhash_lsh_pairs_between(
+            batch_df, corpus, "doc_id", "text",
+            n=5, num_hashes=8, bands=4, threshold=0.7,
+        )
+        hits = pairs.groupBy("new_id").agg(
+            F.count("*").cast("long").alias("n_matches"),
+            round_portable(F.max("jaccard"), 4).alias("best_jaccard"),
+        )
+        (
+            batch_df.select(F.col("doc_id").alias("new_id"))
+            .join(hits, "new_id", "left")
+            .select(
+                "new_id",
+                F.col("n_matches").isNotNull().alias("is_dup"),
+                F.coalesce(F.col("n_matches"), F.lit(0))
+                .cast("long")
+                .alias("n_matches"),
+                "best_jaccard",
+            )
+            .write.mode("append")
+            .parquet(out_dir)
+        )
+
+    # file streams take a DIRECTORY; stream_table_path resolves
+    # the file-vs-directory shape of documents.parquet (shared
+    # with streaming.jobs.read_events_stream — a dir-shaped table
+    # behind the old bare glob silently streamed ZERO rows)
+    base, glob = stream_table_path(spark, sf_dir, "documents")
+    reader = spark.readStream.schema(docs.schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    stream = reader.parquet(base).filter(
+        sample_bucket(F.col("doc_id")) >= 80
     )
-
-    @register("streaming_dedup_incremental", _incremental_dedup_oracle())
-    def q_streaming_dedup_incremental(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The continuous-ingestion form of ``dedup_incremental_batch``:
-        incoming documents arrive as a STREAM (availableNow over the
-        documents parquet, filtered to the incoming ~20 % bucket) and
-        each micro-batch is screened against the STATIC existing corpus
-        inside ``foreachBatch`` — the hook where a production pipeline
-        appends verdicts (or drops dups) transactionally. Per-document
-        verdicts depend only on (document, static corpus), not on batch
-        boundaries, so the result equals the batch twin row-for-row and
-        the same DuckDB oracle applies — that equality IS the
-        exactly-once test. No stream-side state store: the LSH band
-        join runs batch-side per micro-batch."""
-        from air_quality_etl_pipeline_spark.functions.core import (
-            round_portable,
-        )
-        from air_quality_etl_pipeline_spark.operators.dedup import (
-            minhash_lsh_pairs_between,
-        )
-        from air_quality_etl_pipeline_spark.operators.sampling import (
-            sample_bucket,
-        )
-
-        out_dir = f"{SCRATCH}/streaming_incremental_dedup"
-        ckpt = out_dir + "_ckpt"
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-        docs = _t(spark, sf_dir, "documents")
-        corpus = docs.filter(sample_bucket(F.col("doc_id")) < 80)
-
-        def screen(batch_df: DataFrame, batch_id: int) -> None:
-            pairs = minhash_lsh_pairs_between(
-                batch_df, corpus, "doc_id", "text",
-                n=5, num_hashes=8, bands=4, threshold=0.7,
-            )
-            hits = pairs.groupBy("new_id").agg(
-                F.count("*").cast("long").alias("n_matches"),
-                round_portable(F.max("jaccard"), 4).alias("best_jaccard"),
-            )
-            (
-                batch_df.select(F.col("doc_id").alias("new_id"))
-                .join(hits, "new_id", "left")
-                .select(
-                    "new_id",
-                    F.col("n_matches").isNotNull().alias("is_dup"),
-                    F.coalesce(F.col("n_matches"), F.lit(0))
-                    .cast("long")
-                    .alias("n_matches"),
-                    "best_jaccard",
-                )
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        # file streams take a DIRECTORY; stream_table_path resolves
-        # the file-vs-directory shape of documents.parquet (shared
-        # with streaming.jobs.read_events_stream — a dir-shaped table
-        # behind the old bare glob silently streamed ZERO rows)
-        base, glob = stream_table_path(spark, sf_dir, "documents")
-        reader = spark.readStream.schema(docs.schema)
-        if glob is not None:
-            reader = reader.option("pathGlobFilter", glob)
-        stream = reader.parquet(base).filter(
-            sample_bucket(F.col("doc_id")) >= 80
-        )
-        q = (
-            stream.writeStream.foreachBatch(screen)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir)
-
-
-_register_streaming_dedup_incremental()
-
-
-def _register_streaming_span_removal() -> None:
-    """Lazy import of the shared oracle, same pattern as the LSH
-    streaming twin above."""
-    from air_quality_etl_pipeline_spark.workload_corpus import (
-        SPAN_BETWEEN_ORACLE,
+    q = (
+        stream.writeStream.foreachBatch(screen)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination()
+    return spark.read.parquet(out_dir)
 
-    @register("streaming_span_removal", SPAN_BETWEEN_ORACLE)
-    def q_streaming_span_removal(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The continuous-ingestion form of ``span_removal_between``
-        (completing the streaming symmetry the LSH family already has):
-        the incoming quarter of documents arrives as a STREAM
-        (availableNow, ``doc_id % 4 = 0``) and each micro-batch is
-        span-cut against the STATIC corpus inside ``foreachBatch``.
-        The corpus's distinct gram-hash table is built ONCE
-        (:func:`operators.dedup.corpus_gram_hashes`, persisted) and
-        reused by every micro-batch — the production amortization the
-        operator's ``corpus_grams=`` hook exists for. Per-document cuts
-        depend only on (document, corpus), never on batch slicing
-        (pinned by the batch twin's boundary-independence test), so the
-        drained output equals the batch twin row-for-row and the SAME
-        DuckDB oracle applies — that equality IS the exactly-once
-        test. No stream-side state store."""
-        from air_quality_etl_pipeline_spark.operators.dedup import (
-            corpus_gram_hashes,
-            span_removal_between,
-        )
 
-        out_dir = f"{SCRATCH}/streaming_span_removal"
-        ckpt = out_dir + "_ckpt"
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+@register("streaming_span_removal", SPAN_BETWEEN_ORACLE)
+def q_streaming_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The continuous-ingestion form of ``span_removal_between``
+    (completing the streaming symmetry the LSH family already has):
+    the incoming quarter of documents arrives as a STREAM
+    (availableNow, ``doc_id % 4 = 0``) and each micro-batch is
+    span-cut against the STATIC corpus inside ``foreachBatch``.
+    The corpus's distinct gram-hash table is built ONCE
+    (:func:`operators.dedup.corpus_gram_hashes`, persisted) and
+    reused by every micro-batch — the production amortization the
+    operator's ``corpus_grams=`` hook exists for. Per-document cuts
+    depend only on (document, corpus), never on batch slicing
+    (pinned by the batch twin's boundary-independence test), so the
+    drained output equals the batch twin row-for-row and the SAME
+    DuckDB oracle applies — that equality IS the exactly-once
+    test. No stream-side state store."""
 
-        docs = _t(spark, sf_dir, "documents")
-        cg = corpus_gram_hashes(
-            docs.filter(F.col("doc_id") % 4 != 0)
-        ).persist()
+    out_dir = f"{SCRATCH}/streaming_span_removal"
+    ckpt = out_dir + "_ckpt"
+    shutil.rmtree(out_dir, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
 
-        def cut(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                span_removal_between(
-                    batch_df, None, "text", "doc_id",
-                    n=5, min_run=8, corpus_grams=cg,
-                )
-                .write.mode("append")
-                .parquet(out_dir)
+    docs = _t(spark, sf_dir, "documents")
+    cg = corpus_gram_hashes(
+        docs.filter(F.col("doc_id") % 4 != 0)
+    ).persist()
+
+    def cut(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            span_removal_between(
+                batch_df, None, "text", "doc_id",
+                n=5, min_run=8, corpus_grams=cg,
             )
-
-        base, glob = stream_table_path(spark, sf_dir, "documents")
-        reader = spark.readStream.schema(docs.schema)
-        if glob is not None:
-            reader = reader.option("pathGlobFilter", glob)
-        stream = reader.parquet(base).filter(F.col("doc_id") % 4 == 0)
-        q = (
-            stream.writeStream.foreachBatch(cut)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .write.mode("append")
+            .parquet(out_dir)
         )
-        q.awaitTermination()
-        cg.unpersist()
-        return spark.read.parquet(out_dir)
 
-
-_register_streaming_span_removal()
-
-
-def _register_streaming_quality_score() -> None:
-    """Shared oracle from the LEAF fragments module (r13) — importing
-    it from workload_training here was a circular-import landmine
-    (this module loads before workload_training under workload.py's
-    import order)."""
-    from air_quality_etl_pipeline_spark.oracle_fragments import (
-        QC_SCORE_ORACLE,
+    base, glob = stream_table_path(spark, sf_dir, "documents")
+    reader = spark.readStream.schema(docs.schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    stream = reader.parquet(base).filter(F.col("doc_id") % 4 == 0)
+    q = (
+        stream.writeStream.foreachBatch(cut)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-    from air_quality_etl_pipeline_spark.oracle_fragments import (
-        QC_B as _QC_B,
+    q.awaitTermination()
+    cg.unpersist()
+    return spark.read.parquet(out_dir)
+
+
+@register("streaming_quality_score", QC_SCORE_ORACLE)
+def q_streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The continuous-ingestion form of ``quality_classifier_score``
+    (round-11 verdict #5): the corpus arrives as a STREAM
+    (availableNow) and each micro-batch is scored inside
+    ``foreachBatch`` with FROZEN weights — the ≤1025-row Naive
+    Bayes weight table is trained ONCE on the static labeled split
+    (``doc_id % 5 != 0``, class 1 = ``lang = 'en'``), which the
+    operator returns MATERIALIZED before the stream starts (the
+    production amortization: one training pass for the whole
+    drain, scoring is map-side per batch — mirror of the span
+    twin's once-built corpus gram table). Per-document scores depend only on
+    (document, weights), never on batch slicing, so the drained
+    output equals the batch twin row-for-row and the SAME DuckDB
+    oracle applies — that equality IS the exactly-once test. No
+    stream-side state store."""
+
+    out_dir = f"{SCRATCH}/streaming_quality_score"
+    ckpt = out_dir + "_ckpt"
+    shutil.rmtree(out_dir, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+    docs = _t(spark, sf_dir, "documents")
+    labeled = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
+        "y", (F.col("lang") == "en").cast("int")
     )
+    # trains once, BEFORE the drain
+    w = quality_classifier_weights(labeled, label_col="y", n_buckets=QC_B)
 
-    @register("streaming_quality_score", QC_SCORE_ORACLE)
-    def q_streaming_quality_score(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The continuous-ingestion form of ``quality_classifier_score``
-        (round-11 verdict #5): the corpus arrives as a STREAM
-        (availableNow) and each micro-batch is scored inside
-        ``foreachBatch`` with FROZEN weights — the ≤1025-row Naive
-        Bayes weight table is trained ONCE on the static labeled split
-        (``doc_id % 5 != 0``, class 1 = ``lang = 'en'``), which the
-        operator returns MATERIALIZED before the stream starts (the
-        production amortization: one training pass for the whole
-        drain, scoring is map-side per batch — mirror of the span
-        twin's once-built corpus gram table). Per-document scores depend only on
-        (document, weights), never on batch slicing, so the drained
-        output equals the batch twin row-for-row and the SAME DuckDB
-        oracle applies — that equality IS the exactly-once test. No
-        stream-side state store."""
-        from air_quality_etl_pipeline_spark.operators.text import (
-            quality_classifier_score,
-            quality_classifier_weights,
+    def score(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            quality_classifier_score(batch_df, w, n_buckets=QC_B)
+            .write.mode("append")
+            .parquet(out_dir)
         )
 
-        out_dir = f"{SCRATCH}/streaming_quality_score"
-        ckpt = out_dir + "_ckpt"
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-        docs = _t(spark, sf_dir, "documents")
-        labeled = docs.filter(F.col("doc_id") % 5 != 0).withColumn(
-            "y", (F.col("lang") == "en").cast("int")
-        )
-        # trains once, BEFORE the drain
-        w = quality_classifier_weights(labeled, label_col="y", n_buckets=_QC_B)
-
-        def score(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                quality_classifier_score(batch_df, w, n_buckets=_QC_B)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        base, glob = stream_table_path(spark, sf_dir, "documents")
-        reader = spark.readStream.schema(docs.schema)
-        if glob is not None:
-            reader = reader.option("pathGlobFilter", glob)
-        stream = reader.parquet(base)
-        q = (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir)
-
-
-_register_streaming_quality_score()
+    base, glob = stream_table_path(spark, sf_dir, "documents")
+    reader = spark.readStream.schema(docs.schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    stream = reader.parquet(base)
+    q = (
+        stream.writeStream.foreachBatch(score)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(out_dir)
 
 
 # Builders above that write files or drive a stream to completion at
@@ -1116,8 +1070,6 @@ _register_streaming_quality_score()
 # workload.SIDE_EFFECT_QUERIES). Their returned DataFrame is a
 # read-back; ``prepared`` rebuilds them per call because the build runs
 # jobs.
-from air_quality_etl_pipeline_spark.workload import SIDE_EFFECT_QUERIES  # noqa: E402
-
 SIDE_EFFECT_QUERIES.update(
     {
         "ingest_rest_bronze",

@@ -25,11 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from air_quality_etl_pipeline_spark.workload import register
-from air_quality_etl_pipeline_spark.workload_analytics import _REV, _sql_views
-
-#: decimal-exact lineitem revenue with an explicit alias qualifier
-_REV_L = _REV  # sum over unqualified l_* columns; valid in joined scope
+from air_quality_etl_pipeline_spark.oracle_fragments import _REV
+from air_quality_etl_pipeline_spark.workload import _sql_views, register
 
 
 @register(
@@ -37,7 +34,7 @@ _REV_L = _REV  # sum over unqualified l_* columns; valid in joined scope
     f"""
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
            CAST(year(CAST(o.o_orderdate AS DATE)) AS INTEGER) AS o_year,
-           {_REV_L} AS revenue
+           {_REV} AS revenue
     FROM lineitem l
     JOIN orders o    ON l.l_orderkey = o.o_orderkey
     JOIN customer c  ON o.o_custkey = c.c_custkey
@@ -67,7 +64,7 @@ def q_sql_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                CAST(year(CAST(o.o_orderdate AS DATE)) AS INT) AS o_year,
-               {_REV_L} AS revenue
+               {_REV} AS revenue
         FROM lineitem_v l
         JOIN orders_v o    ON l.l_orderkey = o.o_orderkey
         JOIN customer_v c  ON o.o_custkey = c.c_custkey

@@ -19,6 +19,7 @@ from air_quality_etl_pipeline_spark.operators.joins import (
     count_in_window,
     interval_join,
 )
+from air_quality_etl_pipeline_spark.operators.order_stats import with_global_rank
 from air_quality_etl_pipeline_spark.workload import _events, register
 
 
@@ -694,10 +695,6 @@ def q_repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-running it per consumer. Never an unpartitioned window;
     value-only tie order leaves the rank→value mapping exact."""
     from pyspark.sql import Window
-
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        with_global_rank,
-    )
 
     e = _events(spark, sf_dir)
     p = e.filter(F.col("event_type") == "purchase").select(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from air_quality_etl_pipeline_spark.functions.core import (
     md5_long,
     round_portable,
+    sql_round,
     token_array,
 )
 from air_quality_etl_pipeline_spark.functions.portable_math import (
@@ -31,12 +32,47 @@ from air_quality_etl_pipeline_spark.functions.portable_math import (
     sql_mean_round6,
     sql_quantize_micro9,
 )
+from air_quality_etl_pipeline_spark.operators.graph import pagerank_pico
+from air_quality_etl_pipeline_spark.operators.order_stats import (
+    hex_prefix_key,
+    with_global_rank,
+)
+from air_quality_etl_pipeline_spark.operators.pca import (
+    moment_sums_micro,
+    pca_components,
+    project,
+    projection_expr,
+)
 from air_quality_etl_pipeline_spark.operators.pq import (
     collect_codebook,
+    ivf_pq_topk,
     pq_adc_topk,
     pq_encode_arrow,
 )
-from air_quality_etl_pipeline_spark.operators.similarity import semantic_dedup
+from air_quality_etl_pipeline_spark.operators.similarity import (
+    _as_double,
+    bitext_doc_align,
+    bitext_margin_mine,
+    cosine_topk,
+    ivf_topk,
+    semantic_dedup,
+)
+from air_quality_etl_pipeline_spark.operators.text import (
+    bpe_encode_vocab,
+    learn_bpe_merges,
+    quality_classifier_score,
+    quality_classifier_weights,
+)
+from air_quality_etl_pipeline_spark.oracle_fragments import (
+    LTOKS,
+    QC_B,
+    QC_BUCKET,
+    QC_GRAMS,
+    QC_SCORE_ORACLE,
+    TOKS,
+    _ivf_oracle,
+    qc_qln,
+)
 from air_quality_etl_pipeline_spark.workload import _t, register
 
 #: DuckDB twins of the cosine / norm folds used by operators.similarity
@@ -183,15 +219,10 @@ def q_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bigram language-model scoring
 # ---------------------------------------------------------------------------
 
-from air_quality_etl_pipeline_spark.workload_llm import TOKS
-
-_LTOKS = f"list_transform({TOKS}, x -> lower(x))"
-
-
 @register(
     "bigram_logprob_score",
     f"""
-    WITH t AS (SELECT doc_id, {_LTOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {LTOKS} AS toks FROM documents),
     bg AS (SELECT doc_id, unnest(list_transform(
              range(1, greatest(len(toks) - 1, 0) + 1),
              i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS b
@@ -283,7 +314,7 @@ _CM_WIDTH = 1024
 @register(
     "sketch_cm_heavy_hitters",
     f"""
-    WITH toks AS (SELECT unnest({_LTOKS}) AS tok FROM documents),
+    WITH toks AS (SELECT unnest({LTOKS}) AS tok FROM documents),
     freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY 1),
     counters AS (
       SELECT d.d,
@@ -443,15 +474,6 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BPE merge training (iterative — unrolled-CTE oracle, round 5)
 # ---------------------------------------------------------------------------
 
-#: DuckDB whitespace tokenization twin of functions.core.token_array
-#: (same fragment as workload_llm.TOKS; re-stated here to avoid a
-#: circular import at module load).
-_BPE_TOKS = (
-    "CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(text), '\\s+') END"
-)
-
-
 def _bpe_ctes(n_merges: int = 6) -> str:
     """The shared WITH-body of the BPE oracles — the same fixed-round
     unrolling the pagerank_trade_graph oracle uses for Pregel rounds.
@@ -476,7 +498,7 @@ def _bpe_ctes(n_merges: int = 6) -> str:
     WITH w AS (
       SELECT word, CAST(count(*) AS BIGINT) AS n
       FROM (SELECT lower(tok) AS word
-            FROM (SELECT unnest({_BPE_TOKS}) AS tok FROM documents))
+            FROM (SELECT unnest({TOKS}) AS tok FROM documents))
       GROUP BY 1),
     v0 AS (
       SELECT word, n, CAST(i AS BIGINT) AS pos,
@@ -541,7 +563,6 @@ def _bpe_encode_oracle(n_merges: int = 6) -> str:
     machinery, just per-word symbol counts joined back onto the corpus
     token stream, mirroring q_bpe_encode_corpus's vocabulary-cache
     shape exactly."""
-    from air_quality_etl_pipeline_spark.functions.core import sql_round
 
     return (
         _bpe_ctes(n_merges)
@@ -550,7 +571,7 @@ def _bpe_encode_oracle(n_merges: int = 6) -> str:
                    CAST(count(*) AS BIGINT) AS tok_len
             FROM v{n_merges} GROUP BY word),
     stream AS (SELECT doc_id, lower(tok) AS word
-               FROM (SELECT doc_id, unnest({_BPE_TOKS}) AS tok
+               FROM (SELECT doc_id, unnest({TOKS}) AS tok
                      FROM documents)),
     agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
                    CAST(sum(char_len) AS BIGINT) AS n_chars,
@@ -573,9 +594,6 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     is additionally pinned in tests/test_training_ops.py. See
     operators.text.learn_bpe_merges for the scale contract (corpus
     collapses once; every round is vocabulary-local)."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        learn_bpe_merges,
-    )
 
     d = _t(spark, sf_dir, "documents")
     merges = learn_bpe_merges(d, n_merges=6)
@@ -630,7 +648,6 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.graph.pagerank_pico for the integer pico-unit arithmetic
     that makes an ITERATIVE float algorithm exactly reproducible by an
     unrolled SQL oracle (every step is BIGINT floor-division)."""
-    from air_quality_etl_pipeline_spark.operators.graph import pagerank_pico
 
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -653,8 +670,6 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _recall_oracle() -> str:
-    from air_quality_etl_pipeline_spark.workload_llm import _ivf_oracle
-
     ivf_body = _ivf_oracle(stride=128, nprobe=2, k=5).strip()
     # reuse the registered IVF oracle verbatim as a subquery; the exact
     # side re-derives brute-force top-5 with the same cosine fragment
@@ -693,10 +708,6 @@ def q_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe 2) against exact brute-force cosine, per query — the metric
     an ANN deployment tunes nprobe against. Both sides are the already-
     registered operators; the eval is one equi join + count."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
@@ -800,16 +811,6 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-4 verdict, Next round #2b). Exact projection values are
     additionally pinned in tests/test_training_ops.py."""
     import math
-
-    from air_quality_etl_pipeline_spark.operators.pca import (
-        moment_sums_micro,
-        pca_components,
-        project,
-        projection_expr,
-    )
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        _as_double,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     g, s, n = moment_sums_micro(e, dims=64)
@@ -927,7 +928,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: assignment cosine — the SAME rounded fragment as the ann_ivf_topk
-#: oracle (workload_llm._ivf_oracle), so routing decisions agree.
+#: oracle (oracle_fragments._ivf_oracle), so routing decisions agree.
 _IVF_COS = (
     "floor((list_sum(list_transform(range(1, 65), i -> {a}[i] * {b}[i])) / "
     "(sqrt(list_sum(list_transform({a}, x -> x * x))) * "
@@ -991,7 +992,6 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora: routing cuts the scan by nprobe/num_lists, PQ cuts the
     bytes per scanned vector to ``m`` codes. See
     operators/pq.py:ivf_pq_topk for the plan-shape contract."""
-    from air_quality_etl_pipeline_spark.operators.pq import ivf_pq_topk
 
     e = _t(spark, sf_dir, "embeddings")
     cb = collect_codebook(e, m=8, k=16, dims=64)
@@ -1012,7 +1012,7 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "trigram_backoff_score",
     f"""
-    WITH tok AS (SELECT doc_id, {_LTOKS} AS toks FROM documents),
+    WITH tok AS (SELECT doc_id, {LTOKS} AS toks FROM documents),
     tr AS (SELECT doc_id, toks FROM tok WHERE doc_id % 2 = 0),
     te AS (SELECT doc_id, toks FROM tok
            WHERE doc_id % 2 = 1 AND len(toks) >= 3),
@@ -1284,9 +1284,6 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a two-pass retrieval. Both rankings are the broadcast-query exact
     scan (corpus read once per ranking, never shuffled); the
     comparison join runs on two top-k relations, constant-sized."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        cosine_topk,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 4)
@@ -1417,10 +1414,6 @@ def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same stream join — no bounded-depth unrolling of the per-word
     merge walk needed. Encode exactness vs a pure-Python reference
     remains pinned in tests/test_training_ops.py."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        bpe_encode_vocab,
-        learn_bpe_merges,
-    )
 
     d = _t(spark, sf_dir, "documents")
     merges = learn_bpe_merges(d, n_merges=6)
@@ -1458,7 +1451,7 @@ def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sft_pairs_assembly",
     f"""
-    WITH t AS (SELECT doc_id, {_LTOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {LTOKS} AS toks FROM documents),
     ok AS (SELECT doc_id, toks FROM t
            WHERE len(toks) >= 20 AND len(toks) - 10 <= 200),
     pair AS (SELECT doc_id,
@@ -1526,7 +1519,7 @@ def q_sft_pairs_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "padding_waste_report",
     f"""
-    WITH t AS (SELECT doc_id, CAST(len({_LTOKS}) AS BIGINT) AS n_toks
+    WITH t AS (SELECT doc_id, CAST(len({LTOKS}) AS BIGINT) AS n_toks
                FROM documents),
     rnd AS (SELECT n_toks,
                    (row_number() OVER (ORDER BY md5('pad:' ||
@@ -1568,10 +1561,6 @@ def q_padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the regex tokenization of every document runs once, not five
     times. Waste is exact integer arithmetic; no unpartitioned window
     anywhere."""
-    from air_quality_etl_pipeline_spark.operators.order_stats import (
-        hex_prefix_key,
-        with_global_rank,
-    )
 
     d = _t(spark, sf_dir, "documents")
     t = d.select(
@@ -1627,26 +1616,6 @@ def q_padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Trained quality classifier (CCNet/fastText curation stage — round 11)
 # ---------------------------------------------------------------------------
-# The shared SQL fragments live in the LEAF module oracle_fragments
-# (r13): workload_sources/workload_curation import them during THEIR
-# module init, which runs before this module under workload.py's
-# import order — keeping them here made `import workload_training`
-# circular. The historical names stay as aliases.
-
-from air_quality_etl_pipeline_spark.oracle_fragments import (  # noqa: E402
-    QC_SCORE_ORACLE,  # noqa: F401  (re-exported for the streaming twin)
-)
-from air_quality_etl_pipeline_spark.oracle_fragments import QC_B as _QC_B  # noqa: E402
-from air_quality_etl_pipeline_spark.oracle_fragments import (  # noqa: E402
-    QC_BUCKET as _QC_BUCKET,  # noqa: F401
-)
-from air_quality_etl_pipeline_spark.oracle_fragments import (  # noqa: E402
-    QC_GRAMS as _QC_GRAMS,
-)
-from air_quality_etl_pipeline_spark.oracle_fragments import (  # noqa: E402
-    qc_qln as _qc_qln,
-)
-
 
 @register("quality_classifier_score", QC_SCORE_ORACLE)
 def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1662,17 +1631,13 @@ def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cross-engine. Scale: the training stream collapses to the
     1024-bucket grain map-side; scoring is one doc-keyed aggregation
     with the ≤1025-row weight relation broadcast onto it."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        quality_classifier_score,
-        quality_classifier_weights,
-    )
 
     d = _t(spark, sf_dir, "documents")
     labeled = d.filter(F.col("doc_id") % 5 != 0).withColumn(
         "y", (F.col("lang") == "en").cast("int")
     )
-    w = quality_classifier_weights(labeled, label_col="y", n_buckets=_QC_B)
-    return quality_classifier_score(d, w, n_buckets=_QC_B)
+    w = quality_classifier_weights(labeled, label_col="y", n_buckets=QC_B)
+    return quality_classifier_score(d, w, n_buckets=QC_B)
 
 
 # ---------------------------------------------------------------------------
@@ -1733,9 +1698,6 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer micro-unit cosines, exact integer neighborhood sums, one
     non-negative integer division per candidate — bit-identical
     cross-engine."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        bitext_margin_mine,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     return bitext_margin_mine(
@@ -1748,35 +1710,35 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "quality_classifier_eval",
     f"""
-    WITH lab AS (SELECT doc_id, {_LTOKS} AS toks,
+    WITH lab AS (SELECT doc_id, {LTOKS} AS toks,
                         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
                  FROM documents WHERE doc_id % 5 <> 0),
-    lg AS ({_QC_GRAMS.format(rel="lab", keep="y")}),
-    lb AS (SELECT {_QC_BUCKET} AS bucket, y FROM lg),
+    lg AS ({QC_GRAMS.format(rel="lab", keep="y")}),
+    lb AS (SELECT {QC_BUCKET} AS bucket, y FROM lg),
     cnt AS (SELECT bucket,
                    CAST(count(*) FILTER (y = 1) AS BIGINT) AS c1,
                    CAST(count(*) FILTER (y = 0) AS BIGINT) AS c0
             FROM lb GROUP BY 1),
     allb AS (SELECT r.range AS bucket,
                     coalesce(c1, 0) AS c1, coalesce(c0, 0) AS c0
-             FROM range(0, {_QC_B}) r
+             FROM range(0, {QC_B}) r
              LEFT JOIN cnt ON r.range = cnt.bucket),
-    tot AS (SELECT CAST(sum(c1) + {_QC_B} AS BIGINT) AS t1b,
-                   CAST(sum(c0) + {_QC_B} AS BIGINT) AS t0b
+    tot AS (SELECT CAST(sum(c1) + {QC_B} AS BIGINT) AS t1b,
+                   CAST(sum(c0) + {QC_B} AS BIGINT) AS t0b
             FROM allb),
     w AS (SELECT bucket,
-                 {_qc_qln("c1 + 1")} - {_qc_qln("t1b")}
-                 - {_qc_qln("c0 + 1")} + {_qc_qln("t0b")} AS wm
+                 {qc_qln("c1 + 1")} - {qc_qln("t1b")}
+                 - {qc_qln("c0 + 1")} + {qc_qln("t0b")} AS wm
           FROM allb, tot),
-    pr AS (SELECT {_qc_qln("n1")} - {_qc_qln("n0")} AS pm FROM (
+    pr AS (SELECT {qc_qln("n1")} - {qc_qln("n0")} AS pm FROM (
              SELECT CAST(count(*) FILTER (y = 1) AS BIGINT) AS n1,
                     CAST(count(*) FILTER (y = 0) AS BIGINT) AS n0
              FROM lab)),
-    d AS (SELECT doc_id, {_LTOKS} AS toks,
+    d AS (SELECT doc_id, {LTOKS} AS toks,
                  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
           FROM documents WHERE doc_id % 5 = 0),
-    dg AS ({_QC_GRAMS.format(rel="d", keep="doc_id")}),
-    db AS (SELECT doc_id, {_QC_BUCKET} AS bucket,
+    dg AS ({QC_GRAMS.format(rel="d", keep="doc_id")}),
+    db AS (SELECT doc_id, {QC_BUCKET} AS bucket,
                   CAST(count(*) AS BIGINT) AS cnt
            FROM dg GROUP BY 1, 2),
     s AS (SELECT doc_id, CAST(sum(cnt * wm) AS BIGINT) AS dot
@@ -1804,17 +1766,13 @@ def q_quality_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable-rounded). Scale shape identical to
     quality_classifier_score — the eval split adds one broadcast-
     weight scoring pass and a 5-long aggregation."""
-    from air_quality_etl_pipeline_spark.operators.text import (
-        quality_classifier_score,
-        quality_classifier_weights,
-    )
 
     d = _t(spark, sf_dir, "documents")
     y = (F.col("lang") == "en").cast("int")
     train = d.filter(F.col("doc_id") % 5 != 0).withColumn("y", y)
     held = d.filter(F.col("doc_id") % 5 == 0).withColumn("y", y)
-    w = quality_classifier_weights(train, label_col="y", n_buckets=_QC_B)
-    scored = quality_classifier_score(held, w, n_buckets=_QC_B).join(
+    w = quality_classifier_weights(train, label_col="y", n_buckets=QC_B)
+    scored = quality_classifier_score(held, w, n_buckets=QC_B).join(
         held.select("doc_id", "y"), on="doc_id"
     )
     agree = (F.col("y") == F.col("pred")).cast("int")
@@ -1862,7 +1820,7 @@ def _ivf_knn_ctes(
     top-*k* per query): deterministic centroid sample → rank-1
     assignment → nprobe probe join → rounded-cosine top-k — the SQL
     twin of operators.similarity.ivf_topk (same construction as
-    workload_llm._ivf_oracle), shared by the sentence-grain and
+    oracle_fragments._ivf_oracle), shared by the sentence-grain and
     doc-grain bitext oracles. No self-exclusion in the probe join:
     cross-relation kNN, exclude_self=False (round-11 advisor)."""
     cos, r6, cm = _ivf_cos, _ivf_r6, _ivf_cm
@@ -1948,9 +1906,6 @@ def q_bitext_margin_mine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the full cross product; recall is lost only through
     probe selectivity, never the margin algebra (exact-equivalence
     when probing all lists is pinned in tests/test_bitext_mining.py)."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        bitext_margin_mine,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     return bitext_margin_mine(
@@ -2003,39 +1958,6 @@ def _bitext_doc_ivf_oracle(stride: int = 25, nprobe: int = 2, k: int = 3) -> str
     SELECT src_id, tgt_id, cmv AS cos_micro, margin_micro
     FROM r WHERE qf = 1 AND qb = 1
     """
-
-
-def _register_bitext_doc_align_ivf() -> None:
-    @register("bitext_doc_align_ivf", _bitext_doc_ivf_oracle())
-    def q_bitext_doc_align_ivf(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        """The SCALE path of document alignment with its own driver
-        receipt (mirroring ``bitext_margin_mine_ivf`` at the doc
-        grain): sentences mean-pool to exact doc centroids, then each
-        direction's kNN probes inverted lists (odd stride 25 over doc
-        ids, nprobe=2) instead of the doc×doc cross product, and the
-        identical k=3 margin / mutual-best algebra runs over the
-        candidate sets. Recall is lost only through probe selectivity,
-        never the pooling or margin algebra."""
-        from air_quality_etl_pipeline_spark.operators.similarity import (
-            bitext_doc_align,
-        )
-
-        e = _t(spark, sf_dir, "embeddings")
-        return bitext_doc_align(
-            e.filter(F.col("vec_id") % 2 == 0).select(
-                F.expr("vec_id DIV 16").alias("did"), "embedding"
-            ),
-            e.filter(F.col("vec_id") % 2 == 1).select(
-                F.expr("vec_id DIV 16").alias("did"), "embedding"
-            ),
-            doc_col="did",
-            k=3,
-            method="ivf",
-            centroid_stride=25,
-            nprobe=2,
-        )
 
 
 #: one side's doc-centroid CTEs: micro-quantize each element, exact
@@ -2105,9 +2027,6 @@ def q_bitext_doc_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vec_id // 16``) — exercising the id-collision-safe
     cross-relation kNN in production, not just in tests. Hand-traced
     fixture in tests/test_bitext_mining.py."""
-    from air_quality_etl_pipeline_spark.operators.similarity import (
-        bitext_doc_align,
-    )
 
     e = _t(spark, sf_dir, "embeddings")
     return bitext_doc_align(
@@ -2122,5 +2041,29 @@ def q_bitext_doc_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# deferred: the oracle interpolates _DOCCENT, defined just above
-_register_bitext_doc_align_ivf()
+# placed after _DOCCENT, which its oracle interpolates at import
+@register("bitext_doc_align_ivf", _bitext_doc_ivf_oracle())
+def q_bitext_doc_align_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SCALE path of document alignment with its own driver
+    receipt (mirroring ``bitext_margin_mine_ivf`` at the doc
+    grain): sentences mean-pool to exact doc centroids, then each
+    direction's kNN probes inverted lists (odd stride 25 over doc
+    ids, nprobe=2) instead of the doc×doc cross product, and the
+    identical k=3 margin / mutual-best algebra runs over the
+    candidate sets. Recall is lost only through probe selectivity,
+    never the pooling or margin algebra."""
+
+    e = _t(spark, sf_dir, "embeddings")
+    return bitext_doc_align(
+        e.filter(F.col("vec_id") % 2 == 0).select(
+            F.expr("vec_id DIV 16").alias("did"), "embedding"
+        ),
+        e.filter(F.col("vec_id") % 2 == 1).select(
+            F.expr("vec_id DIV 16").alias("did"), "embedding"
+        ),
+        doc_col="did",
+        k=3,
+        method="ivf",
+        centroid_stride=25,
+        nprobe=2,
+    )

@@ -1,47 +1,31 @@
-"""Direct-import safety of the workload registry modules (r13): the
-circular edge workload_{sources,curation} → workload_training used to
-make `import workload_training` fail with a partially-initialized-
-module ImportError unless something had fully loaded `workload`
-first — an order-dependent landmine the full suite masked. Each case
-runs in a SUBPROCESS so this test cannot be masked the same way."""
+"""Every package module imports as the first package import of a fresh
+interpreter. An import cycle between the registry modules shows only
+when the wrong module loads first, which an earlier import in the suite
+would hide, so each case runs in a subprocess from the checkout that
+holds this test."""
 
 from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
-DIRECT_IMPORTS = [
-    "air_quality_etl_pipeline_spark.workload",
-    "air_quality_etl_pipeline_spark.workload_training",
-    "air_quality_etl_pipeline_spark.workload_curation",
-    "air_quality_etl_pipeline_spark.workload_sources",
-    "air_quality_etl_pipeline_spark.oracle_fragments",
-]
+ROOT = Path(__file__).resolve().parents[1]
+MODULES = sorted(
+    ".".join(p.relative_to(ROOT).with_suffix("").parts).removesuffix(".__init__")
+    for p in (ROOT / "air_quality_etl_pipeline_spark").rglob("*.py")
+)
 
 
-@pytest.mark.parametrize("mod", DIRECT_IMPORTS)
+@pytest.mark.parametrize("mod", MODULES)
 def test_direct_import_succeeds(mod):
     proc = subprocess.run(
         [sys.executable, "-c", f"import {mod}"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-
-
-def test_fragment_aliases_point_at_leaf():
-    """The historical workload_training names must stay importable and
-    identical to the leaf definitions (external tests import them)."""
-    from air_quality_etl_pipeline_spark import oracle_fragments as of
-    from air_quality_etl_pipeline_spark import workload_training as wt
-
-    assert wt._QC_B == of.QC_B
-    assert wt._QC_GRAMS == of.QC_GRAMS
-    assert wt.QC_SCORE_ORACLE == of.QC_SCORE_ORACLE
-    from air_quality_etl_pipeline_spark.workload_llm import TOKS
-
-    assert TOKS == of.TOKS

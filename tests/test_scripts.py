@@ -4,8 +4,9 @@ every keyword argument it passes to a function imported from there is
 one that function's ``def`` accepts (read from the source, no Spark).
 Each script also takes its own directory off the head of ``sys.path``,
 and ``profile.py`` runs end to end. Also from the source: every
-module-level function of the package reads each of its parameters, and
-every package module uses each name it imports."""
+module-level function of the package reads each of its parameters,
+every package module uses each name it imports, and the query registry
+imports one way."""
 
 from __future__ import annotations
 
@@ -20,10 +21,11 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "air_quality_etl_pipeline_spark"
 SCRIPTS = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
 PACKAGE = sorted(
     glob.glob(
-        os.path.join(REPO, "air_quality_etl_pipeline_spark", "**", "*.py"),
+        os.path.join(REPO, PKG, "**", "*.py"),
         recursive=True,
     )
 )
@@ -231,6 +233,47 @@ def test_package_modules_use_every_import():
         for u in _unused_imports(path)
     ]
     assert not unused, "imported but never used:\n" + "\n".join(unused)
+
+
+def _package_imports(path: str) -> list[tuple[int, bool, str]]:
+    """``(line, at module top, module)`` for each package module *path*
+    imports; ``from pkg import x`` counts as module ``pkg.x``."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    out = []
+    for node in ast.walk(tree):
+        top = node in tree.body
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module == PKG:
+            mods = [f"{PKG}.{a.name}" for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            mods = [node.module or ""]
+        else:
+            continue
+        out += [(node.lineno, top, m) for m in mods if m.startswith(PKG + ".")]
+    return out
+
+
+def test_registry_imports_one_way():
+    """The query registry's import graph has one direction: only
+    ``workload.py`` loads the ``workload_*`` modules (in its tail block,
+    at module level), and ``workload``/``oracle_fragments`` names, like
+    every package import of a ``workload*.py`` module, are imported at
+    module top, never inside a function."""
+    bad = []
+    for path in PACKAGE:
+        name = os.path.basename(path)
+        registry = name.startswith("workload") or name == "oracle_fragments.py"
+        for line, top, mod in _package_imports(path):
+            leaf = mod.split(".")[-1]
+            where = f"{os.path.relpath(path, REPO)}:{line} {mod}"
+            if leaf.startswith("workload_") and (name != "workload.py" or not top):
+                bad.append(f"{where}: imports a workload_* module")
+            elif not top and (registry or leaf in ("workload", "oracle_fragments")):
+                bad.append(f"{where}: imported inside a function")
+    assert PACKAGE
+    assert not bad, "\n".join(bad)
 
 
 def test_scripts_exist():
