@@ -43,11 +43,7 @@ from air_quality_etl_pipeline_spark.operators.buckets import (
     flag_threshold,
     map_by_lists,
 )
-from air_quality_etl_pipeline_spark.operators.cleaning import (
-    dedup_first,
-    keep_in,
-    valid_rows,
-)
+from air_quality_etl_pipeline_spark.operators.cleaning import dedup_first, keep_in, valid_rows
 from air_quality_etl_pipeline_spark.operators.dates import with_date_parts
 from air_quality_etl_pipeline_spark.plans import metrics
 from air_quality_etl_pipeline_spark.plans.gold import (
