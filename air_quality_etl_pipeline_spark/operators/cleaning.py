@@ -1,11 +1,12 @@
-"""Row-cleaning operators: filters, trims, casts, deduplication.
+"""Row-cleaning operators: filters, trims, deduplication.
 
 These are the Silver-layer building blocks of the reference
 (``Notebooks/Batch_Bronze_to_Silver.Notebook/notebook-content.py:55-170``
 and ``Automated_Bronze_to_Silver:72-172``): IN-list filters (F1),
-conjunctive validity predicates (F2), null filters (F3), trim (X1),
-casts (X2/X3), and keyed dedup (D1/D2). All parameterized so the same
-operator runs on any table.
+conjunctive validity predicates (F2), null filters (F3), trim (X1) and
+keyed dedup (D1). All parameterized so the same operator runs on any
+table. Casts (X2/X3) and the distinct audit (D2) are stock
+``Column.cast`` and ``select(...).distinct()``.
 
 Scale notes
 -----------
@@ -53,11 +54,6 @@ def trim_cols(df: DataFrame, *cols: str) -> DataFrame:
     for c in cols:
         df = df.withColumn(c, F.trim(F.col(c)))
     return df
-
-
-def cast_cols(df: DataFrame, casts: dict[str, str]) -> DataFrame:
-    """X2/X3 — bulk column casts (``{"aqi": "int", "date_local": "date"}``)."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
 
 
 def dedup_first(
@@ -182,7 +178,3 @@ def quality_report(
         long = dup if long is None else long.unionByName(dup)
     return long
 
-
-def distinct_values(df: DataFrame, *cols: str) -> DataFrame:
-    """D2 — project-then-distinct (reference: distinct date_local audit)."""
-    return df.select(*cols).distinct()

@@ -22,6 +22,12 @@ from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.plans.gold import surrogate_key
 
+#: the CDC op value that deletes a key (DLT's ``APPLY AS DELETE WHEN``)
+DELETE_OP = "delete"
+#: the SCD-2 version interval columns DLT's ``STORED AS SCD TYPE 2`` adds
+START_COL = "__START_AT"
+END_COL = "__END_AT"
+
 
 def high_water_mark(df: DataFrame, key_col: str) -> int:
     """A3 — ``agg(max(key)).collect()[0][0] or 0``."""
@@ -74,21 +80,22 @@ def upsert_replace(
     return source.select(*target.columns).unionByName(survivors)
 
 
+def _first_match(branches):
+    """``CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ...`` over the ordered
+    ``(condition, value)`` *branches*; rows no branch takes get NULL."""
+    out = None
+    for c, v in branches:
+        out = F.when(c, v) if out is None else out.when(c, v)
+    return out
+
+
 def merge_apply(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[str],
-    when_matched: str | None = "update",
-    matched_condition=None,
-    when_not_matched: str | None = "insert",
-    not_matched_condition=None,
-    when_not_matched_by_source: str | None = None,
-    not_matched_by_source_condition=None,
-    matched_set: dict | None = None,
-    not_matched_by_source_set: dict | None = None,
-    matched_clauses: Sequence[dict] | None = None,
-    not_matched_clauses: Sequence[dict] | None = None,
-    not_matched_by_source_clauses: Sequence[dict] | None = None,
+    matched_clauses: Sequence[dict] = ({"action": "update"},),
+    not_matched_clauses: Sequence[dict] = ({"condition": None},),
+    not_matched_by_source_clauses: Sequence[dict] = (),
     schema_evolution: bool = False,
 ) -> DataFrame:
     """Delta Lake's full MERGE clause matrix as ONE pure-Spark plan —
@@ -97,44 +104,36 @@ def merge_apply(
     Delta-enabled cluster can swap in ``DeltaTable.merge`` behind the
     same call sites with identical results.
 
+    Like Delta's builder API, each side takes ONE ordered clause list;
+    per row the first clause whose condition holds wins. The defaults
+    spell Delta's upsert (``WHEN MATCHED UPDATE SET *`` / ``WHEN NOT
+    MATCHED INSERT *``); an empty list drops that side's clauses.
     Semantics per the documented matrix:
 
-    * ``when_matched``: ``"update"`` (``WHEN MATCHED UPDATE SET *`` —
-      the source row wins wholesale; pass ``matched_set`` for Delta's
-      explicit-``SET`` form, ``{col: lambda t, s: expr}``, where
-      UNLISTED columns keep their TARGET values), ``"delete"``, or
-      ``None`` (keep the target row). ``matched_condition(t, s)``
-      optionally gates the clause per row — unmatched-by-condition rows
-      keep the target row, exactly Delta's fall-through.
-    * ``when_not_matched``: ``"insert"`` (``WHEN NOT MATCHED INSERT
-      *``) or ``None`` (drop the source-only row), gated by
-      ``not_matched_condition(s)``.
-    * ``when_not_matched_by_source``: ``"delete"``, ``"update"`` (takes
-      ``not_matched_by_source_set`` — ``{col: lambda t: expr}``, only
-      target columns visible, per Delta), or ``None`` (keep), gated by
-      ``not_matched_by_source_condition(t)``.
-    * Key equality is ``=`` (null keys never match either side), the
-      join condition every reference MERGE uses.
-    * ``matched_clauses``: Delta allows SEVERAL ordered conditional
-      ``whenMatched`` clauses, first match wins. Pass a list of
-      ``{"action": "update"|"delete", "condition": fn|None,
-      "set": dict|None}`` to get that form; it overrides the
-      single-clause ``when_matched``/``matched_condition``/
-      ``matched_set`` trio (which normalizes to a one-element list).
-      Per Delta's rule, every clause but the last must carry a
-      condition (an unconditional clause makes later ones dead).
-    * ``not_matched_clauses``: Delta's ordered conditional
-      ``whenNotMatchedInsert`` list — ``{"condition": fn|None,
-      "values": dict|None}`` per clause, first match wins per
-      source-only row, no matching clause drops the row. ``values``
-      is Delta's explicit ``INSERT (col) VALUES (expr)`` form,
+    * ``matched_clauses``: ``{"action": "update"|"delete",
+      "condition": fn|None, "set": dict|None}`` per clause. ``update``
+      with ``set=None`` is ``UPDATE SET *`` (the source row wins
+      wholesale); a ``set`` map ``{col: lambda t, s: expr}`` is Delta's
+      explicit-``SET`` form, where UNLISTED columns keep their TARGET
+      values. ``condition(t, s)`` gates the clause per row; a matched
+      row no clause qualifies keeps the target row, exactly Delta's
+      fall-through, and never inserts.
+    * ``not_matched_clauses``: Delta's ``whenNotMatchedInsert`` list —
+      ``{"condition": fn|None, "values": dict|None}`` per clause; a
+      source-only row no clause qualifies is dropped. ``values`` is
+      Delta's explicit ``INSERT (col) VALUES (expr)`` form,
       ``{col: lambda s: expr}`` with UNLISTED columns NULL (unlike
       UPDATE SET, there is no target row to inherit from); ``None``
-      means ``INSERT *``. Overrides the legacy ``when_not_matched``/
-      ``not_matched_condition`` pair.
-    * ``not_matched_by_source_clauses``: same ordered form for the
-      by-source side — ``{"action": "update"|"delete", "condition":
-      fn|None, "set": dict|None}``; overrides the legacy trio.
+      means ``INSERT *``.
+    * ``not_matched_by_source_clauses``: ``{"action": "update"|"delete",
+      "condition": fn|None, "set": dict|None}`` per clause; ``update``
+      requires ``set`` — ``{col: lambda t: expr}``, only target columns
+      visible, per Delta; a target-only row no clause qualifies is
+      kept.
+    * Per Delta's rule, every clause of a list but the last must carry
+      a condition (an unconditional clause makes later ones dead).
+    * Key equality is ``=`` (null keys never match either side), the
+      join condition every reference MERGE uses.
     * Multiple matches: Delta errors when the same target row would
       ACTUALLY be modified by more than one source row
       (``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW``) — matched
@@ -147,6 +146,7 @@ def merge_apply(
       runs — when Delta's own ``.execute()`` raises it. A full
       evaluation (write, count, collect, aggregate) raises; a partial
       read (``limit``) sees only the rows it evaluates and may not.
+      With no matched clause nothing is modified, so nothing raises.
     * ``schema_evolution``: Delta's ``withSchemaEvolution()`` —
       source columns ABSENT from the target are appended to the
       output schema (in source order, after the target's columns);
@@ -160,12 +160,17 @@ def merge_apply(
     expression can reference both sides, e.g.
     ``lambda t, s: s["updated_at"] > t["updated_at"]``.
 
-    Scale: everything shuffles on the one natural key — the source
-    key-dedup aggregate, the left join (target pass), and the
-    anti-join (insert pass) share the same partitioning, so Spark
-    reuses the exchange across them. The cost class is Delta
-    MERGE's own join phase. At 100 TB both sides would be bucketed by
-    the key so the joins run exchange-free.
+    Plan: one left join fans each target row out across its matching
+    source rows; per target row, the FIRST clause any source row
+    qualifies wins (min over ``(clause index, source row)``) and the
+    qualifying rows are counted for the multiple-match check. Insert
+    rows come straight from the raw source through an anti-join.
+
+    Scale: everything shuffles on the one natural key — the fan-out
+    join, the per-target-row reduction, and the insert anti-join share
+    the same partitioning, so Spark reuses the exchange across them.
+    The cost class is Delta MERGE's own join phase. At 100 TB both
+    sides would be bucketed by the key so the joins run exchange-free.
     """
     src_orig_cols = list(source.columns)
     if schema_evolution:
@@ -189,26 +194,38 @@ def merge_apply(
             source = source.withColumn(c, F.lit(None).cast(tgt_type))
     tcols = list(target.columns)
     key_list = list(keys)
-    if matched_clauses is None:
-        matched_clauses = (
-            []
-            if when_matched is None
-            else [
-                {
-                    "action": when_matched,
-                    "condition": matched_condition,
-                    "set": matched_set,
-                }
-            ]
+    # one normalized copy per side (callers' dicts are never mutated)
+    clauses, nm_clauses, nmbs_clauses = (
+        [{"condition": None, "set": None, "values": None, **c} for c in side]
+        for side in (
+            matched_clauses,
+            [{"action": "insert", **c} for c in not_matched_clauses],
+            not_matched_by_source_clauses,
         )
-    clauses = [
-        {
-            "action": c["action"],
-            "condition": c.get("condition"),
-            "set": c.get("set"),
-        }
-        for c in matched_clauses
-    ]
+    )
+    for label, side, actions in (
+        ("whenMatched", clauses, ("update", "delete")),
+        ("whenNotMatched", nm_clauses, ("insert",)),
+        ("whenNotMatchedBySource", nmbs_clauses, ("update", "delete")),
+    ):
+        for i, c in enumerate(side):
+            if c["action"] not in actions:
+                raise ValueError(f"unknown {label} action {c['action']!r}")
+            if c["condition"] is None and i < len(side) - 1:
+                raise ValueError(
+                    f"only the LAST {label} clause may be unconditional "
+                    "(Delta's rule; later clauses would be dead)"
+                )
+            if (
+                side is nmbs_clauses
+                and c["action"] == "update"
+                and c["set"] is None
+            ):
+                raise ValueError(
+                    "not-matched-by-source 'update' requires a set map "
+                    "(Delta's UPDATE SET form; there is no source row for "
+                    "SET *)"
+                )
     if schema_evolution:
         # Delta's updateAll under withSchemaEvolution(): UPDATE SET *
         # expands over the source's ORIGINAL columns only — target
@@ -224,227 +241,103 @@ def merge_apply(
         for c in clauses:
             if c["action"] == "update" and c["set"] is None:
                 c["set"] = set_star
-    for i, c in enumerate(clauses):
-        if c["action"] not in ("update", "delete"):
-            raise ValueError(f"unknown matched action {c['action']!r}")
-        if c["condition"] is None and i < len(clauses) - 1:
-            raise ValueError(
-                "only the LAST whenMatched clause may be unconditional "
-                "(Delta's rule; later clauses would be dead)"
-            )
-    if not_matched_clauses is None:
-        not_matched_clauses = (
-            []
-            if when_not_matched is None
-            else [{"condition": not_matched_condition, "values": None}]
-        )
-    nm_clauses = [
-        {"condition": c.get("condition"), "values": c.get("values")}
-        for c in not_matched_clauses
-    ]
-    if not_matched_by_source_clauses is None:
-        not_matched_by_source_clauses = (
-            []
-            if when_not_matched_by_source is None
-            else [
-                {
-                    "action": when_not_matched_by_source,
-                    "condition": not_matched_by_source_condition,
-                    "set": not_matched_by_source_set,
-                }
-            ]
-        )
-    nmbs_clauses = [
-        {
-            "action": c["action"],
-            "condition": c.get("condition"),
-            "set": c.get("set"),
-        }
-        for c in not_matched_by_source_clauses
-    ]
-    for label, lst in (
-        ("whenNotMatched", nm_clauses),
-        ("whenNotMatchedBySource", nmbs_clauses),
-    ):
-        for i, c in enumerate(lst):
-            if c["condition"] is None and i < len(lst) - 1:
-                raise ValueError(
-                    f"only the LAST {label} clause may be unconditional "
-                    "(Delta's rule; later clauses would be dead)"
-                )
-    for c in nmbs_clauses:
-        if c["action"] not in ("update", "delete"):
-            raise ValueError(
-                f"unknown not-matched-by-source action {c['action']!r}"
-            )
-        if c["action"] == "update" and c["set"] is None:
-            raise ValueError(
-                "not-matched-by-source 'update' requires a set map "
-                "(Delta's UPDATE SET form; there is no source row for "
-                "SET *)"
-            )
 
     def cond(c, *args):
         return F.lit(True) if c is None else c(*args)
 
     t_struct = F.struct(*[F.col(c) for c in tcols])
-
-    def make_with_sets(field_types):
-        def with_sets(base, sets, *cond_args):
-            # Delta's explicit UPDATE SET form: listed columns take
-            # their expression (cast to the target column's type, as
-            # Delta's schema enforcement does), unlisted columns keep
-            # the base (target) row's value
-            return F.struct(
-                *[
-                    (
-                        sets[c](*cond_args).cast(field_types[c]).alias(c)
-                        if c in sets
-                        else base[c].alias(c)
-                    )
-                    for c in tcols
-                ]
-            )
-
-        return with_sets
-
-    _raise_dup = F.raise_error(
-        F.lit(
-            "MERGE_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW: a target "
-            "row would be modified by multiple source rows"
-        )
+    # The join may fan a target row out across several source rows;
+    # per target row we pick the FIRST clause any source row qualifies
+    # (min over (clause_idx, source)), and the Delta check counts
+    # QUALIFYING source rows per target row (>1 → error), not raw key
+    # duplicates — a matched source row that no condition qualifies
+    # never modifies, so it never errors (Delta-exact, round-8 advisor
+    # fix).
+    t = target.select(*key_list, t_struct.alias("_t")).withColumn(
+        "_tid", F.monotonically_increasing_id()
     )
-
-    # Route on the clauses alone: conditional clause lists take the
-    # general (fan-out) path, exact for any duplicate profile (a
-    # disqualified duplicate must neither error nor win). Without
-    # conditions the cheap pre-aggregated path is exact: every matched
-    # duplicate modifies, which IS Delta's error, raised in-plan by the
-    # ``_n > 1`` guard. Insert-only merges need no guard (only key
-    # EXISTENCE matters).
-    if not any(c["condition"] is not None for c in clauses):
-        fast_guard = bool(clauses)
-        # FAST PATH — LEFT join against ONE source row per key
-        # (min(struct) is exact, not a choice); the first-match-wins
-        # clause chain evaluates directly on that single (t, s) pair.
-        t = target.select(*key_list, t_struct.alias("_t"))
-        s1 = (
-            source.select(*key_list, t_struct.alias("_s"))
-            .groupBy(*key_list)
-            .agg(
-                F.min("_s").alias("_s"),
-                *([F.count(F.lit(1)).alias("_n")] if fast_guard else []),
-            )
+    s2 = source.select(*key_list, t_struct.alias("_s"))
+    j = t.join(s2, on=key_list, how="left")
+    ts, ss = F.col("_t"), F.col("_s")
+    matched = ss.isNotNull()
+    aggs = [F.min("_t").alias("_t"), F.max(matched.cast("int")).alias("_m")]
+    if clauses:
+        ci = _first_match(
+            (matched & cond(c["condition"], ts, ss), F.lit(i))
+            for i, c in enumerate(clauses)
         )
-        j = t.join(s1, on=key_list, how="left")
-        ts, ss = F.col("_t"), F.col("_s")
-        matched = ss.isNotNull()
-        with_sets = make_with_sets(
-            {f.name: f.dataType for f in j.schema["_t"].dataType.fields}
-        )
-        null_row = F.lit(None).cast(j.schema["_t"].dataType)
-        chooser = None
-        if fast_guard:
-            # every clause here is UNCONDITIONAL, so a matched key with
-            # >1 source rows is always modified twice — Delta's error,
-            # raised from inside the merge's own pass
-            chooser = F.when(matched & (F.col("_n") > 1), _raise_dup)
-        for c in clauses:
-            fires = matched & cond(c["condition"], ts, ss)
-            if c["action"] == "update":
-                val = ss if c["set"] is None else with_sets(ts, c["set"], ts, ss)
-            else:
-                val = null_row
-            chooser = (
-                F.when(fires, val)
-                if chooser is None
-                else chooser.when(fires, val)
-            )
-        # matched but no clause qualified (or no clauses) → keep
-        keep_matched = F.when(matched, ts)
-        chooser = (
-            keep_matched if chooser is None else chooser.when(matched, ts)
-        )
-        base = j
-    else:
-        # GENERAL PATH — conditional and/or multiple ordered matched
-        # clauses. The join may fan a target row out across several
-        # source rows; per target row we pick the FIRST clause any
-        # source row qualifies (min over (clause_idx, source)), and
-        # the Delta check counts QUALIFYING source rows per target row
-        # (>1 → error), not raw key duplicates — a matched source row
-        # that no condition qualifies never modifies, so it never
-        # errors (Delta-exact, round-8 advisor fix).
-        t = target.select(*key_list, t_struct.alias("_t")).withColumn(
-            "_tid", F.monotonically_increasing_id()
-        )
-        s2 = source.select(*key_list, t_struct.alias("_s"))
-        j = t.join(s2, on=key_list, how="left")
-        ts, ss = F.col("_t"), F.col("_s")
-        matched = ss.isNotNull()
-        ci = None
-        for i, c in enumerate(clauses):
-            fires = matched & cond(c["condition"], ts, ss)
-            ci = (
-                F.when(fires, F.lit(i))
-                if ci is None
-                else ci.when(fires, F.lit(i))
-            )
         winner = F.when(
             ci.isNotNull(), F.struct(ci.alias("ci"), ss.alias("s"))
         )
-        # group by (keys, tid), not tid alone: tid is already unique
-        # per target row, and listing the join keys first lets the
-        # aggregation's ClusteredDistribution be satisfied by the
-        # fan-out join's existing hash partitioning on the key — no
-        # second data-sized exchange (grouping by the opaque tid alone
-        # re-shuffled the whole fan-out; measured 5.42x at x10 data,
-        # 2.44x after this change — SCALE.md "MERGE", commit 09e074e)
-        per_t = j.groupBy(*key_list, "_tid").agg(
-            F.min("_t").alias("_t"),
-            F.max(matched.cast("int")).alias("_m"),
+        aggs += [
             F.min(winner).alias("_w"),
             F.sum(F.when(ci.isNotNull(), 1).otherwise(0)).alias("_nq"),
+        ]
+    # group by (keys, tid), not tid alone: tid is already unique
+    # per target row, and listing the join keys first lets the
+    # aggregation's ClusteredDistribution be satisfied by the
+    # fan-out join's existing hash partitioning on the key — no
+    # second data-sized exchange (grouping by the opaque tid alone
+    # re-shuffled the whole fan-out; measured 5.42x at x10 data,
+    # 2.44x after this change — SCALE.md "MERGE", commit 09e074e)
+    per_t = j.groupBy(*key_list, "_tid").agg(*aggs)
+    t_type = per_t.schema["_t"].dataType
+    field_types = {f.name: f.dataType for f in t_type.fields}
+    null_row = F.lit(None).cast(t_type)
+    win = F.col("_w")
+
+    def with_sets(sets, *cond_args):
+        # Delta's explicit UPDATE SET form: listed columns take their
+        # expression (cast to the target column's type, as Delta's
+        # schema enforcement does), unlisted columns keep the target
+        # row's value
+        return F.struct(
+            *[
+                (
+                    sets[c](*cond_args).cast(field_types[c]).alias(c)
+                    if c in sets
+                    else ts[c].alias(c)
+                )
+                for c in tcols
+            ]
         )
-        with_sets = make_with_sets(
-            {
-                f.name: f.dataType
-                for f in per_t.schema["_t"].dataType.fields
-            }
-        )
-        null_row = F.lit(None).cast(per_t.schema["_t"].dataType)
-        tt, win = F.col("_t"), F.col("_w")
-        ts = tt
+
+    branches = []
+    if clauses:
         # in-plan Delta error: >1 QUALIFYING source rows for this
         # target row (disqualified duplicates don't count)
-        chooser = F.when(F.col("_nq") > 1, _raise_dup)
-        for i, c in enumerate(clauses):
-            hits = win.isNotNull() & (win["ci"] == i)
-            if c["action"] == "update":
-                val = (
-                    win["s"]
-                    if c["set"] is None
-                    else with_sets(tt, c["set"], tt, win["s"])
-                )
-            else:
-                val = null_row
-            chooser = chooser.when(hits, val)
-        # matched but no clause qualified → Delta fall-through: keep
-        chooser = chooser.when(F.col("_m") == 1, tt)
-        base = per_t
+        branches.append(
+            (
+                F.col("_nq") > 1,
+                F.raise_error(
+                    F.lit(
+                        "MERGE_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW: a "
+                        "target row would be modified by multiple source rows"
+                    )
+                ),
+            )
+        )
+    for i, c in enumerate(clauses):
+        if c["action"] == "update":
+            val = (
+                win["s"]
+                if c["set"] is None
+                else with_sets(c["set"], ts, win["s"])
+            )
+        else:
+            val = null_row
+        branches.append((win.isNotNull() & (win["ci"] == i), val))
+    # matched but no clause qualified → Delta fall-through: keep
+    branches.append((F.col("_m") == 1, ts))
     # NOT MATCHED BY SOURCE: ordered first-match-wins clause chain over
     # the target-only rows (the earlier matched whens already captured
     # matched rows, so these whens only ever see unmatched ones)
     for c in nmbs_clauses:
-        val = (
-            null_row
-            if c["action"] == "delete"
-            else with_sets(ts, c["set"], ts)
-        )
-        chooser = chooser.when(cond(c["condition"], ts), val)
-    chooser = chooser.otherwise(ts)
+        val = null_row if c["action"] == "delete" else with_sets(c["set"], ts)
+        branches.append((cond(c["condition"], ts), val))
+    chooser = _first_match(branches).otherwise(ts)
     kept = (
-        base.select(chooser.alias("_r"))
+        per_t.select(chooser.alias("_r"))
         .filter(F.col("_r").isNotNull())
         .select(*[F.col("_r")[c].alias(c) for c in tcols])
     )
@@ -459,12 +352,12 @@ def merge_apply(
         )
         s_struct = F.struct(*[F.col(c) for c in tcols])
         tgt_types = {f.name: f.dataType for f in target.schema.fields}
-        ins = None
-        for c in nm_clauses:
-            if c["values"] is None:
-                val = s_struct
-            else:
-                val = F.struct(
+        ins = _first_match(
+            (
+                cond(c["condition"], s_struct),
+                s_struct
+                if c["values"] is None
+                else F.struct(
                     *[
                         (
                             c["values"][col](s_struct)
@@ -475,9 +368,10 @@ def merge_apply(
                         )
                         for col in tcols
                     ]
-                )
-            w = cond(c["condition"], s_struct)
-            ins = F.when(w, val) if ins is None else ins.when(w, val)
+                ),
+            )
+            for c in nm_clauses
+        )
         inserted = (
             fresh.select(ins.alias("_i"))
             .filter(F.col("_i").isNotNull())
@@ -493,11 +387,10 @@ def apply_cdc(
     keys: Sequence[str],
     seq_col: str,
     op_col: str,
-    delete_op: str = "delete",
 ) -> DataFrame:
     """CDC apply with latest-wins semantics — Delta Live Tables'
     ``APPLY CHANGES INTO`` (SCD type 1): per key, the change with the
-    highest *seq_col* decides; a *delete_op* change drops the key,
+    highest *seq_col* decides; a :data:`DELETE_OP` change drops the key,
     anything else upserts the change's payload columns (update if the
     key exists, insert if not). Out-of-order and superseded changes
     are absorbed by the sequence, which is what makes replaying a CDC
@@ -515,8 +408,7 @@ def apply_cdc(
     meets the (bucketed) target.
     """
     return cdc_snapshot(
-        target, cdc_winners(changes, keys, seq_col, op_col), keys, op_col,
-        delete_op,
+        target, cdc_winners(changes, keys, seq_col, op_col), keys, op_col
     )
 
 
@@ -550,7 +442,6 @@ def cdc_snapshot(
     winners: DataFrame,
     keys: Sequence[str],
     op_col: str,
-    delete_op: str = "delete",
 ) -> DataFrame:
     """SCD-1 snapshot of *target* after the :func:`cdc_winners`
     *winners*: target rows the feed never spoke for survive (anti-join
@@ -559,7 +450,7 @@ def cdc_snapshot(
     kept = target.join(
         winners.select(*key_list), on=key_list, how="left_anti"
     )
-    ups = winners.filter(F.col(op_col) != F.lit(delete_op))
+    ups = winners.filter(F.col(op_col) != F.lit(DELETE_OP))
     return kept.unionByName(ups.select(*target.columns))
 
 
@@ -569,37 +460,35 @@ def apply_cdc_scd2(
     keys: Sequence[str],
     seq_col: str,
     op_col: str,
-    delete_op: str = "delete",
-    start_col: str = "__START_AT",
-    end_col: str = "__END_AT",
     track_history_on: Sequence[str] | None = None,
 ) -> DataFrame:
     """CDC apply with full history — Delta Live Tables' ``APPLY
     CHANGES INTO ... STORED AS SCD TYPE 2``: every change opens a new
-    version row stamped ``[start_col, end_col)`` from the sequence
-    column; the next change (of any op) closes it; a *delete_op*
-    change closes the current version without opening one; the live
-    version has ``end_col`` NULL. Out-of-order changes slot into the
+    version row stamped ``[__START_AT, __END_AT)`` (:data:`START_COL`,
+    :data:`END_COL`) from the sequence column; the next change (of any
+    op) closes it; a :data:`DELETE_OP` change closes the current
+    version without opening one; the live version has ``__END_AT``
+    NULL. Out-of-order changes slot into the
     timeline retroactively (DLT re-orders on the sequence column).
 
     A delete that closed NO version (first surviving event for its
     key, or preceded only by another delete) is emitted as a
-    degenerate TOMBSTONE row — NULL payload, ``start_col == end_col``
+    degenerate TOMBSTONE row — NULL payload, ``__START_AT == __END_AT``
     — because it still constrains the timeline: an even-later-arriving
     upsert with a LOWER sequence number must be closed by it. DLT
     keeps exactly this in pipeline state (tombstone retention for
     out-of-order data, the ``pipelines.cdc.tombstoneGCThresholdInSeconds``
     knob); a stateless history rebuild has no side state, so the
     tombstone lives in the table. Consumers wanting only real versions
-    filter ``start_col != end_col`` (real versions always have
-    ``end_col`` NULL or strictly greater — sequence values are unique
+    filter ``__START_AT != __END_AT`` (real versions always have
+    ``__END_AT`` NULL or strictly greater — sequence values are unique
     per key after dedup).
 
     *target_history* is a prior output of this function (payload
     columns + the two stamp columns) or ``None`` for a first load.
     Rather than patching intervals in place, the history is
     RE-DERIVED: existing versions are turned back into upsert events
-    at their ``start_col`` (plus a tombstone at the tail ``end_col``
+    at their ``__START_AT`` (plus a tombstone at the tail ``__END_AT``
     when a key's last version is closed — that closure can only have
     come from a delete), unioned with the incoming changes, deduped
     per ``(keys, seq)`` by a TOTAL order, and the intervals rebuilt
@@ -678,20 +567,20 @@ def apply_cdc_scd2(
     if target_history is not None:
         # start == end marks a naked-tombstone row (see docstring) —
         # it re-enters the rebuild as a DELETE event, never an upsert
-        hist_naked = F.col(end_col).eqNullSafe(F.col(start_col))
+        hist_naked = F.col(END_COL).eqNullSafe(F.col(START_COL))
         # versions → upsert events at their start stamp (op-blind
         # dedup order means '__upsert__' ranks exactly like the feed
         # event it replays)
         reopened = target_history.filter(~hist_naked).select(
             *key_list,
-            F.col(start_col).alias(seq_col),
+            F.col(START_COL).alias(seq_col),
             F.lit("__upsert__").alias(op_col),
             *payload,
         )
         naked_tombstones = target_history.filter(hist_naked).select(
             *key_list,
-            F.col(start_col).alias(seq_col),
-            F.lit(delete_op).alias(op_col),
+            F.col(START_COL).alias(seq_col),
+            F.lit(DELETE_OP).alias(op_col),
             *[
                 F.lit(None).cast(f.dataType).alias(f.name)
                 for f in target_history.schema.fields
@@ -706,12 +595,12 @@ def apply_cdc_scd2(
         # re-insert) and the closed tail.
         tombstones = (
             target_history.filter(
-                F.col(end_col).isNotNull() & ~hist_naked
+                F.col(END_COL).isNotNull() & ~hist_naked
             )
-            .select(*key_list, F.col(end_col).alias(seq_col))
+            .select(*key_list, F.col(END_COL).alias(seq_col))
             .join(
                 target_history.select(
-                    *key_list, F.col(start_col).alias(seq_col)
+                    *key_list, F.col(START_COL).alias(seq_col)
                 ),
                 on=[*key_list, seq_col],
                 how="left_anti",
@@ -719,7 +608,7 @@ def apply_cdc_scd2(
             .select(
                 *key_list,
                 F.col(seq_col),
-                F.lit(delete_op).alias(op_col),
+                F.lit(DELETE_OP).alias(op_col),
                 *[
                     F.lit(None).cast(f.dataType).alias(f.name)
                     for f in target_history.schema.fields
@@ -742,7 +631,7 @@ def apply_cdc_scd2(
     # history-derived '__upsert__' compares exactly like the feed event
     # it replays and the per-(key, seq) winner is a plain associative
     # max over every event ever delivered.
-    not_del = (~F.col(op_col).eqNullSafe(F.lit(delete_op))).cast("int")
+    not_del = (~F.col(op_col).eqNullSafe(F.lit(DELETE_OP))).cast("int")
     deduped = (
         events.groupBy(*key_list, seq_col)
         .agg(
@@ -764,11 +653,11 @@ def apply_cdc_scd2(
     w = Window.partitionBy(*key_list).orderBy(F.col(seq_col))
     types = dict((f.name, f.dataType) for f in changes.schema.fields)
     seq_type = types[seq_col]
-    is_del = F.col(op_col) == F.lit(delete_op)
+    is_del = F.col(op_col) == F.lit(DELETE_OP)
     prev_op = F.lag(op_col).over(w)
     # a delete preceded by nothing (or only another delete) closed no
     # version — keep it as a degenerate [seq, seq] tombstone row
-    naked = is_del & (prev_op.isNull() | (prev_op == F.lit(delete_op)))
+    naked = is_del & (prev_op.isNull() | (prev_op == F.lit(DELETE_OP)))
     if track_history_on is None:
         stamped = deduped.select(
             *key_list,
@@ -786,11 +675,11 @@ def apply_cdc_scd2(
                 .alias(c)
                 for c in payload
             ],
-            F.col(seq_col).cast(seq_type).alias(start_col),
+            F.col(seq_col).cast(seq_type).alias(START_COL),
             F.when(F.col("_naked"), F.col(seq_col))
             .otherwise(F.col("_nxt"))
             .cast(seq_type)
-            .alias(end_col),
+            .alias(END_COL),
         )
     # TRACK HISTORY ON: group consecutive upserts whose tracked
     # columns are unchanged into RUNS; one version per run — start at
@@ -803,7 +692,7 @@ def apply_cdc_scd2(
     tr = F.struct(*[F.col(c) for c in tracked])
     starts = ~is_del & (
         prev_op.isNull()
-        | (prev_op == F.lit(delete_op))
+        | (prev_op == F.lit(DELETE_OP))
         | ~tr.eqNullSafe(F.lag(tr).over(w))
     )
     cum = (
@@ -839,8 +728,8 @@ def apply_cdc_scd2(
                 ).alias(c)
                 for c in payload
             ],
-            F.col(f"_first.{seq_col}").cast(seq_type).alias(start_col),
-            F.col("_last._nxt").cast(seq_type).alias(end_col),
+            F.col(f"_first.{seq_col}").cast(seq_type).alias(START_COL),
+            F.col("_last._nxt").cast(seq_type).alias(END_COL),
         )
     )
     # same degenerate tombstone rows as the untracked path — a naked
@@ -853,8 +742,8 @@ def apply_cdc_scd2(
         .select(
             *key_list,
             *[F.lit(None).cast(types[c]).alias(c) for c in payload],
-            F.col(seq_col).cast(seq_type).alias(start_col),
-            F.col(seq_col).cast(seq_type).alias(end_col),
+            F.col(seq_col).cast(seq_type).alias(START_COL),
+            F.col(seq_col).cast(seq_type).alias(END_COL),
         )
     )
     return runs.unionByName(naked_rows)

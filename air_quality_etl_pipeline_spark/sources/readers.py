@@ -1,7 +1,7 @@
 """Readers (SURVEY §2.1 S5-S7).
 
-Parquet scans and managed-table scans are stock Spark (the reference
-uses them verbatim); the CSV reader reproduces the Power Query shape —
+Parquet scans and managed-table scans (S6, ``spark.table(name)``) are
+stock Spark (the reference uses them verbatim); the CSV reader reproduces the Power Query shape —
 ``Csv.Document`` → ``PromoteHeaders`` → ``TransformColumnTypes``
 (reference: ``Population Dataflow.Dataflow/mashup.pq:12-14``) — as
 header-aware reads plus explicit typed casts.
@@ -25,11 +25,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S5: hive-partitioned parquet scan; partition columns come from
     the directory layout and prune on partition-column predicates."""
     return spark.read.parquet(path)
-
-
-def read_table(spark: SparkSession, name: str) -> DataFrame:
-    """S6: managed-table scan."""
-    return spark.table(name)
 
 
 def read_csv(

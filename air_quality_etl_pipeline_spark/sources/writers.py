@@ -1,11 +1,13 @@
-"""Sinks (SURVEY §2.1 K1-K3, K5, K6; K4 MERGE lives in plans.merge).
+"""Sinks (SURVEY §2.1 K1, K2; K4 MERGE lives in plans.merge).
 
 The reference writes bronze as hive-partitioned parquet (append and
 dynamic-partition overwrite), silver/gold as managed-table overwrites,
 and copies gold → warehouse with truncate-and-load semantics
 (reference: ``Batch_ingestion...py:201``, ``automated_ingestion
 ...py:212-213``, ``Automated Pipeline.DataPipeline/pipeline-content
-.json:82-177``).
+.json:82-177``). The managed-table overwrite and append (K3, K6) and
+the truncate-and-load copy (K5) are stock
+``df.write.mode(...).saveAsTable(name)``.
 
 File-sizing at scale: repartition by the partition columns before a
 partitioned write so each task writes few files per partition (the
@@ -51,17 +53,6 @@ def write_partitioned_dynamic_overwrite(
     )
 
 
-def save_table_overwrite(df: DataFrame, name: str) -> None:
-    """K3: managed-table overwrite (the Delta ``saveAsTable`` of the
-    reference; plain parquet tables in OSS Spark without delta-spark)."""
-    df.write.mode("overwrite").saveAsTable(name)
-
-
-def save_table_append(df: DataFrame, name: str) -> None:
-    """K6 Append update-method."""
-    df.write.mode("append").saveAsTable(name)
-
-
 def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Avro sink — availability-gated on the external ``spark-avro``
     module exactly like :func:`sources.readers.read_avro` (see there
@@ -76,15 +67,6 @@ def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
             "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
         )
     df.write.mode(mode).format("avro").save(path)
-
-
-def copy_tables(
-    spark: SparkSession, tables: dict[str, str]
-) -> None:
-    """K5: warehouse bulk copy, truncate-and-load — for each
-    ``src → dst``, TRUNCATE+COPY ≡ full overwrite of dst from src."""
-    for src, dst in tables.items():
-        spark.table(src).write.mode("overwrite").saveAsTable(dst)
 
 
 def write_range_sorted(

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from air_quality_etl_pipeline_spark.plans.merge import (
+    DELETE_OP,
     apply_cdc_scd2,
     cdc_snapshot,
     cdc_winners,
@@ -433,7 +434,6 @@ def cdc_snapshot_from_state(
     keys,
     seq_col: str,
     op_col: str,
-    delete_op: str = "delete",
 ) -> DataFrame:
     """Materialize the SCD-1 snapshot from the compacted changelog
     state: live winners project their payload; *baseline* rows (the
@@ -442,10 +442,10 @@ def cdc_snapshot_from_state(
     ``apply_cdc`` ends with, so the streaming and batch paths converge
     to the same table."""
     if baseline is None:
-        return state.filter(F.col(op_col) != F.lit(delete_op)).drop(
+        return state.filter(F.col(op_col) != F.lit(DELETE_OP)).drop(
             seq_col, op_col
         )
-    return cdc_snapshot(baseline, state, keys, op_col, delete_op)
+    return cdc_snapshot(baseline, state, keys, op_col)
 
 
 def run_cdc_stream(
@@ -592,7 +592,6 @@ def cdc_scd2_history(
     keys,
     seq_col: str,
     op_col: str,
-    delete_op: str = "delete",
     track_history_on=None,
 ) -> DataFrame:
     """Materialize the SCD-2 version history from the streamed event
@@ -612,6 +611,5 @@ def cdc_scd2_history(
         keys,
         seq_col=seq_col,
         op_col=op_col,
-        delete_op=delete_op,
         track_history_on=track_history_on,
     )

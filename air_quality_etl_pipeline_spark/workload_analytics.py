@@ -536,9 +536,18 @@ def q_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         tgt,
         src,
         ["o_orderkey"],
-        matched_condition=lambda t, s: s["o_orderstatus"] == "O",
-        when_not_matched_by_source="delete",
-        not_matched_by_source_condition=lambda t: t["o_orderstatus"] == "F",
+        matched_clauses=[
+            {
+                "action": "update",
+                "condition": lambda t, s: s["o_orderstatus"] == "O",
+            }
+        ],
+        not_matched_by_source_clauses=[
+            {
+                "action": "delete",
+                "condition": lambda t: t["o_orderstatus"] == "F",
+            }
+        ],
     )
     return merged.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_rows"), _dec_sum("o_totalprice", "sum_price")
@@ -577,7 +586,7 @@ def q_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta's ORDERED multi-clause WHEN MATCHED form, driven through
-    the GENERAL (fan-out) path of ``plans/merge.merge_apply``: the
+    the fan-out plan of ``plans/merge.merge_apply``: the
     source deliberately carries TWO rows per key (the real correction
     plus a disqualified 'X' shadow copy), so duplicate matched keys
     coexist with clause conditions — the exact shape where the

@@ -67,9 +67,12 @@ def main() -> None:
         tgt,
         src,
         ["sk"],
-        matched_condition=lambda t, s: s["status"] == "open",
-        when_not_matched_by_source="delete",
-        not_matched_by_source_condition=lambda t: t["score"] < 25,
+        matched_clauses=[
+            {"action": "update", "condition": lambda t, s: s["status"] == "open"}
+        ],
+        not_matched_by_source_clauses=[
+            {"action": "delete", "condition": lambda t: t["score"] < 25}
+        ],
     )
     print("2. clause-matrix merge:", sorted(map(tuple, merged.collect())))
 

@@ -76,24 +76,15 @@ def ref_merge(
     target,
     source,
     keys_idx,
-    when_matched="update",
-    matched_condition=None,
-    when_not_matched="insert",
-    not_matched_condition=None,
-    when_not_matched_by_source=None,
-    not_matched_by_source_condition=None,
-    matched_set=None,
-    not_matched_by_source_set=None,
-    matched_clauses=None,
-    not_matched_clauses=None,
-    not_matched_by_source_clauses=None,
+    matched_clauses=({"action": "update"},),
+    not_matched_clauses=({"condition": None},),
+    not_matched_by_source_clauses=(),
 ):
     """Independent implementation of the documented matrix over row
     tuples (keys_idx = positions of the key columns; set maps are
     ``{col_index: fn(rows...) -> value}``, unlisted columns keep the
-    target row's value). ``matched_clauses`` is the ordered
-    first-match-wins clause list; the legacy single-clause kwargs
-    normalize into a one-element list."""
+    target row's value). Each side is an ordered first-match-wins
+    clause list, with ``merge_apply``'s defaults."""
 
     def key(r):
         return tuple(r[i] for i in keys_idx)
@@ -106,36 +97,6 @@ def ref_merge(
             sets[i](*args) if i in sets else v for i, v in enumerate(trow)
         )
 
-    if matched_clauses is None:
-        matched_clauses = (
-            []
-            if when_matched is None
-            else [
-                {
-                    "action": when_matched,
-                    "condition": matched_condition,
-                    "set": matched_set,
-                }
-            ]
-        )
-    if not_matched_clauses is None:
-        not_matched_clauses = (
-            []
-            if when_not_matched is None
-            else [{"condition": not_matched_condition, "values": None}]
-        )
-    if not_matched_by_source_clauses is None:
-        not_matched_by_source_clauses = (
-            []
-            if when_not_matched_by_source is None
-            else [
-                {
-                    "action": when_not_matched_by_source,
-                    "condition": not_matched_by_source_condition,
-                    "set": not_matched_by_source_set,
-                }
-            ]
-        )
     src_by_key = {}
     for r in source:
         src_by_key.setdefault(key(r), []).append(r)
@@ -212,103 +173,128 @@ VAL_S6_T = lambda s: s["val"] == F.lit("s6")        # noqa: E731
 VAL_S6_PY = lambda sr: sr[2] == "s6"                # noqa: E731
 VER5_T = lambda t: t["ver"] == F.lit(5)             # noqa: E731
 VER5_PY = lambda tr: tr[1] == 5                     # noqa: E731
+#: one conditional UPDATE SET *: a matched row updates iff the source is newer
+UPDATE_NEWER_T = [{"action": "update", "condition": NEWER_T}]
+UPDATE_NEWER_PY = [{"action": "update", "condition": NEWER_PY}]
 
 MATRIX = [
     # (name, spark kwargs, reference kwargs)
     ("upsert_all", {}, {}),
-    (
-        "insert_only",
-        dict(when_matched=None),
-        dict(when_matched=None),
-    ),
+    ("insert_only", dict(matched_clauses=[]), dict(matched_clauses=[])),
     (
         "update_only_no_insert",
-        dict(when_not_matched=None),
-        dict(when_not_matched=None),
+        dict(not_matched_clauses=[]),
+        dict(not_matched_clauses=[]),
     ),
     (
         "matched_delete",
-        dict(when_matched="delete"),
-        dict(when_matched="delete"),
+        dict(matched_clauses=[{"action": "delete"}]),
+        dict(matched_clauses=[{"action": "delete"}]),
     ),
     (
         "conditional_update",
-        dict(matched_condition=NEWER_T),
-        dict(matched_condition=NEWER_PY),
+        dict(matched_clauses=[{"action": "update", "condition": NEWER_T}]),
+        dict(matched_clauses=[{"action": "update", "condition": NEWER_PY}]),
     ),
     (
         "conditional_delete",
-        dict(when_matched="delete", matched_condition=NEWER_T),
-        dict(when_matched="delete", matched_condition=NEWER_PY),
+        dict(matched_clauses=[{"action": "delete", "condition": NEWER_T}]),
+        dict(matched_clauses=[{"action": "delete", "condition": NEWER_PY}]),
     ),
     (
         "conditional_insert",
-        dict(when_matched=None, not_matched_condition=VAL_S6_T),
-        dict(when_matched=None, not_matched_condition=VAL_S6_PY),
+        dict(matched_clauses=[], not_matched_clauses=[{"condition": VAL_S6_T}]),
+        dict(matched_clauses=[], not_matched_clauses=[{"condition": VAL_S6_PY}]),
     ),
     (
         "sync_delete_by_source",
-        dict(when_not_matched_by_source="delete"),
-        dict(when_not_matched_by_source="delete"),
+        dict(not_matched_by_source_clauses=[{"action": "delete"}]),
+        dict(not_matched_by_source_clauses=[{"action": "delete"}]),
     ),
     (
         "conditional_delete_by_source",
         dict(
-            when_not_matched_by_source="delete",
-            not_matched_by_source_condition=VER5_T,
+            not_matched_by_source_clauses=[
+                {"action": "delete", "condition": VER5_T}
+            ]
         ),
         dict(
-            when_not_matched_by_source="delete",
-            not_matched_by_source_condition=VER5_PY,
+            not_matched_by_source_clauses=[
+                {"action": "delete", "condition": VER5_PY}
+            ]
         ),
     ),
     (
         "full_sync",
         dict(
-            matched_condition=NEWER_T,
-            when_not_matched_by_source="delete",
+            matched_clauses=[{"action": "update", "condition": NEWER_T}],
+            not_matched_by_source_clauses=[{"action": "delete"}],
         ),
         dict(
-            matched_condition=NEWER_PY,
-            when_not_matched_by_source="delete",
+            matched_clauses=[{"action": "update", "condition": NEWER_PY}],
+            not_matched_by_source_clauses=[{"action": "delete"}],
         ),
     ),
     (
         # explicit UPDATE SET: take the source version, keep target val
         "matched_update_set",
-        dict(matched_set={"ver": lambda t, s: s["ver"]}),
-        dict(matched_set={1: lambda tr, sr: sr[1]}),
+        dict(
+            matched_clauses=[
+                {"action": "update", "set": {"ver": lambda t, s: s["ver"]}}
+            ]
+        ),
+        dict(
+            matched_clauses=[
+                {"action": "update", "set": {1: lambda tr, sr: sr[1]}}
+            ]
+        ),
     ),
     (
         # NOT MATCHED BY SOURCE UPDATE SET: tombstone the val column
         "nmbs_update_set",
         dict(
-            when_not_matched_by_source="update",
-            not_matched_by_source_set={
-                "val": lambda t: F.lit("stale"),
-                "ver": lambda t: t["ver"] + 100,
-            },
+            not_matched_by_source_clauses=[
+                {
+                    "action": "update",
+                    "set": {
+                        "val": lambda t: F.lit("stale"),
+                        "ver": lambda t: t["ver"] + 100,
+                    },
+                }
+            ]
         ),
         dict(
-            when_not_matched_by_source="update",
-            not_matched_by_source_set={
-                2: lambda tr: "stale",
-                1: lambda tr: tr[1] + 100,
-            },
+            not_matched_by_source_clauses=[
+                {
+                    "action": "update",
+                    "set": {
+                        2: lambda tr: "stale",
+                        1: lambda tr: tr[1] + 100,
+                    },
+                }
+            ]
         ),
     ),
     (
         # conditional NMBS update: only ver=5 rows get tombstoned
         "nmbs_update_set_conditional",
         dict(
-            when_not_matched_by_source="update",
-            not_matched_by_source_condition=VER5_T,
-            not_matched_by_source_set={"val": lambda t: F.lit("stale")},
+            not_matched_by_source_clauses=[
+                {
+                    "action": "update",
+                    "condition": VER5_T,
+                    "set": {"val": lambda t: F.lit("stale")},
+                }
+            ]
         ),
         dict(
-            when_not_matched_by_source="update",
-            not_matched_by_source_condition=VER5_PY,
-            not_matched_by_source_set={2: lambda tr: "stale"},
+            not_matched_by_source_clauses=[
+                {
+                    "action": "update",
+                    "condition": VER5_PY,
+                    "set": {2: lambda tr: "stale"},
+                }
+            ]
         ),
     ),
     (
@@ -359,14 +345,14 @@ MATRIX = [
                     "condition": lambda t, s: t["ver"] == F.lit(5),
                 },
             ],
-            when_not_matched_by_source="delete",
+            not_matched_by_source_clauses=[{"action": "delete"}],
         ),
         dict(
             matched_clauses=[
                 {"action": "update", "condition": NEWER_PY},
                 {"action": "delete", "condition": lambda tr, sr: tr[1] == 5},
             ],
-            when_not_matched_by_source="delete",
+            not_matched_by_source_clauses=[{"action": "delete"}],
         ),
     ),
     (
@@ -374,7 +360,7 @@ MATRIX = [
         # (unlisted target columns -> NULL), everything else INSERT *
         "two_clause_insert_values_then_all",
         dict(
-            when_matched=None,
+            matched_clauses=[],
             not_matched_clauses=[
                 {
                     "condition": VAL_S6_T,
@@ -387,7 +373,7 @@ MATRIX = [
             ],
         ),
         dict(
-            when_matched=None,
+            matched_clauses=[],
             not_matched_clauses=[
                 {
                     "condition": VAL_S6_PY,
@@ -402,11 +388,11 @@ MATRIX = [
         # matching no clause are dropped, per Delta
         "insert_clause_list_drops_unmatched",
         dict(
-            when_matched=None,
+            matched_clauses=[],
             not_matched_clauses=[{"condition": VAL_S6_T}],
         ),
         dict(
-            when_matched=None,
+            matched_clauses=[],
             not_matched_clauses=[{"condition": VAL_S6_PY}],
         ),
     ),
@@ -447,10 +433,10 @@ def test_multiple_source_match_errors_like_delta(spark):
     with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
         merge_apply(t, dup, ["k"]).collect()
     with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
-        merge_apply(t, dup, ["k"], when_matched="delete").collect()
+        merge_apply(t, dup, ["k"], matched_clauses=[{"action": "delete"}]).collect()
     # insert-only: duplicates on a MATCHED key are irrelevant (no
     # update/delete fires) — Delta does not error here
-    got = merge_apply(t, dup, ["k"], when_matched=None).collect()
+    got = merge_apply(t, dup, ["k"], matched_clauses=[]).collect()
     assert len(got) == len(TARGET) + 3  # 5,6 and source NULL row insert
     # duplicates on an UNMATCHED key all insert, no error
     dup_new = spark.createDataFrame(
@@ -472,19 +458,19 @@ def test_multiple_match_errors_only_when_actually_modified(spark):
         (
             tuple(r)
             for r in merge_apply(
-                t, s1, ["k"], matched_condition=NEWER_T
+                t, s1, ["k"], matched_clauses=UPDATE_NEWER_T
             ).collect()
         ),
         key=str,
     )
-    assert got == ref_merge(TARGET, one_qual, [0], matched_condition=NEWER_PY)
+    assert got == ref_merge(TARGET, one_qual, [0], matched_clauses=UPDATE_NEWER_PY)
     assert (3, 2, "s3") in got and (3, 1, "t3") not in got
     both_qual = SOURCE + [(3, 9, "s3b")]
     s2 = spark.createDataFrame(both_qual, SCHEMA)
     with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
-        merge_apply(t, s2, ["k"], matched_condition=NEWER_T).collect()
+        merge_apply(t, s2, ["k"], matched_clauses=UPDATE_NEWER_T).collect()
     with pytest.raises(RefMultipleMatches, match="3"):
-        ref_merge(TARGET, both_qual, [0], matched_condition=NEWER_PY)
+        ref_merge(TARGET, both_qual, [0], matched_clauses=UPDATE_NEWER_PY)
     # across TWO clauses: one source row qualifying each still means
     # two modifications of the same target row → error
     with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
@@ -502,20 +488,19 @@ def test_multiple_match_errors_only_when_actually_modified(spark):
 def test_multiple_match_check_runs_in_plan(spark):
     """The Delta multiple-match error is compiled INTO the plan (a
     raise_error branch): building never raises, the caller's action
-    does (like Delta's .execute()), a disqualified duplicate on the
-    general path never errors, and duplicates on an unmatched key all
-    insert."""
+    does (like Delta's .execute()), a disqualified duplicate never
+    errors, and duplicates on an unmatched key all insert."""
     t = spark.createDataFrame(TARGET, SCHEMA)
     dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
-    # duplicate modifying rows, fast and general path: building the
-    # plan does NOT raise...
+    # duplicate modifying rows, unconditional and conditional clause:
+    # building the plan does NOT raise...
     out = merge_apply(t, dup, ["k"])
-    out2 = merge_apply(t, dup, ["k"], matched_condition=NEWER_T)
+    out2 = merge_apply(t, dup, ["k"], matched_clauses=UPDATE_NEWER_T)
     for df in (out, out2):
         with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
             df.collect()  # ...the caller's action does
-    # general path, only ONE duplicate qualifies (ver0 disqualified by
-    # NEWER_T): no error, the qualifying row wins
+    # only ONE duplicate qualifies (ver0 disqualified by NEWER_T): no
+    # error, the qualifying row wins
     one_qual = SOURCE + [(3, 0, "s3b")]
     got = sorted(
         (
@@ -524,12 +509,12 @@ def test_multiple_match_check_runs_in_plan(spark):
                 t,
                 spark.createDataFrame(one_qual, SCHEMA),
                 ["k"],
-                matched_condition=NEWER_T,
+                matched_clauses=UPDATE_NEWER_T,
             ).collect()
         ),
         key=str,
     )
-    assert got == ref_merge(TARGET, one_qual, [0], matched_condition=NEWER_PY)
+    assert got == ref_merge(TARGET, one_qual, [0], matched_clauses=UPDATE_NEWER_PY)
     # duplicates on an UNMATCHED key still all insert, no error
     dup_new = spark.createDataFrame([(7, 1, "a"), (7, 2, "b")], SCHEMA)
     got = merge_apply(t, dup_new, ["k"]).collect()
@@ -538,22 +523,23 @@ def test_multiple_match_check_runs_in_plan(spark):
 
 def test_merge_build_runs_no_jobs_over_duplicates(spark):
     """Building a merge over a duplicate-key source launches no Spark
-    job, on the conditional (general) path and on the unconditional
-    (pre-aggregated) path alike: the multiple-match check is part of
-    the plan, not a probe at build time."""
+    job, with a conditional and with an unconditional matched clause
+    alike: the multiple-match check is part of the plan, not a probe at
+    build time."""
     t = spark.createDataFrame(TARGET, SCHEMA)
     dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
-    for kw in (dict(matched_condition=NEWER_T), {}):
+    for kw in (dict(matched_clauses=UPDATE_NEWER_T), {}):
         _, jobs = count_jobs(spark, lambda: merge_apply(t, dup, ["k"], **kw))
         assert jobs == 0, kw
 
 
 def test_merge_count_over_duplicates_raises(spark):
     """``count()`` evaluates every output row, so it raises the
-    multiple-match error like ``collect()`` does, on both paths."""
+    multiple-match error like ``collect()`` does, with a conditional
+    and with an unconditional matched clause."""
     t = spark.createDataFrame(TARGET, SCHEMA)
     dup = spark.createDataFrame(SOURCE + [(3, 9, "s3b")], SCHEMA)
-    for kw in (dict(matched_condition=NEWER_T), {}):
+    for kw in (dict(matched_clauses=UPDATE_NEWER_T), {}):
         with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
             merge_apply(t, dup, ["k"], **kw).count()
 
@@ -601,7 +587,7 @@ def test_specialized_forms_agree_with_general(spark):
     t = spark.createDataFrame(TARGET, SCHEMA)
     s = spark.createDataFrame(SOURCE, SCHEMA)
     gen_ins = sorted(
-        (tuple(r) for r in merge_apply(t, s, ["k"], when_matched=None).collect()),
+        (tuple(r) for r in merge_apply(t, s, ["k"], matched_clauses=[]).collect()),
         key=str,
     )
     spec_ins = sorted(
@@ -628,67 +614,6 @@ _row = st.tuples(
     st.integers(0, 9),                          # ver
     st.sampled_from(["a", "b", "c"]),           # val
 )
-_clauses = st.fixed_dictionaries(
-    {
-        "when_matched": st.sampled_from(["update", "delete", None]),
-        "cond_matched": st.booleans(),
-        "when_not_matched": st.sampled_from(["insert", None]),
-        "cond_insert": st.booleans(),
-        "when_nmbs": st.sampled_from(["delete", "update", None]),
-        "cond_nmbs": st.booleans(),
-    }
-)
-
-
-@settings(
-    max_examples=25,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(
-    target=st.lists(_row, max_size=8),
-    source=st.lists(_row, max_size=8),
-    clauses=_clauses,
-)
-def test_merge_property_matches_reference(spark, target, source, clauses):
-    skw = dict(
-        when_matched=clauses["when_matched"],
-        when_not_matched=clauses["when_not_matched"],
-        when_not_matched_by_source=clauses["when_nmbs"],
-    )
-    rkw = dict(skw)
-    if clauses["cond_matched"]:
-        skw["matched_condition"] = NEWER_T
-        rkw["matched_condition"] = NEWER_PY
-    if clauses["cond_insert"]:
-        skw["not_matched_condition"] = lambda s: s["ver"] >= 5
-        rkw["not_matched_condition"] = lambda sr: sr[1] >= 5
-    if clauses["cond_nmbs"]:
-        skw["not_matched_by_source_condition"] = lambda t: t["ver"] < 5
-        rkw["not_matched_by_source_condition"] = lambda tr: tr[1] < 5
-    if clauses["when_nmbs"] == "update":
-        skw["not_matched_by_source_set"] = {"val": lambda t: F.lit("x")}
-        rkw["not_matched_by_source_set"] = {2: lambda tr: "x"}
-
-    t = spark.createDataFrame(target, SCHEMA) if target else (
-        spark.createDataFrame([], SCHEMA)
-    )
-    s = spark.createDataFrame(source, SCHEMA) if source else (
-        spark.createDataFrame([], SCHEMA)
-    )
-    try:
-        want = ref_merge(target, source, [0], **rkw)
-    except RefMultipleMatches:
-        with pytest.raises(SparkRuntimeException, match=MULTIPLE_MATCH):
-            merge_apply(t, s, ["k"], **skw).collect()
-        return
-    got = sorted(
-        (tuple(r) for r in merge_apply(t, s, ["k"], **skw).collect()),
-        key=str,
-    )
-    assert got == want
-
-
 _cl_matched = st.lists(
     st.fixed_dictionaries(
         {
@@ -1085,7 +1010,7 @@ def test_merge_schema_evolution(spark):
     # source missing a target column: evolved INSERT * fills NULL
     s2 = spark.createDataFrame([(3, 5), (2, 6)], "k long, extra long")
     out3 = merge_apply(
-        t, s2, ["k"], when_matched=None, schema_evolution=True
+        t, s2, ["k"], matched_clauses=[], schema_evolution=True
     )
     rows3 = {r["k"]: (r["v"], r["extra"]) for r in out3.collect()}
     assert rows3 == {1: ("a", None), 2: ("b", None), 3: (None, 5)}
@@ -1094,7 +1019,11 @@ def test_merge_schema_evolution(spark):
     # insertAll fills NULL) — round-8 advisor fix; the NULL padding
     # must not leak into matched rows
     out3u = merge_apply(
-        t, s2, ["k"], when_matched="update", schema_evolution=True
+        t,
+        s2,
+        ["k"],
+        matched_clauses=[{"action": "update"}],
+        schema_evolution=True,
     )
     rows3u = {r["k"]: (r["v"], r["extra"]) for r in out3u.collect()}
     assert rows3u == {1: ("a", None), 2: ("b", 6), 3: (None, 5)}
@@ -1109,9 +1038,9 @@ def test_merge_schema_evolution(spark):
     assert {
         r["k"]: (r["v"], r["extra"]) for r in out3c.collect()
     } == rows3u
-    # conditional matched clause + evolution rides the general path
-    # when source keys duplicate: the qualifying row's evolved value
-    # wins, the disqualified shadow neither errors nor wins
+    # conditional matched clause + evolution over duplicate source
+    # keys: the qualifying row's evolved value wins, the disqualified
+    # shadow neither errors nor wins
     s3 = spark.createDataFrame(
         [(2, "B", 9), (2, "shadow", 1)], "k long, v string, extra long"
     )
@@ -1119,8 +1048,10 @@ def test_merge_schema_evolution(spark):
         t,
         s3,
         ["k"],
-        matched_condition=lambda tt, ss: ss["v"] == "B",
-        when_not_matched=None,
+        matched_clauses=[
+            {"action": "update", "condition": lambda tt, ss: ss["v"] == "B"}
+        ],
+        not_matched_clauses=[],
         schema_evolution=True,
     )
     rows4 = {r["k"]: (r["v"], r["extra"]) for r in out4.collect()}

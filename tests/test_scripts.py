@@ -5,8 +5,9 @@ one that function's ``def`` accepts (read from the source, no Spark).
 Each script also takes its own directory off the head of ``sys.path``,
 and ``profile.py`` runs end to end. Also from the source: every
 module-level function of the package reads each of its parameters,
-every package module uses each name it imports, and the query registry
-imports one way."""
+every package module uses each name it imports, every module-level
+definition of the package is named somewhere in the repository, and the
+query registry imports one way."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ import os
 import re
 import subprocess
 import sys
+from collections import Counter
 
 import pytest
 
@@ -30,6 +32,7 @@ PACKAGE = sorted(
     )
 )
 EXAMPLES = sorted(glob.glob(os.path.join(REPO, "examples", "*.py")))
+REPO_PY = sorted(glob.glob(os.path.join(REPO, "**", "*.py"), recursive=True))
 
 #: the directory each in-repo module the scripts import is found under
 #: (``profile.py`` puts ``perfbench`` on its path to import the tracer)
@@ -233,6 +236,32 @@ def test_package_modules_use_every_import():
         for u in _unused_imports(path)
     ]
     assert not unused, "imported but never used:\n" + "\n".join(unused)
+
+
+def test_package_definitions_are_named():
+    """Every undecorated module-level ``def`` and ``class`` of the
+    package is named, as a whole word, in some ``.py`` file of the
+    repository outside its own definition: a public wrapper nothing
+    names is dead surface. Decorated ones (registered queries) are
+    reached through their decorator."""
+    sources = {}
+    for path in REPO_PY:
+        with open(path) as f:
+            sources[path] = f.read()
+    words = Counter(w for text in sources.values() for w in re.findall(r"\w+", text))
+    unnamed = []
+    for path in PACKAGE:
+        lines = sources[path].splitlines()
+        for node in ast.parse(sources[path]).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+            ):
+                own = re.findall(r"\w+", "\n".join(lines[node.lineno - 1 : node.end_lineno]))
+                if words[node.name] == own.count(node.name):
+                    unnamed.append(f"{os.path.relpath(path, REPO)}:{node.lineno} {node.name}")
+    assert PACKAGE
+    assert not unnamed, "defined but never named:\n" + "\n".join(unnamed)
 
 
 def _package_imports(path: str) -> list[tuple[int, bool, str]]:
